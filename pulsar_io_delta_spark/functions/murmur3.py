@@ -130,6 +130,17 @@ def murmur3_32_batch(values: "pd.Series | list[str]") -> np.ndarray:
     return h
 
 
+def slots_for(keys: "pd.Series | np.ndarray | list[str]", num_partitions: int) -> np.ndarray:
+    """Routing slot per key (int64), ``partition_id_for`` over a batch:
+    each distinct key is hashed once with ``murmur3_32_batch`` and the
+    slots are mapped back to every row. Keys must not be null."""
+    codes, uniques = pd.factorize(np.asarray(keys, dtype=object))
+    if (codes < 0).any():
+        raise ValueError("slots_for: null key")
+    hashed = murmur3_32_batch(list(uniques)) & np.uint32(0x7FFFFFFF)
+    return (hashed % np.uint32(num_partitions)).astype(np.int64)[codes]
+
+
 def murmur3_route_col(col: Column, num_partitions: int) -> Column:
     """Column of routing slot ids (BIGINT), Arrow-batched + numpy-
     vectorized (no per-row Python in the sink-edge routing path)."""
@@ -141,10 +152,7 @@ def murmur3_route_col(col: Column, num_partitions: int) -> Column:
         out = pd.Series([pd.NA] * len(s), index=s.index, dtype="Int64")
         mask = s.notna()
         if mask.any():
-            slots = (
-                murmur3_32_batch(s[mask]) & np.uint32(0x7FFFFFFF)
-            ) % np.uint32(num_partitions)
-            out[mask] = slots.astype(np.int64)
+            out[mask] = slots_for(s[mask], num_partitions)
         return out
 
     return _route(col)
@@ -173,8 +181,8 @@ def with_route_lowcard(
         return keyed.drop("_route_key").withColumn(
             out, murmur3_route_col(value, num_partitions)
         )
-    slots = (murmur3_32_batch(keys) & np.uint32(0x7FFFFFFF)) % np.uint32(num_partitions)
-    pairs = [x for k, s in zip(keys, slots) for x in (_F.lit(k), _F.lit(int(s)))]
+    slots = slots_for(keys, num_partitions).tolist()
+    pairs = [x for k, s in zip(keys, slots) for x in (_F.lit(k), _F.lit(s))]
     lut = _F.create_map(*pairs) if pairs else _F.create_map()
     return keyed.withColumn(
         out, _F.element_at(lut, _F.col("_route_key")).cast("long")
@@ -239,6 +247,7 @@ __all__ = [
     "murmur3_32_batch",
     "murmur3_duckdb_ctes",
     "partition_id_for",
+    "slots_for",
     "murmur3_route_col",
     "with_route_lowcard",
 ]

@@ -272,7 +272,11 @@ def to_pulsar_wire(
     (`DeltaLakeConnectorSource.java:97-100`, `DeltaReader.java:60-63`);
     no broker/client exists in this environment, so this operator stops
     at the exact wire-format frame a producer would consume — key bytes,
-    serialized value bytes, and the reference-parity partition id."""
+    serialized value bytes, and the reference-parity partition id.
+
+    ``partition_id`` is there for frame consumers and the oracle;
+    ``fake_pulsar.publish`` routes from ``key`` and never reads it, so
+    the routing UDF drops out of the plan it executes."""
     return df.select(
         F.col(key_col).cast("string").alias("key"),
         value.cast("binary").alias("value"),

@@ -18,12 +18,16 @@ closes the egress semantic with an in-process test double:
   flushes), and per-message event time + properties;
 - ``publish`` — drives a DataFrame through the producer.
 
-Scale note: the broker object is driver-side, so ``publish`` streams
-``toLocalIterator()`` — the right shape for a TEST double. The
-production analog keeps the exact same frame and send() sequence but
-runs ``df.foreachPartition`` with one real client per executor task;
-per-partition ordering then holds per producer, which is Pulsar's own
-guarantee for key-routed sends from a single producer.
+Scale note: the broker object is driver-side, so ``publish`` collects
+the frame's key, value and event-time columns with one ``toArrow()`` —
+every partition in one job, in frame order — and routes in the driver,
+hashing each distinct key once. The whole frame then sits on the
+driver, which the in-memory broker holds anyway; this is the right
+shape for a TEST double. The production analog keeps the exact same
+frame and send() sequence but runs ``df.foreachPartition`` with one
+real client per executor task; per-partition ordering then holds per
+producer, which is Pulsar's own guarantee for key-routed sends from a
+single producer.
 """
 
 from __future__ import annotations
@@ -31,9 +35,10 @@ from __future__ import annotations
 import threading
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from pulsar_io_delta_spark.functions.murmur3 import partition_id_for
+from pulsar_io_delta_spark.functions.murmur3 import partition_id_for, slots_for
 
 
 @dataclass
@@ -132,6 +137,24 @@ class FakePulsarProducer:
         self.flush()
 
 
+def wire_payload(wire: DataFrame, event_time_col: str | None = None) -> DataFrame:
+    """The columns ``publish`` reads from a wire frame: key, value and,
+    when the frame has it, the event-time column. Routing is computed
+    from ``key``, so a ``partition_id`` column is pruned from the plan."""
+    cols = ["key", "value"]
+    if event_time_col and event_time_col in wire.columns:
+        cols.append(event_time_col)
+    return wire.select(*cols)
+
+
+def _event_times_ms(col: pa.ChunkedArray) -> list[int | None]:
+    """Epoch milliseconds per row; timestamps (collected as micros)
+    floor to the millisecond, other types are taken as ms already."""
+    if pa.types.is_timestamp(col.type):
+        return [None if v is None else v // 1000 for v in col.cast(pa.int64()).to_pylist()]
+    return [None if v is None else int(v) for v in col.to_pylist()]
+
+
 def publish(
     wire: DataFrame,
     broker: FakeBroker,
@@ -142,25 +165,32 @@ def publish(
 ) -> FakePulsarProducer:
     """Drive a wire frame (key string, value binary[, event time]) into
     the fake broker, preserving the frame's row order (sort upstream for
-    deterministic per-partition sequences)."""
+    deterministic per-partition sequences). A null key raises
+    ``ValueError`` before anything is sent."""
     broker.create_topic(topic, num_partitions)
     producer = FakePulsarProducer(broker, topic, batch_max=batch_max)
-    cols = set(wire.columns)
-    for row in wire.toLocalIterator():
-        et = None
-        if event_time_col and event_time_col in cols:
-            raw = row[event_time_col]
-            et = int(raw.timestamp() * 1000) if hasattr(raw, "timestamp") else (
-                int(raw) if raw is not None else None
-            )
+    frame = wire_payload(wire, event_time_col).toArrow()
+    nulls = frame.column("key").null_count
+    if nulls:
+        raise ValueError(f"publish to topic {topic!r}: {nulls} row(s) with a null key")
+    keys = frame.column("key").to_numpy()
+    slots = slots_for(keys, producer.num_partitions).tolist()
+    values = frame.column("value").to_numpy()
+    times = (
+        _event_times_ms(frame.column(event_time_col))
+        if frame.num_columns == 3
+        else [None] * frame.num_rows
+    )
+    for key, value, slot, et in zip(keys, values, slots, times):
         producer.send(
-            key=row["key"],
-            value=row["value"] if isinstance(row["value"], (bytes, bytearray)) else str(row["value"]).encode(),
+            key=key,
+            value=value if isinstance(value, (bytes, bytearray)) else str(value).encode(),
             event_time_ms=et,
             properties={"TS": str(et)} if et is not None else {},
+            partition=slot,
         )
     producer.close()
     return producer
 
 
-__all__ = ["FakeBroker", "FakePulsarProducer", "FakeMessage", "publish"]
+__all__ = ["FakeBroker", "FakePulsarProducer", "FakeMessage", "publish", "wire_payload"]

@@ -53,6 +53,21 @@ def test_batch_kernel_byte_parity():
     assert (murmur3_32_batch([]) == np.empty(0)).all()
 
 
+def test_slots_for_matches_scalar_routing():
+    """slots_for hashes each distinct key once and maps the slot back
+    to every row: equal to partition_id_for per row, repeats included."""
+    import pytest
+
+    from pulsar_io_delta_spark.functions.murmur3 import slots_for
+
+    keys = [f"event_type={i % 7}" for i in range(100)] + ["", "héllo", "a"]
+    for n in (1, 8, 13):
+        assert slots_for(keys, n).tolist() == [partition_id_for(k, n) for k in keys]
+    assert slots_for([], 8).tolist() == []
+    with pytest.raises(ValueError):
+        slots_for(["a", None], 8)
+
+
 def test_duckdb_sql_kernel_parity():
     """The DuckDB oracle expression (murmur3_duckdb_ctes) must be
     byte-exact with the scalar kernel across tail lengths and slots."""

@@ -43,6 +43,24 @@ def test_hash_route_per_row_path_is_jvm_only(spark, sf_dir):
     assert "BatchEvalPython" not in plan
 
 
+def test_publish_drain_prunes_routing_udf(spark, sf_dir):
+    """publish routes from the key in the driver: the frame it collects
+    must not evaluate to_pulsar_wire's murmur3 pandas UDF per row."""
+    from pyspark.sql import functions as F
+
+    from pulsar_io_delta_spark.operators.pipeline import to_pulsar_wire
+    from pulsar_io_delta_spark.streaming.fake_pulsar import wire_payload
+    from pulsar_io_delta_spark.tables import table
+
+    d = table(spark, sf_dir, "documents")
+    wire = to_pulsar_wire(d, "source", F.col("doc_id").cast("string"), num_partitions=8)
+    assert "ArrowEvalPython" in wire._jdf.queryExecution().executedPlan().toString()
+    payload = wire_payload(wire.orderBy("key"))
+    plan = payload._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan, plan
+    assert "BatchEvalPython" not in plan, plan
+
+
 def test_minhash_signature_mapside_combine(spark):
     """The signature groupBy must partially aggregate BEFORE the
     exchange: at 100 TB the shuffle then carries docs × num_perm longs,
