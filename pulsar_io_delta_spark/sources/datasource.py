@@ -26,7 +26,14 @@ other commits derive insert/delete — the schema swaps ``op`` for
 Scale notes: planning is file-granular — each input partition is one
 (file, op, version) triple read by executors as Arrow batches straight
 from parquet (no driver materialization). A 10k-file commit fans out to
-10k parallelizable partitions.
+10k parallelizable partitions. The one exception is a small streaming
+micro-batch: when every admitted file has a log-recorded size and they
+sum to at most ``_PREFETCH_MAX_BYTES`` (8 MiB), the driver-side stream
+source runner reads the batch once and hands it to the JVM as one Arrow
+block. Spark keeps that block in the block manager, so every scan of
+the micro-batch (a sort's sample, map and result stages) reads JVM
+memory instead of starting a Python read task per job. The bound keeps
+the block a small fraction of the driver heap.
 """
 
 from __future__ import annotations
@@ -44,7 +51,17 @@ from pyspark.sql.datasource import (
     InputPartition,
     WriterCommitMessage,
 )
+from pyspark.sql.datasource_internal import _SimpleStreamReaderWrapper
 from pyspark.sql.types import StructType
+
+# Largest streaming micro-batch, in log-recorded file bytes, that the
+# stream source runner reads on the driver and serves from the block
+# manager. The whole batch sits in driver memory as Arrow while the
+# trigger runs, and decoded Arrow is a few times larger than compressed
+# parquet, so 8 MiB of files stays in the tens of MB: negligible against
+# a 1-2 GB driver heap, yet above a typical CDC commit (a 64-row append
+# is a few KB). Larger batches fan out to executors one file at a time.
+_PREFETCH_MAX_BYTES = 8 << 20
 
 ENVELOPE_FIELDS = """
     {"name": "op", "type": "string", "nullable": false, "metadata": {}},
@@ -138,6 +155,26 @@ class _FileSlice(InputPartition):
     # log-recorded file size (bytes); drives maxBytesPerTrigger
     # admission without touching the filesystem
     size: int = 0
+
+
+@dataclass
+class _SliceGroup(InputPartition):
+    """A prefetched micro-batch's single input partition. Spark serves
+    the batch from the block manager and never calls ``read()`` on it,
+    but ``read()`` still reads every slice if it does."""
+
+    slices: tuple[_FileSlice, ...]
+
+
+def _prefetchable(slices: list[_FileSlice]) -> bool:
+    """A non-empty batch whose files all have a log-recorded size and
+    sum to at most ``_PREFETCH_MAX_BYTES``; a size-0 (unknown) slice
+    always takes the executor path."""
+    return (
+        bool(slices)
+        and all(s.size > 0 for s in slices)
+        and sum(s.size for s in slices) <= _PREFETCH_MAX_BYTES
+    )
 
 
 def _plan_slices(
@@ -386,7 +423,7 @@ class _CdcBatchReader(DataSourceReader):
         yield from _read_slice(partition, self.schema_)
 
 
-class _CdcStreamReader(DataSourceStreamReader):
+class _CdcStreamReader(_SimpleStreamReaderWrapper):
     """Offsets are (Delta version, file index):
     ``{"version": v, "index": i}`` = commits ``< v`` fully consumed plus
     the first ``i`` file slices of commit ``v`` (``index`` 0 — the
@@ -408,6 +445,20 @@ class _CdcStreamReader(DataSourceStreamReader):
 
     File/byte caps split WITHIN a commit (sub-commit offsets); the
     checkpoint keeps exactly-once across restarts mid-commit.
+
+    Small batches are prefetched. pyspark's stream source runner asks a
+    reader for a prefetched Arrow block (``getCache``) only when it is
+    an instance of the private ``_SimpleStreamReaderWrapper``, so this
+    class subclasses it as that marker alone and overrides every method
+    the runner and executors call. A batch of at most
+    ``_PREFETCH_MAX_BYTES`` (8 MiB of log-recorded file bytes, small
+    against the driver heap that holds it; see ``_prefetchable``) plans
+    as one ``_SliceGroup`` partition and
+    ``getCache`` reads it in the runner; Spark then scans it from the
+    block manager. Larger batches plan one partition per file slice and
+    are read by executors. ``getCache`` keeps no state: it re-plans
+    ``(start, end)`` from the log, so a restart or a WAL replay reads
+    exactly the same rows.
     """
 
     def __init__(self, schema: StructType, options):
@@ -496,9 +547,27 @@ class _CdcStreamReader(DataSourceStreamReader):
         return {"version": end[0], "index": end[1]}
 
     def partitions(self, start: dict, end: dict):
+        self._seed(self._pos(end))
+        slices = self._admitted_slices(start, end)
+        # the JVM requires exactly one partition for a prefetched batch
+        return [_SliceGroup(tuple(slices))] if _prefetchable(slices) else slices
+
+    def getCache(self, start: dict, end: dict):
+        """The batch ``(start, end)`` as Arrow batches for the runner to
+        hand to the JVM, or None to have executors read it. The JVM
+        asserts the block's schema equals the output schema exactly
+        (nullability and timestamp time zone included), hence the cast."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        slices = self._admitted_slices(start, end)
+        if not _prefetchable(slices):
+            return None
+        target = to_arrow_schema(self.schema_)
+        return (b.cast(target) for s in slices for b in _read_slice(s, self.schema_))
+
+    def _admitted_slices(self, start: dict, end: dict) -> list[_FileSlice]:
         sv, si = self._pos(start)
         ev, ei = self._pos(end)
-        self._seed((ev, ei))
         if (ev, ei) <= (sv, si):
             return []
         last = ev if ei > 0 else ev - 1
@@ -519,8 +588,10 @@ class _CdcStreamReader(DataSourceStreamReader):
             out.append(s)
         return out
 
-    def read(self, partition: _FileSlice):
-        yield from _read_slice(partition, self.schema_)
+    def read(self, partition: _FileSlice | _SliceGroup):
+        slices = partition.slices if isinstance(partition, _SliceGroup) else (partition,)
+        for s in slices:
+            yield from _read_slice(s, self.schema_)
 
     def commit(self, end: dict) -> None:
         # Progress is durable in the stream's checkpointLocation; keep the

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import threading
 import uuid
 from contextlib import contextmanager
 
@@ -236,16 +237,20 @@ class _ProgressRowCounter:
     (runId, batchId) so a retried micro-batch overwrites its own entry
     instead of double-counting. Listener delivery is asynchronous —
     callers use the total only as a drain-completion signal and keep an
-    exact count/assert after the stream stops."""
+    exact count/assert after the stream stops. The listener thread
+    records while the caller sums, so both hold one lock."""
 
     def __init__(self) -> None:
         self._rows: dict[tuple[str, int], int] = {}
+        self._lock = threading.Lock()
 
     def record(self, run_id: str, batch_id: int, n: int) -> None:
-        self._rows[(run_id, batch_id)] = n
+        with self._lock:
+            self._rows[(run_id, batch_id)] = n
 
     def rows(self) -> int:
-        return sum(self._rows.values())
+        with self._lock:
+            return sum(self._rows.values())
 
 
 @contextmanager

@@ -321,15 +321,15 @@ def test_max_files_splits_within_a_commit(two_commit_table):
     assert o0 == {"version": 0, "index": 0}
     o1 = r.latestOffset()
     assert o1 == {"version": 0, "index": 3}  # mid-commit
-    p1 = r.partitions(o0, o1)
+    p1 = r._admitted_slices(o0, o1)
     assert [s.version for s in p1] == [0, 0, 0]
     o2 = r.latestOffset()  # 1 leftover of v0 + both of v1
     assert o2 == {"version": 2, "index": 0}
-    p2 = r.partitions(o1, o2)
+    p2 = r._admitted_slices(o1, o2)
     assert [s.version for s in p2] == [0, 1, 1]
     # no new commits: offset holds, zero partitions
     o3 = r.latestOffset()
-    assert o3 == o2 and r.partitions(o2, o3) == []
+    assert o3 == o2 and r._admitted_slices(o2, o3) == []
     # exactly-once across the split: every file slice seen exactly once
     seen = [(s.version, s.rel_path) for s in p1 + p2]
     assert len(seen) == len(set(seen)) == 6
@@ -343,7 +343,7 @@ def test_max_bytes_admits_at_least_one_slice(two_commit_table):
     for _ in range(6):
         offsets.append(r.latestOffset())
     for a, b in zip(offsets, offsets[1:]):
-        assert len(r.partitions(a, b)) == 1
+        assert len(r._admitted_slices(a, b)) == 1
     assert offsets[-1] == {"version": 2, "index": 0}
 
 
@@ -365,10 +365,10 @@ def test_restart_resumes_mid_commit(two_commit_table):
     r.commit({"version": 0, "index": 2})
     o = r.latestOffset()
     assert o == {"version": 2, "index": 0}
-    parts = r.partitions({"version": 0, "index": 2}, o)
+    parts = r._admitted_slices({"version": 0, "index": 2}, o)
     assert [s.version for s in parts] == [0, 0, 1, 1]
     # legacy checkpoint form (no index key) still resolves
-    assert len(r.partitions({"version": 0}, {"version": 2})) == 6
+    assert len(r._admitted_slices({"version": 0}, {"version": 2})) == 6
 
 
 def test_caps_compose_with_max_versions(two_commit_table):
@@ -378,6 +378,27 @@ def test_caps_compose_with_max_versions(two_commit_table):
     )
     r.initialOffset()
     assert r.latestOffset() == {"version": 1, "index": 0}
+
+
+def test_partitions_group_small_batch_fan_out_large(two_commit_table, monkeypatch):
+    from pulsar_io_delta_spark.sources import datasource
+
+    r = _stream_reader(two_commit_table)
+    start, end = {"version": 0, "index": 0}, {"version": 2, "index": 0}
+    slices = r._admitted_slices(start, end)
+    assert len(slices) == 6
+    total = sum(s.size for s in slices)
+    assert total <= datasource._PREFETCH_MAX_BYTES
+    # at the bound: one partition carrying every slice, in order
+    monkeypatch.setattr(datasource, "_PREFETCH_MAX_BYTES", total)
+    parts = r.partitions(start, end)
+    assert len(parts) == 1
+    assert isinstance(parts[0], datasource._SliceGroup)
+    assert list(parts[0].slices) == slices
+    # one byte over the bound: one partition per file slice
+    monkeypatch.setattr(datasource, "_PREFETCH_MAX_BYTES", total - 1)
+    assert r.partitions(start, end) == slices
+    assert r.partitions(end, end) == []
 
 
 def test_stream_max_files_per_trigger_end_to_end(spark, two_commit_table, tmp_path):
@@ -568,3 +589,188 @@ def test_stream_rejects_ending_bounds(spark, cdc_table, tmp_path):
                 q.awaitTermination(60)
             finally:
                 q.stop()
+
+
+# ---------------------------------------------------------------------------
+# Prefetched micro-batches: a small stream batch is read once by pyspark's
+# driver-side stream source runner and served to every scan from the block
+# manager; larger or unsized batches fan out to executors per file.
+
+
+@pytest.fixture()
+def ts_table(spark, tmp_path):
+    """Partitioned table with a timestamp data column: two appends (20 +
+    10 rows) and a partition delete that rewrites every file (30 rows
+    removed, 20 re-added), so the feed carries 80 rows of adds and
+    removes."""
+    path = str(tmp_path / "ts")
+    t = DeltaTable(path)
+    mk = lambda lo, hi, et: spark.range(lo, hi).select(  # noqa: E731
+        F.col("id").alias("event_id"),
+        F.lit(et).alias("event_type"),
+        F.timestamp_seconds(F.col("id") * 3601 + 1_700_000_000).alias("event_time"),
+    )
+    t.write(mk(0, 20, "click"), partition_by=["event_type"])
+    t.write(mk(20, 30, "buy"), partition_by=["event_type"])
+    t.delete_where(spark, "event_type = 'buy'")
+    register_delta_cdc(spark)
+    return path
+
+
+def _run_partitions_func(reader, source, schema, start, end):
+    """Drive pyspark's stream source runner for one batch the way the
+    JVM does: two offsets in; the partitions, the prefetch flag and, when
+    prefetched, an Arrow stream out."""
+    import io
+    import json
+
+    import pyarrow as pa
+    from pyspark.serializers import SpecialLengths, read_int, write_with_length
+    from pyspark.sql.streaming import python_streaming_source_runner as runner
+
+    infile = io.BytesIO()
+    for offset in (start, end):
+        write_with_length(json.dumps(offset).encode("utf-8"), infile)
+    infile.seek(0)
+    out = io.BytesIO()
+    runner.partitions_func(reader, source, schema, 10_000, infile, out)
+    out.seek(0)
+    parts = [runner.pickleSer._read_with_length(out) for _ in range(read_int(out))]
+    flag = read_int(out)
+    block = None
+    if flag == runner.NON_EMPTY_PYARROW_RECORD_BATCHES:
+        assert read_int(out) == SpecialLengths.START_ARROW_STREAM
+        block = pa.ipc.open_stream(out).read_all()
+    assert out.read() == b""
+    return parts, flag, block
+
+
+def test_stream_runner_prefetch_contract(spark, ts_table, monkeypatch):
+    """Pins the private pyspark hook the prefetch rides on: the runner
+    asks ``getCache`` only of ``_SimpleStreamReaderWrapper`` instances,
+    and the JVM asserts one partition and an Arrow schema equal to the
+    output schema. If pyspark renames the hook or tightens the check,
+    this fails here instead of as a bare JVM assertion."""
+    import shutil
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+    from pyspark.sql.streaming import python_streaming_source_runner as runner
+
+    from pulsar_io_delta_spark.sources import datasource
+
+    source = datasource.DeltaCdcDataSource({"tablePath": ts_table})
+    schema = source.schema()
+    reader = source.streamReader(schema)
+    start = reader.initialOffset()
+    end = reader.latestOffset()
+    slices = reader._admitted_slices(start, end)
+    assert {s.op for s in slices} == {"c", "r"}
+
+    parts, flag, block = _run_partitions_func(reader, source, schema, start, end)
+    assert flag == runner.NON_EMPTY_PYARROW_RECORD_BATCHES
+    assert len(parts) == 1 and list(parts[0].slices) == slices
+    assert block.schema == to_arrow_schema(schema)
+    assert from_arrow_schema(block.schema) == schema
+    assert block.schema.field("ts").type == pa.timestamp("us", tz="UTC")
+    assert block.schema.field("event_time").type == pa.timestamp("us", tz="UTC")
+    assert not block.schema.field("op").nullable
+    assert not block.schema.field("_commit_version").nullable
+    # the group's own read() (the executor fallback) yields the same rows
+    fallback = pa.Table.from_batches(list(reader.read(parts[0])))
+    assert block.num_rows == 80
+    assert fallback.cast(block.schema).equals(block)
+
+    # over the bound: executors read it, one partition per file
+    monkeypatch.setattr(datasource, "_PREFETCH_MAX_BYTES", sum(s.size for s in slices) - 1)
+    parts, flag, block = _run_partitions_func(reader, source, schema, start, end)
+    assert flag == runner.PREFETCHED_RECORDS_NOT_FOUND and block is None
+    assert parts == slices
+    monkeypatch.undo()
+
+    # a slice whose size the log does not record always takes the executor path
+    t = DeltaTable(ts_table)
+    sized = slices[0]
+    rel_path = sized.rel_path.replace(".parquet", "-unsized.parquet")
+    shutil.copy(
+        os.path.join(ts_table, sized.rel_path), os.path.join(ts_table, rel_path)
+    )
+    t.commit_external_adds(
+        [
+            {
+                "path": rel_path,
+                "partitionValues": dict(sized.partition_values),
+                "size": 0,
+                "modificationTime": sized.ts_ms,
+                "dataChange": True,
+            }
+        ],
+        operation="WRITE",
+        schema_json=t.snapshot().schema_string,
+        partition_by=["event_type"],
+    )
+    newer = reader.latestOffset()
+    parts, flag, block = _run_partitions_func(reader, source, schema, start, newer)
+    assert flag == runner.PREFETCHED_RECORDS_NOT_FOUND and block is None
+    assert parts == reader._admitted_slices(start, newer)
+    assert len(parts) == len(slices) + 1 and parts[-1].size == 0
+
+
+def test_stream_matches_batch_under_non_utc_session_tz(spark, ts_table, tmp_path):
+    """A prefetched stream and the executor-read batch source deliver the
+    same wire messages, timestamps included, with a non-UTC session zone
+    rendering them."""
+    from pulsar_io_delta_spark.operators.pipeline import to_pulsar_wire
+    from pulsar_io_delta_spark.streaming.fake_pulsar import FakeBroker, publish
+
+    n_part = 4
+
+    def deliver(df, broker):
+        wire = to_pulsar_wire(
+            df.orderBy("_commit_version", "event_id"),
+            "partition_value",
+            F.to_json(F.struct(*df.columns)),
+            num_partitions=n_part,
+        )
+        publish(wire, broker, "cdc", n_part)
+
+    def messages(broker):
+        return sorted(
+            (m.key, m.value) for p in range(n_part) for m in broker.partition_log("cdc", p)
+        )
+
+    saved_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        streamed = FakeBroker()
+        q = (
+            spark.readStream.format("pulsar_delta_cdc")
+            .option("tablePath", ts_table)
+            .option("startingVersion", 0)
+            .load()
+            .writeStream.foreachBatch(lambda b, _i: deliver(b, streamed))
+            .option("checkpointLocation", str(tmp_path / "ck_tz"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+        batch = FakeBroker()
+        deliver(
+            spark.read.format("pulsar_delta_cdc")
+            .option("tablePath", ts_table)
+            .option("startingVersion", 0)
+            .option("endingVersion", DeltaTable(ts_table).latest_version())
+            .load(),
+            batch,
+        )
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", saved_tz)
+    got, want = messages(streamed), messages(batch)
+    assert len(want) == len(set(want)) == 80
+    assert got == want
+    # event_id 0 is 1_700_000_000 s = 2023-11-14T22:13:20Z, shown in LA time
+    assert any(
+        b'"event_id":0,' in v and b'"event_time":"2023-11-14T14:13:20.000-08:00"' in v
+        for _k, v in got
+    )

@@ -403,3 +403,43 @@ def test_session_scrub_between_streams(spark, sf_dir):
     assert info["views_dropped"] >= 1  # the sink the first run left
     second = fn(spark, sf_dir).count()
     assert first == second > 0
+
+
+
+def test_progress_row_counter_sums_while_recording():
+    """The listener thread records while the caller sums. The sum pauses
+    mid-iteration until the recording thread has inserted, or for 200 ms
+    when a lock holds it off, so an unguarded sum always sees the dict
+    change size under it."""
+    import threading
+
+    from pulsar_io_delta_spark.streaming.runner import _ProgressRowCounter
+
+    paused, recorded = threading.Event(), threading.Event()
+
+    class _PausingDict(dict):
+        def values(self):
+            for i, v in enumerate(super().values()):
+                if i == 1 and not paused.is_set():
+                    paused.set()
+                    recorded.wait(timeout=0.2)
+                yield v
+
+    counter = _ProgressRowCounter()
+    counter._rows = _PausingDict()
+    for b in range(10):
+        counter.record("warm", b, 1)
+    n = 3000
+
+    def hammer():
+        paused.wait()
+        for b in range(n):
+            counter.record("run", b, 2)
+            recorded.set()
+
+    t = threading.Thread(target=hammer)
+    t.start()
+    while t.is_alive():
+        counter.rows()
+    t.join()
+    assert counter.rows() == 10 + 2 * n
