@@ -15,7 +15,9 @@ scale shapes:
   banding 4×16-bit chunks (any chunk equal ⇒ hamming candidates);
 - n-gram Jaccard: explode distinct n-grams → equi-join on gram →
   count-based Jaccard. Used on small candidate subsets; at 100 TB it is
-  the *verify* stage after MinHash banding, not a global join.
+  the *verify* stage after MinHash banding, not a global join;
+- keep list: connected components over the verified pairs, through
+  ``graph.connected_components`` and its superstep loop.
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pulsar_io_delta_spark.operators.graph import connected_components
 from pulsar_io_delta_spark.operators.par import fan_out
 from pulsar_io_delta_spark.operators.text import tokens_col
 
@@ -491,15 +494,16 @@ def near_dedup_keep_list(
     """The composed production pipeline: MinHash+LSH candidates →
     n-gram Jaccard verification on candidates only → connected keep
     list (lowest id per duplicate group = connected component root,
-    via min-label propagation iterated to fixpoint over verified pairs).
+    from ``graph.connected_components`` over the verified pairs).
 
     At 100 TB each stage is bounded: candidates by bucket collisions,
-    verification by candidate count, and the keep-list propagation by
-    the (small) duplicate-pair graph — each round is one equi-join +
-    min-aggregate over pair-involved ids only, checkpointed to keep the
-    plan flat; rounds needed = graph diameter (chains A≈B≈C resolve
-    C→A, not C→B). Returns (id, keep_id) for every row — keep_id == id
-    for non-duplicates.
+    verification by candidate count, and the keep list by the (small)
+    duplicate-pair graph — its vertex set is the pair endpoints only
+    (``nodes=None``), so each superstep is node-sized over
+    pair-involved ids, not the corpus, and rounds are O(log diameter)
+    (chains A≈B≈C resolve C→A, not C→B). A graph that does not
+    converge raises rather than returning partial labels. Returns
+    (id, keep_id) for every row — keep_id == id for non-duplicates.
 
     EXACT-CONTENT PRE-COLLAPSE (r15 sf10 finding): signatures,
     candidates, and the Jaccard verify run over the DISTINCT texts
@@ -535,54 +539,13 @@ def near_dedup_keep_list(
         .where(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b")
     )
-    labels = _min_label_fixpoint(verified)
+    labels = connected_components(None, verified, src_col="id_a", dst_col="id_b")
     mapped = members.join(
-        labels.select(F.col("id").alias("rid"), "keep_id"), "rid", "left"
+        labels.select(F.col("id").alias("rid"), F.col("component").alias("keep_id")),
+        "rid",
+        "left",
     ).select("id", F.coalesce("keep_id", F.col("rid")).alias("keep_id"))
     return mapped.unionByName(nulls)
-
-
-def _min_label_fixpoint(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
-    """(id, keep_id) for every id appearing in ``pairs``: the minimum id
-    of its connected component, by iterated min-label propagation.
-
-    Converges in diameter(graph) rounds; duplicate families are small,
-    so the bound is a safety net, not a working limit (degenerate
-    million-node chains would want alternating large-star/small-star).
-    Each round localCheckpoints so the plan stays flat."""
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    edges = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
-    labels = (
-        edges.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
-    )
-    for _ in range(max_rounds):
-        nbr = (
-            edges.join(
-                labels.select(F.col("id").alias("dst"), F.col("label").alias("dlabel")),
-                "dst",
-            )
-            .groupBy("src")
-            .agg(F.min("dlabel").alias("nbr_label"))
-            .select(F.col("src").alias("id"), "nbr_label")
-        )
-        stepped = (
-            labels.join(nbr, "id", "left")
-            .select(
-                "id",
-                F.least(F.col("label"), F.coalesce("nbr_label", "label")).alias("label"),
-                (F.coalesce("nbr_label", "label") < F.col("label"))
-                .cast("long")
-                .alias("_chg"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = stepped.agg(F.sum("_chg")).first()[0]
-        labels = stepped.drop("_chg")
-        if not changed:
-            break
-    return labels.select("id", F.col("label").alias("keep_id"))
 
 
 def _distinct_grams(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:

@@ -28,15 +28,11 @@ O(|edges| + |nodes|) × 16 bytes regardless of document payload size.
 Measured on the fixture dedup graph (25-chains × exact-dup stars):
 6 rounds, per-round cost flat.
 
-Every round materializes the label table to parquet in ``work_dir``
-(write + re-read). This is deliberate, not an optimization miss:
-Dataset.checkpoint/localCheckpoint in an iterative loop was measured
-to RE-EXECUTE prior rounds (cost doubled per round from ~round 16,
-82 s/round by round 22, on constant-size plans — both local and
-reliable variants); a parquet barrier holds ~0.5 s/round flat for 25+
-rounds. It is also the fault-tolerance story at 100 TB: each round is
-a durable, resumable superstep (point ``work_dir`` at HDFS/S3 on a
-real cluster), exactly how MapReduce CC implementations iterate.
+The looping operators (connected_components, bfs_distances here and
+bpe_train in ``operators/text.py``) run their rounds through one
+helper, ``Supersteps``: each round is written to parquet and read
+back. Its docstring holds the measured reason. pagerank_fixed is
+unrolled and has no barrier.
 """
 
 from __future__ import annotations
@@ -45,11 +41,78 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
+
+
+class Supersteps:
+    """One run of parquet-barrier supersteps, the loop shared by
+    connected_components, bfs_distances and text.bpe_train. Each round's
+    table is written to parquet under the work dir and read back, so
+    round k's plan starts at a file scan instead of at round 0.
+
+    The barrier is deliberate, not an optimization miss:
+    Dataset.checkpoint/localCheckpoint in an iterative loop was measured
+    to RE-EXECUTE prior rounds (cost doubled per round from ~round 16,
+    82 s/round by round 22, on constant-size plans — both local and
+    reliable variants); a parquet barrier holds ~0.5 s/round flat for
+    25+ rounds. It is also the fault-tolerance story at 100 TB: each
+    round is a durable, resumable superstep (pass a ``work_dir`` on
+    HDFS/S3 on a real cluster), exactly how MapReduce CC
+    implementations iterate.
+
+    ``work_dir`` defaults to a fresh temp dir. ``close()`` deletes every
+    table the run still holds, and the dir itself only if the run
+    created it. Operators whose returned frame is backed by their last
+    round do not close.
+    """
+
+    def __init__(self, spark: SparkSession, work_dir: str | None = None):
+        self._spark = spark
+        self._owned = work_dir is None
+        self._dir = work_dir or tempfile.mkdtemp(prefix="pids_steps_")
+        self._held: set[str] = set()
+
+    def barrier(
+        self, df: DataFrame, name: str, *, drop: str | None = None
+    ) -> DataFrame:
+        """Write ``df`` as table ``name`` and return it read back. Once
+        the write is durable, the superseded table ``drop`` (if any) is
+        deleted: a round's input is dead when its output is on disk."""
+        path = os.path.join(self._dir, name)
+        self._held.add(name)
+        df.write.mode("overwrite").parquet(path)
+        if drop is not None:
+            shutil.rmtree(os.path.join(self._dir, drop), ignore_errors=True)
+            self._held.discard(drop)
+        return self._spark.read.parquet(path)
+
+    def counted(
+        self, df: DataFrame, name: str, where: Column, *, drop: str | None = None
+    ) -> tuple[DataFrame, int]:
+        """``barrier()`` that also returns how many written rows satisfy
+        ``where`` — the round's convergence count. It rides the write via
+        observe(), so it costs no extra job re-reading the parquet just
+        written. Task retries can only INFLATE an observed count, never
+        zero a non-zero one, so a caller's ``== 0`` test stays exact."""
+        obs = Observation(name)
+        out = self.barrier(
+            df.observe(obs, F.sum(F.when(where, 1).otherwise(0)).alias("n")),
+            name,
+            drop=drop,
+        )
+        # A sum over zero rows is NULL.
+        return out, obs.get["n"] or 0
+
+    def close(self) -> None:
+        for name in self._held:
+            shutil.rmtree(os.path.join(self._dir, name), ignore_errors=True)
+        self._held.clear()
+        if self._owned:
+            shutil.rmtree(self._dir, ignore_errors=True)
 
 
 def connected_components(
-    nodes: DataFrame,
+    nodes: DataFrame | None,
     edges: DataFrame,
     *,
     id_col: str = "id",
@@ -65,36 +128,29 @@ def connected_components(
     ``nodes`` supplies the full vertex set (isolated vertices become
     singleton components); ``edges`` is directed input and is
     symmetrized here; edges referencing ids outside ``nodes`` are
-    ignored by the joins. Labels are monotone non-increasing and every
+    ignored by the joins. ``nodes=None`` means the distinct endpoints of
+    the symmetrized edge list, read from its barrier — never derive
+    ``nodes`` from the same lazy frame as ``edges``, which evaluates
+    that lineage twice. Labels are monotone non-increasing and every
     assigned label is the id of a node in the same component, so the
     fixpoint (no label changed in a full round) is exactly
     component-min. Raises if ``max_iter`` rounds pass without
     convergence — never silently-partial labels.
 
-    ``work_dir`` receives one small parquet table per round (the final
-    one backs the returned DataFrame, so it must outlive the caller's
-    consumption); defaults to a fresh temp dir. On a cluster pass a
-    durable path — each round is then a resumable superstep. Pass a
+    ``work_dir`` receives one small parquet table per round
+    (``Supersteps``; the final one backs the returned DataFrame, so it
+    must outlive the caller's consumption). Pass a
     dict as ``stats`` to receive {'rounds': k} — tests pin the
     O(log diameter) convergence bound through it.
     """
-    from pyspark.sql import Observation
-
-    spark = nodes.sparkSession
-    workdir = work_dir or tempfile.mkdtemp(prefix="pids_cc_")
-
-    def barrier(df: DataFrame, name: str) -> DataFrame:
-        path = os.path.join(workdir, name)
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-
-    sym = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    sym = barrier(
-        sym.unionAll(
-            sym.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).distinct(),
-        "edges",
+    steps = Supersteps(edges.sparkSession, work_dir)
+    # Both directions come from ONE reference to `edges`: a unionAll of
+    # the two directions evaluates the caller's edge lineage twice.
+    s, d = F.col(src_col), F.col(dst_col)
+    both = F.array(
+        F.struct(s.alias("src"), d.alias("dst")), F.struct(d.alias("src"), s.alias("dst"))
     )
+    sym = steps.barrier(edges.select(F.inline(both)).distinct(), "edges")
     # NOT pre-partitioned/persisted by src (r16 A/B, 7 variants × 4
     # trials at sf0.1): the label side is node-sized and joins
     # broadcast here, so the edge side never re-shuffles per round to
@@ -103,14 +159,14 @@ def connected_components(
     # On a cluster where labels outgrow the broadcast threshold, the
     # parquet barrier is the place to add bucketing — noted in
     # OPTIMIZATION_r16.md "left alone".
-    labels = barrier(
+    if nodes is None:
+        nodes, id_col = sym, "src"
+    labels = steps.barrier(
         nodes.select(F.col(id_col).alias("id"))
         .distinct()
         .withColumn("lab", F.col("id")),
         "labels_0",
     )
-
-    cur_path = os.path.join(workdir, "labels_0")
     for i in range(max_iter):
         # (1) min label over graph neighbors; map-side combine keeps
         # the shuffle at one (dst, partial-min) row per partition
@@ -149,27 +205,13 @@ def connected_components(
             )
             .select("a.id", "a.prev", F.col("b._jlab").alias("lab"))
         )
-        # Convergence check rides the barrier write via observe():
-        # the old `out.where(lab != prev).limit(1).count()` was one
-        # extra job per round re-reading the parquet just written.
-        # Task retries can only INFLATE an observed count, never
-        # zero a non-zero one, so the == 0 test stays exact.
-        obs = Observation(f"cc_round_{i}")
-        out = barrier(
-            jumped.observe(
-                obs,
-                F.sum(
-                    F.when(F.col("lab") != F.col("prev"), 1).otherwise(0)
-                ).alias("changed"),
-            ),
+        out, changed = steps.counted(
+            jumped,
             f"labels_{i + 1}",
+            F.col("lab") != F.col("prev"),
+            drop=f"labels_{i}",
         )
-        changed = obs.get["changed"] or 0
         labels = out.select("id", "lab")
-        # The input label table is superseded now that `out` is on
-        # disk.
-        shutil.rmtree(cur_path, ignore_errors=True)
-        cur_path = os.path.join(workdir, f"labels_{i + 1}")
         if changed == 0:
             if stats is not None:
                 stats["rounds"] = i + 1
@@ -363,24 +405,15 @@ def bfs_distances(
     equi-join), anti-joins the visited set, and appends. Every edge is
     therefore relaxed exactly once over the whole run — total work
     O(|E| + |V|·diameter) with no per-round full-graph pass, the
-    Pregel/GraphX BFS shape. Rounds barrier to parquet like
-    connected_components (durable, resumable supersteps; Dataset
-    .checkpoint re-executes prior rounds — measured there). Raises if
+    Pregel/GraphX BFS shape. Rounds barrier to parquet through
+    ``Supersteps``, like connected_components. Raises if
     the frontier is still non-empty after ``max_iter`` rounds — never
     silently-partial distances. Pass ``stats`` to receive
     {'rounds': k} (== eccentricity of the source + 1)."""
-    from pyspark.sql import Observation
-
     spark = edges.sparkSession
-    workdir = work_dir or tempfile.mkdtemp(prefix="pids_bfs_")
-
-    def barrier(df: DataFrame, name: str) -> DataFrame:
-        path = os.path.join(workdir, name)
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-
+    steps = Supersteps(spark, work_dir)
     e = edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-    sym = barrier(
+    sym = steps.barrier(
         e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .where(F.col("a") != F.col("b"))
         .distinct(),
@@ -393,33 +426,28 @@ def bfs_distances(
         source = sym.agg(F.min("a")).first()[0]
         if source is None:
             return spark.createDataFrame([], "node long, dist long")
-    frontier = barrier(
+    frontier = steps.barrier(
         spark.createDataFrame([(int(source), 0)], "node long, dist long"),
         "frontier_0",
     )
-    dist = barrier(frontier, "dist_0")
+    dist = steps.barrier(frontier, "dist_0")
     for i in range(max_iter):
         reached = (
             sym.join(frontier, sym.a == frontier.node)
             .select(F.col("b").alias("node"), (F.col("dist") + 1).alias("dist"))
             .distinct()
         )
-        # Frontier-emptiness check rides the barrier write (observe;
-        # retries can only inflate a count, so == 0 stays exact) —
-        # the old limit(1).count() was an extra per-round job.
-        obs = Observation(f"bfs_round_{i}")
-        nxt = barrier(
-            reached.join(dist.select("node"), "node", "left_anti").observe(
-                obs, F.count(F.lit(1)).alias("n")
-            ),
+        frontier, n_new = steps.counted(
+            reached.join(dist.select("node"), "node", "left_anti"),
             f"frontier_{i + 1}",
+            F.lit(True),
+            drop=f"frontier_{i}",
         )
-        if (obs.get["n"] or 0) == 0:
+        if n_new == 0:
             if stats is not None:
                 stats["rounds"] = i + 1
             return dist
-        dist = barrier(dist.unionAll(nxt), f"dist_{i + 1}")
-        frontier = nxt
-        shutil.rmtree(os.path.join(workdir, f"frontier_{i}"), ignore_errors=True)
-        shutil.rmtree(os.path.join(workdir, f"dist_{i}"), ignore_errors=True)
+        dist = steps.barrier(
+            dist.unionAll(frontier), f"dist_{i + 1}", drop=f"dist_{i}"
+        )
     raise RuntimeError(f"bfs_distances did not converge in {max_iter} rounds")

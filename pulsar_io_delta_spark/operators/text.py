@@ -13,6 +13,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from pulsar_io_delta_spark.operators.graph import Supersteps
+
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
 
 # Tiny function-word marker lists for the n-gram/stopword language
@@ -391,15 +393,15 @@ def bpe_train(
     """BPE tokenizer TRAINING — induce the merge table bpe_tokens_col
     applies (VERDICT r13 #4: a real pipeline must LEARN the table, not
     just apply a frozen one). Classic Sennrich BPE over (word, count)
-    pairs, run as iterative supersteps on the parquet-barrier pattern
-    of operators/graph.py: per round (1) count adjacent symbol pairs
-    weighted by word count — a map-side-combined groupBy whose width is
-    the pair vocabulary, (2) take the DETERMINISTIC arg-max pair
-    (cnt DESC, a ASC, b ASC — pure ASCII binary order, so any SQL twin
-    agrees on every tie), (3) apply the merge to every word encoding
-    with the same doubled-'||'-boundary replace the apply path uses,
-    and barrier the new encodings to parquet so each round rescans
-    O(vocab), never O(rounds·vocab).
+    pairs, run as iterative supersteps on ``graph.Supersteps``, the
+    parquet-barrier loop the graph operators share: per round (1) count
+    adjacent symbol pairs weighted by word count — a map-side-combined
+    groupBy whose width is the pair vocabulary, (2) take the
+    DETERMINISTIC arg-max pair (cnt DESC, a ASC, b ASC — pure ASCII
+    binary order, so any SQL twin agrees on every tie), (3) apply the
+    merge to every word encoding with the same doubled-'||'-boundary
+    replace the apply path uses, and barrier the new encodings to
+    parquet so each round rescans O(vocab), never O(rounds·vocab).
 
     ``words`` is (w, wc) — the corpus ALREADY reduced to vocabulary
     granularity (the q_tokenize_bpe shape: one corpus-wide shuffle,
@@ -408,60 +410,57 @@ def bpe_train(
     driver transfer is ONE row (the arg-max — the superstep's control
     decision, the graph.py convergence-count precedent).
 
-    Returns [(a, b, pair_count), ...] in merge order.
+    Returns [(a, b, pair_count), ...] in merge order. The result is a
+    Python list, so no round outlives the call: each round's table is
+    deleted once the next is written, and the rest on return or error.
+    A caller-supplied ``work_dir`` itself is left in place.
     """
-    import os
-    import tempfile
-
-    spark = words.sparkSession
-    workdir = work_dir or tempfile.mkdtemp(prefix="pids_bpe_train_")
-
-    def barrier(df: DataFrame, name: str) -> DataFrame:
-        path = os.path.join(workdir, name)
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-
-    enc = barrier(
-        words.select(
-            "w",
-            "wc",
-            F.concat(F.lit("||"), F.regexp_replace("w", "(.)", "$1||")).alias("enc"),
-        ),
-        "enc_0",
-    )
-    merges: list[tuple[str, str, int]] = []
-    for i in range(n_merges):
-        pairs = (
-            enc.select(
+    steps = Supersteps(words.sparkSession, work_dir)
+    try:
+        enc = steps.barrier(
+            words.select(
+                "w",
                 "wc",
-                F.expr("filter(split(enc, '\\\\|\\\\|'), x -> x != '')").alias("s"),
-            )
-            .select(
-                "wc",
-                F.explode(
-                    F.expr(
-                        "zip_with(slice(s, 1, size(s) - 1), "
-                        "slice(s, 2, size(s) - 1), "
-                        "(x, y) -> struct(x AS a, y AS b))"
-                    )
-                ).alias("p"),
-            )
-            .groupBy("p.a", "p.b")
-            .agg(F.sum("wc").alias("cnt"))
+                F.concat(F.lit("||"), F.regexp_replace("w", "(.)", "$1||")).alias("enc"),
+            ),
+            "enc_0",
         )
-        best = pairs.orderBy(F.desc("cnt"), F.asc("a"), F.asc("b")).limit(1).collect()
-        if not best:
-            break
-        a, b, cnt = best[0].a, best[0].b, int(best[0].cnt)
-        merges.append((a, b, cnt))
-        if i + 1 < n_merges:
-            enc = barrier(
-                enc.withColumn(
-                    "enc",
-                    F.call_function(
-                        "replace", F.col("enc"), F.lit(f"|{a}||{b}|"), F.lit(f"|{a}{b}|")
-                    ),
-                ),
-                f"enc_{i + 1}",
+        merges: list[tuple[str, str, int]] = []
+        for i in range(n_merges):
+            pairs = (
+                enc.select(
+                    "wc",
+                    F.expr("filter(split(enc, '\\\\|\\\\|'), x -> x != '')").alias("s"),
+                )
+                .select(
+                    "wc",
+                    F.explode(
+                        F.expr(
+                            "zip_with(slice(s, 1, size(s) - 1), "
+                            "slice(s, 2, size(s) - 1), "
+                            "(x, y) -> struct(x AS a, y AS b))"
+                        )
+                    ).alias("p"),
+                )
+                .groupBy("p.a", "p.b")
+                .agg(F.sum("wc").alias("cnt"))
             )
+            best = pairs.orderBy(F.desc("cnt"), F.asc("a"), F.asc("b")).limit(1).collect()
+            if not best:
+                break
+            a, b, cnt = best[0].a, best[0].b, int(best[0].cnt)
+            merges.append((a, b, cnt))
+            if i + 1 < n_merges:
+                enc = steps.barrier(
+                    enc.withColumn(
+                        "enc",
+                        F.call_function(
+                            "replace", F.col("enc"), F.lit(f"|{a}||{b}|"), F.lit(f"|{a}{b}|")
+                        ),
+                    ),
+                    f"enc_{i + 1}",
+                    drop=f"enc_{i}",
+                )
+    finally:
+        steps.close()
     return merges

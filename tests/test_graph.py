@@ -1,14 +1,19 @@
 """connected_components vs a brute-force Python union-find on random
-graphs, plus edge cases (isolated nodes, chains, non-convergence guard).
+graphs, plus edge cases (isolated nodes, chains, non-convergence guard),
+and the structural pin that every iterative operator runs through the
+one ``Supersteps`` loop.
 """
 
 from __future__ import annotations
 
+import ast
 import random
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
+from pulsar_io_delta_spark import operators
 from pulsar_io_delta_spark.operators.graph import connected_components
 
 
@@ -73,6 +78,28 @@ def test_nonconvergence_raises(spark):
     e = spark.createDataFrame([(i, i - 1) for i in range(1, 8)], "src long, dst long")
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(nodes, e, max_iter=1)
+
+
+def test_nodes_none_evaluates_edges_once(spark):
+    """``nodes=None`` takes the vertex set from the edge barrier, so an
+    expensive edge lineage (here: a counting Python UDF) runs once per
+    edge row, and the labels cover exactly the edge endpoints."""
+    calls = spark.sparkContext.accumulator(0)
+
+    def counted(x):
+        calls.add(1)
+        return x
+
+    rng = random.Random(20261017)
+    n = 60
+    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(50)]
+    e = spark.createDataFrame(edges, "src long, dst long").select(
+        F.udf(counted, "long")("src").alias("src"), "dst"
+    )
+    got = {r["id"]: r["component"] for r in connected_components(None, e).collect()}
+    assert calls.value == len(edges)
+    uf = _union_find(n, edges)
+    assert got == {v: uf[v] for edge in edges for v in edge}
 
 
 def test_duplicate_and_reversed_edges_collapse(spark):
@@ -261,3 +288,50 @@ def test_bfs_nonconvergence_raises(spark):
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         bfs_distances(edges, source=0, max_iter=2)
+
+
+def _on_writer(expr) -> bool:
+    """True iff the call chain ``expr`` goes through a ``.write``."""
+    while isinstance(expr, (ast.Attribute, ast.Call)):
+        if isinstance(expr, ast.Attribute):
+            if expr.attr == "write":
+                return True
+            expr = expr.value
+        else:
+            expr = expr.func
+    return False
+
+
+def _loop_sites(tree):
+    """(node, kind) for every temp-dir creation, parquet write or
+    Dataset checkpoint under ``tree``."""
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        name = getattr(node.func, "attr", getattr(node.func, "id", None))
+        if name in ("mkdtemp", "localCheckpoint", "checkpoint"):
+            yield node, name
+        elif name == "parquet" and _on_writer(node.func.value):
+            yield node, "parquet write"
+
+
+def test_one_superstep_loop():
+    """Only ``graph.Supersteps`` may create a temp dir, write a parquet
+    barrier or checkpoint a Dataset under operators/: every iterative
+    operator goes through that one loop helper."""
+    outside, inside = [], set()
+    for path in sorted(Path(operators.__file__).parent.glob("*.py")):
+        tree = ast.parse(path.read_text())
+        helper = {
+            id(n)
+            for c in tree.body
+            if isinstance(c, ast.ClassDef) and c.name == "Supersteps"
+            for n in ast.walk(c)
+        }
+        for node, kind in _loop_sites(tree):
+            if id(node) in helper:
+                inside.add(kind)
+            else:
+                outside.append(f"{path.name}:{node.lineno} {kind}")
+    assert outside == []
+    assert inside == {"mkdtemp", "parquet write"}

@@ -194,13 +194,29 @@ def test_keep_list_transitive_chain(spark):
     assert keep == {0: 0, 1: 0, 2: 0, 3: 3}
 
 
-def test_min_label_fixpoint_long_chain(spark):
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(9)] + [(100, 101)], "id_a long, id_b long"
-    )
-    labels = {r.id: r.keep_id for r in dd._min_label_fixpoint(pairs).collect()}
-    assert all(labels[i] == 0 for i in range(10))
-    assert labels[100] == 100 and labels[101] == 100
+def test_keep_list_chain_longer_than_twenty_rounds(spark):
+    """A 30-doc near-dup chain (diameter 29) must collapse to doc 0.
+    Each doc is 42 random six-letter words, shifted 10 words from the
+    previous one: neighbours have Jaccard ~0.6, docs two apart ~0.33,
+    so the verified graph is a path. 32 one-row bands make every
+    neighbour pair a candidate. A per-round min-label propagation
+    capped at 20 rounds would leave docs 21-29 partially labelled."""
+    import random
+    import string
+
+    rng = random.Random(20261017)
+    words = [
+        "".join(rng.choices(string.ascii_lowercase, k=6)) for _ in range(42 + 29 * 10)
+    ]
+    rows = [(i, " ".join(words[10 * i : 10 * i + 42])) for i in range(30)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    keep = {
+        r.id: r.keep_id
+        for r in dd.near_dedup_keep_list(
+            df, "doc_id", "text", num_perm=32, bands=32
+        ).collect()
+    }
+    assert keep == {i: 0 for i in range(30)}
 
 
 def test_char_ngrams_on_renamed_column(spark):
@@ -929,6 +945,25 @@ def test_bpe_train_feeds_apply(spark):
     }
     for w in wc:
         assert got[w] == _py_bpe(w, merges), (w, got[w])
+
+
+def test_bpe_train_leaves_no_work_dir(spark, tmp_path, monkeypatch):
+    """bpe_train returns a list, so no parquet round may outlive the
+    call: its own temp dir is removed, and a caller-supplied work_dir
+    is emptied but left in place."""
+    import tempfile
+
+    from pulsar_io_delta_spark.operators.text import bpe_train
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    df = spark.createDataFrame([("the", 3), ("then", 1), ("her", 2)], "w string, wc long")
+    assert len(bpe_train(df, n_merges=3)) == 3
+    assert list(tmp_path.iterdir()) == []
+    work = tmp_path / "work"
+    work.mkdir()
+    assert len(bpe_train(df, n_merges=3, work_dir=str(work))) == 3
+    assert list(tmp_path.iterdir()) == [work]
+    assert list(work.iterdir()) == []
 
 
 def test_keep_list_returns_null_text_rows(spark):
