@@ -15,8 +15,12 @@ CDC record stream. This module reproduces that contract:
 - :func:`assigned_partitions` — round-robin partition→instance
   assignment with the intended guard (SURVEY §2.4 #2).
 - :class:`DeltaCdcConnector` — open → (FULL_COPY bootstrap snapshot |
-  INCREMENTAL_COPY log tail) → CDC envelope → murmur3 routing, as
-  DataFrames (`DeltaLakeConnectorSource.java:62-112`).
+  INCREMENTAL_COPY log tail) → CDC envelope, as DataFrames
+  (`DeltaLakeConnectorSource.java:62-112`). The envelope is the
+  ``pulsar_delta_cdc`` stream source's: data columns plus ``op``,
+  ``partition_value``, ``ts`` and ``_commit_version``. The murmur3
+  routing slot is computed once, at the producer boundary
+  (``operators/pipeline.to_pulsar_wire`` / ``streaming/fake_pulsar.publish``).
 
 Durable progress comes from Structured Streaming checkpoints + the
 Delta sink's txn markers (sources/delta_log.py), replacing the
@@ -53,7 +57,6 @@ class ConnectorConfig:
     starting_version: int | None = None
     starting_timestamp_ms: int | None = None
     include_history_data: bool = False
-    topic_partition_num: int = 8
 
     @classmethod
     def load(cls, conf: dict[str, Any]) -> "ConnectorConfig":
@@ -83,7 +86,6 @@ class ConnectorConfig:
             starting_version=version,
             starting_timestamp_ms=ts_ms,
             include_history_data=bool(conf.get("includeHistoryData", False)),
-            topic_partition_num=int(conf.get("topicPartitionNum", 8)),
         )
 
 
@@ -125,7 +127,7 @@ def assigned_partitions(num_partitions: int, instance_id: int, num_instances: in
 
 @dataclass
 class DeltaCdcConnector:
-    """open() → start checkpoint; batches() → enveloped, routed records."""
+    """open() → start checkpoint; bootstrap/tail/poll → enveloped records."""
 
     config: ConnectorConfig
     table: DeltaTable = field(init=False)
@@ -145,37 +147,26 @@ class DeltaCdcConnector:
         self.start = Checkpoint(state=state, snapshot_version=version)
         return self.start
 
-    def _envelope(self, df: DataFrame, version: int) -> DataFrame:
-        pcols = self.table.snapshot(version).partition_columns
-        if "partition_value" not in df.columns:
-            pv = partition_value_expr({c: F.col(c) for c in pcols}) if pcols else F.lit("")
-            df = df.withColumn("partition_value", pv)
-        from pulsar_io_delta_spark.functions.murmur3 import with_route_lowcard
-
-        # partition_value cardinality ~ number of table partitions:
-        # hash distincts + broadcast join, no full-column Arrow round trip
-        return with_route_lowcard(
-            df, F.col("partition_value"), self.config.topic_partition_num
-        )
-
     def bootstrap(self, spark: SparkSession) -> DataFrame:
         """FULL_COPY phase: whole snapshot at the start version as op='c'
         records (`DeltaReader.java:174-184`)."""
         v = self.start.snapshot_version
-        snap_df = self.table.read(spark, version=v)
-        ts_ms = max(self.table.snapshot(v).add_times.values(), default=0)
-        df = (
-            snap_df.withColumn("op", F.lit(OP_INSERT))
-            .withColumn("ts", F.timestamp_millis(F.lit(ts_ms)))
-            .withColumn("_commit_version", F.lit(v))
+        snap = self.table.snapshot(v)
+        df = self.table.read(spark, version=v).withColumn("op", F.lit(OP_INSERT))
+        if "partition_value" not in df.columns:
+            pcols = snap.partition_columns
+            pv = partition_value_expr({c: F.col(c) for c in pcols}) if pcols else F.lit("")
+            df = df.withColumn("partition_value", pv)
+        ts_ms = max(snap.add_times.values(), default=0)
+        return df.withColumn("ts", F.timestamp_millis(F.lit(ts_ms))).withColumn(
+            "_commit_version", F.lit(v).cast("long")
         )
-        return self._envelope(df, v)
 
     def tail(self, spark: SparkSession, from_version: int | None = None) -> DataFrame:
         """INCREMENTAL_COPY phase: change feed from the checkpointed
         version (`DeltaReader.java:185-251`, all versions ≥ start)."""
         v = self.start.snapshot_version if from_version is None else from_version
-        return self._envelope(self.table.cdc(spark, start_version=v), v)
+        return self.table.cdc(spark, start_version=v)
 
     def read(self, spark: SparkSession) -> DataFrame:
         """The connector's full record stream from its start checkpoint:
@@ -201,7 +192,7 @@ class DeltaCdcConnector:
         frm = cursor.snapshot_version + (0 if cursor.state == FULL_COPY else 1)
         if latest < frm:
             return None, cursor
-        df = self._envelope(self.table.cdc(spark, start_version=frm), latest)
+        df = self.table.cdc(spark, start_version=frm)
         return df, Checkpoint(state=INCREMENTAL_COPY, snapshot_version=latest)
 
     def run(self, spark: SparkSession, sink, max_polls: int = 1) -> Checkpoint:

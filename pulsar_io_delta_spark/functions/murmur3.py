@@ -5,14 +5,15 @@ The reference routes records to topic partitions with
 (reference ``DeltaReader.java:60-63``; vendored algorithm
 ``Murmur32Hash.java:29-99``). Spark's built-in ``hash()`` is murmur3
 with seed 42 over typed values, so byte-exact parity needs this
-implementation. It is used only where slot-number parity matters
-(``q_hash_route``, CDC routing demos); internal repartitioning uses
-plain ``repartition(n, col)`` which is already murmur3-based.
+implementation. It is used only where slot-number parity matters: at
+the producer boundary (``to_pulsar_wire``'s ``partition_id`` column and
+``fake_pulsar.publish``, the one place a CDC record gets its slot), in
+``q_hash_route`` and in the DuckDB oracles. Internal repartitioning
+uses plain ``repartition(n, col)``, which is already murmur3-based.
 
-Scale note: the pandas UDF receives Arrow batches; the per-row Python
-loop is the cost of exact parity. On a real 100 TB pipeline routing
-parity with Pulsar's hash is only needed at the final sink stage, after
-all heavy relational work, and is embarrassingly parallel.
+Scale note: no per-row Python. ``slots_for`` hashes each batch's
+distinct keys with the column-at-a-time numpy kernel and maps the
+slots back to the rows.
 """
 
 from __future__ import annotations
@@ -158,34 +159,32 @@ def murmur3_route_col(col: Column, num_partitions: int) -> Column:
     return _route(col)
 
 
-def with_route_lowcard(
-    df, value: Column, num_partitions: int, out: str = "partition_id",
-    max_distinct: int = 10_000,
-):
-    """Attach routing slot ids for a LOW-CARDINALITY key (a partition
-    value — the reference's actual routing input, DeltaReader.java:60-63)
-    without moving the full column through Arrow: collect the distinct
-    keys at plan time (map-side-combined — only the key set reaches the
-    driver, like a broadcast dim), hash them with the numpy kernel, and
-    emit a LITERAL map lookup. The per-row path is one narrow JVM
-    projection — no Python round trip, no extra exchange. Falls back to
-    the vectorized UDF column when cardinality exceeds ``max_distinct``."""
-    from pyspark.sql import functions as _F
+_LOWCARD_MAX_DISTINCT = 10_000
 
+
+def with_route_lowcard(df, value: Column, num_partitions: int):
+    """Attach a ``partition_id`` routing slot for a LOW-CARDINALITY key
+    (a partition value — the reference's actual routing input,
+    DeltaReader.java:60-63) without moving the full column through
+    Arrow: collect the distinct keys at plan time (map-side-combined —
+    only the key set reaches the driver, like a broadcast dim), hash
+    them with the numpy kernel, and emit a LITERAL map lookup. The
+    per-row path is one narrow JVM projection — no Python round trip,
+    no extra exchange. The collect is an eager job, paid even when
+    ``partition_id`` is pruned later. Falls back to the vectorized UDF
+    column above ``_LOWCARD_MAX_DISTINCT`` keys or on a null key."""
     keyed = df.withColumn("_route_key", value)
-    keys = [
-        r._route_key
-        for r in keyed.select("_route_key").distinct().limit(max_distinct + 1).collect()
-    ]
-    if len(keys) > max_distinct or any(k is None for k in keys):
+    rows = keyed.select("_route_key").distinct().limit(_LOWCARD_MAX_DISTINCT + 1).collect()
+    keys = [r._route_key for r in rows]
+    if len(keys) > _LOWCARD_MAX_DISTINCT or any(k is None for k in keys):
         return keyed.drop("_route_key").withColumn(
-            out, murmur3_route_col(value, num_partitions)
+            "partition_id", murmur3_route_col(value, num_partitions)
         )
     slots = slots_for(keys, num_partitions).tolist()
-    pairs = [x for k, s in zip(keys, slots) for x in (_F.lit(k), _F.lit(s))]
-    lut = _F.create_map(*pairs) if pairs else _F.create_map()
+    pairs = [x for k, s in zip(keys, slots) for x in (F.lit(k), F.lit(s))]
+    lut = F.create_map(*pairs) if pairs else F.create_map()
     return keyed.withColumn(
-        out, _F.element_at(lut, _F.col("_route_key")).cast("long")
+        "partition_id", F.element_at(lut, F.col("_route_key")).cast("long")
     ).drop("_route_key")
 
 

@@ -1,4 +1,4 @@
-"""CDC envelope + canonical partition-value encoding + hash routing.
+"""CDC envelope + canonical partition-value encoding.
 
 Rebuilds the reference's record envelope (SURVEY §1.4) as ordinary
 DataFrame columns:
@@ -11,10 +11,11 @@ DataFrame columns:
 - ``ts``: event time (file modification / deletion timestamp);
   ``capture_ts`` (processing time) exists as an optional column but is
   excluded from verified outputs (non-deterministic).
-- routing: murmur3-seed-0 slot id (``DeltaReader.java:60-63``).
 
-All transforms are narrow (no shuffle); routing a 100 TB stream is a
-single `repartition(n, slot)` exchange at the sink boundary.
+All transforms are narrow (no shuffle). The murmur3-seed-0 routing slot
+(``DeltaReader.java:60-63``) is not an envelope column: it is computed
+once, at the producer boundary (``operators/pipeline.to_pulsar_wire``,
+``streaming/fake_pulsar.publish``).
 """
 
 from __future__ import annotations
@@ -58,13 +59,3 @@ def cdc_envelope(
     if with_capture_ts:
         out = out.withColumn("capture_ts", F.current_timestamp())
     return out
-
-
-def route(df: DataFrame, num_partitions: int, value_col: str = "partition_value") -> DataFrame:
-    """Add the reference-parity routing slot and co-locate rows by it.
-    Partition values are low-cardinality, so the slot comes from a
-    hash-the-distincts broadcast join (JVM-side per-row path)."""
-    from pulsar_io_delta_spark.functions.murmur3 import with_route_lowcard
-
-    routed = with_route_lowcard(df, F.col(value_col), num_partitions)
-    return routed.repartition(num_partitions, "partition_id")

@@ -3,7 +3,7 @@ deterministic sampling, PII redaction, repetition (quality) metrics,
 stratified domain capping, and the Pulsar wire-format boundary.
 
 All hot paths are built-in Spark SQL expressions (JVM-side, codegen'd);
-murmur3 routing is the one pandas UDF, shared with the CDC envelope.
+murmur3 routing is the one pandas UDF, at the producer boundary only.
 Every operator is a narrow transform or a single keyed aggregate — the
 shapes that scale linearly with input splits at 100 TB.
 """

@@ -6,9 +6,7 @@ from pulsar_io_delta_spark.operators.cdc import (
     OP_INSERT,
     cdc_envelope,
     partition_value_expr,
-    route,
 )
-from pulsar_io_delta_spark.functions.murmur3 import partition_id_for
 
 
 def test_partition_value_no_separator_and_sorted(spark):
@@ -28,14 +26,6 @@ def test_envelope_columns(spark):
     row = out.first()
     assert row.op == "c"
     assert row.partition_value == "etype=click"
-
-
-def test_route_matches_python_hash(spark):
-    df = spark.createDataFrame([(f"k={i}",) for i in range(50)], ["partition_value"])
-    routed = route(df, 8).collect()
-    for r in routed:
-        assert r.partition_id == partition_id_for(r.partition_value, 8)
-    assert routed and {r.partition_id for r in routed} <= set(range(8))
 
 
 def test_partition_value_null_encodes_as_literal_null(spark):

@@ -1,8 +1,11 @@
 """Connector lifecycle: config validation, checkpoint ordering,
 instance assignment, bootstrap vs incremental semantics."""
 
+import json
+
 import pytest
 import pyspark.sql.functions as F
+from pyspark.sql.types import StructType
 
 from pulsar_io_delta_spark.connector import (
     FULL_COPY,
@@ -14,6 +17,9 @@ from pulsar_io_delta_spark.connector import (
     DeltaCdcConnector,
     assigned_partitions,
 )
+from pulsar_io_delta_spark.functions.murmur3 import partition_id_for
+from pulsar_io_delta_spark.operators.pipeline import to_pulsar_wire
+from pulsar_io_delta_spark.sources.datasource import ENVELOPE_FIELDS
 from pulsar_io_delta_spark.sources.delta_log import DeltaTable
 
 
@@ -75,11 +81,41 @@ def test_full_copy_bootstrap_plus_tail(spark, populated):
     # bootstrap 20 (v0 snapshot) + 2 incremental adds from v1
     assert out.count() == 22
     assert set(out.select("op").distinct().toPandas()["op"]) == {"c"}
-    pids = out.select("partition_value", "partition_id").distinct().collect()
-    from pulsar_io_delta_spark.functions.murmur3 import partition_id_for
+    # one envelope schema: the stream source's, with no routing column
+    envelope = StructType.fromJson({"type": "struct", "fields": json.loads(f"[{ENVELOPE_FIELDS}]")})
+    for frame in (out, conn.bootstrap(spark), conn.tail(spark, 1)):
+        assert "partition_id" not in frame.columns
+        assert {f.name: frame.schema[f.name].dataType for f in envelope} == {
+            f.name: f.dataType for f in envelope
+        }
+    # the slot is computed once, at the producer boundary
+    wire = to_pulsar_wire(out, "partition_value", F.col("event_id").cast("string"), 8)
+    rows = wire.select("key", "partition_id").collect()
+    assert len(rows) == 22
+    for r in rows:
+        assert r.partition_id == partition_id_for(r.key, 8)
 
-    for r in pids:
-        assert r.partition_id == partition_id_for(r.partition_value, 8)
+
+def test_connector_plans_without_spark_jobs(spark, populated):
+    """Building the bootstrap and poll frames is planning only: no
+    eager Spark job runs until the caller executes them."""
+    conn = DeltaCdcConnector(
+        ConnectorConfig.load({"tablePath": populated, "startingVersion": 0, "includeHistoryData": True})
+    )
+    conn.open()
+    sc = spark.sparkContext
+    for i, build in enumerate((
+        lambda: conn.bootstrap(spark),
+        lambda: conn.poll(spark, Checkpoint(INCREMENTAL_COPY, 0))[0],
+    )):
+        group = f"connector-plan-{i}"
+        sc.setJobGroup(group, "plan only")
+        try:
+            df = build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert df is not None
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 def test_incremental_only(spark, populated):

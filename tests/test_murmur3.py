@@ -103,3 +103,29 @@ def test_route_col_null_safe(spark):
     assert rows[None] is None
     assert rows["a"] == partition_id_for("a", 8)
     assert rows["b"] == partition_id_for("b", 8)
+
+
+def test_with_route_lowcard_matches_scalar(spark):
+    """The literal-map LUT routes every key like the scalar kernel; a
+    null key takes the UDF fallback and routes to null."""
+    import pyspark.sql.functions as F
+
+    from pulsar_io_delta_spark.functions.murmur3 import with_route_lowcard
+
+    def executed(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    keys = [f"k={i}" for i in range(50)]
+    df = spark.createDataFrame([(k,) for k in keys], "partition_value string")
+    routed = with_route_lowcard(df, F.col("partition_value"), 8)
+    assert "ArrowEvalPython" not in executed(routed)
+    rows = routed.collect()
+    assert sorted(r.partition_value for r in rows) == sorted(keys)
+    for r in rows:
+        assert r.partition_id == partition_id_for(r.partition_value, 8)
+    with_null = df.unionByName(spark.createDataFrame([(None,)], "partition_value string"))
+    routed = with_route_lowcard(with_null, F.col("partition_value"), 8)
+    assert "ArrowEvalPython" in executed(routed)
+    slots = {r.partition_value: r.partition_id for r in routed.collect()}
+    assert slots.pop(None) is None
+    assert slots == {k: partition_id_for(k, 8) for k in keys}
