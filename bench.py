@@ -263,6 +263,30 @@ def rig_fingerprint(
     return rig
 
 
+def previous_freeze(root: str, protocol: str, sf: float) -> dict | None:
+    """The newest committed ``BENCH_local_r<N>[_<suffix>].json`` freeze
+    measured under ``protocol`` at scale factor ``sf``, or None. A
+    freeze of another protocol (or an unstamped one) is never compared
+    against: its timings measure a different session regime."""
+    best: tuple[int, str] | None = None
+    for p in glob.glob(os.path.join(root, "BENCH_local_r*.json")):
+        m = re.search(r"BENCH_local_r(\d+)(?:_[\w-]+)?\.json$", p)
+        if m is None:
+            continue
+        with open(p) as fh:
+            freeze = json.load(fh)
+        if freeze.get("protocol") != protocol:
+            continue
+        if abs(sf - float(freeze.get("sf", 0.1))) >= 1e-9:
+            continue
+        if best is None or (int(m.group(1)), p) > best:
+            best = (int(m.group(1)), p)
+    if best is None:
+        return None
+    with open(best[1]) as fh:
+        return json.load(fh)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     budgets_name = None
@@ -522,22 +546,11 @@ def main() -> None:
     worst = dict(sorted(budget_ratios.items(), key=lambda kv: -kv[1])[:3])
     top_moves: dict[str, float] = {}
     try:
-        freezes = {
-            int(m.group(1)): p
-            for p in glob.glob(
-                os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                             "BENCH_local_r*.json")
-            )
-            if (m := re.search(r"_r(\d+)\.json$", p))
-        }
-        if freezes:
-            with open(freezes[max(freezes)]) as fh:
-                prev = json.load(fh)
-            prev_q = (
-                prev.get("queries", {})
-                if abs(sf - float(prev.get("sf", 0.1))) < 1e-9
-                else {}
-            )
+        prev = previous_freeze(
+            os.path.dirname(os.path.abspath(__file__)), payload["protocol"], sf
+        )
+        if prev is not None:
+            prev_q = prev.get("queries", {})
             moves = {
                 n: round(max(sec / prev_q[n], 0.01), 2)
                 for n, sec in timings.items()

@@ -31,7 +31,6 @@ persisted anything — SURVEY §2.4 #8).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from datetime import datetime, timezone
 from functools import total_ordering
 from typing import Any
 
@@ -39,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pulsar_io_delta_spark.operators.cdc import OP_INSERT, partition_value_expr
+from pulsar_io_delta_spark.sources.datasource import iso_to_ms
 from pulsar_io_delta_spark.sources.delta_log import DeltaTable
 
 LATEST = -1
@@ -73,14 +73,10 @@ class ConnectorConfig:
             version = LATEST if version == "latest" else int(version)
         ts_ms: int | None = None
         if timestamp is not None:
-            # ISO-8601 per the reference's parser
             try:
-                dt = datetime.fromisoformat(str(timestamp).replace("Z", "+00:00"))
+                ts_ms = iso_to_ms(timestamp)
             except ValueError as exc:
-                raise ConfigError(f"invalid ISO-8601 startingTimestamp: {timestamp}") from exc
-            if dt.tzinfo is None:
-                dt = dt.replace(tzinfo=timezone.utc)
-            ts_ms = int(dt.timestamp() * 1000)
+                raise ConfigError(f"startingTimestamp: {exc}") from exc
         return cls(
             table_path=str(table_path),
             starting_version=version,

@@ -7,7 +7,10 @@ DataFrame columns:
   'm' (schema change / Metadata) — reference ``DeltaRecord.java:60-99``.
 - ``partition_value``: TreeMap-sorted ``k=v`` concatenation with **no
   separator between pairs** — the reference's quirk is preserved
-  byte-for-byte (``DeltaReader.java:290-299``).
+  byte-for-byte (``DeltaReader.java:290-299``); a null value renders as
+  ``null``. This module owns the format: ``partition_value_expr`` builds
+  it from columns, ``partition_value_str`` from a file's log-recorded
+  partition values.
 - ``ts``: event time (file modification / deletion timestamp);
   ``capture_ts`` (processing time) exists as an optional column but is
   excluded from verified outputs (non-deterministic).
@@ -41,6 +44,15 @@ def partition_value_expr(partition_cols: dict[str, Column]) -> Column:
         pieces.append(F.lit(f"{key}="))
         pieces.append(F.coalesce(partition_cols[key].cast("string"), F.lit("null")))
     return F.concat(*pieces)
+
+
+def partition_value_str(partition_values: dict[str, str | None]) -> str:
+    """``partition_value_expr`` for a file's log-recorded (protocol-form)
+    partition values: the same ``k=v`` string, a null rendering as
+    ``null``."""
+    return "".join(
+        f"{k}={'null' if v is None else v}" for k, v in sorted(partition_values.items())
+    )
 
 
 def cdc_envelope(

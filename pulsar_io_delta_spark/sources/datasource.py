@@ -16,6 +16,21 @@ checkpointLocation gives exactly-once delivery across restarts — the
 durable progress the reference intended its state store to provide
 (SURVEY §2.4 #8).
 
+The envelope contract, shared with ``DeltaTable.cdc`` (the connector's
+tail) and ``table_changes`` because all three plan from the same
+``DeltaTable.change_log`` records:
+
+- ``ts`` is each file's own event time: an add's ``modificationTime``,
+  a remove's ``deletionTimestamp``;
+- ``partition_value`` is the sorted ``k=v`` concatenation of the
+  file's partition values, a null value rendering as ``k=null``
+  (``operators/cdc.partition_value_str``), and partition columns carry
+  the raw value (null stays null);
+- with ``readChangeFeed``, rows of a commit's ``_change_data`` files
+  take the commit's timestamp, in-commit timestamp first — the
+  ``_commit_timestamp`` ``table_changes`` reports for that commit;
+  derived insert/delete rows keep their file's event time.
+
 ``option("readChangeFeed", "true")`` (round 8) switches both batch and
 streaming reads to the Change Data Feed surface: commits carrying cdc
 actions are served from their ``_change_data`` files (exact
@@ -85,7 +100,9 @@ def _is_change_feed(options) -> bool:
     return str(options.get("readChangeFeed", "")).lower() == "true"
 
 
-def _iso_to_ms(value) -> int:
+def iso_to_ms(value) -> int:
+    """An ISO-8601 timestamp (``Z`` or an offset; naive means UTC) as
+    epoch milliseconds, per the reference's parser."""
     from datetime import datetime, timezone
 
     try:
@@ -117,7 +134,7 @@ def _version_bounds(table_path: str, options) -> tuple[int, int | None]:
         t = DeltaTable(table_path)
         versions = t.versions()
         if "startingTimestamp" in options:
-            ms = _iso_to_ms(options["startingTimestamp"])
+            ms = iso_to_ms(options["startingTimestamp"])
             start = next(
                 (v for v in versions if t.commit_timestamp_ms(v) >= ms), None
             )
@@ -127,7 +144,7 @@ def _version_bounds(table_path: str, options) -> tuple[int, int | None]:
                     f"{options['startingTimestamp']!r}"
                 )
         if "endingTimestamp" in options:
-            ms = _iso_to_ms(options["endingTimestamp"])
+            ms = iso_to_ms(options["endingTimestamp"])
             eligible = [v for v in versions if t.commit_timestamp_ms(v) <= ms]
             if not eligible:
                 raise ValueError(
@@ -138,12 +155,6 @@ def _version_bounds(table_path: str, options) -> tuple[int, int | None]:
     return start, end
 
 
-def _canonical_pv(partition_values: dict[str, str]) -> str:
-    """TreeMap-sorted k=v concatenation, no pair separator
-    (reference `DeltaReader.java:290-299`)."""
-    return "".join(f"{k}={partition_values[k]}" for k in sorted(partition_values))
-
-
 @dataclass
 class _FileSlice(InputPartition):
     table_path: str
@@ -151,7 +162,7 @@ class _FileSlice(InputPartition):
     op: str
     version: int
     ts_ms: int
-    partition_values: tuple[tuple[str, str], ...]
+    partition_values: tuple[tuple[str, str | None], ...]
     # log-recorded file size (bytes); drives maxBytesPerTrigger
     # admission without touching the filesystem
     size: int = 0
@@ -184,96 +195,49 @@ def _plan_slices(
     change_feed: bool = False,
     filters: list[tuple[str, str, object]] | None = None,
 ) -> list[_FileSlice]:
-    """File-level input partitions for commits in [start, end].
+    """File-level input partitions for commits in [start, end], one per
+    ``DeltaTable.change_log`` record (``change_feed`` is the option
+    ``readChangeFeed``), pruned by ``filters``: partition values (exact
+    on '=') + footer min/max stats, conservative on anything missing —
+    the same gate DeltaTable.prune_files applies to batch reads.
 
-    ``change_feed`` (option ``readChangeFeed``): commits carrying cdc
-    actions contribute ONLY their ``_change_data`` files (op='cdf'; the
-    file's own ``_change_type`` column carries exact semantics incl.
-    MERGE pre/post images); other commits derive insert/delete from
-    add/remove exactly like the op stream.
-
-    Deletion-vector guard: a derived slice over a DV-carrying add would
-    emit the file's DELETED rows too (this arrow path reads whole
+    Deletion-vector guard: a derived slice over a DV-carrying file
+    would emit the file's DELETED rows too (this arrow path reads whole
     files) — refuse loudly instead of silently over-reporting; CDF
     tables never hit this because their DV deletes carry cdc actions."""
     from pulsar_io_delta_spark.sources.delta_log import DeltaTable, _stats_admit
 
-    def _admit(action: dict) -> bool:
-        """Data-skip a slice: partition values (exact on '=') + footer
-        min/max stats, conservative on anything missing — the same gate
-        DeltaTable.prune_files applies to batch reads."""
+    def _admit(f) -> bool:
         if not filters:
             return True
-        pvals = action.get("partitionValues") or {}
         for col, op, val in filters:
-            if col in pvals and op == "=" and pvals[col] != str(val):
+            if col in f.partition_values and op == "=" and f.partition_values[col] != str(val):
                 return False
-        return _stats_admit(action, filters)
+        return _stats_admit({"stats": f.stats}, filters)
 
-    t = DeltaTable(table_path)
+    log = DeltaTable(table_path).change_log(start_version, end_version, change_feed)
     slices: list[_FileSlice] = []
-    for version, actions in t.changes(start_version):
-        if version > end_version:
-            break
-        cdc_actions = [a["cdc"] for a in actions if "cdc" in a] if change_feed else []
-        if cdc_actions:
-            ts_ms = next(
-                (
-                    int(a["commitInfo"]["timestamp"])
-                    for a in actions
-                    if a.get("commitInfo", {}).get("timestamp") is not None
-                ),
-                0,
-            )
-            for c in cdc_actions:
-                if not _admit(c):
-                    continue
-                slices.append(
-                    _FileSlice(
-                        table_path=table_path,
-                        rel_path=c["path"],
-                        op="cdf",
-                        version=version,
-                        ts_ms=ts_ms,
-                        partition_values=tuple(
-                            sorted((c.get("partitionValues") or {}).items())
-                        ),
-                        size=int(c.get("size") or 0),
-                    )
-                )
+    for f in log.files:
+        if not _admit(f):
             continue
-        for action in actions:
-            if "add" in action:
-                a, op, ts_key = action["add"], "c", "modificationTime"
-            elif "remove" in action:
-                a, op, ts_key = action["remove"], "r", "deletionTimestamp"
-            else:
-                continue
-            if not a.get("dataChange", True):
-                # OPTIMIZE/compaction rewrites move bytes without changing
-                # data; mirroring DeltaTable.cdc(), they are invisible here.
-                continue
-            if not _admit(a):
-                continue
-            dv = a.get("deletionVector")
-            if dv and int(dv.get("cardinality") or 0) > 0:
-                raise ValueError(
-                    "pulsar_delta_cdc cannot derive changes from a "
-                    f"deletion-vector file ({a['path']}): whole-file reads "
-                    "would resurrect deleted rows; use DeltaTable.cdc()/"
-                    "table_changes(), or enable delta.enableChangeDataFeed"
-                )
-            slices.append(
-                _FileSlice(
-                    table_path=table_path,
-                    rel_path=a["path"],
-                    op=op,
-                    version=version,
-                    ts_ms=int(a.get(ts_key) or 0),
-                    partition_values=tuple(sorted((a.get("partitionValues") or {}).items())),
-                    size=int(a.get("size") or 0),
-                )
+        if f.dv:
+            raise ValueError(
+                "pulsar_delta_cdc cannot derive changes from a "
+                f"deletion-vector file ({f.path}): whole-file reads "
+                "would resurrect deleted rows; use DeltaTable.cdc()/"
+                "table_changes(), or enable delta.enableChangeDataFeed"
             )
+        slices.append(
+            _FileSlice(
+                table_path=table_path,
+                rel_path=f.path,
+                op=f.op,
+                version=f.version,
+                ts_ms=f.ts_ms,
+                partition_values=tuple(sorted(f.partition_values.items())),
+                size=f.size,
+            )
+        )
     return slices
 
 
@@ -282,6 +246,8 @@ def _read_slice(slice_: _FileSlice | None, schema: StructType):
     partition columns attached (runs on executors; pyarrow only)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+
+    from pulsar_io_delta_spark.operators.cdc import partition_value_str
 
     if slice_ is None:
         # zero planned partitions (everything pruned): Spark still calls
@@ -310,7 +276,7 @@ def _read_slice(slice_: _FileSlice | None, schema: StructType):
                     ["insert" if slice_.op == "c" else "delete"] * n, pa.string()
                 )
             elif name == "partition_value":
-                col = pa.array([_canonical_pv(pvals)] * n, pa.string())
+                col = pa.array([partition_value_str(pvals)] * n, pa.string())
             elif name == "ts":
                 col = pa.array([slice_.ts_ms * 1000] * n, pa.int64()).cast(target)
             elif name == "_commit_version":
@@ -614,9 +580,18 @@ def _rows_to_adds(iterator, schema: StructType, table_path: str, partition_by: l
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from pulsar_io_delta_spark.sources.delta_log import hive_segment
+
+    def pv(v) -> str | None:
+        # protocol form: the value's string, null as None (Spark's writer
+        # also turns an empty string into a null partition)
+        if v is None or v == "":
+            return None
+        return ("true" if v else "false") if isinstance(v, bool) else str(v)
+
     groups: dict[tuple, list] = {}
     for row in iterator:
-        key = tuple(str(row[c]) for c in partition_by)
+        key = tuple(pv(row[c]) for c in partition_by)
         groups.setdefault(key, []).append(row)
     adds = []
     data_cols = [f for f in schema.fields if f.name not in partition_by]
@@ -625,7 +600,7 @@ def _rows_to_adds(iterator, schema: StructType, table_path: str, partition_by: l
             f.name: pa.array([r[f.name] for r in rows], _to_arrow(f.dataType.simpleString()))
             for f in data_cols
         }
-        rel_dir = "/".join(f"{c}={v}" for c, v in zip(partition_by, key))
+        rel_dir = "/".join(f"{c}={hive_segment(v)}" for c, v in zip(partition_by, key))
         rel_path = (rel_dir + "/" if rel_dir else "") + f"part-{_uuid.uuid4().hex}.parquet"
         abs_path = os.path.join(table_path, rel_path)
         os.makedirs(os.path.dirname(abs_path), exist_ok=True)

@@ -52,6 +52,7 @@ import re
 import time
 import uuid
 from collections.abc import Mapping
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1750,6 +1751,72 @@ class _PruneIndex:
         return sorted(self._paths_col.filter(pa.array(admit)).to_pylist())
 
 
+def _info_ms(info: dict | None) -> int | None:
+    """A commitInfo's timestamp: its inCommitTimestamp when present
+    (authoritative over the wall clock), else its ``timestamp``."""
+    if info and "inCommitTimestamp" in info:
+        return int(info["inCommitTimestamp"])
+    if info and "timestamp" in info:
+        return int(info["timestamp"])
+    return None
+
+
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+# the characters Spark percent-escapes in a partition directory name
+# (ExternalCatalogUtils.escapePathName)
+_HIVE_ESCAPED = frozenset('"#%\'*/:=?\\\x7f{[]^') | {chr(c) for c in range(1, 32)}
+
+
+def hive_segment(value: str | None) -> str:
+    """A protocol-form partition value as a ``k=<segment>`` directory
+    name: null is the Hive default partition, and path-unsafe
+    characters are percent-escaped."""
+    if value is None:
+        return _HIVE_NULL
+    return "".join(f"%{ord(c):02X}" if c in _HIVE_ESCAPED else c for c in value)
+
+
+def hive_value(segment: str) -> str | None:
+    """The inverse of ``hive_segment``: a directory segment as the
+    protocol's ``partitionValues`` form (the raw value, null as None)."""
+    import urllib.parse
+
+    return None if segment == _HIVE_NULL else urllib.parse.unquote(segment)
+
+
+class ChangeFile(NamedTuple):
+    """One data-changing file of a commit, as every change reader sees
+    it (``DeltaTable.change_log``)."""
+
+    path: str
+    op: str  # OP_INSERT, OP_DELETE, or "cdf" for a _change_data file
+    version: int
+    ts_ms: int  # event time
+    partition_values: dict  # protocol form: raw strings, null as None
+    size: int  # log-recorded bytes, 0 when unknown
+    dv: dict | None  # deletion-vector descriptor, only when rows are deleted
+    epoch: int  # index into ChangeLog.epochs
+    stats: str | None
+
+
+class Epoch(NamedTuple):
+    """Partition columns, schema and configuration in force from the
+    commit ``version`` on."""
+
+    version: int
+    partition_columns: tuple[str, ...]
+    schema_string: str | None
+    configuration: dict
+
+
+class ChangeLog(NamedTuple):
+    files: list[ChangeFile]
+    # epochs[0] is None: the state entering the walked range, which the
+    # walk does not read (only a Spark scan needs it, and resolves it
+    # from a snapshot); each later epoch opened at a metaData action
+    epochs: list[Epoch | None]
+
+
 class DeltaTable:
     def __init__(self, path: str, fs: FileSystem | None = None):
         self.path = path
@@ -1942,11 +2009,9 @@ class DeltaTable:
         for line in self.fs.read_text(fp).splitlines():
             if not line.strip() or '"commitInfo"' not in line:
                 continue
-            info = json.loads(line).get("commitInfo")
-            if info and "inCommitTimestamp" in info:
-                return int(info["inCommitTimestamp"])
-            if info and "timestamp" in info:
-                return int(info["timestamp"])
+            ts = _info_ms(json.loads(line).get("commitInfo"))
+            if ts is not None:
+                return ts
         return None
 
     def commit_timestamp_ms(self, version: int) -> int:
@@ -3180,10 +3245,32 @@ class DeltaTable:
 
     # ---------- change feed / CDC ----------
 
-    def changes(self, start_version: int = 0) -> list[tuple[int, list[dict]]]:
-        """All commits with version ≥ start_version, in order. History
-        behind an expired (checkpoint-collapsed) log tail raises — a
-        CDC consumer cannot silently skip changes."""
+    def change_log(
+        self,
+        start_version: int = 0,
+        end_version: int | None = None,
+        change_feed: bool = False,
+    ) -> ChangeLog:
+        """The one walk of the log for change reads: commits
+        ``[start_version, end_version]`` (inclusive; None → the head),
+        one ``ChangeFile`` per data-changing file, in log order. Only
+        the commit files inside the range are read.
+
+        - ``dataChange=false`` adds and removes (OPTIMIZE rewrites move
+          bytes, not data) are invisible.
+        - An add is op 'c' at its ``modificationTime``, a remove op 'r'
+          at its ``deletionTimestamp`` — each file's own event time
+          (the reference's ``AddFile.getModificationTime()``).
+        - ``change_feed``: a commit carrying ``cdc`` actions contributes
+          only its ``_change_data`` files (op 'cdf'), which replace its
+          derived rows; they take the commit's timestamp, in-commit
+          timestamp first (the rule of ``commit_timestamp_ms``).
+        - A ``metaData`` action that changes the partition columns,
+          schema or configuration opens a new epoch; a commit's files
+          belong to the epoch after its own ``metaData``.
+
+        History behind an expired (checkpoint-collapsed) log tail
+        raises — a CDC consumer cannot silently skip changes."""
         jsons = self.json_versions()
         earliest = jsons[0] if jsons else None
         expired_horizon = max(
@@ -3195,46 +3282,136 @@ class DeltaTable:
                 f"change history ≤ v{expired_horizon} was expired; "
                 f"earliest readable commit is v{earliest}"
             )
-        return [(v, self.actions(v)) for v in jsons if v >= start_version]
+        files: list[ChangeFile] = []
+        epochs: list[Epoch | None] = [None]
+        for version in jsons:
+            if version < start_version:
+                continue
+            if end_version is not None and version > end_version:
+                break
+            actions = self.actions(version)
+            for a in actions:
+                md = a.get("metaData")
+                if md is None:
+                    continue
+                state = (
+                    tuple(md.get("partitionColumns") or ()),
+                    md.get("schemaString"),
+                    dict(md.get("configuration") or {}),
+                )
+                if epochs[-1] is None or tuple(epochs[-1][1:]) != state:
+                    epochs.append(Epoch(version, *state))
+            epoch = len(epochs) - 1
+            cdc = [a["cdc"] for a in actions if "cdc" in a] if change_feed else []
+            if cdc:
+                ts_ms = next(
+                    (m for a in actions if (m := _info_ms(a.get("commitInfo"))) is not None),
+                    None,
+                )
+                if ts_ms is None:
+                    ts_ms = self.commit_timestamp_ms(version)
+                files.extend(
+                    ChangeFile(
+                        c["path"], "cdf", version, ts_ms,
+                        c.get("partitionValues") or {}, int(c.get("size") or 0),
+                        None, epoch, c.get("stats"),
+                    )
+                    for c in cdc
+                )
+                continue
+            for a in actions:
+                if "add" in a:
+                    f, op, ts_key = a["add"], OP_INSERT, "modificationTime"
+                elif "remove" in a:
+                    f, op, ts_key = a["remove"], OP_DELETE, "deletionTimestamp"
+                else:
+                    continue
+                if not f.get("dataChange", True):
+                    continue
+                dv = f.get("deletionVector")
+                files.append(
+                    ChangeFile(
+                        f["path"], op, version, int(f.get(ts_key) or 0),
+                        f.get("partitionValues") or {}, int(f.get("size") or 0),
+                        dv if dv and int(dv.get("cardinality") or 0) > 0 else None,
+                        epoch, f.get("stats"),
+                    )
+                )
+        return ChangeLog(files, epochs)
 
-    def cdc(
+    def cdc(self, spark: SparkSession, start_version: int = 0) -> DataFrame:
+        """Change-data rows from the log tail: op 'c' for rows of added
+        files, 'r' for rows of removed (pre-vacuum) files, with the
+        partition_value string, each file's own event time ``ts``, and
+        the commit version (``change_log`` decides all three)."""
+        out = self._scan_changes(spark, self.change_log(start_version))
+        return out.withColumn("ts", F.timestamp_millis(F.col("_ts_ms"))).drop(
+            "_ts_ms", "_change_type"
+        )
+
+    def table_changes(
         self,
         spark: SparkSession,
         start_version: int = 0,
-        versions: set[int] | None = None,
+        end_version: int | None = None,
     ) -> DataFrame:
-        """Change-data rows from the log tail: op 'c' for rows of added
-        files, 'r' for rows of removed (pre-vacuum) files, with
-        partition_value string, event time, and commit version.
+        """Change Data Feed read (Delta PROTOCOL.md "Change Data Feed"):
+        table columns + ``_change_type`` / ``_commit_version`` /
+        ``_commit_timestamp``.
 
-        Single log pass: schema + partition columns are tracked
-        incrementally from metaData actions (no per-commit snapshot
-        replay), and files are grouped into ONE scan per
-        (op, schema epoch) — a 10^5-commit backfill plans a handful of
-        scans, not 10^5 union branches. Each scan is pinned to its
-        epoch's schemaString (mirroring ``read()``'s log-schema pin): a
-        metaData action that evolves the schema but keeps the partition
-        columns must NOT share a schema-less scan with old files, or
-        Spark would infer the schema from one file and silently drop
-        (or null-fill) the evolved column. Per-file commit version and
-        event time are attached by a broadcast join against a
-        (file → version, ts) lookup keyed on the scan's
+        Commits carrying cdc actions contribute ONLY their
+        ``_change_data`` files — the exact rows the writer recorded,
+        including MERGE update_preimage/update_postimage pairs that no
+        add/remove derivation can reconstruct. Data-changing commits
+        without cdc actions derive insert/delete rows from their
+        add/remove actions (the spec's reader-side derivation).
+        ``_commit_timestamp`` is the commit clock
+        (``commit_timestamp_ms``, in-commit timestamp first), never a
+        file's event time."""
+        log = self.change_log(start_version, end_version, change_feed=True)
+        out = self._scan_changes(spark, log)
+        vts = spark.createDataFrame(
+            [(v, self.commit_timestamp_ms(v)) for v in sorted({f.version for f in log.files})],
+            "_commit_version long, _vts_ms long",
+        )
+        return (
+            out.drop("op", "partition_value", "_ts_ms")
+            .join(F.broadcast(vts), ["_commit_version"])
+            .withColumn("_commit_timestamp", F.timestamp_millis(F.col("_vts_ms")))
+            .drop("_vts_ms")
+        )
+
+    def _scan_changes(self, spark: SparkSession, log: ChangeLog) -> DataFrame:
+        """The rows of a change log's files: data columns plus ``op``,
+        ``_change_type``, ``partition_value``, ``_commit_version`` and
+        the event time ``_ts_ms``. A derived file's ``_change_type`` is
+        insert (op 'c') or delete (op 'r'); a ``_change_data`` file (op
+        'cdf') carries its own column.
+
+        Files are grouped into ONE scan per (op, schema epoch) — a
+        10^5-commit backfill plans a handful of scans, not 10^5 union
+        branches, and no change row ever touches the driver. Each scan
+        is pinned to its epoch's schemaString (mirroring ``read()``'s
+        log-schema pin): a metaData action that evolves the schema but
+        keeps the partition columns must NOT share a schema-less scan
+        with old files, or Spark would infer the schema from one file
+        and silently drop (or null-fill) the evolved column. Per-file
+        commit version and event time are attached by a broadcast join
+        against a (file → version, ts) lookup keyed on the scan's
         ``_metadata.file_path``."""
         from pulsar_io_delta_spark.operators.cdc import partition_value_expr
 
-        # Epoch base: schema + partition columns in effect entering
-        # start_version (commit changes[0][0]'s own metaData included —
-        # re-seeing it below is a no-op change).
-        changes = self.changes(start_version)
-        base = self.snapshot(changes[0][0]) if changes else None
-        pcols: tuple[str, ...] = tuple(base.partition_columns) if base else ()
-        schema_str: str | None = base.schema_string if base else None
-        config: dict = dict(base.configuration) if base else {}
-        epoch = 0
-        epoch_meta: dict[int, tuple[tuple[str, ...], str | None, dict]] = {
-            0: (pcols, schema_str, config)
-        }
-        groups: dict[tuple[str, int], list[str]] = {}
+        if not log.files:
+            raise DeltaProtocolError("no data-changing commits in the range")
+        epochs = list(log.epochs)
+        if log.files[0].epoch == 0:
+            # the state entering the range: read only when a file needs it
+            snap = self.snapshot(log.files[0].version)
+            epochs[0] = Epoch(
+                snap.version, tuple(snap.partition_columns), snap.schema_string,
+                dict(snap.configuration),
+            )
+        groups: dict[tuple[str, int], dict[str, None]] = {}
         # absolute-path adds (shallow clone commits) carry their
         # partition values in the log, not in hive dirs — collect them
         # for _read_files' external branch (stable per path)
@@ -3245,80 +3422,51 @@ class DeltaTable:
         # whose DV evolves across commits is filtered per commit, not
         # with one merged mask.
         dv_registry: dict[tuple[str, str], dict] = {}
-        # path, op, epoch, version, ts_ms — epoch is part of the join key:
-        # a file re-added after a schema/pcols change lives in TWO epoch
-        # buckets (scanned once per epoch, each pinned to its schema), and
-        # without epoch in the key each scan would join ALL of the file's
-        # commits, duplicating every CDC row
+        # path, op, epoch, dv, version, ts_ms — epoch is part of the join
+        # key: a file re-added after a schema/pcols change lives in TWO
+        # epoch buckets (scanned once per epoch, each pinned to its
+        # schema), and without epoch in the key each scan would join ALL
+        # of the file's commits, duplicating every CDC row
         lookup_rows: list[tuple[str, str, int, str, int, int]] = []
-        for version, actions in changes:
-            for action in actions:
-                if "metaData" in action:
-                    new_pcols = action["metaData"].get("partitionColumns")
-                    new_schema = action["metaData"].get("schemaString")
-                    new_config = action["metaData"].get("configuration")
-                    changed = False
-                    if new_pcols is not None and tuple(new_pcols) != pcols:
-                        pcols = tuple(new_pcols)
-                        changed = True
-                    if new_schema is not None and new_schema != schema_str:
-                        schema_str = new_schema
-                        changed = True
-                    if new_config is not None and dict(new_config) != config:
-                        config = dict(new_config)
-                        changed = True
-                    if changed:
-                        epoch += 1
-                        epoch_meta[epoch] = (pcols, schema_str, config)
-            if versions is not None and version not in versions:
-                continue  # epoch tracking above still sees every commit
-            # dataChange=false actions are file reorganization (OPTIMIZE)
-            # — invisible to change consumers
-            adds = [a["add"] for a in actions if "add" in a and a["add"].get("dataChange", True)]
-            removes = [
-                a["remove"]
-                for a in actions
-                if "remove" in a and a["remove"].get("dataChange", True)
-            ]
-            for op, group, ts_key in (
-                (OP_INSERT, adds, "modificationTime"),
-                (OP_DELETE, removes, "deletionTimestamp"),
-            ):
-                if not group:
-                    continue
-                # event time is per (commit, op): max file timestamp,
-                # matching the reference's commit-granular capture
-                ts_ms = max((int(g.get(ts_key) or 0) for g in group), default=0)
-                bucket = groups.setdefault((op, epoch), [])
-                for g in group:
-                    abs_path = os.path.abspath(os.path.join(self.path, g["path"]))
-                    if os.path.isabs(g["path"]):
-                        pv_abs[g["path"]] = g.get("partitionValues") or {}
-                    dv = g.get("deletionVector")
-                    dv_key = ""
-                    if dv and int(dv.get("cardinality") or 0) > 0:
-                        dv_key = json.dumps(dv, sort_keys=True)
-                        dv_registry[(abs_path, dv_key)] = dv
-                    lookup_rows.append((abs_path, op, epoch, dv_key, version, ts_ms))
-                    if g["path"] not in bucket:  # re-added file: scan once,
-                        bucket.append(g["path"])  # lookup fans out per commit
-        if not groups:
-            raise DeltaProtocolError(f"no data-changing commits ≥ {start_version}")
+        for f in log.files:
+            abs_path = os.path.abspath(os.path.join(self.path, f.path))
+            if os.path.isabs(f.path):
+                pv_abs[f.path] = f.partition_values
+            dv_key = ""
+            if f.dv:
+                dv_key = json.dumps(f.dv, sort_keys=True)
+                dv_registry[(abs_path, dv_key)] = f.dv
+            lookup_rows.append((abs_path, f.op, f.epoch, dv_key, f.version, f.ts_ms))
+            # a re-added file is scanned once; the lookup fans out per commit
+            groups.setdefault((f.op, f.epoch), {})[f.path] = None
         lookup = spark.createDataFrame(
             lookup_rows,
             "_fp string, op string, _epoch int, _dv string, _commit_version long, _ts_ms long",
         )
         frames: list[DataFrame] = []
-        for (op, epoch_id), rel_paths in groups.items():
-            epoch_pcols, epoch_schema, epoch_config = epoch_meta[epoch_id]
-            mapping = _column_mapping(epoch_schema, epoch_config)
+        for (op, epoch_id), paths in groups.items():
+            e = epochs[epoch_id]
+            rel_paths = list(paths)
+            mapping = _column_mapping(e.schema_string, e.configuration)
+            schema = json.loads(mapping[0] if mapping else e.schema_string)
+            keep = ["_fp"] + (["_ridx"] if dv_registry else [])
+            if op == "cdf":
+                schema["fields"].append(
+                    {"name": "_change_type", "type": "string", "nullable": True,
+                     "metadata": {}}
+                )
+                keep.append("_change_type")
             has_ext = any(os.path.isabs(p) for p in rel_paths)
             df = self._read_files(
                 spark,
                 rel_paths,
-                schema_string=mapping[0] if mapping else epoch_schema,
+                schema_string=json.dumps(schema),
+                # cdc files live under _change_data/<pcol>=v/...; the
+                # basePath must be the dir whose children are the hive
+                # partition dirs or Spark's partition discovery chokes
+                base_path=os.path.join(self.path, "_change_data") if op == "cdf" else None,
                 pv_by_abs=pv_abs if has_ext else None,
-                partition_cols=self._physical_pcols(mapping, list(epoch_pcols))
+                partition_cols=self._physical_pcols(mapping, list(e.partition_columns))
                 if has_ext
                 else None,
             )
@@ -3330,15 +3478,18 @@ class DeltaTable:
             if mapping:
                 # metaData.partitionColumns stay LOGICAL under mapping
                 # (only partitionValues keys / dir names are physical),
-                # so after the rename epoch_pcols applies unchanged
-                keep = ["_fp"] + (["_ridx"] if dv_registry else [])
+                # so after the rename the epoch's pcols apply unchanged
                 df = df.select(
-                    _mapping_select_exprs(epoch_schema, mapping)
+                    _mapping_select_exprs(e.schema_string, mapping)
                     + [F.col(k) for k in keep]
                 )
+            if op != "cdf":
+                df = df.withColumn(
+                    "_change_type", F.lit("insert" if op == OP_INSERT else "delete")
+                )
             pv = (
-                partition_value_expr({c: F.col(c) for c in epoch_pcols})
-                if epoch_pcols
+                partition_value_expr({c: F.col(c) for c in e.partition_columns})
+                if e.partition_columns
                 else F.lit("")
             )
             frames.append(
@@ -3366,189 +3517,19 @@ class DeltaTable:
             entries = sorted((fp, key) for fp, key in dv_registry)
             deleted = self._expand_dv_df(spark, entries, with_key=True)
             out = out.join(deleted, ["_fp", "_dv", "_ridx"], "left_anti").drop("_ridx")
-        return (
-            out.withColumn("ts", F.timestamp_millis(F.col("_ts_ms")))
-            .drop("_fp", "_ts_ms", "_epoch", "_dv")
-        )
-
-    def table_changes(
-        self,
-        spark: SparkSession,
-        start_version: int = 0,
-        end_version: int | None = None,
-    ) -> DataFrame:
-        """Change Data Feed read (Delta PROTOCOL.md "Change Data Feed"):
-        table columns + ``_change_type`` / ``_commit_version`` /
-        ``_commit_timestamp``.
-
-        Commits carrying cdc actions contribute ONLY their
-        ``_change_data`` files — the exact rows the writer recorded,
-        including MERGE update_preimage/update_postimage pairs that no
-        add/remove derivation can reconstruct. Data-changing commits
-        without cdc actions derive insert/delete rows from their
-        add/remove actions (the spec's reader-side derivation), reusing
-        cdc()'s one-scan-per-epoch machinery.
-
-        Scale shape: cdc files are grouped into one scan per schema
-        epoch (pinned schema; commit version and timestamp attached by a
-        broadcast lookup join on file path) — a 10^5-commit feed plans a
-        handful of scans, and no change row ever touches the driver."""
-        changes = self.changes(start_version)
-        if end_version is not None:
-            changes = [(v, a) for v, a in changes if v <= end_version]
-        cdc_versions = {
-            v for v, actions in changes if any("cdc" in a for a in actions)
-        }
-        derived_versions = {
-            v
-            for v, actions in changes
-            if v not in cdc_versions
-            and any(
-                k in a and a[k].get("dataChange", True)
-                for a in actions
-                for k in ("add", "remove")
-            )
-        }
-        frames: list[DataFrame] = []
-        if derived_versions:
-            derived = self.cdc(spark, start_version, versions=derived_versions)
-            # _commit_timestamp is the COMMIT clock (ICT-aware via
-            # commit_timestamp_ms), not cdc()'s reference-parity event
-            # time (add.modificationTime) — broadcast version lookup,
-            # same shape as the cdc-file path's (file → ts) lookup
-            vts = spark.createDataFrame(
-                [(v, self.commit_timestamp_ms(v)) for v in derived_versions],
-                "_commit_version long, _vts_ms long",
-            )
-            frames.append(
-                derived.withColumn(
-                    "_change_type",
-                    F.when(F.col("op") == OP_INSERT, F.lit("insert")).otherwise(
-                        F.lit("delete")
-                    ),
-                )
-                .drop("op", "partition_value", "ts")
-                .join(F.broadcast(vts), ["_commit_version"])
-                .withColumn("_commit_timestamp", F.timestamp_millis(F.col("_vts_ms")))
-                .drop("_vts_ms")
-            )
-        if cdc_versions:
-            frames.append(self._scan_change_files(spark, changes, cdc_versions))
-        if not frames:
-            raise DeltaProtocolError(f"no data-changing commits ≥ {start_version}")
-        out = frames[0]
-        for f in frames[1:]:
-            # schema may evolve between epochs: align by name
-            out = out.unionByName(f, allowMissingColumns=True)
-        return out
-
-    def _scan_change_files(
-        self,
-        spark: SparkSession,
-        changes: list[tuple[int, list[dict]]],
-        cdc_versions: set[int],
-    ) -> DataFrame:
-        """One scan per schema epoch over the ``_change_data`` files of
-        the commits in ``cdc_versions`` (epoch tracking mirrors cdc():
-        a metaData action that evolves schema/pcols/config starts a new
-        pinned-schema scan group)."""
-        base = self.snapshot(changes[0][0])
-        pcols: tuple[str, ...] = tuple(base.partition_columns)
-        schema_str: str | None = base.schema_string
-        config: dict = dict(base.configuration)
-        epoch = 0
-        epoch_meta: dict[int, tuple[tuple[str, ...], str | None, dict]] = {
-            0: (pcols, schema_str, config)
-        }
-        groups: dict[int, list[str]] = {}
-        lookup_rows: list[tuple[str, int, int, int]] = []
-        for version, actions in changes:
-            for action in actions:
-                if "metaData" in action:
-                    md = action["metaData"]
-                    new_pcols = md.get("partitionColumns")
-                    new_schema = md.get("schemaString")
-                    new_config = md.get("configuration")
-                    changed = False
-                    if new_pcols is not None and tuple(new_pcols) != pcols:
-                        pcols = tuple(new_pcols)
-                        changed = True
-                    if new_schema is not None and new_schema != schema_str:
-                        schema_str = new_schema
-                        changed = True
-                    if new_config is not None and dict(new_config) != config:
-                        config = dict(new_config)
-                        changed = True
-                    if changed:
-                        epoch += 1
-                        epoch_meta[epoch] = (pcols, schema_str, config)
-            if version not in cdc_versions:
-                continue
-            ts_ms = next(
-                (
-                    # ICT is authoritative over the wall timestamp, same
-                    # rule as commit_timestamp_ms (the derived-commit CDF
-                    # path already goes through it)
-                    int(ci["inCommitTimestamp"] if "inCommitTimestamp" in ci
-                        else ci["timestamp"])
-                    for a in actions
-                    if (ci := a.get("commitInfo") or {}).get("timestamp") is not None
-                ),
-                0,
-            )
-            for a in actions:
-                c = a.get("cdc")
-                if not c:
-                    continue
-                abs_path = os.path.abspath(os.path.join(self.path, c["path"]))
-                lookup_rows.append((abs_path, epoch, version, ts_ms))
-                groups.setdefault(epoch, []).append(c["path"])
-        lookup = spark.createDataFrame(
-            lookup_rows, "_fp string, _epoch int, _commit_version long, _ts_ms long"
-        )
-        frames: list[DataFrame] = []
-        for epoch_id, rel_paths in groups.items():
-            _epoch_pcols, epoch_schema, epoch_config = epoch_meta[epoch_id]
-            mapping = _column_mapping(epoch_schema, epoch_config)
-            s = json.loads(mapping[0] if mapping else epoch_schema)
-            s["fields"].append(
-                {"name": "_change_type", "type": "string", "nullable": True,
-                 "metadata": {}}
-            )
-            df = self._read_files(
-                spark,
-                rel_paths,
-                schema_string=json.dumps(s),
-                # cdc files live under _change_data/<pcol>=v/...; the
-                # basePath must be the dir whose children are the hive
-                # partition dirs or Spark's partition discovery chokes
-                base_path=os.path.join(self.path, "_change_data"),
-            )
-            df = df.withColumn("_fp", _posix_path_col(F.col("_metadata.file_path")))
-            if mapping:
-                df = df.select(
-                    _mapping_select_exprs(epoch_schema, mapping)
-                    + [F.col("_change_type"), F.col("_fp")]
-                )
-            frames.append(df.withColumn("_epoch", F.lit(epoch_id)))
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f, allowMissingColumns=True)
-        out = out.join(F.broadcast(lookup), ["_fp", "_epoch"])
-        return out.withColumn(
-            "_commit_timestamp", F.timestamp_millis(F.col("_ts_ms"))
-        ).drop("_fp", "_epoch", "_ts_ms")
+        return out.drop("_fp", "_epoch", "_dv")
 
     def schema_changes(self, start_version: int = 0) -> list[tuple[int, str]]:
-        """(version, schemaString) for each metaData action — the op='m'
-        boundary events (reference emits these inline; Spark restarts the
-        stream on schema change, so we surface them out-of-band)."""
-        out = []
-        for version, actions in self.changes(start_version):
-            for action in actions:
-                if "metaData" in action and action["metaData"].get("schemaString"):
-                    out.append((version, action["metaData"]["schemaString"]))
-        return out
+        """(version, schemaString) for each metaData action from
+        ``start_version`` on that changes the table's partition columns,
+        schema or configuration — the op='m' boundary events (reference
+        emits these inline; Spark restarts the stream on schema change,
+        so we surface them out-of-band)."""
+        return [
+            (e.version, e.schema_string)
+            for e in self.change_log(start_version).epochs[1:]
+            if e.schema_string
+        ]
 
     # ---------- writing ----------
 
@@ -4009,11 +3990,11 @@ class DeltaTable:
             if not name.endswith(".parquet"):
                 continue
             rel_dir = os.path.relpath(os.path.dirname(src), staging)
-            pvals: dict[str, str] = {}
+            pvals: dict[str, str | None] = {}
             if rel_dir != ".":
                 for piece in rel_dir.split(os.sep):
                     k, _, val = piece.partition("=")
-                    pvals[k] = val
+                    pvals[k] = hive_value(val)
             final_rel = os.path.join(
                 prefix,
                 "" if rel_dir == "." else rel_dir,
@@ -5394,8 +5375,6 @@ class DeltaTable:
         The reference connector can only open pre-existing Delta tables
         (`DeltaReader.java:301-303`); conversion is how a parquet-lake
         user gets one without rewriting 100 TB."""
-        import urllib.parse
-
         if self.exists():
             raise DeltaProtocolError(f"already a delta table: {self.path}")
         df = spark.read.parquet(self.path)
@@ -5425,11 +5404,7 @@ class DeltaTable:
                     f"inconsistent partition layout: {rel} has {cols}, "
                     f"expected {pcols}"
                 )
-            pv = {
-                k: (None if v == "__HIVE_DEFAULT_PARTITION__"
-                    else urllib.parse.unquote(v))
-                for k, v in kv
-            }
+            pv = {k: hive_value(v) for k, v in kv}
             fp = os.path.join(base, rel)
             adds.append({"add": {
                 "path": rel,

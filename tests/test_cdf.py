@@ -258,24 +258,46 @@ def test_cdf_replay_reconstructs_table_state(spark, tmp_path):
         assert state == final, (seed, len(state), len(final))
 
 
-def test_cdf_commit_timestamp_uses_ict(spark, tmp_path):
+def test_cdf_commit_timestamp_uses_ict(spark, tmp_path, monkeypatch):
     """On an in-commit-timestamps table, table_changes must stamp
     _commit_timestamp from the commit-carried clock (authoritative over
     wall timestamps / file mtimes) for BOTH the cdc-file path and the
-    derived-commit path — the same rule time travel follows."""
+    derived-commit path — the same rule time travel follows. The
+    pulsar_delta_cdc change feed stamps a cdc-file commit's rows with
+    that same clock."""
+    from pulsar_io_delta_spark.sources.datasource import register_delta_cdc
+
     t = DeltaTable(str(tmp_path / "t"))
     t.write(
         _rows(spark, range(6)),
         configuration={**CDF, "delta.enableInCommitTimestamps": "true"},
     )
+    # v1's in-commit timestamp runs ahead of its wall timestamp, as
+    # after a predecessor commit from a faster clock
+    monkeypatch.setattr(DeltaTable, "_last_ict", lambda self: 3_999_999_999_999)
     t.delete_where(spark, "event_id < 2")  # v1: writes _change_data files
+    monkeypatch.undo()
     icts = {v: t.commit_timestamp_ms(v) for v in (0, 1)}
+    assert icts[1] == 4_000_000_000_000
     ch = t.table_changes(spark, 0)
     got = {
         (r._commit_version, int(r._commit_timestamp.timestamp() * 1000))
         for r in ch.select("_commit_version", "_commit_timestamp").distinct().collect()
     }
     assert got == {(0, icts[0]), (1, icts[1])}, (got, icts)
+    register_delta_cdc(spark)
+    feed = (
+        spark.read.format("pulsar_delta_cdc")
+        .option("tablePath", t.path)
+        .option("readChangeFeed", "true")
+        .option("startingVersion", 1)
+        .load()
+    )
+    got = {
+        (r._commit_version, int(r.ts.timestamp() * 1000))
+        for r in feed.select("_commit_version", "ts").distinct().collect()
+    }
+    assert got == {(1, icts[1])}
 
 
 def test_merge_with_schema_evolution(spark, tmp_path):

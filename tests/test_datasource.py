@@ -14,19 +14,41 @@ from pulsar_io_delta_spark.sources.delta_log import DeltaTable
 def cdc_table(spark, tmp_path):
     path = str(tmp_path / "tbl")
     t = DeltaTable(path)
-    mk = lambda lo, hi, et: spark.range(lo, hi).select(  # noqa: E731
-        F.col("id").alias("event_id"),
-        F.lit(et).alias("event_type"),
-        (F.col("id") * 1.5).alias("value"),
+    mk = lambda lo, hi, et: spark.createDataFrame(  # noqa: E731
+        [(i, et, i * 1.5) for i in range(lo, hi)],
+        "event_id long, event_type string, value double",
     )
     t.write(mk(0, 10, "click"), partition_by=["event_type"])
     t.write(mk(10, 14, "buy"), partition_by=["event_type"])
     t.delete_where(spark, "event_type = 'buy'")
+    # v3: several files, each with its own modificationTime, one of them
+    # under the null partition
+    ticks = iter(range(1, 100))
+    real_mtime = t.fs.mtime_ms
+    t.fs.mtime_ms = lambda p: real_mtime(p) + 1000 * next(ticks)
+    t.write(
+        mk(20, 24, "click").unionByName(mk(24, 26, None)).repartition(2),
+        partition_by=["event_type"],
+    )
+    del t.fs.mtime_ms
     register_delta_cdc(spark)
     return path
 
 
+_ENVELOPE = ("event_id", "op", "event_type", "partition_value", "ts", "_commit_version")
+
+
+def _rows(df, cols=_ENVELOPE):
+    return {tuple(r[c] for c in cols) for r in df.collect()}
+
+
 def test_batch_read_matches_cdc(spark, cdc_table):
+    """The source, DeltaTable.cdc and the connector's tail emit the same
+    records, event time and partition column included, and route them
+    to the same Pulsar slot (the null partition too)."""
+    from pulsar_io_delta_spark.connector import ConnectorConfig, DeltaCdcConnector
+    from pulsar_io_delta_spark.operators.pipeline import to_pulsar_wire
+
     ds = (
         spark.read.format("pulsar_delta_cdc")
         .option("tablePath", cdc_table)
@@ -34,9 +56,75 @@ def test_batch_read_matches_cdc(spark, cdc_table):
         .load()
     )
     ref = DeltaTable(cdc_table).cdc(spark, start_version=0)
-    a = {(r.event_id, r.op, r.partition_value, r._commit_version) for r in ds.collect()}
-    b = {(r.event_id, r.op, r.partition_value, r._commit_version) for r in ref.collect()}
-    assert a == b and len(a) > 0
+    tail = DeltaCdcConnector(ConnectorConfig.load({"tablePath": cdc_table})).tail(spark, 0)
+    v3 = DeltaTable(cdc_table).actions(3)
+    assert len({a["add"]["modificationTime"] for a in v3 if "add" in a}) > 1
+    a = _rows(ds)
+    assert a == _rows(ref) == _rows(tail) and len(a) > 0
+    assert {r[2:4] for r in a if r[0] >= 24} == {(None, "event_type=null")}
+
+    def wire(df):
+        return _rows(
+            to_pulsar_wire(df, "partition_value", F.col("event_id").cast("string"), 8),
+            ("key", "value", "partition_id"),
+        )
+
+    assert wire(ds) == wire(tail)
+
+
+def test_partition_values_round_trip(spark, tmp_path):
+    """Partition values null, 'a:b', 'x y' and 'a/b' are logged in the
+    protocol's form (raw value, null as JSON null) and come back
+    unchanged through read(), cdc(), the source (batch and stream), a
+    shallow clone and the sink."""
+    register_delta_cdc(spark)
+    vals = {0: None, 1: "a:b", 2: "x y", 3: "a/b"}
+    want = set(vals.items())
+    canon = {(i, v, "event_type=" + ("null" if v is None else v)) for i, v in vals.items()}
+    df = spark.createDataFrame(list(vals.items()), "event_id long, event_type string")
+    path = str(tmp_path / "pv")
+    t = DeltaTable(path)
+    t.write(df, partition_by=["event_type"])
+    logged = [a["add"]["partitionValues"]["event_type"] for a in t.actions(0) if "add" in a]
+    assert sorted(logged, key=str) == sorted(vals.values(), key=str)
+
+    cols = ("event_id", "event_type")
+    assert _rows(t.read(spark), cols) == want
+    assert _rows(t.cdc(spark, 0), cols + ("partition_value",)) == canon
+    ds = spark.read.format("pulsar_delta_cdc").option("tablePath", path).load()
+    assert _rows(ds, cols + ("partition_value",)) == canon
+    streamed = set()
+    q = (
+        spark.readStream.format("pulsar_delta_cdc")
+        .option("tablePath", path)
+        .load()
+        .writeStream.foreachBatch(
+            lambda b, _i: streamed.update(_rows(b, cols + ("partition_value",)))
+        )
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(180)
+    assert streamed == canon
+
+    clone = DeltaTable(str(tmp_path / "clone"))
+    clone.clone_from(t)
+    assert _rows(clone.read(spark), cols) == want
+    assert _rows(clone.cdc(spark, 0), cols + ("partition_value",)) == canon
+
+    sink = str(tmp_path / "sink")
+    (
+        df.write.format("pulsar_delta_cdc")
+        .option("tablePath", sink)
+        .option("partitionBy", "event_type")
+        .mode("append")
+        .save()
+    )
+    sunk = DeltaTable(sink)
+    logged = [a["add"]["partitionValues"]["event_type"] for a in sunk.actions(0) if "add" in a]
+    assert sorted(logged, key=str) == sorted(vals.values(), key=str)
+    assert _rows(sunk.read(spark), cols) == want
 
 
 def test_batch_version_bounds(spark, cdc_table):
@@ -56,7 +144,7 @@ def test_envelope_and_pushdown_columns(spark, cdc_table):
     ops = {r.op for r in ds.select("op").distinct().collect()}
     assert ops == {"c", "r"}
     pvs = {r.partition_value for r in ds.select("partition_value").distinct().collect()}
-    assert pvs == {"event_type=click", "event_type=buy"}
+    assert pvs == {"event_type=click", "event_type=buy", "event_type=null"}
 
 
 def test_batch_write_through_datasource(spark, tmp_path):
@@ -430,6 +518,70 @@ def test_stream_max_files_per_trigger_end_to_end(spark, two_commit_table, tmp_pa
     assert len(batches) == 6  # one file slice per micro-batch
     for b in batches:
         assert len({(r._commit_version) for r in b}) == 1
+
+
+def test_change_walk_stops_at_end(spark, tmp_path, monkeypatch):
+    """A file-capped latestOffset and an endingVersion-bounded batch
+    read parse only the commits of their range, never the log up to
+    its head."""
+    path = str(tmp_path / "walk")
+    t = DeltaTable(path)
+    for lo in range(0, 12, 2):  # v0..v5, one file each
+        t.write(spark.range(lo, lo + 2).select(F.col("id").alias("event_id")).coalesce(1))
+    parsed = []
+    real_actions = DeltaTable.actions
+    monkeypatch.setattr(
+        DeltaTable, "actions", lambda self, v: parsed.append(v) or real_actions(self, v)
+    )
+    r = _stream_reader(path, maxFilesPerTrigger=2)
+    r.initialOffset()
+    assert r.latestOffset() == {"version": 2, "index": 0}
+    assert parsed == [0, 1, 2]  # v2 is read to find it over the cap
+    parsed.clear()
+    b = _batch_reader(path, startingVersion=1, endingVersion=2)
+    assert {p.version for p in b.partitions()} == {1, 2}
+    assert parsed == [1, 2]
+
+
+def test_one_change_log_walk():
+    """DeltaTable.change_log is the one walk of commit actions for
+    change reads: cdc(), table_changes(), their one scan builder
+    (_scan_changes, which also scans _change_data files),
+    schema_changes() and the source's planner consume its records and
+    neither read commits nor dispatch on action keys themselves."""
+    import ast
+    import inspect
+
+    from pulsar_io_delta_spark.sources import datasource, delta_log
+
+    consumers = {
+        delta_log: {"cdc", "table_changes", "_scan_changes", "schema_changes"},
+        datasource: {"_plan_slices"},
+    }
+    walk_calls = {"changes", "actions", "json_versions", "_commit_carried_ms"}
+    action_keys = {"add", "remove", "cdc", "metaData", "commitInfo"}
+    offenders, seen = [], set()
+    for module, names in consumers.items():
+        tree = ast.parse(inspect.getsource(module))
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef) or fn.name not in names:
+                continue
+            seen.add(fn.name)
+            for n in ast.walk(fn):
+                if (
+                    isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Attribute)
+                    and n.func.attr in walk_calls
+                ):
+                    offenders.append(f"{fn.name}:{n.lineno} .{n.func.attr}()")
+                if isinstance(n, ast.Constant) and n.value in action_keys:
+                    offenders.append(f"{fn.name}:{n.lineno} {n.value!r}")
+    assert seen == set().union(*consumers.values())
+    assert offenders == []
+    assert not hasattr(DeltaTable, "changes")
+    assert not hasattr(DeltaTable, "_scan_change_files")
+    assert "versions" not in inspect.signature(DeltaTable.cdc).parameters
+    assert not hasattr(datasource, "_canonical_pv")
 
 
 # ---------------------------------------------------------------------------
