@@ -14,7 +14,9 @@ Methodology (round-4 fix): per-query time is the MEDIAN of
 that absorbs one-time whole-stage-codegen compilation; ``spread``
 (max − min over the timed runs) is reported so a claimed effect can be
 judged against run-to-run variance — round-3's ±25–75% swings on
-unchanged code came from best-of-2 sampling."""
+unchanged code came from best-of-2 sampling. ``SPARK_GRAFT_TRIALS=0``
+times one run per query and discards none: the single-session headline
+sweep at a large scale factor."""
 
 from __future__ import annotations
 
@@ -311,14 +313,6 @@ def main() -> None:
         sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf"))
     except ValueError:
         sf = -1.0
-    # r17 (VERDICT r16 #2): SPARK_GRAFT_SCRUB=0 disables the between-
-    # queries session scrub — DIAGNOSTIC ONLY, for quantifying the
-    # protocol delta behind the r16 budget refreeze (the r7 anchors
-    # were recorded under the warm-session protocol). The driver sets
-    # no env, so the official protocol stays scrubbed; the payload
-    # carries a "protocol" stamp either way (ADVICE r16 #4) so anchor-
-    # ratio consumers can tell the two apart.
-    scrub_on = os.environ.get("SPARK_GRAFT_SCRUB", "1") != "0"
     spark = get_spark(app_name="pids-bench")
     spark.sparkContext.setLogLevel("ERROR")
     specs = all_queries()
@@ -375,9 +369,9 @@ def main() -> None:
             # the r15 sf10 sweep OOM'd on; session_scrub is the
             # documented long-running-driver hygiene. Trials still run
             # back-to-back with only clearCache between them.
-            if scrub_on:
-                session_scrub(spark)
-            run(name)  # discarded: codegen compile + cache warm
+            session_scrub(spark)
+            if trials:
+                run(name)  # discarded: codegen compile + cache warm
             # Per-query rig attribution (r16, VERDICT r15 #1): the
             # whole-run ext_busy mean cannot see BURSTS — a host-steal
             # spike during one query's 3 s window vanishes into a
@@ -388,7 +382,8 @@ def main() -> None:
             # attributable without a re-run.
             q_stat = _read_proc_stat()
             q_self = _proc_tree_jiffies()
-            samples = [run(name) for _ in range(trials)]
+            # SPARK_GRAFT_TRIALS=0: one timed run, none discarded
+            samples = [run(name) for _ in range(max(trials, 1))]
             after = _read_proc_stat()
             delta = {k: after.get(k, 0) - q_stat.get(k, 0) for k in q_stat}
             qtot = sum(delta.values())
@@ -421,7 +416,7 @@ def main() -> None:
         # measurement-protocol stamp (ADVICE r16 #4): "scrub-v1" is the
         # r16+ between-queries session_scrub protocol; "warm-v0" is the
         # pre-r16 warm-session protocol the r7 anchors were frozen under.
-        "protocol": "scrub-v1" if scrub_on else "warm-v0",
+        "protocol": "scrub-v1",
     }
     if errors:
         payload["errors"] = errors

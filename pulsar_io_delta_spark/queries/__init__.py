@@ -1,12 +1,18 @@
-"""Import all query modules so their @register calls populate QUERIES.
+"""Import all query modules so their @register calls populate QUERIES,
+then seat the correctness window.
 
-Import order IS registration order IS the order the driver samples for
-its correctness window, so the blocks least recently hard-verified go
-first. Round 1 verified the first 50 registrations (reference_surface +
-relational blocks); round 2 rotates the then-unchecked streaming / LLM /
-SQL / extra blocks to the front so they land in the checked window,
-followed by the surfaces touched by this round's fixes (cdc() rewrite →
-reference_surface, asof-join semantics → relational3).
+The external correctness gate checks the first 50 registrations
+against their oracles, so ``WINDOW`` names those 50, in order, and
+``reorder`` puts them first; every other query follows in import
+order. ``q_stream_tumbling`` keeps slot 0 as the canary. The window
+then seats every query whose code path changed since the last gate
+round, CORRECTNESS_r17 (the superstep loop, the columnar egress and
+murmur3 routing, the change-log walk and its partition-value form,
+the in-commit-timestamp readers, and every partitioned write through
+``_stage_and_move``), so each gets a fresh gate row. The remaining
+slots go to the queries whose latest gate row is oldest (round 12),
+fewest rows first. Next round, rebuild the list the same way rather
+than appending to it.
 """
 
 from pulsar_io_delta_spark.queries import streaming_queries  # noqa: F401
@@ -21,887 +27,64 @@ from pulsar_io_delta_spark.queries import pipeline_queries  # noqa: F401
 from pulsar_io_delta_spark.queries import pipeline2  # noqa: F401
 from pulsar_io_delta_spark.queries import pipeline3  # noqa: F401
 
-from pulsar_io_delta_spark.registry import promote
+from pulsar_io_delta_spark.registry import reorder
 
-# Round-2 window (first 50 registrations): slots 0-36 keep the blocks that
-# had no round-1 correctness row (streaming/LLM/SQL/extra + stateful); the
-# remaining 13 slots go to the queries touched or added this round.
-promote(
-    [
-        # modified this round (null-safe encode, single-pass cdc(), asof edges)
-        "q_partition_encode",
-        "q_cdc_source",
-        "q_asof_join",
-        # new round-2 training-pipeline operators, oracle-backed
-        "q_sample_hash",
-        "q_text_redact",
-        "q_repetition_metrics",
-        "q_domain_cap",
-        "q_merge_upsert",
-        "q_quality_filter",
-        "q_split_assign",
-        "q_decontaminate",
-        "q_pack_sequences",
-        "q_pulsar_wire",
-        "q_cdc_schema_evolution",
-    ],
-    after="q_stream_stateful_count",
-)
-
-# Round-4 window: q_stream_tumbling stays as the slot-0 canary; the other
-# 49 slots take (a) q_cdc_schema_evolution — zero driver rows in three
-# rounds, now with a constant-table oracle; (b) every query whose code
-# path changed this round (murmur3 kernel, delta-log epoch join, merge
-# path decode, the six rewritten dedup/verify contracts); (c) the
-# r1-stale block, two rounds without a driver re-check — the delta-log-
-# dependent reference surface first, then sources and the relational
-# core joins/aggs; (d) the 14 TPC-H queries added this round (new ⇒
-# zero driver history ⇒ highest re-check value). Left outside (green in
-# r1, untouched since, lowest risk): the scalar-function and set-op
-# singles (union/intersect/except, string/date/math/json/array funcs,
-# topk, window rank/running/lag), plus intersect_all / except_all /
-# agg_variance / join_cross / null_funcs / regex_funcs / struct_funcs
-# and the round-2/3-green blocks rotating behind.
-promote(
-    [
-        "q_cdc_schema_evolution",
-        # touched in round 4
-        "q_hash_route",
-        "q_cdc_source",
-        "q_merge_upsert",
-        "q_pulsar_wire",
-        "q_dedup_minhash",
-        "q_dedup_near",
-        "q_dedup_pipeline",
-        "q_dedup_simhash",
-        "q_ngram_jaccard",
-        "q_dedup_embcos",
-        # r1-stale: delta-log-dependent reference surface
-        "q_snapshot_scan",
-        "q_cdc_envelope",
-        "q_time_travel_filter",
-        "q_type_widening",
-        # r1-stale: sources + window/time extras
-        "q_source_csv",
-        "q_source_jsonl",
-        "q_agg_percentiles",
-        "q_window_range_frame",
-        "q_window_firstlast",
-        "q_timeseries_gapfill",
-        "q_unpivot",
-        # r1-stale: relational core
-        "q_filter_project",
-        "q_join_inner",
-        "q_join_left",
-        "q_join_right",
-        "q_join_full",
-        "q_join_semi",
-        "q_join_anti",
-        "q_join_broadcast",
-        "q_join_range",
-        "q_agg_groupby",
-        "q_agg_distinct",
-        "q_agg_rollup",
-        "q_agg_cube",
-        # new this round: the TPC-H completion (no driver history yet)
-        "q_sql_tpch_q2",
-        "q_sql_tpch_q4",
-        "q_sql_tpch_q7",
-        "q_sql_tpch_q8",
-        "q_sql_tpch_q9",
-        "q_sql_tpch_q11",
-        "q_sql_tpch_q12",
-        "q_sql_tpch_q13",
-        "q_sql_tpch_q15",
-        "q_sql_tpch_q16",
-        "q_sql_tpch_q17",
-        "q_sql_tpch_q20",
-        "q_sql_tpch_q21",
-        "q_sql_tpch_q22",
-    ],
-    after="q_stream_tumbling",
-)
-
-# Late round-4 additions (UDAF, map functions, salted skew join) have
-# zero driver history → swap them into the window in place of the three
-# plain outer-join singles (r1-green, unmodified since, lowest
-# regression risk), which rotate to the back of the registration order.
-promote(
-    ["q_udaf_weighted_mean", "q_map_funcs", "q_join_skew_salted"],
-    after="q_join_inner",
-)
-promote(["q_join_left", "q_join_right", "q_join_full"], after="q_struct_funcs")
-
-# Round-5 window (slots 1-49 after the q_stream_tumbling canary):
-# (a) the 15 other queries broken by the round-4 events-ts fixture drift,
-#     now fixed via schema-dispatch (tables.normalize_events_ts) — each
-#     needs a fresh hard driver row proving the fix; (b) the 8 queries
-#     with ZERO driver-row history ever (TPC-H q1/q6/q10/q14/q18/q19
-#     added mid-r4 after the rotation, q_multimodal_real_decode,
-#     q_sim_ann_lsh); (b') the five operators added this round
-#     (sessionize/funnel/entropy/centroid/quantize — new ⇒ zero driver
-#     history ⇒ highest re-check value); (c) 21 slots of the stalest
-#     r1/r2-green block (window/set-op/scalar-function singles + the
-#     r2-green TPC-H/SQL queries), unchecked by the driver for 3+
-#     rounds. The plain join singles (cross/left/right/full,
-#     agg_variance) rotate behind: r1-green, unmodified, judge-gate
-#     green on current fixtures — lowest re-check value.
-# Rotating out: the r4-green reference-surface/dedup/TPC-H blocks —
-# freshly hard-verified, unmodified this round, lowest re-check value.
-_R5_WINDOW = [
-        # (a) events-ts fix — streaming first (the silent-wrong cluster)
-        "q_stream_sliding",
-        "q_stream_session",
-        "q_stream_stream_join",
-        "q_stream_watermark_dedup",
-        "q_cdc_envelope",
-        "q_partition_encode",
-        "q_hash_route",
-        "q_time_travel_filter",
-        "q_cdc_source",
-        "q_json_funcs",
-        "q_map_funcs",
-        "q_source_csv",
-        "q_source_jsonl",
-        "q_timeseries_gapfill",
-        "q_asof_join",
-        # (b) zero driver history
-        "q_sql_tpch_q1",
-        "q_sql_tpch_q6",
-        "q_sql_tpch_q10",
-        "q_sql_tpch_q14",
-        "q_sql_tpch_q18",
-        "q_sql_tpch_q19",
-        "q_multimodal_real_decode",
-        "q_sim_ann_lsh",
-        # (b') new this round (sessionize/funnel/entropy/embedding ops,
-        # chunking, TF-IDF)
-        "q_sessionize",
-        "q_funnel",
-        "q_text_entropy",
-        "q_emb_centroid",
-        "q_emb_quantize",
-        "q_chunk_docs",
-        "q_tfidf_topterms",
-        "q_retention_cohort",
-        "q_sql_sessionize",
-        "q_sql_funnel",
-        # (c) stalest greens
-        "q_window_rank",
-        "q_window_running",
-        "q_window_lag",
-        "q_topk",
-        "q_union_all",
-        "q_union_distinct",
-        "q_intersect",
-        "q_except",
-        "q_intersect_all",
-        "q_except_all",
-        "q_regex_funcs",
-        "q_struct_funcs",
-        "q_sql_tpch_q3",
-        "q_sql_tpch_q5",
-        "q_sql_grouping_sets",
-        "q_sql_subqueries",
-]
-promote(_R5_WINDOW, after="q_stream_tumbling")
-
-# Round-6 window (slots 1-49 after the q_stream_tumbling canary, which
-# itself re-proves the rewritten dsum kernel):
-# (a) the two oracle-since-r4 queries with ZERO post-oracle driver rows
-#     (r5 verdict item #2 — the last evidence holes);
-# (b) every query whose code or contract changed this round: the
-#     TF-IDF document-frequency rewrite, the new IVF-recall /
-#     HLL-error-bound contracts, the new late-data streaming query,
-#     the funnel explode rewrite, the run-length empty-array guard
-#     (entropy), and all 12 dsum/dsum_over users (per-row quantization
-#     changed from round() to the decimal cast; q_agg_variance also
-#     exercises the new scale>6 decimal fallback);
-# (c) the r4-green blocks now two rounds stale: dedup/merge/wire,
-#     snapshot/type-widening, cdc-schema-evolution, the 14 TPC-H
-#     queries verified r4, and the stalest relational singles.
-# Rotating behind: the r5-green block (freshly hard-verified,
-# unmodified) and the remaining r1/r2 singles.
-promote(
-    [
-        # (a) evidence holes
-        "q_multimodal_decode",
-        "q_text_fingerprint",
-        # (b) changed this round
-        "q_tfidf_topterms",
-        "q_sim_ann_ivf",
-        "q_agg_approx",
-        "q_stream_late_data",
-        "q_funnel",
-        "q_text_entropy",
-        "q_agg_groupby",
-        "q_agg_distinct",
-        "q_agg_rollup",
-        "q_agg_cube",
-        "q_agg_variance",
-        "q_join_broadcast",
-        "q_window_running",
-        "q_window_range_frame",
-        "q_timeseries_gapfill",
-        "q_join_skew_salted",
-        "q_stream_sliding",
-        # new round-6 queries (zero driver history -> highest value;
-        # placed ahead of the stale-green block so all ten stay inside
-        # the 50-slot window — the last five TPC-H r4-greens rotate out)
-        "q_dedup_cc",
-        "q_source_orc",
-        "q_scd2_dim",
-        "q_stream_enrich",
-        "q_fuzzy_pairs",
-        "q_bm25_topdocs",
-        "q_ewma",
-        "q_anomaly_zscore",
-        "q_hampel_filter",
-        "q_markov_transitions",
-        "q_profile_stats",
-        "q_dedup_incremental",
-        "q_dedup_keep_best",
-        "q_stratified_sample",
-        "q_time_rollup_multires",
-        "q_join_bucketed",
-        "q_agg_approx_quantiles",
-        "q_stream_join_outer",
-        # (c) two-rounds-stale r4 greens
-        "q_dedup_minhash",
-        "q_dedup_near",
-        "q_dedup_pipeline",
-        "q_dedup_simhash",
-        "q_ngram_jaccard",
-        "q_dedup_embcos",
-        "q_merge_upsert",
-        "q_pulsar_wire",
-        "q_snapshot_scan",
-        "q_type_widening",
-        "q_cdc_schema_evolution",
-        "q_sql_tpch_q2",
-        "q_sql_tpch_q4",
-        "q_sql_tpch_q7",
-        "q_sql_tpch_q8",
-        "q_sql_tpch_q9",
-        "q_sql_tpch_q11",
-        "q_sql_tpch_q12",
-        "q_sql_tpch_q13",
-        "q_sql_tpch_q15",
-        "q_sql_tpch_q16",
-        "q_sql_tpch_q17",
-        "q_sql_tpch_q20",
-        "q_sql_tpch_q21",
-        "q_sql_tpch_q22",
-    ],
-    after="q_stream_tumbling",
-)
-
-# Late-round-6 additions (pipeline3: LM scoring, mixture sampling,
-# sharding, snapshot diff, Z-order kernel, winsorize) have zero driver
-# history → they take window slots directly after the late-data query,
-# ahead of the stale-green TPC-H r4 block whose tail rotates behind
-# (r4-green, unmodified, judge-gate green on current fixtures — lowest
-# re-check value).
-promote(
-    [
-        "q_lm_score",
-        "q_mixture_sample",
-        "q_shard_assign",
-        "q_snapshot_diff",
-        "q_zorder_scan",
-        "q_winsorize",
-        "q_source_binary",
-        "q_restore",
-        "q_stream_cdc",
-        "q_pit_join",
-        "q_pagerank",
-        "q_curation_pipeline",
-    ],
-    after="q_stream_late_data",
-)
-
-# FINAL round-6 window (one list, supersedes the incremental rotations
-# above): with 30+ queries added this round, zero-DRIVER-history
-# entries now fill almost the whole window — every query the driver
-# has never sampled gets a slot (the judge gate covers the rest at all
-# three scales every run). Remaining slots go to the queries whose
-# code or contract changed this round (TF-IDF rewrite, IVF/HLL
-# contracts, funnel/entropy rewrites, the dsum_over user). The
-# r4/r5-green blocks rotate behind: driver-proven, unmodified since,
-# judge-gate green on current fixtures.
-promote(
-    [
-        # (a) oracled r4, zero post-oracle driver rows (r5 verdict #2)
-        "q_multimodal_decode",
-        "q_text_fingerprint",
-        # (b) contract/code changed this round
-        "q_tfidf_topterms",
-        "q_sim_ann_ivf",
-        "q_agg_approx",
-        # (q_funnel / q_text_entropy / q_timeseries_gapfill also changed
-        # this round but hold r5 hard rows and pytest + judge-gate
-        # coverage; zero-driver-history queries outrank them for slots)
-        # (c) zero driver history: mid-round batch
-        "q_stream_late_data",
-        "q_dedup_cc",
-        "q_source_orc",
-        "q_scd2_dim",
-        "q_stream_enrich",
-        "q_fuzzy_pairs",
-        "q_bm25_topdocs",
-        "q_ewma",
-        "q_anomaly_zscore",
-        "q_hampel_filter",
-        "q_markov_transitions",
-        "q_profile_stats",
-        "q_dedup_incremental",
-        "q_dedup_keep_best",
-        "q_stratified_sample",
-        "q_time_rollup_multires",
-        "q_join_bucketed",
-        "q_agg_approx_quantiles",
-        "q_stream_join_outer",
-        # (c) zero driver history: late batch
-        "q_lm_score",
-        "q_mixture_sample",
-        "q_shard_assign",
-        "q_snapshot_diff",
-        "q_zorder_scan",
-        "q_winsorize",
-        "q_source_binary",
-        "q_restore",
-        "q_stream_cdc",
-        "q_pit_join",
-        "q_pagerank",
-        "q_curation_pipeline",
-        "q_bitwise_funcs",
-        "q_hash_funcs",
-        "q_geohash",
-        "q_geo_join",
-        "q_sketch_countmin",
-        "q_source_logs",
-        "q_json_typed",
-        "q_table_detail",
-        "q_interval_join",
-        "q_multimodal_audio",
-        "q_multimodal_video",
-        "q_multimodal_resize",
-    ],
-    after="q_stream_tumbling",
-)
-
-# Round-7 window (slots 1-3 after the q_stream_tumbling canary): the
-# ONLY three queries with zero driver rows ever — registered after the
-# r6 window closed, judge-verified green at sf0.01 in the r6 audit
-# (r6 verdict item #2). Round-7 additions (deletion-vector reads,
-# column mapping, skew-stress variants) are promoted by the later
-# blocks below as they land; everything else keeps the r6 order —
-# the r6-window block holds fresh hard rows, the blocks behind are
-# driver-proven and unmodified.
-promote(
-    [
-        "q_compact_roundtrip",
-        "q_log_lifecycle",
-        "q_sql_recursive_series",
-    ],
-    after="q_stream_tumbling",
-)
-
-# Round-8 window (slots 1-49 after the q_stream_tumbling canary):
-# (a) the two queries added this round — the deletion-vector and
-#     column-mapping read surface (VERDICT r7 #2: the r7 DV component
-#     shipped without driver rows; these earn them), zero driver
-#     history → highest re-check value;
-# (b) every query whose delta-log code path changed this round
-#     (remove-actions now carry DV descriptors, writer-side protocol
-#     gating in every write path, DV protocol merge, executor-side CDC
-#     DV expansion): the table-lifecycle and CDC users;
-# (c) the stalest driver rows — the r1-green scalar/join singles
-#     (4+ rounds without a driver re-check), the r3-green LLM block,
-#     and the r4/r5-green relational singles.
-# Rotating behind: the r6/r7-green blocks — freshly hard-verified,
-# unmodified this round.
-_R8_WINDOW = [
-    # (a) new this round
-    "q_dv_read",
-    "q_column_mapping_read",
-    "q_column_mapping_write",
-    "q_mapping_upgrade",
-    "q_checkpoint_v2",
-    "q_cdf_merge",
-    "q_cdf_source",
-    "q_stream_cdf",
-    "q_update_where",
-    "q_generated_columns",
-    "q_column_mapping_id",
-    "q_identity_columns",
-    "q_nested_mapping",
-    "q_variant",
-    "q_schema_widening",
+WINDOW = [
+    "q_stream_tumbling",  # canary
+    # superstep loop: connected components, BFS, BPE training
+    "q_dedup_cc",
+    "q_dedup_keep_best",
     "q_dedup_semantic",
-    "q_dedup_substr",
-    "q_clone_shallow",
-    "q_reorg_purge",
-    "q_stream_rate_limit",
-    "q_row_tracking",
-    "q_log_compaction",
-    "q_column_rename_drop",
-    "q_multimodal_jpeg",
-    "q_multimodal_png",
-    "q_sim_ann_pq",
-    # (b) delta-log code paths changed this round
-    "q_snapshot_diff",
-    "q_merge_upsert",
-    "q_restore",
-    "q_compact_roundtrip",
-    "q_log_lifecycle",
-    "q_stream_cdc",
-    "q_cdc_source",
-    "q_cdc_schema_evolution",
-    "q_table_detail",
-    "q_pulsar_wire",
-    # (c) stalest driver rows: r1 singles (q_join_cross / q_null_funcs
-    # / q_array_funcs / q_join_full / q_join_right / q_join_left /
-    # q_math_funcs rotate out — the join family keeps
-    # inner/semi/anti/range sampled, scalar funcs keep 2)
-    "q_string_funcs",
-    # (q_date_funcs rotates out for q_row_tracking — r1-green,
-    # unmodified; scalar-func family keeps q_string_funcs sampled and
-    # q_date_funcs2 holds an r5 row)
-    # r3 LLM block
-    "q_dedup_exact",
-    # (q_sim_topk rotates out for q_column_rename_drop — r3-green,
-    # unmodified; the similarity family keeps q_sim_ann_pq sampled)
-    "q_text_tokens",
-    # (q_text_stats rotates out for q_log_compaction — r3-green,
-    # unmodified; the text family keeps tokens/langid/quality sampled)
-    "q_text_langid",
-    "q_text_quality",
-    "q_multimodal_project",
-    # r4/r5 relational + window singles
-    "q_filter_project",
-    "q_join_inner",
-    "q_join_semi",
-    "q_join_anti",
-    "q_join_range",
-    "q_udaf_weighted_mean",
-    "q_window_rank",
-    # (q_window_lag rotates out for q_clone_shallow — r5-green, family
-    # keeps q_window_rank sampled)
-    # (q_topk rotates out for q_stream_rate_limit — r5-green,
-    # unmodified; ranking family keeps q_window_rank sampled)
-    # (q_union_all rotates out for q_reorg_purge — r5-green,
-    # unmodified; the set-op family keeps q_except sampled via the
-    # judge gate and q_union_all holds an r5 driver full-hash row)
-    # (q_union_distinct rotates out for q_dedup_substr — r5-green,
-    # unmodified, the set-op family keeps q_union_all sampled;
-    # q_window_firstlast / q_unpivot / q_asof_join, then
-    # q_intersect_all / q_except_all / q_agg_percentiles /
-    # q_struct_funcs / q_regex_funcs / q_except / q_intersect rotate
-    # out to make room for the ten new round-8 queries — r5-green,
-    # unmodified, judge-gate green on current fixtures)
-]
-promote(_R8_WINDOW, after="q_stream_tumbling")
-
-# Round-9 window (slots 1-49 after the q_stream_tumbling canary),
-# composed per the r8 verdict's rotation policy — changed-in-r9 first,
-# then oldest-latest-driver-row ascending:
-# (a) the four queries whose SEMANTICS/fixtures changed this round:
-#     q_nested_mapping (array-of-struct mapping), q_column_mapping_id
-#     (id-mode writes), q_checkpoint_v2 (sidecar writing),
-#     q_multimodal_jpeg (4:2:0 mix);
-# (b) ten representatives of the COLUMNAR METADATA PLANE rewrite
-#     (snapshot replay + data skipping are new code under every delta
-#     read — behavior parity-tested, but these earn fresh hard rows
-#     across the distinct consumer shapes: plain scan, stats prune,
-#     z-order prune, DV store, multi-part checkpoint + expiry,
-#     checkpoint writer, log compaction replay, clone's absolute-path
-#     adds, row-tracking fields, mapped writes);
-# (c) the stalest driver rows: the whole r1 block (9), the whole r3
-#     block (21), and the five highest-traffic r4 singles that fit.
-# Rotating behind: the r7/r8-green blocks (fresh hard rows,
-# unmodified semantics) and the rest of the r4/r5 blocks — next
-# round's (c) pool. 62 queries currently hold rows older than 4
-# rounds; 35 rotate in now, the remainder (r4 TPC-H singles) lead the
-# r10 (c) pool.
-WINDOW_MUST_INCLUDE = [
-    # (a) changed this round
-    "q_nested_mapping",
-    "q_column_mapping_id",
-    "q_checkpoint_v2",
-    "q_multimodal_jpeg",  # 4:2:0 mix + progressive (SOF2) routing
-    "q_multimodal_png",   # Adam7-interlaced + 16-bit form routing
-    "q_liquid_cluster",   # NEW: clusteredTable + Hilbert OPTIMIZE
-    "q_column_defaults",  # NEW: allowColumnDefaults SET/apply lifecycle
-    "q_multimodal_audio_g711",  # NEW: G.711 + ADPCM decode contracts
-    "q_cdf_merge",        # insert-id device made scale-proof (sf1 gate)
-    "q_dedup_semantic",   # oracle made duplicate-density-robust
-    # (b) columnar-metadata-plane representatives
-    "q_snapshot_scan",
-    "q_time_travel_filter",
-    "q_zorder_scan",
-    "q_dv_read",
-    "q_log_lifecycle",
-    "q_compact_roundtrip",
-    "q_log_compaction",
-    "q_clone_shallow",
-    "q_row_tracking",
-    "q_column_mapping_write",
-    # (c) r1 block — the oldest rows in the registry
-    "q_agg_variance",
-    "q_array_funcs",
-    "q_date_funcs",
-    "q_join_cross",
-    "q_join_full",
-    "q_join_left",
-    "q_join_right",
-    "q_math_funcs",
-    "q_null_funcs",
-    # (c) r3 block
-    "q_date_funcs2",
-    "q_decontaminate",
-    "q_dedup_hash",
-    "q_domain_cap",
-    "q_minmax_scale",
-    "q_pack_sequences",
-    "q_pivot",
-    "q_quality_filter",
-    "q_repetition_metrics",
-    "q_sample_hash",
-    "q_sim_topk",
-    "q_split_assign",
-    "q_sql_conditional_agg",
-    "q_sql_in_subquery",
-    "q_stream_stateful_count",
-    "q_string_funcs2",
-    "q_text_redact",
-    "q_text_stats",
-    "q_text_token_count",
-    "q_udtf_tokens",
-    # (rotated back out for the round-9 new/changed entries above —
-    # all green on the judge gate at sf0.01 AND the round-9 sf1 run:
-    # the five highest-traffic r4 singles q_agg_groupby,
-    # q_agg_distinct, q_join_broadcast, q_dedup_minhash, q_dedup_near,
-    # and the r3 single q_window_variants)
-]
-promote(WINDOW_MUST_INCLUDE, after="q_stream_tumbling")
-
-# Round-10 window (slots 1-49 after the q_stream_tumbling canary),
-# composed per the r9 verdict's #1 (the ONLY unverified-by-hard-signal
-# surface left was evidence staleness): (a) the 32 queries whose latest
-# driver row was round 3-4 — q_window_variants (r3) plus the whole r4
-# block (14 TPC-H singles, the agg block, the sketch-dedup family,
-# broadcast/skew joins, type widening, unpivot, window first/last and
-# range frames); (b) the four queries changed or added in r10
-# (q_dedup_embcos is already in (a)): q_fuzzy_pairs (densification
-# guard), q_multimodal_decode (real decoder matrix), q_time_travel_ict
-# (new ICT surface), q_dv_read (DV writer re-plumbed through
-# write_dv_payloads); (c) 13 of the 44 r5-stale queries, headline/
-# reference-surface first. After this round no query's latest driver
-# row is older than r5; the remaining 31 r5 queries and the 3 r6
-# queries lead the r11 (c) pool.
-_R10_WINDOW = [
-    # (a) r3/r4-stale
-    "q_window_variants",
-    "q_sql_tpch_q2", "q_sql_tpch_q4", "q_sql_tpch_q7", "q_sql_tpch_q8",
-    "q_sql_tpch_q9", "q_sql_tpch_q11", "q_sql_tpch_q12", "q_sql_tpch_q13",
-    "q_sql_tpch_q15", "q_sql_tpch_q16", "q_sql_tpch_q17", "q_sql_tpch_q20",
-    "q_sql_tpch_q21", "q_sql_tpch_q22",
-    "q_agg_groupby", "q_agg_distinct", "q_agg_rollup", "q_agg_cube",
-    "q_agg_percentiles",
-    "q_dedup_minhash", "q_dedup_near", "q_dedup_pipeline", "q_dedup_simhash",
-    "q_dedup_embcos", "q_ngram_jaccard",
-    "q_join_broadcast", "q_join_skew_salted", "q_type_widening", "q_unpivot",
-    "q_window_firstlast", "q_window_range_frame",
-    # (b) changed/new in r10
-    "q_fuzzy_pairs", "q_multimodal_decode", "q_time_travel_ict", "q_dv_read",
-    "q_multimodal_audio_flac", "q_convert_delta",
-    # (c) r5-stale fill (q_chunk_docs and q_emb_quantize yield their
-    # slots to the new FLAC and CONVERT queries; they lead the r11 (c)
-    # pool with the other 30 r5 rows)
-    "q_sql_tpch_q1", "q_sql_tpch_q18", "q_cdc_envelope", "q_hash_route",
-    "q_partition_encode", "q_sessionize", "q_retention_cohort",
-    "q_stream_watermark_dedup", "q_topk", "q_sim_ann_lsh",
-    "q_multimodal_real_decode",
-]
-promote(_R10_WINDOW, after="q_stream_tumbling")
-# the CURRENT round's promote intent (tests/test_registry.py pins that
-# it fits entirely inside the 50-slot driver window)
-WINDOW_MUST_INCLUDE = _R10_WINDOW
-
-# Round-11 window (slots 1-49 after the q_stream_tumbling canary),
-# composed per the r10 verdict #1: (a) ALL 36 queries whose latest
-# driver row is r5/r6 (the full remaining staleness pool — after this
-# round no query's latest driver row is older than r7); (b) the seven
-# queries changed or added in r11: q_multimodal_audio_probe (new MPEG
-# frame probe), q_time_travel_ict (ICT resolution rewritten to refuse
-# expired history), q_stream_rate_limit (50 ms triggers + the pinned
-# AvailableNow under-drain), and the four blob-fixture queries whose
-# setup moved executor-side (q_source_binary, q_multimodal_audio,
-# q_multimodal_audio_g711, q_multimodal_audio_flac; q_multimodal_video
-# is already in (a)) plus the two new curation ops q_pii_scrub and
-# q_html_extract; (c) four r7-stale fills: q_pagerank (the drift-watch
-# query), q_dedup_cc + q_tfidf_topterms (stalest headline rows), and
-# q_zorder_scan (the sharpest probe of the r11 type-aware
-# partition-value pruning rewrite). The remaining 36 r7 rows
-# (q_lm_score and q_sim_ann_ivf first) lead the r12 (c) pool.
-_R11_WINDOW = [
-    # (a) r5/r6-stale — the whole pool
-    "q_asof_join", "q_chunk_docs", "q_emb_centroid", "q_emb_quantize",
-    "q_except", "q_except_all", "q_funnel", "q_intersect",
-    "q_intersect_all", "q_json_funcs", "q_map_funcs",
-    "q_multimodal_resize", "q_multimodal_video", "q_regex_funcs",
-    "q_source_csv", "q_source_jsonl", "q_sql_funnel",
-    "q_sql_grouping_sets", "q_sql_sessionize", "q_sql_subqueries",
-    "q_sql_tpch_q3", "q_sql_tpch_q5", "q_sql_tpch_q6", "q_sql_tpch_q10",
-    "q_sql_tpch_q14", "q_sql_tpch_q19", "q_stream_session",
-    "q_stream_sliding", "q_stream_stream_join", "q_struct_funcs",
-    "q_text_entropy", "q_timeseries_gapfill", "q_union_all",
-    "q_union_distinct", "q_window_lag", "q_window_running",
-    # (b) changed/new in r11
-    "q_multimodal_audio_probe", "q_time_travel_ict",
-    "q_stream_rate_limit", "q_multimodal_audio_flac",
-    "q_multimodal_audio_g711", "q_source_binary", "q_multimodal_audio",
-    # (b continued) new-in-r11 curation ops
-    "q_pii_scrub", "q_html_extract",
-    # (c) r7-stale fill + pruning probe (q_lm_score / q_sim_ann_ivf
-    # yield their slots to the two new queries; they lead the r12 (c)
-    # pool with the other 34 r7 rows)
-    "q_pagerank", "q_dedup_cc", "q_tfidf_topterms", "q_zorder_scan",
-]
-promote(_R11_WINDOW, after="q_stream_tumbling")
-WINDOW_MUST_INCLUDE = _R11_WINDOW
-
-# Round-12 window (slots 1-49 after the q_stream_tumbling canary),
-# composed per the r11 verdict #1: (a) ALL 35 queries whose latest
-# driver row is r7 (the full remaining r7 pool — after this round no
-# query's latest driver row is older than r8); (b) the four queries
-# changed or added in r12: q_pii_scrub (widened to phone/SSN/IPv6
-# classes with new count columns), q_html_extract (comment strip
-# before the tag pass + comment-heavy fixture), q_multimodal_audio_probe
-# (batch-vectorized numpy wavefront + truncated-frame refusal), and
-# the new q_stream_rate_limit_drain (sink-cost-isolated foreachBatch
-# twin); (c) ten r8-stale fills led by q_cdc_source, q_filter_project,
-# q_join_inner per the r11 verdict. The remaining 24 r8 rows lead the
-# r13 (c) pool.
-_R12_WINDOW = [
-    # (a) r7-stale — the whole pool
-    "q_agg_approx", "q_agg_approx_quantiles", "q_anomaly_zscore",
-    "q_bitwise_funcs", "q_bm25_topdocs", "q_curation_pipeline",
-    "q_dedup_incremental", "q_dedup_keep_best", "q_ewma", "q_geo_join",
-    "q_geohash", "q_hampel_filter", "q_hash_funcs", "q_interval_join",
-    "q_join_bucketed", "q_json_typed", "q_lm_score",
-    "q_markov_transitions", "q_mixture_sample", "q_pit_join",
-    "q_profile_stats", "q_scd2_dim", "q_shard_assign", "q_sim_ann_ivf",
-    "q_sketch_countmin", "q_source_logs", "q_source_orc",
-    "q_sql_recursive_series", "q_stratified_sample", "q_stream_enrich",
-    "q_stream_join_outer", "q_stream_late_data", "q_text_fingerprint",
-    "q_time_rollup_multires", "q_winsorize",
-    # (b) changed/new in r12 (q_line_dedup = C4-style cross-doc line
-    # dedup; q_dedup_url = URL-canonicalization dedup)
-    "q_pii_scrub", "q_html_extract", "q_multimodal_audio_probe",
-    "q_stream_rate_limit_drain", "q_line_dedup", "q_dedup_url",
-    # (c) r8-stale fill (q_dedup_substr / q_generated_columns yield
-    # their slots to the two new queries; they lead the r13 (c) pool
-    # with the other 24 r8 rows)
-    "q_cdc_source", "q_filter_project", "q_join_inner",
-    "q_cdc_schema_evolution", "q_cdf_source", "q_column_mapping_read",
-    "q_column_rename_drop", "q_dedup_exact",
-]
-promote(_R12_WINDOW, after="q_stream_tumbling")
-WINDOW_MUST_INCLUDE = _R12_WINDOW
-
-# Round-13 window (slots 1-49 after the q_stream_tumbling canary),
-# composed per the r12 verdict #1: (a) ALL 26 queries whose latest
-# driver row is r8 (the full remaining r8 pool — after this round no
-# query's latest driver row is older than r9); (b) the queries changed
-# or added in r13: q_line_dedup_nl (NEW — newline-native C4 line
-# dedup), q_line_dedup (empty-chunk guard + derived oracle bound),
-# q_dedup_url (fragment-stripped URL materialized once),
-# q_cdc_schema_evolution (sink de-collected to parquet append +
-# read-back); (c) r9-stale fills, delta-metadata-plane and curation
-# headliners first. The remaining r9 rows lead the r14 (c) pool.
-_R13_WINDOW = [
-    # (a) r8-stale — the whole pool
-    "q_dedup_substr", "q_generated_columns", "q_identity_columns",
-    "q_join_anti", "q_join_range", "q_join_semi", "q_mapping_upgrade",
-    "q_merge_upsert", "q_multimodal_project", "q_pulsar_wire",
-    "q_reorg_purge", "q_restore", "q_schema_widening", "q_sim_ann_pq",
-    "q_snapshot_diff", "q_stream_cdc", "q_stream_cdf", "q_string_funcs",
-    "q_table_detail", "q_text_langid", "q_text_quality", "q_text_tokens",
-    "q_udaf_weighted_mean", "q_update_where", "q_variant", "q_window_rank",
-    # (b) changed/new in r13 (q_domain_metadata = Domain Metadata
-    # lifecycle; q_graph_triangles = degree-oriented triangle counting;
-    # q_dedup_containment = asymmetric n-gram containment on LSH
-    # candidates; q_inverted_index = salted two-phase top-k posting
-    # lists. Their window slots come from q_pack_sequences and the
-    # last three (c) fills below, which rotate to lead the r14 (c)
-    # pool)
-    "q_line_dedup_nl", "q_line_dedup", "q_dedup_url",
-    "q_cdc_schema_evolution", "q_domain_metadata",
-    "q_graph_triangles", "q_dedup_containment", "q_inverted_index",
-    # (b continued) second r13 batch: q_knn_graph = mutual k-NN graph
-    # over a designated node sample; q_rank_fusion = RRF hybrid
-    # BM25+cosine retrieval; q_constraints_lifecycle = CHECK constraint
-    # add/refuse/drop lifecycle. Their slots come from the last three
-    # (c) fills (q_cdf_merge / q_multimodal_jpeg / q_multimodal_png),
-    # which rotate to lead the r14 (c) pool.
-    "q_knn_graph", "q_rank_fusion", "q_constraints_lifecycle",
-    # (b continued) third r13 batch: q_bloom_prune = bloom-pruned exact
-    # semi-join (binary-blob literal probe below the shuffle);
-    # q_tokenize_bpe = trained-merge-table BPE apply at vocabulary
-    # granularity. Slots from the last two (c) fills
-    # (q_compact_roundtrip / q_clone_shallow → r14 (c) pool).
-    "q_bloom_prune", "q_tokenize_bpe",
-    # (b continued) fourth r13 batch: q_graph_bfs = frontier-superstep
-    # single-source BFS vs an independent recursive-CTE walk oracle.
-    # Slot from the last (c) fill (q_log_lifecycle → r14 (c) pool).
-    "q_graph_bfs",
-    # (b continued) fifth r13 batch: q_source_xml = Spark 4 native XML
-    # ingestion under the shared format contract. Slot from the last
-    # (c) fill (q_log_compaction → r14 (c) pool).
-    "q_source_xml",
-    # (b continued) sixth r13 batch: q_sketch_kmv = mergeable
-    # k-minimum-values distinct sketch with an exact-integer estimate
-    # and a SQL xxhash64 twin. Slot from the last (c) fill
-    # (q_row_tracking → r14 (c) pool).
-    "q_sketch_kmv", "q_sketch_kmv_intersect", "q_stream_sketch_kmv",
-    # (c) r9-stale fill: metadata plane + curation headliners
-    # (q_dedup_semantic / q_column_defaults / q_quality_filter yielded
-    # their slots to the three new r13 queries; q_liquid_cluster /
-    # q_column_mapping_write to the sketch family → r14 (c) pool)
-    "q_snapshot_scan", "q_time_travel_filter", "q_checkpoint_v2",
-    "q_nested_mapping", "q_column_mapping_id",
-]
-promote(_R13_WINDOW, after="q_stream_tumbling")
-
-# Round-14 window (slots 1-49 after the q_stream_tumbling canary), per
-# the r13 verdict #1: (a) ALL 41 queries whose latest driver row is r9
-# — the complete remaining r9 pool (after this round the freshness
-# floor advances to r10), every one judge-re-verified green in the r13
-# session, so this is evidence refresh, not risk; (b) the 8 remaining
-# slots go to queries new or changed in r14: the quantile sketch
-# family q_sketch_quantile / q_sketch_quantile_merge /
-# q_stream_sketch_quantile (bottom-k hash sample — deterministic,
-# exactly mergeable), q_tokenize_bpe_train (BPE merge-table induction
-# vs an unrolled SQL replay), and the four queries the r13
-# verdict/advice fixes touched: q_sketch_kmv_intersect (now consumes
-# operators/sketch), q_bloom_prune (MAX_M_BITS cap + probe parity),
-# q_graph_bfs (one shared depth constant with its oracle),
-# q_stream_sketch_kmv (store re-pointed at the DeltaTable sink).
-# q_knn_graph / q_sim_topk also changed (widen_to now threaded
-# explicitly) — q_sim_topk is in the (a) pool; q_knn_graph's plan is
-# unchanged by construction and it was r13-window green, so it yields
-# its slot to the older evidence.
-_R14_WINDOW = [
-    # (a) r9-stale — the whole pool
-    "q_agg_variance", "q_array_funcs", "q_cdf_merge", "q_clone_shallow",
-    "q_column_defaults", "q_column_mapping_write", "q_compact_roundtrip",
-    "q_date_funcs", "q_date_funcs2", "q_decontaminate", "q_dedup_hash",
-    "q_dedup_semantic", "q_domain_cap", "q_join_cross", "q_join_full",
-    "q_join_left", "q_join_right", "q_liquid_cluster", "q_log_compaction",
-    "q_log_lifecycle", "q_math_funcs", "q_minmax_scale", "q_multimodal_jpeg",
-    "q_multimodal_png", "q_null_funcs", "q_pack_sequences", "q_pivot",
-    "q_quality_filter", "q_repetition_metrics", "q_row_tracking",
-    "q_sample_hash", "q_sim_topk", "q_split_assign", "q_sql_conditional_agg",
-    "q_sql_in_subquery", "q_stream_stateful_count", "q_string_funcs2",
-    "q_text_redact", "q_text_stats", "q_text_token_count", "q_udtf_tokens",
-    # (b) new/changed in r14
-    "q_sketch_quantile", "q_sketch_quantile_merge", "q_stream_sketch_quantile",
-    "q_tokenize_bpe_train",
-    "q_bloom_prune", "q_stream_sketch_kmv",
-    # (b continued) the sf10 broadcast-OOM fix changed the PLAN of the
-    # candidate-scoring pair (plants restriction pushed below the gram
-    # join; merge hints on corpus-sized gram relations) — plan-changing
-    # queries outrank the two refactor-only candidates for the last
-    # slots: q_sketch_kmv_intersect (routes through operators/sketch,
-    # hash-identical by construction) and q_graph_bfs (engine iteration
-    # bound only, oracle text unchanged) stay outside, both green in
-    # this session's full local gates at sf0.01 AND sf1.
-    "q_dedup_containment", "q_ngram_jaccard",
-]
-promote(_R14_WINDOW, after="q_stream_tumbling")
-WINDOW_MUST_INCLUDE = _R14_WINDOW
-
-# Round-15 window (slots 1-49 after the q_stream_tumbling canary), per
-# the r14 verdict #1: (a) ALL 46 queries whose latest driver row is r10
-# — the complete remaining r10 pool (after this round the freshness
-# floor advances to r11), every one judge-re-verified 46/46 at sf0.01
-# in the r14 session, so this is evidence refresh, not risk; (b) the 3
-# remaining slots go to the queries new in r15: the weighted-sample
-# sketch pair q_sketch_wsample (deterministic priority sampling —
-# estimator contract AND shard-merge replay folded into one gate, which
-# is what makes 46+3+canary fit the 50-slot window) /
-# q_stream_sketch_wsample (Delta-table rollup store), and
-# q_tokenize_bpe_e2e (train-then-apply BPE — VERDICT r14 #6). The
-# r15-hardened quantile family (tie-break on (f, v), permille domain
-# guard, parameterized merge oracle) is hash-identical by construction
-# — the tie never fires below a 64-bit collision — and stays outside on
-# the r14-window evidence plus this round's full local gates at sf0.01
-# AND sf1, the same refactor-only precedent as r14's
-# q_sketch_kmv_intersect.
-_R15_WINDOW = [
-    # (a) r10-stale — the whole pool
-    "q_agg_cube", "q_agg_distinct", "q_agg_groupby", "q_agg_percentiles",
-    "q_agg_rollup", "q_cdc_envelope", "q_convert_delta", "q_dedup_embcos",
-    "q_dedup_minhash", "q_dedup_near", "q_dedup_pipeline", "q_dedup_simhash",
-    "q_dv_read", "q_fuzzy_pairs", "q_hash_route", "q_join_broadcast",
-    "q_join_skew_salted", "q_multimodal_decode", "q_multimodal_real_decode",
-    "q_partition_encode", "q_retention_cohort", "q_sessionize",
-    "q_sim_ann_lsh", "q_sql_tpch_q1", "q_sql_tpch_q2", "q_sql_tpch_q4",
-    "q_sql_tpch_q7", "q_sql_tpch_q8", "q_sql_tpch_q9", "q_sql_tpch_q11",
-    "q_sql_tpch_q12", "q_sql_tpch_q13", "q_sql_tpch_q15", "q_sql_tpch_q16",
-    "q_sql_tpch_q17", "q_sql_tpch_q18", "q_sql_tpch_q20", "q_sql_tpch_q21",
-    "q_sql_tpch_q22", "q_stream_watermark_dedup", "q_topk", "q_type_widening",
-    "q_unpivot", "q_window_firstlast", "q_window_range_frame",
-    "q_window_variants",
-    # (b) new in r15
-    "q_sketch_wsample", "q_stream_sketch_wsample", "q_tokenize_bpe_e2e",
-]
-promote(_R15_WINDOW, after="q_stream_tumbling")
-WINDOW_MUST_INCLUDE = _R15_WINDOW
-
-# Round-16 window (slots 1-49 after the q_stream_tumbling canary), per
-# the r15 verdict #2: (a) ALL 46 queries whose latest driver row is r11
-# — the complete remaining r11 pool (after this round the freshness
-# floor advances to r12), every one judge-re-verified 46/46 at sf0.01
-# in the r15 session; (b) q_dedup_pipeline — its operator changed in
-# r15 AFTER its last driver row (the keep-list exact-content collapse),
-# so the official record catches up with the code (verdict #3 process
-# note); (c) the 2 remaining slots go to r16 work: q_corpus_mix (NEW —
-# the wsample application query, verdict #7: subset-sum mixture
-# allocation from the priority sample) and q_dedup_minhash as the
-# representative of this round's candidate-generator pre-collapse
-# (verdict #3: signatures/banding now run over distinct texts).
-# q_dedup_near / q_dedup_simhash / q_ngram_jaccard /
-# q_dedup_containment share that operator change but stay outside on
-# the r15-window evidence plus this round's full local gates at sf0.01
-# AND sf1 AND the operator-level equivalence pins
-# (tests/test_llm_ops.py::test_*_collapsed_pairs_equivalence) — the
-# r14 precedent of seating the plan-changing representative and
-# documenting the rest. q_stream_watermark_dedup / q_stream_late_data
-# changed state-partition sizing only (output partitioning-invariant,
-# re-gated at both scales + plain session this round).
-_R16_WINDOW = [
-    # (a) r11-stale — the whole pool
-    "q_asof_join", "q_chunk_docs", "q_dedup_cc", "q_emb_centroid",
-    "q_emb_quantize", "q_except", "q_except_all", "q_funnel",
-    "q_intersect", "q_intersect_all", "q_json_funcs", "q_map_funcs",
-    "q_multimodal_audio", "q_multimodal_audio_flac",
-    "q_multimodal_audio_g711", "q_multimodal_resize", "q_multimodal_video",
-    "q_pagerank", "q_regex_funcs", "q_source_binary", "q_source_csv",
-    "q_source_jsonl", "q_sql_funnel", "q_sql_grouping_sets",
-    "q_sql_sessionize", "q_sql_subqueries", "q_sql_tpch_q3",
-    "q_sql_tpch_q5", "q_sql_tpch_q6", "q_sql_tpch_q10", "q_sql_tpch_q14",
-    "q_sql_tpch_q19", "q_stream_rate_limit", "q_stream_session",
-    "q_stream_sliding", "q_stream_stream_join", "q_struct_funcs",
-    "q_text_entropy", "q_tfidf_topterms", "q_time_travel_ict",
-    "q_timeseries_gapfill", "q_union_all", "q_union_distinct",
-    "q_window_lag", "q_window_running", "q_zorder_scan",
-    # (b) the r15 operator change whose driver row must catch up
     "q_dedup_pipeline",
-    # (c) new/changed in r16
-    "q_corpus_mix", "q_dedup_minhash",
+    "q_fuzzy_pairs",
+    "q_graph_bfs",
+    "q_tokenize_bpe_train",
+    "q_tokenize_bpe_e2e",
+    # egress: murmur3 routing, the wire frame, the CDC envelope
+    "q_hash_route",
+    "q_pulsar_wire",
+    "q_cdc_envelope",
+    "q_partition_encode",
+    # change-log walk: the pulsar_delta_cdc source, cdc(), table_changes
+    "q_cdc_source",
+    "q_cdf_source",
+    "q_cdf_merge",
+    "q_stream_cdc",
+    "q_stream_cdf",
+    "q_stream_rate_limit",
+    "q_stream_rate_limit_drain",
+    "q_cdc_schema_evolution",
+    # partition values in the protocol's form (hive_value) and ICT reads
+    "q_convert_delta",
+    "q_clone_shallow",
+    "q_column_mapping_write",
+    "q_log_compaction",
+    "q_log_lifecycle",
+    "q_reorg_purge",
+    "q_restore",
+    "q_snapshot_diff",
+    "q_table_detail",
+    "q_update_where",
+    "q_time_travel_ict",
+    "q_domain_metadata",
+    # latest gate row oldest (round 12)
+    "q_column_mapping_read",
+    "q_column_rename_drop",
+    "q_html_extract",
+    "q_multimodal_audio_probe",
+    "q_pii_scrub",
+    "q_sql_recursive_series",
+    "q_agg_approx_quantiles",
+    "q_anomaly_zscore",
+    "q_bitwise_funcs",
+    "q_bm25_topdocs",
+    "q_curation_pipeline",
+    "q_dedup_incremental",
+    "q_ewma",
+    "q_geo_join",
+    "q_geohash",
+    "q_hampel_filter",
+    "q_hash_funcs",
 ]
-promote(_R16_WINDOW, after="q_stream_tumbling")
-WINDOW_MUST_INCLUDE = _R16_WINDOW
+
+reorder(WINDOW)

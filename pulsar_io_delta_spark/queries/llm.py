@@ -1283,8 +1283,8 @@ def _bpe_train_oracle(n: int = 10) -> str:
     a CTE chain (pair explode → weighted count → deterministic arg-max
     → scalar-subquery replace), so DuckDB re-derives the SAME merge
     sequence the engine's supersteps learn — an independent
-    formulation, not a re-run of the engine (the
-    tools/probe_sf10_dedup.py precedent). The engine's tie-break
+    formulation, not a re-run of the engine (PERF.md "sf10 oracle
+    strategy"). The engine's tie-break
     (cnt DESC, a ASC, b ASC) is pure ASCII binary order, so both
     engines agree on every borderline round."""
     parts = [

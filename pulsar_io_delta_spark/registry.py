@@ -41,19 +41,13 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
     return deco
 
 
-def promote(names: list[str], after: str) -> None:
-    """Reorder the registry so ``names`` sit immediately after ``after``.
-
-    Registration order is the order the driver samples for its
-    correctness window, so each round the queries most in need of a
-    fresh hard row (new or modified this round) are promoted into the
-    window while long-green unmodified ones rotate behind it."""
-    moved = set(names)
-    order = [n for n in QUERIES if n not in moved]
-    idx = order.index(after) + 1
+def reorder(first: list[str]) -> None:
+    """Put ``first`` at the head of the registry, in that order; every
+    other query follows in registration order."""
+    head = set(first)
     snapshot = dict(QUERIES)
     QUERIES.clear()
-    for n in order[:idx] + list(names) + order[idx:]:
+    for n in [*first, *(n for n in snapshot if n not in head)]:
         QUERIES[n] = snapshot[n]
 
 

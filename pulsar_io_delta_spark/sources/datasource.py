@@ -243,9 +243,12 @@ def _plan_slices(
 
 def _read_slice(slice_: _FileSlice | None, schema: StructType):
     """Yield Arrow RecordBatches for one file slice with envelope +
-    partition columns attached (runs on executors; pyarrow only)."""
+    partition columns attached (runs on executors; pyarrow only), in
+    ``to_arrow_schema(schema)``: pyspark's own type mapping, the exact
+    schema the JVM asserts on a prefetched block."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     from pulsar_io_delta_spark.operators.cdc import partition_value_str
 
@@ -255,16 +258,13 @@ def _read_slice(slice_: _FileSlice | None, schema: StructType):
         return
     fp = os.path.join(slice_.table_path, slice_.rel_path)
     pvals = dict(slice_.partition_values)
-    arrow_schema = pa.schema(
-        [pa.field(f.name, _to_arrow(f.dataType.simpleString())) for f in schema.fields]
-    )
+    arrow_schema = to_arrow_schema(schema)
     for batch in pq.ParquetFile(fp).iter_batches(batch_size=8192):
         n = batch.num_rows
-        cols, names = [], []
+        cols = []
         present = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-        for idx, field in enumerate(schema.fields):
-            name = field.name
-            target = arrow_schema.field(idx).type
+        for field in arrow_schema:
+            name, target = field.name, field.type
             if name in present:  # base-table column (wins over envelope names)
                 col = present[name].cast(target)
             elif name == "op":
@@ -282,32 +282,15 @@ def _read_slice(slice_: _FileSlice | None, schema: StructType):
             elif name == "_commit_version":
                 col = pa.array([slice_.version] * n, pa.int64())
             elif name in pvals:  # partition column: constant from the action
-                col = pa.array([pvals[name]] * n, pa.string()).cast(target)
+                col = pa.array([pvals[name]] * n, pa.string())
+                if pa.types.is_timestamp(target):
+                    # logged timestamp values carry no zone: UTC wall time
+                    col = col.cast(pa.timestamp(target.unit))
+                col = col.cast(target)
             else:
                 col = pa.nulls(n, target)
             cols.append(col)
-            names.append(name)
-        yield pa.RecordBatch.from_arrays(cols, names=names)
-
-
-def _to_arrow(simple: str):
-    import pyarrow as pa
-
-    mapping = {
-        "string": pa.string(),
-        "long": pa.int64(),
-        "bigint": pa.int64(),
-        "int": pa.int32(),
-        "double": pa.float64(),
-        "float": pa.float32(),
-        "boolean": pa.bool_(),
-        "timestamp": pa.timestamp("us"),
-        "date": pa.date32(),
-        "binary": pa.binary(),
-    }
-    if simple not in mapping:
-        raise ValueError(f"unsupported column type for pulsar_delta_cdc: {simple}")
-    return mapping[simple]
+        yield pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
 
 
 class _CdcBatchReader(DataSourceReader):
@@ -522,14 +505,12 @@ class _CdcStreamReader(_SimpleStreamReaderWrapper):
         """The batch ``(start, end)`` as Arrow batches for the runner to
         hand to the JVM, or None to have executors read it. The JVM
         asserts the block's schema equals the output schema exactly
-        (nullability and timestamp time zone included), hence the cast."""
-        from pyspark.sql.pandas.types import to_arrow_schema
-
+        (nullability and timestamp time zone included), which is the
+        schema ``_read_slice`` emits."""
         slices = self._admitted_slices(start, end)
         if not _prefetchable(slices):
             return None
-        target = to_arrow_schema(self.schema_)
-        return (b.cast(target) for s in slices for b in _read_slice(s, self.schema_))
+        return (b for s in slices for b in _read_slice(s, self.schema_))
 
     def _admitted_slices(self, start: dict, end: dict) -> list[_FileSlice]:
         sv, si = self._pos(start)
@@ -576,9 +557,11 @@ def _rows_to_adds(iterator, schema: StructType, table_path: str, partition_by: l
     actions. Files become visible only when the driver commits them."""
     import time as _time
     import uuid as _uuid
+    from datetime import timezone
 
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     from pulsar_io_delta_spark.sources.delta_log import hive_segment
 
@@ -594,17 +577,26 @@ def _rows_to_adds(iterator, schema: StructType, table_path: str, partition_by: l
         key = tuple(pv(row[c]) for c in partition_by)
         groups.setdefault(key, []).append(row)
     adds = []
-    data_cols = [f for f in schema.fields if f.name not in partition_by]
+    data_schema = to_arrow_schema(
+        StructType([f for f in schema.fields if f.name not in partition_by])
+    )
+
+    def values(field, rows):
+        vals = [r[field.name] for r in rows]
+        if pa.types.is_timestamp(field.type) and field.type.tz:
+            # pyspark hands the writer naive local wall times
+            vals = [v if v is None else v.astimezone(timezone.utc) for v in vals]
+        return vals
+
     for key, rows in groups.items():
-        arrays = {
-            f.name: pa.array([r[f.name] for r in rows], _to_arrow(f.dataType.simpleString()))
-            for f in data_cols
-        }
+        table = pa.Table.from_arrays(
+            [pa.array(values(f, rows), f.type) for f in data_schema], schema=data_schema
+        )
         rel_dir = "/".join(f"{c}={hive_segment(v)}" for c, v in zip(partition_by, key))
         rel_path = (rel_dir + "/" if rel_dir else "") + f"part-{_uuid.uuid4().hex}.parquet"
         abs_path = os.path.join(table_path, rel_path)
         os.makedirs(os.path.dirname(abs_path), exist_ok=True)
-        pq.write_table(pa.table(arrays), abs_path)
+        pq.write_table(table, abs_path)
         adds.append(
             {
                 "path": rel_path,

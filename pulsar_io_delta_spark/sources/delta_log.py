@@ -104,7 +104,8 @@ _V2_SIDECAR_AUTO_ROWS = 50_000
 
 class DeltaConstraintViolation(Exception):
     """A write's rows violate a CHECK constraint stored in table
-    metadata — the commit is refused before any action is published."""
+    metadata, or a column's NOT NULL — the commit is refused before any
+    action is published."""
 
 
 class DeltaConcurrentCommit(Exception):
@@ -246,7 +247,10 @@ def _file_stats(source, indexed: "frozenset | None" = None) -> dict:
                 continue
             if indexed is not None and name not in indexed:
                 continue
-            mn, mx = st.min, st.max
+            try:
+                mn, mx = st.min, st.max
+            except NotImplementedError:
+                continue  # e.g. a decimal stored as int64: no typed bound
             if isinstance(mn, bytes):
                 continue  # undecoded physical bytes — not comparable
             mins[name] = mn if name not in mins else min(mins[name], mn)
@@ -4289,7 +4293,9 @@ class DeltaTable:
                 read_version = prior.version
                 state_dependent = True
             if not overwrite_schema:
-                self._validate_constraints(df, prior.configuration)
+                self._validate_constraints(
+                    df, prior.configuration, prior.schema_string
+                )
                 merged = self._merge_schema_strings(
                     prior.schema_string, df.schema.json()
                 )
@@ -5077,20 +5083,37 @@ class DeltaTable:
 
     CONSTRAINT_PREFIX = "delta.constraints."
 
-    def _validate_constraints(self, df: DataFrame, configuration: dict) -> None:
+    def _validate_constraints(
+        self, df: DataFrame, configuration: dict, schema_string: str | None = None
+    ) -> None:
         """Refuse a write whose rows violate any CHECK constraint in the
-        table configuration. One limit(1) probe per constraint — skipped
-        entirely (zero cost) when the table has none; NULL predicate
-        results count as violations (Delta CHECK semantics)."""
-        for key, expr in (configuration or {}).items():
-            if not key.startswith(self.CONSTRAINT_PREFIX):
-                continue
-            name = key[len(self.CONSTRAINT_PREFIX):]
-            bad = df.where(f"NOT ({expr}) OR ({expr}) IS NULL").limit(1).count()
-            if bad:
-                raise DeltaConstraintViolation(
-                    f"CHECK constraint {name!r} ({expr}) violated by incoming rows"
-                )
+        table configuration, or (given the table's ``schema_string``)
+        put a null into a column it declares ``"nullable": false`` —
+        Delta's NOT NULL invariant. One limit(1) probe per CHECK
+        constraint and one for all NOT NULL columns the frame carries —
+        skipped entirely (zero cost) when the table has none; NULL
+        predicate results count as violations (Delta CHECK semantics)."""
+        probes = [
+            (
+                f"CHECK constraint {key[len(self.CONSTRAINT_PREFIX):]!r} ({expr})",
+                f"NOT ({expr}) OR ({expr}) IS NULL",
+            )
+            for key, expr in (configuration or {}).items()
+            if key.startswith(self.CONSTRAINT_PREFIX)
+        ]
+        required = [
+            f["name"]
+            for f in (json.loads(schema_string)["fields"] if schema_string else ())
+            if not f.get("nullable", True) and f["name"] in df.columns
+        ]
+        if required:
+            probes.append((
+                f"NOT NULL constraint on {required}",
+                " OR ".join("`{}` IS NULL".format(c.replace("`", "``")) for c in required),
+            ))
+        for what, violation in probes:
+            if df.where(violation).limit(1).count():
+                raise DeltaConstraintViolation(f"{what} violated by incoming rows")
 
     def set_constraint(self, spark: SparkSession, name: str, expr: str) -> int:
         """ADD CONSTRAINT name CHECK (expr): validates EXISTING data

@@ -127,6 +127,125 @@ def test_partition_values_round_trip(spark, tmp_path):
     assert _rows(sunk.read(spark), cols) == want
 
 
+def _stream_rows(spark, path, ck, cols, **opts):
+    got = set()
+    reader = spark.readStream.format("pulsar_delta_cdc").option("tablePath", path)
+    for k, v in opts.items():
+        reader = reader.option(k, v)
+    q = (
+        reader.load()
+        .writeStream.foreachBatch(lambda b, _i: got.update(_rows(b, cols)))
+        .option("checkpointLocation", ck)
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(180)
+    assert q.exception() is None
+    return got
+
+
+def test_decimal_and_timestamp_round_trip(spark, tmp_path):
+    """A decimal and a timestamp column come back unchanged through the
+    batch read, a prefetched stream batch, an executor-read stream batch
+    and the sink: the source and the sink map Spark types to Arrow with
+    pyspark's own to_arrow_schema."""
+    import shutil
+    from datetime import datetime, timedelta, timezone
+    from decimal import Decimal
+
+    from pulsar_io_delta_spark.sources import datasource
+
+    register_delta_cdc(spark)
+    t0 = datetime(2024, 3, 1, 12, 30, tzinfo=timezone.utc)
+    df = spark.createDataFrame(
+        [(i, "ab"[i % 2], Decimal(i) + Decimal("0.25"), t0 + timedelta(hours=i))
+         for i in range(6)],
+        "event_id long, event_type string, amount decimal(10,2), event_time timestamp",
+    )
+    path = str(tmp_path / "dec")
+    t = DeltaTable(path)
+    t.write(df, partition_by=["event_type"])
+    cols = ("event_id", "event_type", "amount", "event_time")
+    want = _rows(t.read(spark), cols)
+    assert len(want) == 6 and Decimal("5.25") in {r[2] for r in want}
+
+    ds = spark.read.format("pulsar_delta_cdc").option("tablePath", path).load()
+    assert _rows(ds, cols) == want
+    assert _stream_rows(spark, path, str(tmp_path / "ck0"), cols) == want
+
+    # v1 re-adds v0's files with no logged size: that batch is never
+    # prefetched, executors read it
+    adds = [a["add"] for a in t.actions(0) if "add" in a]
+    for a in adds:
+        copy = a["path"].replace(".parquet", "-unsized.parquet")
+        shutil.copy(os.path.join(path, a["path"]), os.path.join(path, copy))
+        a.update(path=copy, size=0)
+    t.commit_external_adds(
+        adds, operation="WRITE", schema_json=t.snapshot().schema_string,
+        partition_by=["event_type"],
+    )
+    reader = datasource.DeltaCdcDataSource({"tablePath": path}).streamReader(ds.schema)
+    assert not datasource._prefetchable(
+        reader._admitted_slices({"version": 1, "index": 0}, {"version": 2, "index": 0})
+    )
+    assert _stream_rows(
+        spark, path, str(tmp_path / "ck1"), cols, startingVersion=1
+    ) == want
+
+    sink = str(tmp_path / "sink")
+    (
+        df.write.format("pulsar_delta_cdc")
+        .option("tablePath", sink)
+        .option("partitionBy", "event_type")
+        .mode("append")
+        .save()
+    )
+    assert _rows(DeltaTable(sink).read(spark), cols) == want
+
+
+def test_append_refuses_null_into_not_null_column(spark, tmp_path):
+    """A column the log declares non-nullable refuses a null before
+    commit (Delta's NOT NULL invariant), so the source can still read
+    the table. The check is one probe job, paid only by tables that
+    declare such a column."""
+    import json
+
+    from pulsar_io_delta_spark.sources.delta_log import DeltaConstraintViolation
+
+    register_delta_cdc(spark)
+    sc = spark.sparkContext
+
+    def append_jobs(t, frame, group):
+        sc.setJobGroup(group, "append")
+        try:
+            t.write(frame)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker lags the bus
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    mk = lambda lo, hi: spark.range(lo, hi).select(  # noqa: E731
+        F.col("id").alias("event_id"), F.lit("click").alias("event_type")
+    )
+    path = str(tmp_path / "nn")
+    t = DeltaTable(path)
+    t.write(mk(0, 3), partition_by=["event_type"])
+    fields = json.loads(t.snapshot().schema_string)["fields"]
+    assert [f["nullable"] for f in fields] == [False, False]
+    null_row = spark.createDataFrame([(9, None)], "event_id long, event_type string")
+    with pytest.raises(DeltaConstraintViolation, match="event_type"):
+        t.write(null_row)
+    assert t.latest_version() == 0
+    ds = spark.read.format("pulsar_delta_cdc").option("tablePath", path).load()
+    assert ds.count() == 3
+
+    nullable = DeltaTable(str(tmp_path / "nullable"))
+    nullable.write(null_row, partition_by=["event_type"])
+    base = append_jobs(nullable, null_row, "append-nullable")
+    assert append_jobs(t, mk(3, 4), "append-not-null") == base + 1
+    assert t.latest_version() == 1
+
+
 def test_batch_version_bounds(spark, cdc_table):
     ds = (
         spark.read.format("pulsar_delta_cdc")

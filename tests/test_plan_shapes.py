@@ -13,6 +13,31 @@ def _plan(spark, sf_dir, name):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+# query name → fragments that must appear in its executed plan (at
+# 100 TB the same hold structurally: a broadcast flips to a shuffle join
+# only where the build side outgrows the threshold, which is AQE's job)
+PLAN_FRAGMENTS = {
+    "q_agg_groupby": ["HashAggregate", "PushedFilters"],  # partial agg + pushdown
+    "q_join_broadcast": ["BroadcastHashJoin"],
+    "q_topk": ["TakeOrderedAndProject"],  # never a global sort
+    "q_sim_topk": ["BroadcastNestedLoopJoin"],  # broadcast query side
+    "q_snapshot_scan": ["ReadSchema: struct<l_orderkey"],  # column pruning
+    "q_time_travel_filter": ["PushedFilters"],
+    # column pruning reaches the parquet scan (the 100 TB text/event
+    # scans read nothing else)
+    "q_chunk_docs": ["ReadSchema: struct<doc_id:bigint,text:string>"],
+    "q_tfidf_topterms": ["ReadSchema: struct<doc_id:bigint,text:string>"],
+    "q_retention_cohort": ["ReadSchema: struct<ts"],
+}
+
+
+@pytest.mark.parametrize("name", sorted(PLAN_FRAGMENTS))
+def test_designed_plan_fragments(spark, sf_dir, name):
+    plan = _plan(spark, sf_dir, name)
+    missing = [frag for frag in PLAN_FRAGMENTS[name] if frag not in plan]
+    assert not missing, (missing, plan)
+
+
 @pytest.mark.parametrize(
     "name", ["q_ngram_jaccard", "q_dedup_embcos", "q_fuzzy_pairs"]
 )

@@ -19,21 +19,16 @@ def test_entry_runs(spark):
     assert "sum_qty" in df.columns
 
 
-def test_window_composition():
-    """The driver samples the first 50 registrations. The invariant
-    (not a frozen name list — VERDICT r7 #1 killed that shape): the
-    canary holds slot 0, and the CURRENT round's promote intent
-    (WINDOW_MUST_INCLUDE, maintained next to the promote block in
-    queries/__init__.py) fits entirely inside the window — guarding
-    against a later promote() evicting a must-sample query."""
-    from pulsar_io_delta_spark.queries import WINDOW_MUST_INCLUDE
+def test_window_is_the_declared_list():
+    """The correctness gate checks the first 50 registrations: exactly
+    WINDOW, in order, 50 distinct registered names with the canary
+    first."""
+    from pulsar_io_delta_spark.queries import WINDOW
 
     order = list(entry_mod.queries())
-    assert order[0] == "q_stream_tumbling"  # canary
-    assert 1 <= len(WINDOW_MUST_INCLUDE) <= 49
-    window = set(order[:50])
-    missing = [q for q in WINDOW_MUST_INCLUDE if q not in window]
-    assert not missing, missing
+    assert len(WINDOW) == len(set(WINDOW)) == 50
+    assert order[:50] == WINDOW
+    assert WINDOW[0] == "q_stream_tumbling"  # canary
 
 
 def test_no_rows_only_queries_remain():

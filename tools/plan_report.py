@@ -3,15 +3,22 @@ plan SHAPE is the scale argument (one exchange, map-side combine,
 broadcast sides, no cartesian), so the "is this the plan you'd want
 at 100 TB" question is answerable by reading, not re-running.
 
-Usage: python tools/plan_report.py [sf_dir]
+Usage: python tools/plan_report.py [sf_dir] [query ...]
+
+With no query names it rewrites PLANS.md at the root of the tree this
+script lives in. With names it prints each query's executed plan to
+stdout instead, so plans of two trees (say a parent checkout and the
+change) are compared by running each tree's own copy of this script.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pulsar_io_delta_spark.registry import all_queries  # noqa: E402
 from pulsar_io_delta_spark.session import get_spark  # noqa: E402
@@ -60,41 +67,49 @@ CLAIMS = {
 }
 
 
+def elide_literals(plan: str) -> str:
+    """Giant constants (e.g. the bloom blob prints as a 512 KB hex
+    literal) carry no plan-shape information — elide them so the
+    document stays readable and diffable."""
+    return re.sub(
+        r"0x[0-9A-Fa-f]{512,}",
+        lambda m: f"0x<{len(m.group(0)) // 2 - 1}-byte literal elided>",
+        plan,
+    )
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    names = sys.argv[2:]
     spark = get_spark(app_name="plan-report")
     spark.sparkContext.setLogLevel("ERROR")
     specs = all_queries()
+
+    def plan(name: str) -> str:
+        df = specs[name].fn(spark, sf_dir)
+        return elide_literals(df._jdf.queryExecution().executedPlan().toString())
+
+    if names:
+        for name in names:
+            print(f"## {name}\n\n```\n{plan(name).rstrip()}\n```\n")
+        spark.stop()
+        return
     out = ["# PLANS — physical plans for the scale-critical queries",
            "",
            f"Generated by tools/plan_report.py at {os.path.basename(sf_dir)};",
            "regenerate after plan-affecting changes. Each section states the",
            "shape claim the plan evidences (also pinned by",
            "tests/test_plan_shapes.py where load-bearing).", ""]
-    import re
-
-    def elide_literals(plan: str) -> str:
-        """Giant constants (e.g. the bloom blob prints as a 512 KB hex
-        literal) carry no plan-shape information — elide them so the
-        document stays readable and diffable."""
-        return re.sub(
-            r"0x[0-9A-Fa-f]{512,}",
-            lambda m: f"0x<{len(m.group(0)) // 2 - 1}-byte literal elided>",
-            plan,
-        )
-
     for name, claim in CLAIMS.items():
-        df = specs[name].fn(spark, sf_dir)
-        plan = elide_literals(df._jdf.queryExecution().executedPlan().toString())
         out.append(f"## {name}")
         out.append("")
         out.append(f"**Claim:** {claim}")
         out.append("")
         out.append("```")
-        out.append(plan.rstrip())
+        out.append(plan(name).rstrip())
         out.append("```")
         out.append("")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(CLAIMS)} plans)")
     spark.stop()

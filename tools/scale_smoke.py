@@ -9,10 +9,11 @@ Usage: python tools/scale_smoke.py [multiplier]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 

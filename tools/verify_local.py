@@ -19,7 +19,7 @@ import time
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pulsar_io_delta_spark.registry import all_queries  # noqa: E402
 from pulsar_io_delta_spark.session import get_spark  # noqa: E402
