@@ -8,8 +8,9 @@ order. ``q_stream_tumbling`` keeps slot 0 as the canary. The window
 then seats every query whose code path changed since the last gate
 round, CORRECTNESS_r17 (the superstep loop, the columnar egress and
 murmur3 routing, the change-log walk and its partition-value form,
-the in-commit-timestamp readers, and every partitioned write through
-``_stage_and_move``), so each gets a fresh gate row. The remaining
+the in-commit-timestamp readers, every partitioned write through
+``_stage_and_move``, and every file rewrite through
+``DeltaTable._rewrite``), so each gets a fresh gate row. The remaining
 slots go to the queries whose latest gate row is oldest (round 12),
 fewest rows first. Next round, rebuild the list the same way rather
 than appending to it.
@@ -67,6 +68,17 @@ WINDOW = [
     "q_update_where",
     "q_time_travel_ict",
     "q_domain_metadata",
+    # file rewrites through DeltaTable._rewrite (DELETE, UPDATE, MERGE,
+    # OPTIMIZE, REORG), schema evolution and the single-read write()
+    "q_checkpoint_v2",
+    "q_compact_roundtrip",
+    "q_dv_read",
+    "q_generated_columns",
+    "q_liquid_cluster",
+    "q_mapping_upgrade",
+    "q_merge_upsert",
+    "q_row_tracking",
+    "q_variant",
     # latest gate row oldest (round 12)
     "q_column_mapping_read",
     "q_column_rename_drop",
@@ -76,15 +88,6 @@ WINDOW = [
     "q_sql_recursive_series",
     "q_agg_approx_quantiles",
     "q_anomaly_zscore",
-    "q_bitwise_funcs",
-    "q_bm25_topdocs",
-    "q_curation_pipeline",
-    "q_dedup_incremental",
-    "q_ewma",
-    "q_geo_join",
-    "q_geohash",
-    "q_hampel_filter",
-    "q_hash_funcs",
 ]
 
 reorder(WINDOW)

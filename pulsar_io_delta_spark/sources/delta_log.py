@@ -51,7 +51,7 @@ import random
 import re
 import time
 import uuid
-from collections.abc import Mapping
+from collections.abc import Callable, Mapping
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -139,9 +139,6 @@ def _truncated_string_max(s: str, n: int = _STRING_PREFIX_LEN) -> str | None:
             c = 0xE000
         return p[:i] + chr(c)
     return None
-
-
-_STATS_COLS_UNSET = object()  # sentinel: "compute from current table"
 
 
 def _stats_index_cols(
@@ -293,6 +290,26 @@ def _stats_admit(add: dict, filters: list[tuple[str, str, object]]) -> bool:
         except TypeError:
             continue  # incomparable types: admit
     return True
+
+
+_FILTER_OPS = {
+    "=": Column.__eq__,
+    "<": Column.__lt__,
+    "<=": Column.__le__,
+    ">": Column.__gt__,
+    ">=": Column.__ge__,
+}
+
+
+def _where_filters(
+    df: DataFrame, filters: list[tuple[str, str, object]] | None
+) -> DataFrame:
+    """Re-apply (column, op, value) filters exactly on the rows of the
+    files pruning kept. Column API, not string SQL: F.lit round-trips
+    dates, timestamps, and quote-bearing strings losslessly."""
+    for col, op, val in filters or []:
+        df = df.where(_FILTER_OPS[op](F.col(col), F.lit(val)))
+    return df
 
 
 class Snapshot:
@@ -2878,39 +2895,38 @@ class DeltaTable:
         like delta-spark's generated-column partition pruning.
         """
         snap = self.snapshot(version, timestamp_ms)
-        prune_filters = list(filters or [])
-        prune_filters += _generated_partition_filters(snap, prune_filters)
-        files = (
-            self.prune_files(snap, self._phys_filters(snap, prune_filters))
-            if prune_filters
-            else snap.files
-        )
+        files = self._select_files(snap, filters)
         if not files:
             if snap.schema_string is None:
                 raise DeltaProtocolError("empty table with no schema")
             from pyspark.sql.types import StructType
 
             return spark.createDataFrame([], StructType.fromJson(json.loads(snap.schema_string)))
-        df = self._scan_live(spark, snap, files)
-        ops = {
-            "=": Column.__eq__,
-            "<": Column.__lt__,
-            "<=": Column.__le__,
-            ">": Column.__gt__,
-            ">=": Column.__ge__,
-        }
-        for col, op, val in filters or []:
-            # Column API, not string SQL: F.lit round-trips dates,
-            # timestamps, and quote-bearing strings losslessly.
-            df = df.where(ops[op](F.col(col), F.lit(val)))
-        return df
+        return _where_filters(self._scan_live(spark, snap, files), filters)
+
+    def _select_files(
+        self, snap: Snapshot, filters: list[tuple[str, str, object]] | None
+    ) -> list[str]:
+        """The snapshot's files that may hold rows matching ``filters``
+        — the one file selection of every reader and rewriter. Filters
+        on the source of a generated partition column add the implied
+        partition predicate (``_generated_partition_filters``: only
+        weakened, monotone implications, so a file holding a matching
+        row is never dropped), logical names are mapped to physical,
+        and partition values + footer stats prune. No filters: every
+        live file, no pruning pass."""
+        if not filters:
+            return snap.files
+        filters = list(filters) + _generated_partition_filters(snap, filters)
+        return self.prune_files(snap, self._phys_filters(snap, filters))
 
     def _scan_live(self, spark: SparkSession, snap: Snapshot, rel_paths: list[str]) -> DataFrame:
         """Scan ``rel_paths`` with the snapshot's ROW visibility applied:
         deletion-vector rows filtered out and (name-mode) column mapping
         renamed physical → logical. Every row-returning code path
-        (read / merge survivors / diff sides) goes through here — a path
-        that used ``_read_files`` directly would resurrect deleted rows."""
+        (read / rewrite sources via _live_rows / diff sides) goes
+        through here — a path that used ``_read_files`` directly would
+        resurrect deleted rows."""
         mapping = _column_mapping(snap.schema_string, snap.configuration)
         schema_string = mapping[0] if mapping else snap.schema_string
         ext_pv = {
@@ -3040,26 +3056,10 @@ class DeltaTable:
         pipeline keys on (a row keeps its id across deletion-vector
         deletes, OPTIMIZE, and PURGE). Same pruning semantics as read."""
         snap = self.snapshot(version, timestamp_ms)
-        prune_filters = list(filters or [])
-        prune_filters += _generated_partition_filters(snap, prune_filters)
-        files = (
-            self.prune_files(snap, self._phys_filters(snap, prune_filters))
-            if prune_filters
-            else snap.files
-        )
+        files = self._select_files(snap, filters)
         if not files:
             raise DeltaProtocolError("row-id read of an empty file set")
-        df = self._scan_live_rt(spark, snap, files)
-        ops = {
-            "=": Column.__eq__,
-            "<": Column.__lt__,
-            "<=": Column.__le__,
-            ">": Column.__gt__,
-            ">=": Column.__ge__,
-        }
-        for col, op, val in filters or []:
-            df = df.where(ops[op](F.col(col), F.lit(val)))
-        return df
+        return _where_filters(self._scan_live_rt(spark, snap, files), filters)
 
     def enable_row_tracking(self, spark: SparkSession) -> int:
         """In-place row-tracking upgrade of an EXISTING table: one
@@ -3126,22 +3126,16 @@ class DeltaTable:
             read_version=snap.version, configuration=config,
         )
 
-    def _rewrite_source(
+    def _live_rows(
         self, spark: SparkSession, snap: Snapshot, rel_paths: list[str]
     ) -> DataFrame:
-        """Rows of ``rel_paths`` with live visibility, shaped for a
-        REWRITE: on a row-tracked table the materialized row-id /
-        commit-version columns ride along into the staged files, so
-        OPTIMIZE / PURGE / DELETE survivors keep their row identity
-        (the spec's materialized-column mechanism). Plain tables get
-        the ordinary live scan."""
+        """Live rows of ``rel_paths`` as a rewrite reads them: on a
+        row-tracked table with each row's logical ``row_id`` /
+        ``row_commit_version`` attached (``_rewrite`` carries them into
+        the materialized columns, so rewritten rows keep their
+        identity), else the ordinary live scan."""
         if _rt_enabled(snap.configuration):
-            mat_id, mat_rcv = _rt_mat_cols(snap.configuration)
-            return (
-                self._scan_live_rt(spark, snap, rel_paths)
-                .withColumnRenamed("row_id", mat_id)
-                .withColumnRenamed("row_commit_version", mat_rcv)
-            )
+            return self._scan_live_rt(spark, snap, rel_paths)
         return self._scan_live(spark, snap, rel_paths)
 
     def _expand_dv_df(
@@ -3557,10 +3551,12 @@ class DeltaTable:
           log progress (livelock/stall), not total lost races: every
           lost race means a racer's commit landed, so contention at any
           committer width converges without tuning;
-        - snapshot-dependent commits (overwrite/delete/compact pass the
-          version their action list was computed against) raise
-          ``DeltaConcurrentCommit`` so the caller recomputes against the
-          new table state instead of publishing stale removes.
+        - snapshot-dependent commits (overwrite, schema or metadata
+          changes, and every file rewrite through ``_rewrite``: DELETE,
+          UPDATE, MERGE, OPTIMIZE, REORG) pass the version their action
+          list was computed against and raise ``DeltaConcurrentCommit``
+          so the caller recomputes against the new table state instead
+          of publishing stale removes.
 
         ``configuration`` (the table config this commit runs under, or
         the one it is publishing) arms in-commit timestamps: with
@@ -3637,7 +3633,8 @@ class DeltaTable:
                 info["operationMetrics"] = metrics
             if ict_armed:
                 info["inCommitTimestamp"] = max(now_ms, self._last_ict() + 1)
-            version = (self.versions()[-1] + 1) if self.versions() else 0
+            listed = self.versions()
+            version = listed[-1] + 1 if listed else 0
             if version > last_seen:
                 last_seen = version
                 stalled = 0
@@ -3801,18 +3798,6 @@ class DeltaTable:
         with self.fs.open_read(path) as f:
             return _file_stats(f, indexed)
 
-    def _current_stats_cols(self) -> "frozenset | None":
-        """The stats-column allowlist from the CURRENT table state
-        (delta.dataSkippingStatsColumns / NumIndexedCols), None when
-        unconfigured-or-unlimited or the table does not exist yet."""
-        if not self.exists():
-            return None
-        try:
-            snap = self.snapshot()
-        except DeltaProtocolError:
-            return None
-        return _stats_index_cols(snap.schema_string, snap.configuration)
-
     @staticmethod
     def _mapping_of(snap: Snapshot):
         return _column_mapping(snap.schema_string, snap.configuration)
@@ -3900,16 +3885,14 @@ class DeltaTable:
         return df
 
     @staticmethod
-    def _cdf_protocol_actions(snap: Snapshot) -> list[dict]:
-        """Protocol action list for a cdc-writing commit: upgrade to the
-        table-features form with changeDataFeed on first use (feature-
-        merging, never dropping — same rule as the DV upgrade); empty
-        when the protocol already advertises it."""
-        if "changeDataFeed" in (snap.protocol.get("writerFeatures") or ()):
+    def _cdf_protocol_actions(protocol: dict) -> list[dict]:
+        """Protocol action list for a cdc-writing commit: upgrade
+        ``protocol`` to the table-features form with changeDataFeed on
+        first use (feature-merging, never dropping — same rule as the
+        DV upgrade); empty when it already advertises it."""
+        if "changeDataFeed" in (protocol.get("writerFeatures") or ()):
             return []
-        return [
-            {"protocol": _upgraded_protocol(snap.protocol, (), ("changeDataFeed",))}
-        ]
+        return [{"protocol": _upgraded_protocol(protocol, (), ("changeDataFeed",))}]
 
     @staticmethod
     def _to_physical(df: DataFrame, mapping) -> DataFrame:
@@ -3963,10 +3946,16 @@ class DeltaTable:
         return [(to_phys.get(c, c), op, v) for c, op, v in filters]
 
     def _stage_and_move(
-        self, df: DataFrame, partition_by: list[str], mapping=None, cdc: bool = False,
-        stats_cols: "frozenset | None | object" = _STATS_COLS_UNSET,
+        self,
+        df: DataFrame,
+        partition_by: list[str],
+        stats_cols: "frozenset | None",
+        mapping=None,
+        cdc: bool = False,
     ) -> list[dict]:
         """Write df as parquet into the table dir; return add actions.
+        ``stats_cols`` is the footer-stats allowlist of the table state
+        the caller commits against (``_stats_index_cols``; None = all).
         ``mapping`` (from _column_mapping) stages under PHYSICAL column
         names — data files and hive partition dirs of a mapped table
         must never contain logical names. ``cdc=True`` stages CHANGE
@@ -3974,11 +3963,6 @@ class DeltaTable:
         under ``_change_data/``, the action key is ``cdc`` with
         ``dataChange=false`` (change files never count as table data),
         and the ``_change_type`` column passes through un-renamed."""
-        if stats_cols is _STATS_COLS_UNSET:
-            # rewrite paths (merge/update/optimize/...) inherit the
-            # CURRENT table's stats-column policy; write() passes the
-            # CREATE-time configuration explicitly
-            stats_cols = self._current_stats_cols()
         if mapping:
             df = self._to_physical(df, mapping)
             partition_by = self._physical_pcols(mapping, partition_by)
@@ -4064,7 +4048,10 @@ class DeltaTable:
         for f in new_s["fields"]:
             prev = old_by_name.get(f["name"])
             if prev is None:
-                added.append(f)
+                # rows written before the evolution read the new column
+                # as null, so it is logged nullable whatever the
+                # appended frame declared (Delta does the same)
+                added.append({**f, "nullable": True})
             elif prev["type"] != f["type"]:
                 raise DeltaProtocolError(
                     f"schema evolution cannot change column {f['name']!r} "
@@ -4102,14 +4089,14 @@ class DeltaTable:
         ``partition_by`` instead of inheriting — the only way to change
         a table's partition layout."""
         partition_by = partition_by or []
-        first_probe = not (self.exists() and self.versions())
+        first = not (self.exists() and self.versions())
         if cluster_by:
             if partition_by:
                 raise DeltaProtocolError(
                     "clustered tables are unpartitioned (spec): "
                     "cluster_by and partition_by are mutually exclusive"
                 )
-            if not first_probe:
+            if not first:
                 raise DeltaProtocolError(
                     "cluster_by is set on the CREATING write; altering "
                     "clustering columns of an existing table is a "
@@ -4121,7 +4108,6 @@ class DeltaTable:
                     f"clustering columns not in schema: {missing}"
                 )
         actions: list[dict] = []
-        first = not (self.exists() and self.versions())
         if first and _rt_enabled(configuration):
             # choose the materialized row-id/commit-version PHYSICAL
             # column names once at enable time (spec: stored in table
@@ -4325,30 +4311,28 @@ class DeltaTable:
                     read_version = prior.version  # don't clobber a racing schema change
                     state_dependent = True
         if mode == "overwrite" and not first:
-            snap = self.snapshot()
-            read_version = snap.version  # removes computed against this state
+            # removes, validation and metadata all come from the one
+            # state this write read: a racer's commit (say, a new CHECK
+            # constraint) raises instead of being silently overwritten
+            read_version = prior.version
             state_dependent = True
             now_ms = int(time.time() * 1000)
-            actions.extend(self._remove_action(snap, p, now_ms) for p in snap.files)
+            actions.extend(self._remove_action(prior, p, now_ms) for p in prior.files)
         elif mode not in ("append", "overwrite"):
             raise ValueError(f"unsupported mode: {mode}")
         actions.extend(
             self._stage_and_move(
                 df,
                 partition_by,
+                # the schema and configuration this commit leaves behind
+                # (CREATE-time ones on the creating write)
+                _stats_index_cols(effective_schema or df.schema.json(), commit_config),
                 mapping=mapping,
-                # CREATE-time configuration must govern the creating
-                # write's stats too (the table doesn't exist yet, so the
-                # sentinel's current-snapshot lookup would find nothing)
-                stats_cols=_stats_index_cols(
-                    effective_schema or df.schema.json(), commit_config
-                ),
             )
         )
         if idents:
             self._advance_identity_watermarks(
-                actions, idents, effective_schema, commit_config,
-                partition_by or self.snapshot().partition_columns,
+                actions, idents, effective_schema, commit_config, partition_by
             )
         while True:
             try:
@@ -4479,96 +4463,55 @@ class DeltaTable:
                 aligned_source = aligned_source.withColumn(c, F.lit(None))
         aligned_source = aligned_source.select(*table_cols)
         rt = _rt_enabled(snap.configuration)
+        rt_cols = ["row_id", "row_commit_version"] if rt else []
+        # row-tracked tables: UPDATED rows inherit the target row's
+        # row_id (joined in below) with a null commit version — "modified
+        # at this commit" — and inserts take fresh ids
         nul = F.lit(None).cast("long")
+        rewritten = aligned_source.select(*table_cols, *[nul.alias(c) for c in rt_cols])
         if touched:
             # live visibility: survivors of a DV-carrying file are its
             # LIVE rows only (touch-detection above may over-touch on
             # deleted rows — harmless, just an extra rewrite;
             # resurrecting them here would be a wrong answer). On a
-            # row-tracked table survivors keep (row_id, commit version),
-            # UPDATED rows inherit the target row's row_id (one bounded
-            # equi-join on the merge keys) with a null commit version —
-            # "modified at this commit" — and inserts take fresh ids.
-            live = _fill_new(
-                self._scan_live_rt(spark, snap, touched)
-                if rt
-                else self._scan_live(spark, snap, touched)
-            )
+            # row-tracked table survivors keep (row_id, commit version).
+            live = _fill_new(self._live_rows(spark, snap, touched))
             if rt:
-                survivors = live.join(keys, key_cols, "left_anti").select(
-                    *table_cols, "row_id", "row_commit_version"
-                )
                 old_ids = live.join(keys, key_cols, "left_semi").select(
                     *key_cols, "row_id"
                 )
-                src = aligned_source.join(old_ids, key_cols, "left").withColumn(
-                    "row_commit_version", nul
-                )
-                rewritten = survivors.unionByName(
-                    src.select(*table_cols, "row_id", "row_commit_version")
-                )
-            else:
-                survivors = live.join(keys, key_cols, "left_anti").select(*table_cols)
-                rewritten = survivors.unionByName(aligned_source)
-        elif rt:
-            rewritten = aligned_source.withColumn("row_id", nul).withColumn(
-                "row_commit_version", nul
+                rewritten = rewritten.drop("row_id").join(old_ids, key_cols, "left")
+            rewritten = (
+                live.join(keys, key_cols, "left_anti")
+                .select(*table_cols, *rt_cols)
+                .unionByName(rewritten.select(*table_cols, *rt_cols))
             )
-        else:
-            rewritten = aligned_source
-        now_ms = int(time.time() * 1000)
-        actions: list[dict] = [self._remove_action(snap, p, now_ms) for p in touched]
-        if evolved:
-            # the widened schema rides the SAME commit (op='m' boundary
-            # for CDC consumers, exactly like the append-evolution path)
-            actions.append(self._metadata_update(snap, evolved))
         self._validate_constraints(rewritten, snap.configuration)
-        if rt:
-            mat_id, mat_rcv = _rt_mat_cols(snap.configuration)
-            rewritten = rewritten.withColumnRenamed(
-                "row_id", mat_id
-            ).withColumnRenamed("row_commit_version", mat_rcv)
-        actions.extend(
-            self._stage_and_move(
-                rewritten, snap.partition_columns, mapping=self._mapping_of(snap)
-            )
-        )
-        if _cdf_enabled(snap.configuration):
+
+        def change_rows() -> DataFrame:
             # exact MERGE change rows (Delta "Change Data Feed"):
             # update_preimage = touched LIVE rows whose key matches the
             # source; update_postimage = the matching source rows;
             # insert = source rows with no existing key. A reader-side
             # derivation from remove+add cannot express pre/post images
             # — that is the entire point of cdc files.
-            ct = F.lit
-            if touched:
-                pre = (
-                    _fill_new(self._scan_live(spark, snap, touched))
-                    .join(keys, key_cols, "left_semi")
-                    .select(*table_cols)
-                )
-                matched_keys = pre.select(*key_cols).distinct()
-                post = aligned_source.join(matched_keys, key_cols, "left_semi")
-                ins = aligned_source.join(matched_keys, key_cols, "left_anti")
-                change_rows = (
-                    pre.withColumn("_change_type", ct("update_preimage"))
-                    .unionByName(post.withColumn("_change_type", ct("update_postimage")))
-                    .unionByName(ins.withColumn("_change_type", ct("insert")))
-                )
-            else:
-                change_rows = aligned_source.withColumn("_change_type", ct("insert"))
-            actions.extend(
-                self._stage_and_move(
-                    change_rows,
-                    snap.partition_columns,
-                    mapping=self._mapping_of(snap),
-                    cdc=True,
-                )
+            if not touched:
+                return aligned_source.withColumn("_change_type", F.lit("insert"))
+            pre = live.join(keys, key_cols, "left_semi").select(*table_cols)
+            matched_keys = pre.select(*key_cols).distinct()
+            post = aligned_source.join(matched_keys, key_cols, "left_semi")
+            ins = aligned_source.join(matched_keys, key_cols, "left_anti")
+            return (
+                pre.withColumn("_change_type", F.lit("update_preimage"))
+                .unionByName(post.withColumn("_change_type", F.lit("update_postimage")))
+                .unionByName(ins.withColumn("_change_type", F.lit("insert")))
             )
-            actions.extend(self._cdf_protocol_actions(snap))
-        return self._commit(
-            actions, operation="MERGE", read_version=snap.version,
-            configuration=snap.configuration,
+
+        # the widened schema rides the SAME commit (op='m' boundary for
+        # CDC consumers, exactly like the append-evolution path)
+        return self._rewrite(
+            snap, "MERGE", touched, rewritten, change_rows=change_rows,
+            actions=[self._metadata_update(snap, evolved)] if evolved else [],
         )
 
     @staticmethod
@@ -4665,6 +4608,70 @@ class DeltaTable:
             r["deletionVector"] = dv
         return {"remove": r}
 
+    def _rewrite(
+        self,
+        snap: Snapshot,
+        operation: str,
+        removed: list[str],
+        rows: DataFrame | None,
+        *,
+        data_change: bool = True,
+        change_rows: Callable[[], DataFrame] | None = None,
+        actions: list[dict] | None = None,
+    ) -> int:
+        """The one commit that replaces files: DELETE, UPDATE, MERGE,
+        OPTIMIZE and REORG all publish through here, so the remove/add
+        shape a change reader sees is decided in one place, against
+        the one snapshot the operation read.
+
+        - ``removed`` (live paths of ``snap``) become remove actions
+          sharing one deletion timestamp; ``actions`` (a schema or
+          protocol change, DV re-adds) follow them unchanged.
+        - ``rows`` are staged as new files under the snapshot's column
+          mapping and footer-stats policy. On a row-tracked table they
+          carry the logical ``row_id`` / ``row_commit_version``
+          (``_live_rows``), renamed here into the materialized columns
+          so rewritten rows keep their identity.
+        - ``data_change`` stamps every remove and add; false marks a
+          layout-only rewrite that change readers skip.
+        - ``change_rows`` builds the exact change rows (with
+          ``_change_type``). It is called, staged as cdc files and the
+          protocol upgraded only when the change feed is armed.
+
+        The commit is pinned to ``snap.version``: a racer's commit
+        raises DeltaConcurrentCommit."""
+        cfg = snap.configuration or {}
+        mapping = self._mapping_of(snap)
+        stats_cols = _stats_index_cols(snap.schema_string, cfg)
+        now_ms = int(time.time() * 1000)
+        out = [self._remove_action(snap, p, now_ms, data_change) for p in removed]
+        out += actions or []
+        if rows is not None:
+            if _rt_enabled(cfg):
+                mat_id, mat_rcv = _rt_mat_cols(cfg)
+                rows = rows.withColumnRenamed("row_id", mat_id).withColumnRenamed(
+                    "row_commit_version", mat_rcv
+                )
+            out += self._stage_and_move(rows, snap.partition_columns, stats_cols, mapping)
+        for a in out:
+            if "add" in a:
+                a["add"]["dataChange"] = data_change
+        if change_rows is not None and _cdf_enabled(cfg):
+            out += self._stage_and_move(
+                change_rows(), snap.partition_columns, stats_cols, mapping, cdc=True
+            )
+            # one protocol action per commit: merge the feature into a
+            # caller's upgrade (e.g. deletion vectors) instead of
+            # publishing a second action that would drop it
+            protos = [a["protocol"] for a in out if "protocol" in a]
+            upgrade = self._cdf_protocol_actions(protos[-1] if protos else snap.protocol)
+            if upgrade:
+                out = [a for a in out if "protocol" not in a] + upgrade
+        return self._commit(
+            out, operation=operation, read_version=snap.version,
+            configuration=snap.configuration,
+        )
+
     def delete_where_dv(
         self,
         spark: SparkSession,
@@ -4678,28 +4685,27 @@ class DeltaTable:
         this turns "delete 0.1% of rows" from a full rewrite of every
         touched file into a bitmap write per file.
 
-        Scale shape: matching rows are grouped by file ON EXECUTORS
-        (``applyInPandas`` per file) which serialize + write the DV
-        ``.bin`` and return only the descriptor — O(touched files) rows
-        reach the driver, never row indexes. An existing DV on a file is
-        unioned in (descriptors replace, they do not stack). ``filters``
-        prunes un-matchable files exactly like :meth:`delete_where`."""
+        Scale shape: matching row indexes are grouped by file ON
+        EXECUTORS (``applyInPandas`` per file), unioned with the file's
+        old bitmap (its raw compressed bytes ship in the closure —
+        descriptors replace, they do not stack) and serialized there.
+        Only O(touched files) compressed bitmap blobs reach the driver,
+        never row indexes. The driver packs every payload of the commit
+        into ONE ``.bin`` (the real-writer layout) and writes it through
+        the FileSystem abstraction, so the same path serves local disk
+        and object stores, whose client handle is driver-held.
+        ``filters`` prunes un-matchable files exactly like
+        :meth:`delete_where`."""
         from pulsar_io_delta_spark.sources.deletion_vectors import (
-            resolve_dv,
-            write_dv_file,
+            resolve_dv_bytes,
+            write_dv_payloads,
         )
 
         snap = self.snapshot()
         self._guard_writable(snap)
-        candidates = self.prune_files(
-            snap, self._phys_filters(snap, filters)
-        ) if filters else list(snap.files)
-        now_ms = int(time.time() * 1000)
+        candidates = self._select_files(snap, filters)
         if not candidates:
-            return self._commit(
-                [], operation="DELETE", read_version=snap.version,
-                configuration=snap.configuration,
-            )
+            return self._rewrite(snap, "DELETE", [], None)
         # Already-deleted rows may re-match the predicate — harmless:
         # the union with the old DV below makes re-deletion idempotent,
         # and skipping the DV apply here saves a join. Mapped tables
@@ -4711,133 +4717,70 @@ class DeltaTable:
             .select("_fp", "_ridx")
         )
         base = os.path.abspath(self.path)
-        old_dv_json = {
-            os.path.join(base, p): json.dumps(dv)
+        old_dv_data = {
+            os.path.join(base, p): resolve_dv_bytes(dv, self.path, self.fs)
             for p in candidates
             if (dv := snap.adds.get(p, {}).get("deletionVector"))
         }
-        table_path, fs = self.path, self.fs
-        fs_local = type(fs) is LocalFileSystem
 
-        def write_group(pdf):
+        def stage_group(pdf):
             import pandas as pd
+
+            from pulsar_io_delta_spark.sources.deletion_vectors import (
+                deserialize_bitmap,
+                serialize_bitmap,
+            )
 
             fp = pdf["_fp"].iloc[0]
             idx = set(int(i) for i in pdf["_ridx"])
-            old = old_dv_json.get(fp)
-            if old:
-                idx |= set(resolve_dv(json.loads(old), table_path, fs))
-            (desc,) = write_dv_file(table_path, [sorted(idx)], fs=fs)
-            return pd.DataFrame({"_fp": [fp], "_desc": [json.dumps(desc)]})
-
-        if fs_local:
-            desc_rows = (
-                matched.groupBy("_fp")
-                .applyInPandas(write_group, "_fp string, _desc string")
-                .collect()
-            )
-        else:
-            # Object-store backend: the FileSystem handle is a
-            # driver-held client (not executor-visible), so executors
-            # SERIALIZE and the driver PERSISTS — applyInPandas groups
-            # row indexes per file on executors, unions in the old
-            # bitmap (its raw compressed bytes ship in the closure) and
-            # returns the serialized payload; the driver packs every
-            # payload into ONE .bin (the real-writer layout) and PUTs it
-            # through the FileSystem abstraction. Row indexes never
-            # reach the driver — only O(touched files) compressed
-            # bitmap blobs do, so this scales with file count, not row
-            # count (graduates VERDICT r8 #8's fixture-scale shim).
-            from pulsar_io_delta_spark.sources.deletion_vectors import (
-                resolve_dv_bytes,
-                write_dv_payloads,
+            old = old_dv_data.get(fp)
+            if old is not None:
+                idx |= set(deserialize_bitmap(old))
+            return pd.DataFrame(
+                {
+                    "_fp": [fp],
+                    "_payload": [serialize_bitmap(sorted(idx))],
+                    "_card": [len(idx)],
+                }
             )
 
-            old_dv_data = {
-                os.path.join(base, p): resolve_dv_bytes(dv, table_path, fs)
-                for p in candidates
-                if (dv := snap.adds.get(p, {}).get("deletionVector"))
-            }
-
-            def stage_group(pdf):
-                import pandas as pd
-
-                from pulsar_io_delta_spark.sources.deletion_vectors import (
-                    deserialize_bitmap,
-                    serialize_bitmap,
-                )
-
-                fp = pdf["_fp"].iloc[0]
-                idx = set(int(i) for i in pdf["_ridx"])
-                old = old_dv_data.get(fp)
-                if old is not None:
-                    idx |= set(deserialize_bitmap(old))
-                return pd.DataFrame(
-                    {
-                        "_fp": [fp],
-                        "_payload": [serialize_bitmap(sorted(idx))],
-                        "_card": [len(idx)],
-                    }
-                )
-
-            staged = sorted(
-                matched.groupBy("_fp")
-                .applyInPandas(stage_group, "_fp string, _payload binary, _card long")
-                .collect(),
-                key=lambda r: r._fp,
-            )
-            descs = write_dv_payloads(
-                table_path,
-                [(bytes(r._payload), int(r._card)) for r in staged],
-                fs=fs,
-            )
-            desc_rows = [
-                {"_fp": r._fp, "_desc": json.dumps(d)}
-                for r, d in zip(staged, descs)
-            ]
-        actions: list[dict] = []
-        if desc_rows:
-            # DV writes require the table-features protocol; merged with
-            # the prior protocol so existing features survive (the spec
-            # forbids dropping features — ADVICE r7 #1)
-            actions.append({"protocol": _dv_upgraded_protocol(snap.protocol)})
-        for r in desc_rows:
-            rel = os.path.relpath(r["_fp"], base)
-            old_add = dict(snap.adds[rel])
-            remove = self._remove_action(snap, rel, now_ms)
-            old_add["deletionVector"] = json.loads(r["_desc"])
-            old_add["dataChange"] = True
+        staged = sorted(
+            matched.groupBy("_fp")
+            .applyInPandas(stage_group, "_fp string, _payload binary, _card long")
+            .collect(),
+            key=lambda r: r._fp,
+        )
+        if not staged:
+            return self._rewrite(snap, "DELETE", [], None)
+        descs = write_dv_payloads(
+            self.path, [(bytes(r._payload), int(r._card)) for r in staged], fs=self.fs
+        )
+        touched = [os.path.relpath(r._fp, base) for r in staged]
+        # DV writes require the table-features protocol; merged with the
+        # prior protocol so existing features survive (the spec forbids
+        # dropping features — ADVICE r7 #1)
+        actions: list[dict] = [{"protocol": _dv_upgraded_protocol(snap.protocol)}]
+        for rel, desc in zip(touched, descs):
+            add = dict(snap.adds[rel])
+            add["deletionVector"] = desc
             # spec ("Per-file Statistics" × DVs): a DV-carrying add's
             # stats keep the PHYSICAL numRecords and valid-but-not-
             # tight min/max — declared via tightBounds=false (deletion
             # only removes rows, so pruning semantics are unchanged)
-            stats = old_add.get("stats")
+            stats = add.get("stats")
             if stats:
-                s = json.loads(stats) if isinstance(stats, str) else dict(stats)
-                s["tightBounds"] = False
-                old_add["stats"] = json.dumps(s)
-            actions.extend([remove, {"add": old_add}])
-        if desc_rows and _cdf_enabled(snap.configuration):
-            # exact delete change rows: the LIVE rows matching the
-            # predicate (the pre-filter `matched` above may re-match
-            # already-DV-deleted rows — those must NOT re-report)
-            deleted_rows = (
-                self._scan_live(spark, snap, candidates)
-                .where(predicate)
-                .withColumn("_change_type", F.lit("delete"))
-            )
-            actions.extend(
-                self._stage_and_move(
-                    deleted_rows,
-                    snap.partition_columns,
-                    mapping=self._mapping_of(snap),
-                    cdc=True,
-                )
-            )
-            actions.extend(self._cdf_protocol_actions(snap))
-        return self._commit(
-            actions, operation="DELETE", read_version=snap.version,
-            configuration=snap.configuration,
+                st = json.loads(stats) if isinstance(stats, str) else dict(stats)
+                st["tightBounds"] = False
+                add["stats"] = json.dumps(st)
+            actions.append({"add": add})
+        # exact delete change rows: the LIVE rows matching the predicate
+        # (`matched` above may re-match already-DV-deleted rows — those
+        # must NOT re-report)
+        return self._rewrite(
+            snap, "DELETE", touched, None, actions=actions,
+            change_rows=lambda: self._scan_live(spark, snap, candidates)
+            .where(predicate)
+            .withColumn("_change_type", F.lit("delete")),
         )
 
     def update_where(
@@ -4883,14 +4826,9 @@ class DeltaTable:
             raise DeltaProtocolError(
                 f"UPDATE cannot assign identity columns {assigned_ident}"
             )
-        candidates = self.prune_files(
-            snap, self._phys_filters(snap, filters)
-        ) if filters else list(snap.files)
+        candidates = self._select_files(snap, filters)
         if not candidates:
-            return self._commit(
-                [], operation="UPDATE", read_version=snap.version,
-                configuration=snap.configuration,
-            )
+            return self._rewrite(snap, "UPDATE", [], None)
         # touch detection: only file paths reach the driver
         probe = self._scan_logical_meta(spark, snap, candidates)
         touched_abs = [
@@ -4900,21 +4838,14 @@ class DeltaTable:
         base = os.path.abspath(self.path)
         touched = [os.path.relpath(p, base) for p in touched_abs]
         if not touched:
-            return self._commit(
-                [], operation="UPDATE", read_version=snap.version,
-                configuration=snap.configuration,
-            )
+            return self._rewrite(snap, "UPDATE", [], None)
         rt = _rt_enabled(snap.configuration)
         # row-tracked tables: kept rows preserve (row_id, commit version)
         # through the materialized columns; UPDATED rows keep their
         # row_id but take a NULL materialized commit version, falling
         # back to the new file's defaultRowCommitVersion — i.e. "row
         # modified at this commit", the spec's semantics.
-        live = (
-            self._scan_live_rt(spark, snap, touched)
-            if rt
-            else self._scan_live(spark, snap, touched)
-        )
+        live = self._live_rows(spark, snap, touched)
         rt_keep = ["row_id", "row_commit_version"] if rt else []
         p = F.expr(predicate)
         matched = live.where(p)
@@ -4934,41 +4865,15 @@ class DeltaTable:
                 updated.drop(*gen.keys()), snap.schema_string
             ).select(*table_cols, *rt_keep)
         self._validate_constraints(updated, snap.configuration)
-        now_ms = int(time.time() * 1000)
-        actions: list[dict] = [self._remove_action(snap, pth, now_ms) for pth in touched]
-        staged = kept.unionByName(updated)
-        if rt:
-            mat_id, mat_rcv = _rt_mat_cols(snap.configuration)
-            staged = staged.withColumnRenamed("row_id", mat_id).withColumnRenamed(
-                "row_commit_version", mat_rcv
-            )
-        actions.extend(
-            self._stage_and_move(
-                staged,
-                snap.partition_columns,
-                mapping=self._mapping_of(snap),
-            )
-        )
-        if _cdf_enabled(snap.configuration):
-            change_rows = matched.select(*table_cols).withColumn(
-                "_change_type", F.lit("update_preimage")
-            ).unionByName(
+        return self._rewrite(
+            snap, "UPDATE", touched, kept.unionByName(updated),
+            change_rows=lambda: matched.select(*table_cols)
+            .withColumn("_change_type", F.lit("update_preimage"))
+            .unionByName(
                 updated.select(*table_cols).withColumn(
                     "_change_type", F.lit("update_postimage")
                 )
-            )
-            actions.extend(
-                self._stage_and_move(
-                    change_rows,
-                    snap.partition_columns,
-                    mapping=self._mapping_of(snap),
-                    cdc=True,
-                )
-            )
-            actions.extend(self._cdf_protocol_actions(snap))
-        return self._commit(
-            actions, operation="UPDATE", read_version=snap.version,
-            configuration=snap.configuration,
+            ),
         )
 
     def delete_where(
@@ -4989,42 +4894,18 @@ class DeltaTable:
         rewritten (the pre-round-6 behavior)."""
         snap = self.snapshot()
         self._guard_writable(snap)
-        touched = self.prune_files(
-            snap, self._phys_filters(snap, filters)
-        ) if filters else list(snap.files)
-        now_ms = int(time.time() * 1000)
-        actions: list[dict] = [self._remove_action(snap, p, now_ms) for p in touched]
-        if touched:
-            # live visibility (never _read_files: rewriting a file that
-            # carries a DV must not resurrect its deleted rows); on a
-            # row-tracked table survivors keep their ids via the
-            # materialized columns riding along
-            kept = self._rewrite_source(spark, snap, touched).where(
-                f"NOT ({predicate})"
-            )
-            actions.extend(
-                self._stage_and_move(
-                    kept, snap.partition_columns, mapping=self._mapping_of(snap)
-                )
-            )
-            if _cdf_enabled(snap.configuration):
-                deleted_rows = (
-                    self._scan_live(spark, snap, touched)
-                    .where(predicate)
-                    .withColumn("_change_type", F.lit("delete"))
-                )
-                actions.extend(
-                    self._stage_and_move(
-                        deleted_rows,
-                        snap.partition_columns,
-                        mapping=self._mapping_of(snap),
-                        cdc=True,
-                    )
-                )
-                actions.extend(self._cdf_protocol_actions(snap))
-        return self._commit(
-            actions, operation="DELETE", read_version=snap.version,
-            configuration=snap.configuration,
+        touched = self._select_files(snap, filters)
+        if not touched:
+            return self._rewrite(snap, "DELETE", [], None)
+        # live visibility (never _read_files: rewriting a file that
+        # carries a DV must not resurrect its deleted rows); on a
+        # row-tracked table survivors keep their ids
+        return self._rewrite(
+            snap, "DELETE", touched,
+            self._live_rows(spark, snap, touched).where(f"NOT ({predicate})"),
+            change_rows=lambda: self._scan_live(spark, snap, touched)
+            .where(predicate)
+            .withColumn("_change_type", F.lit("delete")),
         )
 
     def diff(
@@ -5723,35 +5604,19 @@ class DeltaTable:
         snap = self.snapshot()
         # OPTIMIZE is legal even on appendOnly tables (dataChange=false)
         self._guard_writable(snap, data_change_removes=False)
-        targets = list(snap.files)
-        if filters:
-            bad = [c for c, _op, _v in filters if c not in snap.partition_columns]
-            if bad:
-                raise DeltaProtocolError(
-                    f"OPTIMIZE WHERE supports partition predicates only; "
-                    f"{bad} are not partition columns"
-                )
-            targets = self.prune_files(snap, filters)
-            if not targets:
-                return snap.version  # nothing selected: no-op
-        # row-tracked tables: the rewrite carries materialized row ids
-        df = self._rewrite_source(spark, snap, targets).coalesce(
-            target_files
-        )
-        now_ms = int(time.time() * 1000)
-        actions: list[dict] = [
-            self._remove_action(snap, p, now_ms, data_change=False)
-            for p in targets
-        ]
-        adds = self._stage_and_move(
-            df, snap.partition_columns, mapping=self._mapping_of(snap)
-        )
-        for a in adds:
-            a["add"]["dataChange"] = False
-        actions.extend(adds)
-        return self._commit(
-            actions, operation="OPTIMIZE", read_version=snap.version,
-            configuration=snap.configuration,
+        bad = [c for c, _op, _v in filters or () if c not in snap.partition_columns]
+        if bad:
+            raise DeltaProtocolError(
+                f"OPTIMIZE WHERE supports partition predicates only; "
+                f"{bad} are not partition columns"
+            )
+        targets = self._select_files(snap, filters)
+        if filters and not targets:
+            return snap.version  # nothing selected: no-op
+        return self._rewrite(
+            snap, "OPTIMIZE", targets,
+            self._live_rows(spark, snap, targets).coalesce(target_files),
+            data_change=False,
         )
 
     def clustering_columns(self, snap: "Snapshot | None" = None) -> list[str]:
@@ -5964,7 +5829,7 @@ class DeltaTable:
                 "domain metadata — use compact() for bin-packing"
             )
         self._guard_writable(snap, data_change_removes=False)
-        df = self._rewrite_source(spark, snap, list(snap.files))
+        df = self._live_rows(spark, snap, snap.files)
         aggs = []
         for c in cols:
             aggs += [F.min(c), F.max(c)]
@@ -5980,21 +5845,7 @@ class DeltaTable:
             .sortWithinPartitions("_h")
             .drop("_h")
         )
-        now_ms = int(time.time() * 1000)
-        actions: list[dict] = [
-            self._remove_action(snap, p, now_ms, data_change=False)
-            for p in snap.files
-        ]
-        adds = self._stage_and_move(
-            ordered, snap.partition_columns, mapping=self._mapping_of(snap)
-        )
-        for a in adds:
-            a["add"]["dataChange"] = False
-        actions.extend(adds)
-        return self._commit(
-            actions, operation="OPTIMIZE", read_version=snap.version,
-            configuration=snap.configuration,
-        )
+        return self._rewrite(snap, "OPTIMIZE", snap.files, ordered, data_change=False)
 
     def reorg_purge(self, spark: SparkSession) -> int:
         """REORG TABLE ... APPLY (PURGE): rewrite ONLY the files that
@@ -6019,21 +5870,10 @@ class DeltaTable:
             if (dv := snap.adds.get(p, {}).get("deletionVector"))
             and int(dv.get("cardinality") or 0) > 0
         ]
-        now_ms = int(time.time() * 1000)
-        actions: list[dict] = [
-            self._remove_action(snap, p, now_ms, data_change=False) for p in touched
-        ]
-        if touched:
-            live = self._rewrite_source(spark, snap, touched)
-            adds = self._stage_and_move(
-                live, snap.partition_columns, mapping=self._mapping_of(snap)
-            )
-            for a in adds:
-                a["add"]["dataChange"] = False
-            actions.extend(adds)
-        return self._commit(
-            actions, operation="REORG", read_version=snap.version,
-            configuration=snap.configuration,
+        return self._rewrite(
+            snap, "REORG", touched,
+            self._live_rows(spark, snap, touched) if touched else None,
+            data_change=False,
         )
 
     def vacuum(

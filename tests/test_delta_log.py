@@ -11,6 +11,7 @@ import pytest
 import pyspark.sql.functions as F
 
 from pulsar_io_delta_spark.sources.delta_log import (
+    DeltaConcurrentCommit,
     DeltaProtocolError,
     DeltaTable,
     delta_sink,
@@ -1944,3 +1945,179 @@ def test_domain_metadata_foreign_handwritten_log_preserved(spark, tmp_path):
     assert t.domain_metadata() == {
         "delta.someVendorFeature": '{"opaque": true}'
     }
+
+
+@pytest.mark.parametrize("via", ["write", "merge"])
+def test_evolved_columns_logged_nullable(spark, table_path, via):
+    """A column added by schema evolution reads null on the rows written
+    before it, so the log records it nullable whatever the appended
+    frame declared (``F.lit`` is NOT NULL). A NOT NULL entry made the
+    pulsar_delta_cdc source hand the JVM nulls in a non-nullable
+    column."""
+    from pulsar_io_delta_spark.sources.datasource import register_delta_cdc
+
+    t = DeltaTable(table_path)
+    t.write(spark.range(4).select(F.col("id").alias("k")))
+    src = spark.range(2, 6).select(F.col("id").alias("k"), F.lit("x").alias("tag"))
+    assert not src.schema["tag"].nullable
+    if via == "write":
+        t.write(src)
+        untagged = [0, 1, 2, 3]
+    else:
+        t.merge_upsert(spark, src, ["k"], schema_evolution=True)
+        untagged = [0, 1]
+    fields = json.loads(t.snapshot().schema_string)["fields"]
+    assert next(f for f in fields if f["name"] == "tag")["nullable"] is True
+    assert sorted(r.k for r in t.read(spark).where("tag IS NULL").collect()) == untagged
+    register_delta_cdc(spark)
+    rows = (
+        spark.read.format("pulsar_delta_cdc")
+        .option("tablePath", table_path)
+        .option("startingVersion", 0)
+        .load()
+        .collect()
+    )
+    assert len(rows) > 0
+
+
+def test_overwrite_commits_against_the_state_it_read(spark, table_path, monkeypatch):
+    """An overwrite validates, builds its metadata and its removes from
+    ONE snapshot and commits against that version: a CHECK constraint
+    that lands in between raises instead of being overwritten by rows
+    that violate it."""
+    t = DeltaTable(table_path)
+    t.write(spark.range(10).select(F.col("id").alias("k")))
+    racer = DeltaTable(table_path)
+    validate = t._validate_constraints
+    raced = []
+
+    def validate_then_race(*args, **kwargs):
+        validate(*args, **kwargs)
+        if not raced:
+            raced.append(racer.set_constraint(spark, "k_small", "k < 100"))
+
+    monkeypatch.setattr(t, "_validate_constraints", validate_then_race)
+    with pytest.raises(DeltaConcurrentCommit):
+        t.write(spark.range(200, 210).select(F.col("id").alias("k")), mode="overwrite")
+    assert t.latest_version() == raced[0] == 1
+    assert sorted(r.k for r in t.read(spark).collect()) == list(range(10))
+
+
+# Every file-rewriting operation on every table flavour: (op, run,
+# dataChange, pandas oracle over the before-state).
+_REWRITE_OPS = {
+    "delete_where": (
+        lambda spark, t: t.delete_where(spark, "k % 5 = 0"),
+        True,
+        lambda pdf: pdf[pdf.k % 5 != 0],
+    ),
+    "delete_where_dv": (
+        lambda spark, t: t.delete_where_dv(spark, "k % 5 = 0"),
+        True,
+        lambda pdf: pdf[pdf.k % 5 != 0],
+    ),
+    "update_where": (
+        lambda spark, t: t.update_where(spark, "k < 10", {"v": "v + 100"}),
+        True,
+        lambda pdf: pdf.assign(v=pdf.v.where(pdf.k >= 10, pdf.v + 100)),
+    ),
+    "merge_upsert": (
+        lambda spark, t: t.merge_upsert(spark, _rewrite_rows(spark, 35, 45, -1.0), ["k"]),
+        True,
+        lambda pdf: _rewrite_merge_oracle(pdf, 35, 45, -1.0),
+    ),
+    "compact": (lambda spark, t: t.compact(spark), False, lambda pdf: pdf),
+    "optimize_clustered": (
+        lambda spark, t: t.optimize_clustered(spark, target_files=2),
+        False,
+        lambda pdf: pdf,
+    ),
+    "reorg_purge": (lambda spark, t: t.reorg_purge(spark), False, lambda pdf: pdf),
+}
+_REWRITE_TABLES = {
+    "plain": None,
+    "cdf": {"delta.enableChangeDataFeed": "true"},
+    "row_tracked": {"delta.enableRowTracking": "true"},
+    "name_mapped": None,
+}
+
+
+def _rewrite_rows(spark, lo, hi, scale=1.0):
+    return spark.range(lo, hi).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 4).alias("g"),
+        (F.col("id") * scale).alias("v"),
+    )
+
+
+def _rewrite_merge_oracle(pdf, lo, hi, scale):
+    import pandas as pd
+
+    src = pd.DataFrame({"k": range(lo, hi)})
+    src["g"], src["v"] = src.k % 4, src.k * scale
+    return pd.concat([pdf[~pdf.k.isin(src.k)], src])
+
+
+@pytest.mark.parametrize("kind", list(_REWRITE_TABLES))
+@pytest.mark.parametrize("op", list(_REWRITE_OPS))
+def test_one_rewrite_path(spark, tmp_path, monkeypatch, op, kind):
+    """DELETE, UPDATE, MERGE, OPTIMIZE and REORG commit through one
+    ``DeltaTable._rewrite``. On plain, change-feed, row-tracked and
+    name-mapped tables each reads the table state once before its
+    commit, reads back its pandas oracle, stamps its dataChange on
+    every add and remove, writes cdc files exactly when the change feed
+    is armed and rows changed, and keeps surviving rows' row ids."""
+    run, data_change, oracle = _REWRITE_OPS[op]
+    t = DeltaTable(str(tmp_path / "t"))
+    layout = {"cluster_by": ["k"]} if op == "optimize_clustered" else {"partition_by": ["g"]}
+    t.write(_rewrite_rows(spark, 0, 40).coalesce(2), configuration=_REWRITE_TABLES[kind], **layout)
+    if kind == "name_mapped":
+        t.enable_column_mapping()
+    if op == "reorg_purge":
+        t.delete_where_dv(spark, "k % 7 = 0")
+    cols = ["k", "g", "v"]
+
+    def rows():
+        return t.read(spark).toPandas()[cols].sort_values("k").reset_index(drop=True)
+
+    before = rows()
+    ids = (
+        {r.k: r.row_id for r in t.read_with_row_ids(spark).collect()}
+        if kind == "row_tracked"
+        else {}
+    )
+    calls: list[str] = []
+    snapshot, commit = t.snapshot, t._commit
+
+    def counted_snapshot(*args, **kwargs):
+        calls.append("snapshot")
+        return snapshot(*args, **kwargs)
+
+    def counted_commit(*args, **kwargs):
+        calls.append("commit")
+        return commit(*args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(t, "snapshot", counted_snapshot)
+        m.setattr(t, "_commit", counted_commit)
+        v = run(spark, t)
+    assert calls[: calls.index("commit")].count("snapshot") == 1
+
+    want = oracle(before)[cols].sort_values("k").reset_index(drop=True)
+    assert rows().to_dict("records") == want.to_dict("records")
+    actions = t.actions(v)
+    files = [a.get("add") or a.get("remove") for a in actions if "add" in a or "remove" in a]
+    assert files and {f["dataChange"] for f in files} == {data_change}
+    assert any("cdc" in a for a in actions) == (kind == "cdf" and data_change)
+    # one protocol action per commit, carrying every feature it uses
+    protocols = [a["protocol"] for a in actions if "protocol" in a]
+    assert len(protocols) <= 1
+    features = set(t.snapshot().protocol.get("writerFeatures") or ())
+    assert ("deletionVectors" in features) == (op in ("delete_where_dv", "reorg_purge"))
+    if kind == "cdf" and data_change:
+        assert "changeDataFeed" in features
+    if ids:
+        after = {r.k: r.row_id for r in t.read_with_row_ids(spark).collect()}
+        assert {k: after[k] for k in after if k in ids} == {
+            k: ids[k] for k in after if k in ids
+        }
