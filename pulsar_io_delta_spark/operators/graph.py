@@ -22,17 +22,25 @@ star-contraction family, GraphFrames' default) rely on:
    to crawl the component one graph-hop at a time;
 3. pointer jump — lab(v) ← lab(lab(v)), halving pointer depth.
 
-All three are node-table-sized hash joins / partial aggregates: no
-driver-side graph state, no collect, and the per-round shuffle is
-O(|edges| + |nodes|) × 16 bytes regardless of document payload size.
-Measured on the fixture dedup graph (25-chains × exact-dup stars):
-6 rounds, per-round cost flat.
+All three are node-table-sized hash joins / partial aggregates, and
+the per-round shuffle is O(|edges| + |nodes|) × 16 bytes regardless of
+document payload size. Measured on the fixture dedup graph (25-chains
+× exact-dup stars): 6 rounds, per-round cost flat.
 
 The looping operators (connected_components, bfs_distances here and
 bpe_train in ``operators/text.py``) run their rounds through one
 helper, ``Supersteps``: each round is written to parquet and read
 back. Its docstring holds the measured reason. pagerank_fixed is
 unrolled and has no barrier.
+
+Small graphs finish on the driver. A Spark round costs a dozen jobs
+whatever its size, so a graph with fewer than ``_LOCAL_ROWS`` edge +
+node rows is read back once from its first barriers with ``toArrow()``
+and runs the SAME rounds in numpy (``_cc_rounds``, ``_bfs_rounds``):
+labels, distances, ``stats["rounds"]``, the ``max_iter`` raise and the
+handling of edges that touch ids outside ``nodes`` are identical on
+both sides of the bound. Larger graphs keep the distributed rounds and
+hold no driver-side graph state.
 """
 
 from __future__ import annotations
@@ -41,7 +49,17 @@ import os
 import shutil
 import tempfile
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import LongType, StructField, StructType
+
+# Graphs with fewer edge + node rows than this finish on the driver.
+# 2^19 rows of int64 ids are 8 MiB as one Arrow column pair; with the
+# few same-length numpy temporaries a round allocates, that stays a
+# small fraction of a 1-2 GB driver heap. Larger graphs run the
+# distributed rounds.
+_LOCAL_ROWS = 1 << 19
 
 
 class Supersteps:
@@ -64,6 +82,11 @@ class Supersteps:
     table the run still holds, and the dir itself only if the run
     created it. Operators whose returned frame is backed by their last
     round do not close.
+
+    connected_components and bfs_distances count the rows of their
+    first barriers with ``counted(..., F.lit(True))``. Below
+    ``_LOCAL_ROWS`` they read those tables back once, run the rounds in
+    numpy and close the run, so no table outlives the call.
     """
 
     def __init__(self, spark: SparkSession, work_dir: str | None = None):
@@ -139,9 +162,13 @@ def connected_components(
 
     ``work_dir`` receives one small parquet table per round
     (``Supersteps``; the final one backs the returned DataFrame, so it
-    must outlive the caller's consumption). Pass a
-    dict as ``stats`` to receive {'rounds': k} — tests pin the
-    O(log diameter) convergence bound through it.
+    must outlive the caller's consumption). A graph with fewer than
+    ``_LOCAL_ROWS`` edge + node rows runs the same rounds on the driver
+    (``_cc_rounds``) after the first two barriers, returns a frame
+    built from Arrow with the same schema, and leaves nothing under
+    ``work_dir``. Pass a dict as ``stats`` to receive {'rounds': k},
+    equal on both sides of the bound — tests pin the O(log diameter)
+    convergence bound through it.
     """
     steps = Supersteps(edges.sparkSession, work_dir)
     # Both directions come from ONE reference to `edges`: a unionAll of
@@ -150,7 +177,9 @@ def connected_components(
     both = F.array(
         F.struct(s.alias("src"), d.alias("dst")), F.struct(d.alias("src"), s.alias("dst"))
     )
-    sym = steps.barrier(edges.select(F.inline(both)).distinct(), "edges")
+    sym, n_edges = steps.counted(
+        edges.select(F.inline(both)).distinct(), "edges", F.lit(True)
+    )
     # NOT pre-partitioned/persisted by src (r16 A/B, 7 variants × 4
     # trials at sf0.1): the label side is node-sized and joins
     # broadcast here, so the edge side never re-shuffles per round to
@@ -161,12 +190,18 @@ def connected_components(
     # OPTIMIZATION_r16.md "left alone".
     if nodes is None:
         nodes, id_col = sym, "src"
-    labels = steps.barrier(
+    labels, n_nodes = steps.counted(
         nodes.select(F.col(id_col).alias("id"))
         .distinct()
         .withColumn("lab", F.col("id")),
         "labels_0",
+        F.lit(True),
     )
+    if n_edges + n_nodes < _LOCAL_ROWS:
+        try:
+            return _cc_on_driver(labels, sym, max_iter, stats)
+        finally:
+            steps.close()
     for i in range(max_iter):
         # (1) min label over graph neighbors; map-side combine keeps
         # the shuffle at one (dst, partial-min) row per partition
@@ -216,6 +251,62 @@ def connected_components(
             if stats is not None:
                 stats["rounds"] = i + 1
             return labels.select("id", F.col("lab").alias("component"))
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} rounds"
+    )
+
+
+def _cc_on_driver(
+    labels: DataFrame, sym: DataFrame, max_iter: int, stats: dict | None
+) -> DataFrame:
+    """connected_components' rounds on the driver over its ``labels_0``
+    and ``edges`` barriers. Ids become positions in their sorted
+    distinct array, so a min over positions is a min over ids, and
+    every label stays a node id as on the distributed side. A null id
+    drops out there at the first pointer-jump join and an edge whose
+    endpoint is not a node matches no label row, so both are dropped
+    up front."""
+    id_type = labels.schema["id"].dataType
+    ids = np.unique(labels.select("id").toArrow().column(0).drop_null().to_numpy())
+    e = sym.toArrow().drop_null()
+    src = _positions(ids, e.column("src").to_numpy())
+    dst = _positions(ids, e.column("dst").to_numpy())
+    inside = (src >= 0) & (dst >= 0)
+    lab = _cc_rounds(len(ids), src[inside], dst[inside], max_iter, stats)
+    schema = StructType([StructField("id", id_type), StructField("component", id_type)])
+    out = pa.table({"id": ids, "component": ids[lab]})
+    return labels.sparkSession.createDataFrame(out, schema)
+
+
+def _positions(ids: np.ndarray, values: np.ndarray) -> np.ndarray:
+    """Index of each of ``values`` in the sorted ``ids``, -1 if absent."""
+    if not len(ids):
+        return np.full(len(values), -1)
+    pos = np.minimum(np.searchsorted(ids, values), len(ids) - 1)
+    return np.where(ids[pos] == values, pos, -1)
+
+
+def _cc_rounds(
+    n: int, src: np.ndarray, dst: np.ndarray, max_iter: int, stats: dict | None
+) -> np.ndarray:
+    """The three steps of a connected_components round over node
+    positions ``0..n-1`` and symmetric position edges; returns each
+    node's label position at the fixpoint."""
+    lab = np.arange(n)
+    for i in range(max_iter):
+        prev = lab
+        # (1) neighbour min
+        stepped = prev.copy()
+        np.minimum.at(stepped, dst, prev[src])
+        # (2) hub feedback: each node learns its former children's min
+        fed = stepped.copy()
+        np.minimum.at(fed, prev, stepped)
+        # (3) pointer jump
+        lab = fed[fed]
+        if not np.count_nonzero(lab != prev):
+            if stats is not None:
+                stats["rounds"] = i + 1
+            return lab
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds"
     )
@@ -385,6 +476,9 @@ def triangle_counts(edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
     )
 
 
+_DIST_SCHEMA = StructType([StructField("node", LongType()), StructField("dist", LongType())])
+
+
 def bfs_distances(
     edges: DataFrame,
     *,
@@ -406,28 +500,38 @@ def bfs_distances(
     therefore relaxed exactly once over the whole run — total work
     O(|E| + |V|·diameter) with no per-round full-graph pass, the
     Pregel/GraphX BFS shape. Rounds barrier to parquet through
-    ``Supersteps``, like connected_components. Raises if
-    the frontier is still non-empty after ``max_iter`` rounds — never
-    silently-partial distances. Pass ``stats`` to receive
-    {'rounds': k} (== eccentricity of the source + 1)."""
+    ``Supersteps``, like connected_components. With fewer than
+    ``_LOCAL_ROWS`` symmetrized edge rows, the same frontier rounds run
+    on the driver (``_bfs_rounds``) over the edge barrier read back
+    once, the default source is taken from those rows, and nothing is
+    left under ``work_dir``. Raises if the frontier is still non-empty
+    after ``max_iter`` rounds — never silently-partial distances. Pass
+    ``stats`` to receive {'rounds': k} (== eccentricity of the source +
+    1), equal on both sides of the bound."""
     spark = edges.sparkSession
     steps = Supersteps(spark, work_dir)
     e = edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-    sym = steps.barrier(
+    sym, n_edges = steps.counted(
         e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .where(F.col("a") != F.col("b"))
         .distinct(),
         "edges",
+        F.lit(True),
     )
+    if n_edges < _LOCAL_ROWS:
+        try:
+            return _bfs_on_driver(sym, source, max_iter, stats)
+        finally:
+            steps.close()
     # NOT pre-partitioned/persisted by `a` (r16 A/B on the cc twin):
     # the frontier side is broadcast-sized every round, so the
     # adjacency never re-shuffles — pre-partitioning only added cost.
     if source is None:
         source = sym.agg(F.min("a")).first()[0]
         if source is None:
-            return spark.createDataFrame([], "node long, dist long")
+            return spark.createDataFrame([], _DIST_SCHEMA)
     frontier = steps.barrier(
-        spark.createDataFrame([(int(source), 0)], "node long, dist long"),
+        spark.createDataFrame([(int(source), 0)], _DIST_SCHEMA),
         "frontier_0",
     )
     dist = steps.barrier(frontier, "dist_0")
@@ -450,4 +554,57 @@ def bfs_distances(
         dist = steps.barrier(
             dist.unionAll(frontier), f"dist_{i + 1}", drop=f"dist_{i}"
         )
+    raise RuntimeError(f"bfs_distances did not converge in {max_iter} rounds")
+
+
+def _bfs_on_driver(
+    sym: DataFrame, source: int | None, max_iter: int, stats: dict | None
+) -> DataFrame:
+    """bfs_distances' rounds on the driver over its ``edges`` barrier,
+    whose ``a != b`` filter already dropped null endpoints."""
+    e = sym.toArrow()
+    a, b = e.column("a").to_numpy(), e.column("b").to_numpy()
+    spark = sym.sparkSession
+    if source is None:
+        if not len(a):
+            return spark.createDataFrame([], _DIST_SCHEMA)
+        source = a.min()
+    nodes = np.unique(np.concatenate([a, b, [int(source)]]))
+    dist = _bfs_rounds(
+        len(nodes),
+        np.searchsorted(nodes, a),
+        np.searchsorted(nodes, b),
+        int(np.searchsorted(nodes, int(source))),
+        max_iter,
+        stats,
+    )
+    reached = dist >= 0
+    out = pa.table({"node": nodes[reached], "dist": dist[reached]})
+    return spark.createDataFrame(out, _DIST_SCHEMA)
+
+
+def _bfs_rounds(
+    n: int,
+    a: np.ndarray,
+    b: np.ndarray,
+    source: int,
+    max_iter: int,
+    stats: dict | None,
+) -> np.ndarray:
+    """bfs_distances' frontier rounds over node positions ``0..n-1``
+    and symmetric position edges ``a → b``; returns each node's hop
+    distance from ``source``, -1 where unreached."""
+    dist = np.full(n, -1)
+    dist[source] = 0
+    frontier = np.zeros(n, dtype=bool)
+    frontier[source] = True
+    for i in range(max_iter):
+        reached = np.zeros(n, dtype=bool)
+        reached[b[frontier[a]]] = True
+        frontier = reached & (dist < 0)
+        if not frontier.any():
+            if stats is not None:
+                stats["rounds"] = i + 1
+            return dist
+        dist[frontier] = i + 1
     raise RuntimeError(f"bfs_distances did not converge in {max_iter} rounds")

@@ -4486,7 +4486,9 @@ class DeltaTable:
                 .select(*table_cols, *rt_cols)
                 .unionByName(rewritten.select(*table_cols, *rt_cols))
             )
-        self._validate_constraints(rewritten, snap.configuration)
+        self._validate_constraints(
+            rewritten, snap.configuration, evolved or snap.schema_string
+        )
 
         def change_rows() -> DataFrame:
             # exact MERGE change rows (Delta "Change Data Feed"):
@@ -4864,7 +4866,7 @@ class DeltaTable:
             updated = self._apply_generated(
                 updated.drop(*gen.keys()), snap.schema_string
             ).select(*table_cols, *rt_keep)
-        self._validate_constraints(updated, snap.configuration)
+        self._validate_constraints(updated, snap.configuration, snap.schema_string)
         return self._rewrite(
             snap, "UPDATE", touched, kept.unionByName(updated),
             change_rows=lambda: matched.select(*table_cols)
@@ -4899,10 +4901,13 @@ class DeltaTable:
             return self._rewrite(snap, "DELETE", [], None)
         # live visibility (never _read_files: rewriting a file that
         # carries a DV must not resurrect its deleted rows); on a
-        # row-tracked table survivors keep their ids
+        # row-tracked table survivors keep their ids. A row survives
+        # unless the predicate is TRUE: NULL keeps it, as in SQL DELETE
+        # and delete_where_dv.
+        p = F.expr(predicate)
         return self._rewrite(
             snap, "DELETE", touched,
-            self._live_rows(spark, snap, touched).where(f"NOT ({predicate})"),
+            self._live_rows(spark, snap, touched).where((~p) | p.isNull()),
             change_rows=lambda: self._scan_live(spark, snap, touched)
             .where(predicate)
             .withColumn("_change_type", F.lit("delete")),

@@ -68,6 +68,22 @@ def test_delete_where_cdf_exact_rows(spark, tmp_path):
     assert _by_type(ch) == {"delete": {(5, 5.0), (6, 6.0), (7, 7.0)}}
 
 
+def test_delete_where_keeps_null_predicate_rows(spark, tmp_path):
+    """A row whose DELETE predicate is NULL is not deleted (SQL DELETE):
+    the rewrite keeps it as delete_where_dv does, and the change feed
+    reports only the row the predicate matched."""
+    rows = spark.createDataFrame([(1, 5), (2, None), (3, 50)], "id long, x long")
+    kept = {}
+    for op in ("delete_where", "delete_where_dv"):
+        t = DeltaTable(str(tmp_path / op))
+        t.write(rows.coalesce(1), configuration=CDF)
+        v = getattr(t, op)(spark, "x > 10")
+        kept[op] = sorted(r.id for r in t.read(spark).collect())
+        ch = t.table_changes(spark, start_version=v).collect()
+        assert [(r.id, r._change_type) for r in ch] == [(3, "delete")]
+    assert kept == {"delete_where": [1, 2], "delete_where_dv": [1, 2]}
+
+
 def test_delete_where_dv_cdf_no_double_report(spark, tmp_path):
     """A re-delete whose predicate overlaps an existing DV must report
     only the NEWLY deleted live rows."""

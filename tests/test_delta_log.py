@@ -912,6 +912,36 @@ def test_check_constraints_writer_feature_table_enforced(spark, tmp_path):
         t.write(bad)
 
 
+def _not_null_table(spark, path):
+    t = DeltaTable(path)
+    t.write(spark.createDataFrame([(1, "a"), (2, "b")], "k long not null, v string"))
+    assert '"nullable":false' in t.snapshot().schema_string.replace(" ", "")
+    return t
+
+
+def test_update_where_enforces_not_null(spark, table_path):
+    from pulsar_io_delta_spark.sources.delta_log import DeltaConstraintViolation
+
+    t = _not_null_table(spark, table_path)
+    v = t.snapshot().version
+    with pytest.raises(DeltaConstraintViolation, match="NOT NULL"):
+        t.update_where(spark, "k = 1", {"k": "CAST(NULL AS BIGINT)"})
+    assert t.snapshot().version == v
+    assert sorted(r.k for r in t.read(spark).collect()) == [1, 2]
+
+
+def test_merge_upsert_enforces_not_null(spark, table_path):
+    from pulsar_io_delta_spark.sources.delta_log import DeltaConstraintViolation
+
+    t = _not_null_table(spark, table_path)
+    v = t.snapshot().version
+    src = spark.createDataFrame([(None, "c")], "k long, v string")
+    with pytest.raises(DeltaConstraintViolation, match="NOT NULL"):
+        t.merge_upsert(spark, src, key_cols=["k"])
+    assert t.snapshot().version == v
+    assert sorted(r.k for r in t.read(spark).collect()) == [1, 2]
+
+
 def _arm_generated(t, spark):
     """Publish a metaData commit adding a generated column
     etype_upper = upper(event_type) (Delta 'Generated Columns')."""

@@ -2,11 +2,18 @@
 graphs, plus edge cases (isolated nodes, chains, non-convergence guard),
 and the structural pin that every iterative operator runs through the
 one ``Supersteps`` loop.
+
+Every connected_components and bfs_distances case runs through the
+``sides`` fixture: once at the default driver row bound, where these
+small graphs finish on the driver, and once with the bound at 0, where
+they take the distributed rounds. Both runs must agree on rows, schema,
+``stats["rounds"]`` and any raise.
 """
 
 from __future__ import annotations
 
 import ast
+import os
 import random
 from pathlib import Path
 
@@ -14,7 +21,40 @@ import pytest
 from pyspark.sql import functions as F
 
 from pulsar_io_delta_spark import operators
-from pulsar_io_delta_spark.operators.graph import connected_components
+from pulsar_io_delta_spark.operators import graph
+from pulsar_io_delta_spark.operators.graph import bfs_distances, connected_components
+
+
+@pytest.fixture()
+def sides(monkeypatch, tmp_path):
+    """``sides(op, *args, **kw)`` runs the graph operator ``op`` on both
+    sides of the driver row bound, each with its own ``work_dir``, and
+    returns ``(sorted rows, stats)`` once both sides agree on rows,
+    schema, stats and any raise. The driver side must leave its
+    ``work_dir`` empty and the distributed side must not, which shows
+    that each took its own path."""
+
+    def run(op, *args, **kw):
+        got, left = [], []
+        for name, bound in (("driver", graph._LOCAL_ROWS), ("distributed", 0)):
+            monkeypatch.setattr(graph, "_LOCAL_ROWS", bound)
+            work_dir = tmp_path / f"{len(os.listdir(tmp_path))}_{name}"
+            work_dir.mkdir()
+            stats: dict = {}
+            try:
+                df = op(*args, work_dir=str(work_dir), stats=stats, **kw)
+                got.append((df.schema, sorted(map(tuple, df.collect())), stats))
+            except RuntimeError as e:
+                got.append((type(e), str(e), stats))
+            left.append(bool(os.listdir(work_dir)))
+        monkeypatch.undo()
+        assert got[0] == got[1]
+        assert left == [False, True]
+        if isinstance(got[0][1], str):
+            raise got[0][0](got[0][1])
+        return got[0][1], got[0][2]
+
+    return run
 
 
 def _union_find(n_nodes, edges):
@@ -38,17 +78,14 @@ def _union_find(n_nodes, edges):
     return {v: min(members) for r, members in comp.items() for v in members}
 
 
-def _run(spark, n_nodes, edges):
+def _run(sides, spark, n_nodes, edges):
     nodes = spark.createDataFrame([(i,) for i in range(n_nodes)], "id long")
-    if edges:
-        e = spark.createDataFrame(edges, "src long, dst long")
-    else:
-        e = spark.createDataFrame([], "src long, dst long")
-    out = connected_components(nodes, e)
-    return {r["id"]: r["component"] for r in out.collect()}
+    e = spark.createDataFrame(edges, "src long, dst long")
+    rows, _ = sides(connected_components, nodes, e)
+    return dict(rows)
 
 
-def test_random_graphs_match_union_find(spark):
+def test_random_graphs_match_union_find(spark, sides):
     rng = random.Random(20260814)
     for trial in range(3):
         n = rng.randrange(40, 160)
@@ -56,34 +93,63 @@ def test_random_graphs_match_union_find(spark):
         edges = [
             (rng.randrange(n), rng.randrange(n)) for _ in range(m)
         ]  # self-loops allowed: must be harmless
-        assert _run(spark, n, edges) == _union_find(n, edges)
+        assert _run(sides, spark, n, edges) == _union_find(n, edges)
 
 
-def test_isolated_nodes_are_singletons(spark):
-    got = _run(spark, 5, [(0, 1)])
+def test_isolated_nodes_are_singletons(spark, sides):
+    got = _run(sides, spark, 5, [(0, 1)])
     assert got == {0: 0, 1: 0, 2: 2, 3: 3, 4: 4}
 
 
-def test_long_chain_converges_logarithmically(spark):
+def test_long_chain_converges_logarithmically(spark, sides):
     # A 64-node chain has diameter 63; pointer jumping must converge
     # well inside 50 rounds (≈ log2(63) + slack), and the labels must
     # all collapse to 0.
     n = 64
-    got = _run(spark, n, [(i, i - 1) for i in range(1, n)])
+    got = _run(sides, spark, n, [(i, i - 1) for i in range(1, n)])
     assert got == {i: 0 for i in range(n)}
 
 
-def test_nonconvergence_raises(spark):
+def test_nonconvergence_raises(spark, sides):
     nodes = spark.createDataFrame([(i,) for i in range(8)], "id long")
     e = spark.createDataFrame([(i, i - 1) for i in range(1, 8)], "src long, dst long")
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(nodes, e, max_iter=1)
+        sides(connected_components, nodes, e, max_iter=1)
 
 
-def test_nodes_none_evaluates_edges_once(spark):
+def test_edges_outside_nodes_are_ignored(spark, sides):
+    """Edges touching ids that are not in ``nodes`` join no label row:
+    they neither add vertices nor link the nodes they touch (here 1-99-2
+    and 3-100). Int ids keep their type on both sides."""
+    nodes = spark.createDataFrame([(i,) for i in range(5)], "id int")
+    e = spark.createDataFrame(
+        [(0, 1), (1, 99), (99, 2), (3, 100), (100, 101)], "src int, dst int"
+    )
+    rows, stats = sides(connected_components, nodes, e)
+    assert dict(rows) == {0: 0, 1: 0, 2: 2, 3: 3, 4: 4}
+    assert stats["rounds"] >= 1
+
+
+def test_driver_path_leaves_nothing_under_work_dir(spark, tmp_path):
+    """Below the bound both operators close their superstep run: a
+    caller-given ``work_dir`` is left empty, and the returned frame
+    does not depend on it."""
+    nodes = spark.createDataFrame([(i,) for i in range(6)], "id long")
+    e = spark.createDataFrame([(0, 1), (1, 2), (4, 5)], "src long, dst long")
+    cc = connected_components(nodes, e, work_dir=str(tmp_path))
+    bfs = bfs_distances(e, source=0, work_dir=str(tmp_path))
+    assert os.listdir(tmp_path) == []
+    assert sorted(map(tuple, cc.collect())) == [
+        (0, 0), (1, 0), (2, 0), (3, 3), (4, 4), (5, 4)
+    ]
+    assert sorted(map(tuple, bfs.collect())) == [(0, 0), (1, 1), (2, 2)]
+
+
+def test_nodes_none_evaluates_edges_once(spark, sides):
     """``nodes=None`` takes the vertex set from the edge barrier, so an
     expensive edge lineage (here: a counting Python UDF) runs once per
-    edge row, and the labels cover exactly the edge endpoints."""
+    edge row on each side of the bound, and the labels cover exactly
+    the edge endpoints."""
     calls = spark.sparkContext.accumulator(0)
 
     def counted(x):
@@ -96,19 +162,20 @@ def test_nodes_none_evaluates_edges_once(spark):
     e = spark.createDataFrame(edges, "src long, dst long").select(
         F.udf(counted, "long")("src").alias("src"), "dst"
     )
-    got = {r["id"]: r["component"] for r in connected_components(None, e).collect()}
-    assert calls.value == len(edges)
+    rows, _ = sides(connected_components, None, e)
+    got = dict(rows)
+    assert calls.value == 2 * len(edges)
     uf = _union_find(n, edges)
     assert got == {v: uf[v] for edge in edges for v in edge}
 
 
-def test_duplicate_and_reversed_edges_collapse(spark):
+def test_duplicate_and_reversed_edges_collapse(spark, sides):
     edges = [(0, 1), (1, 0), (0, 1), (2, 1)]
-    got = _run(spark, 4, edges)
+    got = _run(sides, spark, 4, edges)
     assert got == {0: 0, 1: 0, 2: 0, 3: 3}
 
 
-def test_convergence_round_bound(spark):
+def test_convergence_round_bound(spark, sides):
     """Pointer jumping + hub feedback keep rounds O(log diameter):
     a 256-node chain (diameter 255) must converge in ~log2(255)+1
     rounds (measured 9, incl. the final no-change confirmation), far
@@ -116,9 +183,8 @@ def test_convergence_round_bound(spark):
     n = 256
     nodes = spark.createDataFrame([(i,) for i in range(n)], "id long")
     e = spark.createDataFrame([(i, i - 1) for i in range(1, n)], "src long, dst long")
-    stats = {}
-    out = connected_components(nodes, e, stats=stats)
-    assert {r["component"] for r in out.collect()} == {0}
+    rows, stats = sides(connected_components, nodes, e)
+    assert {c for _, c in rows} == {0}
     assert stats["rounds"] <= 10, stats
 
 
@@ -145,7 +211,7 @@ def test_pagerank_fixed_matches_hand_computation(spark):
     assert got[2] > got[1] == got[3]
 
 
-def test_hub_skew_graph_correct_and_bounded_rounds(spark):
+def test_hub_skew_graph_correct_and_bounded_rounds(spark, sides):
     """Power-law skew regression (VERDICT r7 #4): a hub node touching
     ~10% of all edges — the giant-component worst case for label
     propagation and a single hot key for the dst-aggregations and
@@ -165,9 +231,8 @@ def test_hub_skew_graph_correct_and_bounded_rounds(spark):
     hub = ids.where((F.col("id") % 10 == 0) & (F.col("id") != 0)).select(
         F.col("id").alias("src"), F.lit(0).alias("dst")
     )
-    stats: dict = {}
-    out = connected_components(ids, chain.unionAll(hub), stats=stats)
-    rows = {r.id: r.component for r in out.collect()}
+    cc_rows, stats = sides(connected_components, ids, chain.unionAll(hub))
+    rows = dict(cc_rows)
     # every 10th node links to the hub; a block whose chain contains any
     # such node joins component 0 — with blk=25 and hub spacing 10,
     # every block contains one (all ids ≡ 0 mod 10 link in), so the
@@ -254,40 +319,44 @@ def test_triangle_counts_clique(spark):
     assert got == {v: (5, 10) for v in range(6)}
 
 
-def test_bfs_distances_hand_graph(spark):
+def test_bfs_distances_hand_graph(spark, sides):
     """Path + branch + unreachable island: 0-1-2-3 chain, 1-4 branch,
     island 7-8. From source 0: exact hop counts, island absent."""
-    from pulsar_io_delta_spark.operators.graph import bfs_distances
-
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 3), (1, 4), (7, 8)], "src long, dst long"
     )
-    stats = {}
-    got = {
-        r.node: r.dist
-        for r in bfs_distances(edges, source=0, stats=stats).collect()
-    }
+    rows, stats = sides(bfs_distances, edges, source=0)
+    got = dict(rows)
     assert got == {0: 0, 1: 1, 2: 2, 3: 3, 4: 2}
     # eccentricity of 0 is 3 -> frontier empties on round 4
     assert stats["rounds"] == 4
 
 
-def test_bfs_default_source_is_min_node(spark):
-    from pulsar_io_delta_spark.operators.graph import bfs_distances
-
+def test_bfs_default_source_is_min_node(spark, sides):
     edges = spark.createDataFrame([(5, 3), (3, 9)], "src long, dst long")
-    got = {r.node: r.dist for r in bfs_distances(edges).collect()}
-    assert got == {3: 0, 5: 1, 9: 1}
+    rows, _ = sides(bfs_distances, edges)
+    assert dict(rows) == {3: 0, 5: 1, 9: 1}
 
 
-def test_bfs_nonconvergence_raises(spark):
-    from pulsar_io_delta_spark.operators.graph import bfs_distances
-
+def test_bfs_nonconvergence_raises(spark, sides):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(6)], "src long, dst long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        bfs_distances(edges, source=0, max_iter=2)
+        sides(bfs_distances, edges, source=0, max_iter=2)
+
+
+def test_bfs_degenerate_graphs_agree(spark, sides):
+    """No edges: no default source and an empty result; a source the
+    edges never touch is its own one-node result; self-loops and null
+    endpoints are not edges. Int ids come back as longs on both sides."""
+    empty = spark.createDataFrame([], "src int, dst int")
+    assert sides(bfs_distances, empty) == ([], {})
+    assert sides(bfs_distances, empty, source=7) == ([(7, 0)], {"rounds": 1})
+    loops = spark.createDataFrame([(1, 1), (2, None), (2, 3)], "src int, dst int")
+    assert sides(bfs_distances, loops, source=1) == ([(1, 0)], {"rounds": 1})
+    rows, _ = sides(bfs_distances, loops)
+    assert rows == [(2, 0), (3, 1)]
 
 
 def _on_writer(expr) -> bool:

@@ -578,13 +578,32 @@ def main() -> None:
     # so superstep COUNT must stay flat and total cost linear), blocked
     # fuzzy matching (block count grows, block size constant), and BM25
     # (one corpus-sized tf shuffle + broadcast stats).
-    from pulsar_io_delta_spark.operators.graph import connected_components
+    from pulsar_io_delta_spark.operators import graph
     from pulsar_io_delta_spark.queries.llm import q_fuzzy_pairs  # noqa: F401
     from pulsar_io_delta_spark.queries.pipeline2 import q_bm25_topdocs  # noqa: F401
 
-    def cc_labels(nodes_edges):
-        nodes, edges = nodes_edges
-        return connected_components(nodes, edges)
+    def cc_rows(name, make_graph):
+        """Both multipliers fit under graph._LOCAL_ROWS and finish on the
+        driver; the `_dist` rows force the bound to 0 so the distributed
+        supersteps (the path a large graph takes) stay measured too."""
+        for suffix, bound in (("", graph._LOCAL_ROWS), ("_dist", 0)):
+            for label, nb in (("1x", 400), (f"{kd}x", 400 * kd)):
+                rows = nb * 25
+                nodes, edges = make_graph(nb)
+                stats: dict = {}
+                saved, graph._LOCAL_ROWS = graph._LOCAL_ROWS, bound
+                try:
+                    t0 = time.time()
+                    graph.connected_components(nodes, edges, stats=stats).write.mode(
+                        "overwrite"
+                    ).format("noop").save()
+                    dt = time.time() - t0
+                finally:
+                    graph._LOCAL_ROWS = saved
+                print(
+                    f"{name + suffix:12s} {label:4s} rows={rows:>9,d} wall={dt:6.2f}s "
+                    f"ns/row={dt/rows*1e9:7.1f} rounds={stats['rounds']}"
+                )
 
     def chain_graph(n_blocks):
         ids = spark.range(n_blocks * 25).select(F.col("id"))
@@ -593,12 +612,7 @@ def main() -> None:
         )
         return ids, e
 
-    for label, nb in (("1x", 400), (f"{kd}x", 400 * kd)):
-        rows = nb * 25
-        t0 = time.time()
-        cc_labels(chain_graph(nb)).write.mode("overwrite").format("noop").save()
-        dt = time.time() - t0
-        print(f"{'cc_cluster':10s} {label:4s} rows={rows:>9,d} wall={dt:6.2f}s ns/row={dt/rows*1e9:7.1f}")
+    cc_rows("cc_cluster", chain_graph)
 
     # BM25 over the docs blow-up (round 8): ONE corpus-sized (doc,token)
     # shuffle + broadcast stats — the ns/row must stay flat since the
@@ -684,13 +698,7 @@ def main() -> None:
         )
         return ids, chain.unionAll(hub)
 
-    for label, nb in (("1x", 400), (f"{kd}x", 400 * kd)):
-        rows = nb * 25
-        ids, e = hub_graph(nb)
-        t0 = time.time()
-        cc_labels((ids, e)).write.mode("overwrite").format("noop").save()
-        dt = time.time() - t0
-        print(f"{'cc_skew':10s} {label:4s} rows={rows:>9,d} wall={dt:6.2f}s ns/row={dt/rows*1e9:7.1f}")
+    cc_rows("cc_skew", hub_graph)
 
     for label, nb in (("1x", 400), (f"{kd}x", 400 * kd)):
         rows = nb * 25
