@@ -100,14 +100,16 @@ class Supersteps:
     ) -> DataFrame:
         """Write ``df`` as table ``name`` and return it read back. Once
         the write is durable, the superseded table ``drop`` (if any) is
-        deleted: a round's input is dead when its output is on disk."""
+        deleted: a round's input is dead when its output is on disk.
+        The read back takes the written frame's schema, so the barrier
+        costs the write job alone, with no schema-inference job."""
         path = os.path.join(self._dir, name)
         self._held.add(name)
         df.write.mode("overwrite").parquet(path)
         if drop is not None:
             shutil.rmtree(os.path.join(self._dir, drop), ignore_errors=True)
             self._held.discard(drop)
-        return self._spark.read.parquet(path)
+        return self._spark.read.schema(df.schema).parquet(path)
 
     def counted(
         self, df: DataFrame, name: str, where: Column, *, drop: str | None = None

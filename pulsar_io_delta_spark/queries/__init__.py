@@ -9,8 +9,9 @@ then seats every query whose code path changed since the last gate
 round, CORRECTNESS_r17 (the superstep loop, the columnar egress and
 murmur3 routing, the change-log walk and its partition-value form,
 the in-commit-timestamp readers, every partitioned write through
-``_stage_and_move``, and every file rewrite through
-``DeltaTable._rewrite``), so each gets a fresh gate row. The remaining
+``_stage_and_move``, every file rewrite through ``DeltaTable._rewrite``,
+and every metadata commit through the one ``metaData`` builder), so
+each gets a fresh gate row. The remaining
 slots go to the queries whose latest gate row is oldest (round 12),
 fewest rows first. Next round, rebuild the list the same way rather
 than appending to it.
@@ -79,15 +80,16 @@ WINDOW = [
     "q_merge_upsert",
     "q_row_tracking",
     "q_variant",
+    # table metadata through the one builder, delta_log._metadata
+    "q_constraints_lifecycle",
+    "q_column_defaults",
+    "q_identity_columns",
+    "q_schema_widening",
     # latest gate row oldest (round 12)
     "q_column_mapping_read",
     "q_column_rename_drop",
     "q_html_extract",
     "q_multimodal_audio_probe",
-    "q_pii_scrub",
-    "q_sql_recursive_series",
-    "q_agg_approx_quantiles",
-    "q_anomaly_zscore",
 ]
 
 reorder(WINDOW)

@@ -264,7 +264,7 @@ def q_dv_read(spark, sf_dir):
         add["deletionVector"] = desc
         add["dataChange"] = True
         actions.append({"add": add})
-    t._commit(actions, operation="DELETE", read_version=snap.version)
+    t._commit(snap, actions, operation="DELETE", read_version=snap.version)
     t.delete_where_dv(spark, "event_id % 7 = 3")
     # overlapping predicate: DV∪DV union per file, idempotent re-delete
     t.delete_where_dv(spark, "event_id % 7 = 3 OR event_id % 11 = 5")
@@ -544,6 +544,7 @@ def q_checkpoint_v2(spark, sf_dir):
     t.write(e)
     snap = t.snapshot()
     t._commit(
+        snap,
         [{"protocol": _upgraded_protocol(
             snap.protocol, ("v2Checkpoint",), ("v2Checkpoint",)
         )}],
@@ -1133,7 +1134,7 @@ def q_schema_widening(spark, sf_dir):
     import json as _json
     import tempfile
 
-    from pulsar_io_delta_spark.sources.delta_log import DeltaTable
+    from pulsar_io_delta_spark.sources.delta_log import DeltaTable, _metadata
 
     root = tempfile.mkdtemp(prefix="pids_tw_") + "/tbl"
     e = table(spark, sf_dir, "events").select("event_id")
@@ -1151,15 +1152,13 @@ def q_schema_widening(spark, sf_dir):
         "delta.typeChanges": [{"fromType": "integer", "toType": "long"}]
     }
     t._commit(
+        snap,
         [
             {"protocol": {"minReaderVersion": 3, "minWriterVersion": 7,
                           "readerFeatures": ["typeWidening"],
                           "writerFeatures": ["appendOnly", "invariants",
                                              "typeWidening"]}},
-            {"metaData": {"id": "tw-fixture", "schemaString": _json.dumps(s),
-                          "partitionColumns": [],
-                          "format": {"provider": "parquet", "options": {}},
-                          "configuration": {}}},
+            _metadata(snap, schema_string=_json.dumps(s)),
         ],
         operation="ALTER COLUMN",
         read_version=snap.version,

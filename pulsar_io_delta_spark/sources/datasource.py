@@ -604,6 +604,8 @@ def _rows_to_adds(iterator, schema: StructType, table_path: str, partition_by: l
                 "size": os.path.getsize(abs_path),
                 "modificationTime": int(_time.time() * 1000),
                 "dataChange": True,
+                # a row-tracked table numbers rows from this count
+                "stats": json.dumps({"numRecords": table.num_rows}),
             }
         )
     return _WroteFiles(adds=tuple(adds))

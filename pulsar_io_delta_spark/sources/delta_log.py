@@ -37,6 +37,16 @@ reference's storage-agnostic `DeltaLog.forTable`
 (`DeltaReader.java:301-303`). Optimistic single-writer concurrency via
 exclusive commit-file creation.
 
+Table metadata: the ``metaData`` action is the table's identity and
+schema cursor. ``Snapshot.metadata`` holds the whole current action;
+every commit that changes it builds the new one with ``_metadata``,
+which copies it and replaces only the fields the commit changes. So a
+table keeps one ``id`` for its whole life (only a creating commit, a
+clone or a conversion mints one), every metadata commit inherits the
+configuration it does not change, and ``_commit`` arms in-commit
+timestamps and row tracking from the snapshot the actions were built
+against — a commit path cannot drop the table's configuration.
+
 Scale notes: the log is small (one JSON per commit); only the driver
 reads it. Data files are read by executors through the ordinary
 vectorized parquet scan with partition-directory inference
@@ -45,6 +55,7 @@ vectorized parquet scan with partition-directory inference
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import random
@@ -329,19 +340,17 @@ class Snapshot:
         version: int,
         files: list[str] | None = None,
         partition_values: dict[str, dict[str, str]] | None = None,
-        schema_string: str | None = None,
-        partition_columns: list[str] | None = None,
+        metadata: dict | None = None,
         add_times: dict[str, int] | None = None,
         adds: dict[str, dict] | None = None,
-        configuration: dict | None = None,
         protocol: dict | None = None,
         domain_metadata: dict[str, dict] | None = None,
         store: "_LiveStore | None" = None,
     ):
         self.version = version
-        self.schema_string = schema_string
-        self.partition_columns = list(partition_columns or [])
-        self.configuration = dict(configuration or {})
+        # the table's current metaData action as logged (empty before
+        # the first commit); _metadata() builds every successor from it
+        self.metadata = dict(metadata or {})
         self.protocol = dict(protocol) if protocol else {
             "minReaderVersion": 1,
             "minWriterVersion": 2,
@@ -357,6 +366,18 @@ class Snapshot:
         self._pv = partition_values
         self._times = add_times
         self._skip_index = None  # built on first pruned read; False = unbuildable
+
+    @property
+    def schema_string(self) -> str | None:
+        return self.metadata.get("schemaString")
+
+    @property
+    def partition_columns(self) -> list[str]:
+        return list(self.metadata.get("partitionColumns") or [])
+
+    @property
+    def configuration(self) -> dict:
+        return dict(self.metadata.get("configuration") or {})
 
     @property
     def files(self) -> list[str]:
@@ -394,6 +415,42 @@ class Snapshot:
                 self._skip_index = False
                 return None
         return self._skip_index
+
+
+def _metadata(
+    snap: Snapshot | None,
+    *,
+    schema_string: str | None = None,
+    partition_columns: list[str] | None = None,
+    configuration: dict | None = None,
+) -> dict:
+    """The one builder of ``metaData`` actions: a copy of
+    ``snap.metadata`` with only the given fields replaced, so ``id``,
+    ``format`` and any other logged field carry over. ``snap=None`` is a
+    creating commit (first write, clone, conversion), the only kind
+    that mints an id."""
+    md = copy.deepcopy(snap.metadata) if snap is not None else {}
+    md.setdefault("id", str(uuid.uuid4()))
+    md.setdefault("format", {"provider": "parquet", "options": {}})
+    for key, value in (
+        ("schemaString", schema_string),
+        ("partitionColumns", partition_columns),
+        ("configuration", configuration),
+    ):
+        if value is not None:
+            md[key] = copy.deepcopy(value)
+    md.setdefault("partitionColumns", [])
+    md.setdefault("configuration", {})
+    return {"metaData": md}
+
+
+def _committed_metadata(snap: Snapshot | None, actions: list[dict]) -> dict:
+    """The metaData a commit of ``actions`` leaves the table with: the
+    last one among the actions, else the snapshot's."""
+    for a in reversed(actions):
+        if "metaData" in a:
+            return a["metaData"]
+    return snap.metadata if snap is not None else {}
 
 
 # Reader features this engine actually implements (Delta PROTOCOL.md
@@ -1913,7 +1970,7 @@ class DeltaTable:
             )
         live_in: dict[str, dict] = {}
         removed: dict[str, dict] = {}
-        meta = proto = last_info = None
+        last: dict[str, dict] = {}  # commitInfo / protocol / metaData, last wins
         doms: dict[str, dict] = {}
         txns: dict[str, dict] = {}
         for v in vs:
@@ -1924,23 +1981,15 @@ class DeltaTable:
                 elif "remove" in a:
                     removed[a["remove"]["path"]] = a["remove"]
                     live_in.pop(a["remove"]["path"], None)
-                elif "metaData" in a:
-                    meta = a["metaData"]
-                elif "protocol" in a:
-                    proto = a["protocol"]
                 elif "domainMetadata" in a:
                     doms[a["domainMetadata"]["domain"]] = a["domainMetadata"]
                 elif "txn" in a:
                     txns[a["txn"]["appId"]] = a["txn"]
-                elif "commitInfo" in a:
-                    last_info = a["commitInfo"]
-        actions: list[dict] = []
-        if last_info:
-            actions.append({"commitInfo": last_info})
-        if proto:
-            actions.append({"protocol": proto})
-        if meta:
-            actions.append({"metaData": meta})
+                else:
+                    last.update(a)
+        actions: list[dict] = [
+            {k: last[k]} for k in ("commitInfo", "protocol", "metaData") if k in last
+        ]
         actions.extend({"txn": t} for _k, t in sorted(txns.items()))
         actions.extend({"domainMetadata": d} for _k, d in sorted(doms.items()))
         actions.extend({"remove": r} for _p, r in sorted(removed.items()))
@@ -2145,9 +2194,7 @@ class DeltaTable:
         bases: list[_AddColumns] = []
         overlay: dict[str, dict] = {}
         removed: set[str] = set()
-        schema_string: str | None = None
-        partition_columns: list[str] = []
-        configuration: dict = {}
+        metadata: dict = {}
         protocol: dict = {"minReaderVersion": 1, "minWriterVersion": 2}
         domains: dict[str, dict] = {}
         replay_from = 0
@@ -2156,9 +2203,7 @@ class DeltaTable:
             ck = self._load_checkpoint(usable_ckpts[-1])
             bases = list(ck["live_bases"])
             overlay = dict(ck["live_extra"])
-            schema_string = ck["schema_string"]
-            partition_columns = ck["partition_columns"]
-            configuration = dict(ck.get("configuration") or {})
+            metadata = ck["metadata"]
             protocol = dict(ck.get("protocol") or protocol)
             domains = dict(ck.get("domain_metadata") or {})
             replay_from = usable_ckpts[-1] + 1
@@ -2189,9 +2234,7 @@ class DeltaTable:
                     overlay.pop(p, None)
                     removed.add(p)
                 elif "metaData" in action:
-                    schema_string = action["metaData"].get("schemaString")
-                    partition_columns = action["metaData"].get("partitionColumns", [])
-                    configuration = dict(action["metaData"].get("configuration") or {})
+                    metadata = action["metaData"]
                 elif "protocol" in action:
                     protocol = action["protocol"]
                     _check_protocol(protocol)
@@ -2203,9 +2246,7 @@ class DeltaTable:
                         domains[dm["domain"]] = dm
         snap = Snapshot(
             version=v,
-            schema_string=schema_string,
-            partition_columns=partition_columns,
-            configuration=configuration,
+            metadata=metadata,
             protocol=protocol,
             domain_metadata=domains,
             store=_LiveStore(bases, overlay, removed),
@@ -2296,13 +2337,13 @@ class DeltaTable:
             # a table whose protocol demands v2Checkpoint MUST get v2
             # checkpoints (spec: classic checkpoints are forbidden there)
             return self._checkpoint_v2(v, snap, sidecars=sidecars)
+        # the metaData action rides whole, as a JSON string the way the
+        # domainMetadata rows carry theirs
         rows: list[dict] = [
-            {
-                "action_type": "metaData",
-                "schemaString": snap.schema_string,
-                "partitionColumns": json.dumps(snap.partition_columns),
-                "configuration": json.dumps(snap.configuration),
-            },
+            {"action_type": key, key: json.dumps(md)}
+            for key, md in _metadata(snap).items()
+        ]
+        rows.append(
             {
                 "action_type": "protocol",
                 "minReaderVersion": snap.protocol.get("minReaderVersion", 1),
@@ -2315,8 +2356,8 @@ class DeltaTable:
                 "writerFeatures": json.dumps(snap.protocol["writerFeatures"])
                 if "writerFeatures" in snap.protocol
                 else None,
-            },
-        ]
+            }
+        )
         for path in snap.files:
             a = snap.adds.get(path, {})
             dv = a.get("deletionVector")
@@ -2352,9 +2393,7 @@ class DeltaTable:
             "size",
             "modificationTime",
             "stats",
-            "schemaString",
-            "partitionColumns",
-            "configuration",
+            "metaData",
             "minReaderVersion",
             "minWriterVersion",
             "readerFeatures",
@@ -2401,15 +2440,7 @@ class DeltaTable:
         actions: list[dict] = [
             {"checkpointMetadata": {"version": v}},
             {"protocol": dict(snap.protocol)},
-            {
-                "metaData": {
-                    "id": str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": snap.schema_string,
-                    "partitionColumns": snap.partition_columns,
-                    "configuration": dict(snap.configuration or {}),
-                }
-            },
+            _metadata(snap),
         ]
         file_actions: list[dict] = []
         for path in snap.files:
@@ -2612,9 +2643,7 @@ class DeltaTable:
             with self.fs.open_read(sp) as f:
                 split_spec(pq.read_table(f))
         live: dict[str, dict] = {}
-        schema_string = None
-        partition_columns: list[str] = []
-        configuration: dict = {}
+        metadata: dict = {}
         protocol: dict = {"minReaderVersion": 1, "minWriterVersion": 2}
         txns: dict[str, int] = {}
         domains: dict[str, dict] = {}
@@ -2622,9 +2651,7 @@ class DeltaTable:
             if "add" in a:
                 live[a["add"]["path"]] = a["add"]
             elif "metaData" in a:
-                schema_string = a["metaData"].get("schemaString")
-                partition_columns = a["metaData"].get("partitionColumns") or []
-                configuration = dict(a["metaData"].get("configuration") or {})
+                metadata = a["metaData"]
             elif "protocol" in a:
                 protocol = a["protocol"]
                 _check_protocol(protocol)
@@ -2643,9 +2670,7 @@ class DeltaTable:
         out = {
             "live_bases": bases,
             "live_extra": live,
-            "schema_string": schema_string,
-            "partition_columns": partition_columns,
-            "configuration": configuration,
+            "metadata": metadata,
             "protocol": protocol,
             "txns": txns,
             "domain_metadata": domains,
@@ -2660,9 +2685,7 @@ class DeltaTable:
         """Metadata/txn/domain rows of a compact-layout checkpoint (its
         add rows stay columnar in `_AddColumns` — the caller attaches
         them as ``live_bases``)."""
-        schema_string = None
-        partition_columns: list[str] = []
-        configuration: dict = {}
+        metadata: dict = {}
         protocol: dict = {"minReaderVersion": 1, "minWriterVersion": 2}
         txns: dict[str, int] = {}
         domains: dict[str, dict] = {}
@@ -2670,9 +2693,15 @@ class DeltaTable:
         for r in rows:
             ts = int(r.get("commit_timestamp") or 0)
             if r["action_type"] == "metaData":
-                schema_string = r["schemaString"]
-                partition_columns = json.loads(r["partitionColumns"] or "[]")
-                configuration = json.loads(r.get("configuration") or "{}")
+                if r.get("metaData"):
+                    metadata = json.loads(r["metaData"])
+                else:
+                    # older writers flattened three fields and dropped the id
+                    metadata = {
+                        "schemaString": r["schemaString"],
+                        "partitionColumns": json.loads(r["partitionColumns"] or "[]"),
+                        "configuration": json.loads(r.get("configuration") or "{}"),
+                    }
             elif r["action_type"] == "protocol":
                 protocol = {
                     "minReaderVersion": int(r["minReaderVersion"] or 1),
@@ -2689,9 +2718,7 @@ class DeltaTable:
                 dm = json.loads(r["domainMetadata"])
                 domains[dm["domain"]] = dm
         return {
-            "schema_string": schema_string,
-            "partition_columns": partition_columns,
-            "configuration": configuration,
+            "metadata": metadata,
             "protocol": protocol,
             "txns": txns,
             "domain_metadata": domains,
@@ -3094,15 +3121,7 @@ class DeltaTable:
             {"protocol": _upgraded_protocol(
                 snap.protocol, (), ("rowTracking", "domainMetadata")
             )},
-            {
-                "metaData": {
-                    "id": str(uuid.uuid4()),
-                    "schemaString": snap.schema_string,
-                    "partitionColumns": list(snap.partition_columns),
-                    "format": {"provider": "parquet", "options": {}},
-                    "configuration": config,
-                }
-            },
+            _metadata(snap, configuration=config),
         ]
         for p in sorted(snap.files):
             add = dict(snap.adds[p])
@@ -3122,8 +3141,8 @@ class DeltaTable:
             add["dataChange"] = False
             actions.append({"add": add})
         return self._commit(
-            actions, operation="UPGRADE ROW TRACKING",
-            read_version=snap.version, configuration=config,
+            snap, actions, operation="UPGRADE ROW TRACKING",
+            read_version=snap.version,
         )
 
     def _live_rows(
@@ -3533,13 +3552,15 @@ class DeltaTable:
 
     def _commit(
         self,
+        snap: Snapshot | None,
         actions: list[dict],
         operation: str,
         read_version: int | None = None,
         max_retries: int = 10,
-        configuration: dict | None = None,
     ) -> int:
-        """Publish one commit with optimistic concurrency.
+        """Publish one commit with optimistic concurrency. ``snap`` is the
+        table state ``actions`` were built against (None when creating
+        the table).
 
         Exclusive create is the mutex (O_EXCL locally; conditional PUT /
         external mutex on object stores — sources/fs.py). Losing the
@@ -3558,24 +3579,20 @@ class DeltaTable:
           so the caller recomputes against the new table state instead
           of publishing stale removes.
 
-        ``configuration`` (the table config this commit runs under, or
-        the one it is publishing) arms in-commit timestamps: with
-        ``delta.enableInCommitTimestamps`` true the commitInfo carries a
-        MONOTONIC ``inCommitTimestamp`` — strictly greater than the
-        predecessor commit's — which time travel then trusts over file
-        mtimes (Delta PROTOCOL.md "In-Commit Timestamps": the defense
-        against clock-skewed object stores reordering history). The
+        The table configuration before (``snap``) or after (a
+        ``metaData`` among the actions) this commit arms in-commit
+        timestamps: with ``delta.enableInCommitTimestamps`` true the
+        commitInfo carries a MONOTONIC ``inCommitTimestamp`` — strictly
+        greater than the predecessor commit's — which time travel then
+        trusts over file mtimes (Delta PROTOCOL.md "In-Commit
+        Timestamps": the defense against clock-skewed object stores
+        reordering history). The
         timestamp is re-derived on every retry so a racer's commit
         cannot break monotonicity."""
-        ict_armed = (configuration or {}).get(
-            "delta.enableInCommitTimestamps"
-        ) == "true" or any(
-            (a.get("metaData") or {}).get("configuration", {}).get(
-                "delta.enableInCommitTimestamps"
-            )
-            == "true"
-            for a in actions
-        )
+        ict = "delta.enableInCommitTimestamps"
+        prior_ict = snap is not None and snap.configuration.get(ict) == "true"
+        cfg = _committed_metadata(snap, actions).get("configuration") or {}
+        ict_armed = prior_ict or cfg.get(ict) == "true"
         # Row tracking (Delta PROTOCOL.md "Row Tracking"): when armed,
         # every data add gets baseRowId (fresh ids = hwm+1 .. hwm+n,
         # n from the add's own footer stats — zero extra jobs) and
@@ -3584,12 +3601,9 @@ class DeltaTable:
         # advances. Stamped INSIDE the retry loop: a blind append that
         # loses its race re-derives both against the racer's state, so
         # row-id ranges never collide.
-        rt_cfg = dict(configuration or {})
-        for a in actions:
-            rt_cfg.update((a.get("metaData") or {}).get("configuration") or {})
         rt_adds = (
             [a["add"] for a in actions if "add" in a and "baseRowId" not in a["add"]]
-            if _rt_enabled(rt_cfg)
+            if _rt_enabled(cfg)
             else []
         )
         rt_dm: dict | None = None
@@ -3647,9 +3661,7 @@ class DeltaTable:
                         f"v{version} (wedged filesystem or orphan commit "
                         "file?)"
                     )
-            if ict_armed and version > 0 and (configuration or {}).get(
-                "delta.enableInCommitTimestamps"
-            ) != "true":
+            if ict_armed and version > 0 and not prior_ict:
                 # This commit ENABLES ICT on a table whose history
                 # predates it: stamp the spec's enablement provenance
                 # properties (PROTOCOL.md "In-Commit Timestamps") into
@@ -3657,15 +3669,10 @@ class DeltaTable:
                 # versions carry ICT without probing every commit.
                 # Re-stamped per retry — a lost race lands at a new
                 # version with a new timestamp.
-                for a in actions:
-                    cfgm = (a.get("metaData") or {}).get("configuration")
-                    if cfgm is not None and cfgm.get(
-                        "delta.enableInCommitTimestamps"
-                    ) == "true":
-                        cfgm["delta.inCommitTimestampEnablementVersion"] = str(version)
-                        cfgm["delta.inCommitTimestampEnablementTimestamp"] = str(
-                            info["inCommitTimestamp"]
-                        )
+                cfg["delta.inCommitTimestampEnablementVersion"] = str(version)
+                cfg["delta.inCommitTimestampEnablementTimestamp"] = str(
+                    info["inCommitTimestamp"]
+                )
             if read_version is not None and version != read_version + 1:
                 _rt_unstamp()
                 raise DeltaConcurrentCommit(
@@ -3673,7 +3680,11 @@ class DeltaTable:
                     f"v{read_version}; recompute and retry"
                 )
             if rt_adds:
-                hwm = _rt_hwm(self.snapshot() if version > 0 else None)
+                # the caller's snapshot is the head unless a racer landed
+                hwm = _rt_hwm(
+                    snap if snap is not None and snap.version == version - 1
+                    else self.snapshot() if version > 0 else None
+                )
                 for add in rt_adds:
                     stats = add.get("stats")
                     n = (json.loads(stats) if isinstance(stats, str) else stats or {}).get("numRecords")
@@ -3698,9 +3709,7 @@ class DeltaTable:
                     # best-effort integrity sidecar (delta-spark
                     # semantics) — a missing .crc only skips validation
                     pass
-                interval = int(
-                    (configuration or {}).get("delta.checkpointInterval") or 0
-                )
+                interval = int(cfg.get("delta.checkpointInterval") or 0)
                 if interval > 0 and version > 0 and version % interval == 0:
                     # delta.checkpointInterval (round 9): periodic
                     # checkpointing is what keeps replay O(tail) on a
@@ -3802,19 +3811,16 @@ class DeltaTable:
     def _mapping_of(snap: Snapshot):
         return _column_mapping(snap.schema_string, snap.configuration)
 
+    @staticmethod
     def _advance_identity_watermarks(
-        self,
-        actions: list[dict],
-        idents: dict[str, dict],
-        schema_string: str | None,
-        configuration: dict | None,
-        partition_columns: list[str],
+        snap: Snapshot, actions: list[dict], idents: dict[str, dict]
     ) -> None:
         """Advance each identity column's delta.identity.highWaterMark
         past the extreme value this commit's staged files contain — read
         from the add actions' footer STATS (zero extra Spark jobs) — and
         carry it in the commit's metaData action (reusing an existing
         one, e.g. from schema evolution, or appending one)."""
+        schema_string = _committed_metadata(snap, actions).get("schemaString")
         if not schema_string:
             return
         adds_stats = [
@@ -3853,17 +3859,7 @@ class DeltaTable:
             if "metaData" in a:
                 a["metaData"]["schemaString"] = json.dumps(s)
                 return
-        actions.append(
-            {
-                "metaData": {
-                    "id": str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": json.dumps(s),
-                    "partitionColumns": partition_columns,
-                    "configuration": dict(configuration or {}),
-                }
-            }
-        )
+        actions.append(_metadata(snap, schema_string=json.dumps(s)))
 
     def _apply_generated(self, df: DataFrame, schema_string: str | None) -> DataFrame:
         """Generated-column write semantics: columns MISSING from the
@@ -4021,19 +4017,6 @@ class DeltaTable:
         self.fs.rmtree(staging)
         return adds
 
-    def _metadata_action(
-        self, df: DataFrame, partition_by: list[str], configuration: dict | None = None
-    ) -> dict:
-        return {
-            "metaData": {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": df.schema.json(),
-                "partitionColumns": partition_by,
-                "configuration": dict(configuration or {}),
-            }
-        }
-
     @staticmethod
     def _merge_schema_strings(old: str | None, new: str) -> str | None:
         """Additive evolution: old fields in order + genuinely new fields
@@ -4121,10 +4104,9 @@ class DeltaTable:
             }
         read_version: int | None = None  # blind append unless state-dependent
         state_dependent = False
+        prior: Snapshot | None = None  # the state a non-first write reads
         mapping = None  # set for non-first writes to name-mode mapped tables
-        commit_config = configuration  # ICT arming (updated from prior below)
         idents: dict[str, dict] = {}
-        effective_schema: str | None = None  # schema the commit leaves behind
         if txn is not None:
             app_id, txn_version = txn
             if self.last_txn_version(app_id) >= txn_version:
@@ -4169,9 +4151,10 @@ class DeltaTable:
                 actions.append(
                     {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
                 )
-            actions.append(
-                self._metadata_action(df, partition_by, configuration)
-            )
+            actions.append(_metadata(
+                None, schema_string=df.schema.json(),
+                partition_columns=partition_by, configuration=configuration,
+            ))
             if cluster_by:
                 actions.append({"domainMetadata": {
                     "domain": "delta.clustering",
@@ -4219,17 +4202,15 @@ class DeltaTable:
                     )
                 partition_by = list(prior.partition_columns)
             mapping = self._mapping_of(prior)
-            commit_config = prior.configuration
             if overwrite_schema:
                 # prior-schema semantics (generated/default/identity
                 # columns) do not carry into the REPLACED schema; the
                 # frame defines the new table
                 self._validate_constraints(df, prior.configuration)
-                effective_schema = df.schema.json()
-                actions.append(
-                    self._metadata_action(df, partition_by, prior.configuration)
-                )
-                if _schema_has_variant(effective_schema) and "variantType" not in (
+                actions.append(_metadata(
+                    prior, schema_string=df.schema.json(), partition_columns=partition_by
+                ))
+                if _schema_has_variant(df.schema.json()) and "variantType" not in (
                     prior.protocol.get("readerFeatures") or ()
                 ):
                     actions.append(
@@ -4285,7 +4266,6 @@ class DeltaTable:
                 merged = self._merge_schema_strings(
                     prior.schema_string, df.schema.json()
                 )
-                effective_schema = merged or prior.schema_string
                 if merged is not None:
                     config = prior.configuration
                     if mapping:
@@ -4294,12 +4274,9 @@ class DeltaTable:
                         # the staging mapping must include them
                         merged, config = _assign_mapping_metadata(merged, config)
                         mapping = _column_mapping(merged, config)
-                        commit_config = config
-                    md = self._metadata_action(
-                        df, partition_by or prior.partition_columns, config
+                    actions.append(
+                        _metadata(prior, schema_string=merged, configuration=config)
                     )
-                    md["metaData"]["schemaString"] = merged
-                    actions.append(md)
                     if _schema_has_variant(merged) and "variantType" not in (
                         prior.protocol.get("readerFeatures") or ()
                     ):
@@ -4320,27 +4297,23 @@ class DeltaTable:
             actions.extend(self._remove_action(prior, p, now_ms) for p in prior.files)
         elif mode not in ("append", "overwrite"):
             raise ValueError(f"unsupported mode: {mode}")
+        # stats follow the schema and configuration this commit leaves
+        # behind (CREATE-time ones on the creating write)
+        leaves = _committed_metadata(prior, actions)
         actions.extend(
             self._stage_and_move(
                 df,
                 partition_by,
-                # the schema and configuration this commit leaves behind
-                # (CREATE-time ones on the creating write)
-                _stats_index_cols(effective_schema or df.schema.json(), commit_config),
+                _stats_index_cols(leaves.get("schemaString"), leaves.get("configuration")),
                 mapping=mapping,
             )
         )
         if idents:
-            self._advance_identity_watermarks(
-                actions, idents, effective_schema, commit_config, partition_by
-            )
+            self._advance_identity_watermarks(prior, actions, idents)
         while True:
             try:
                 committed = self._commit(
-                    actions,
-                    operation=mode.upper(),
-                    read_version=read_version,
-                    configuration=commit_config,
+                    prior, actions, operation=mode.upper(), read_version=read_version
                 )
                 break
             except DeltaConcurrentCommit:
@@ -4349,7 +4322,7 @@ class DeltaTable:
                 if state_dependent:
                     raise  # stale removes/metadata: caller must recompute
                 read_version = self.versions()[-1]  # txn append: re-race
-        cfg = commit_config or {}
+        cfg = leaves.get("configuration") or {}
         if cfg.get("delta.autoOptimize.autoCompact") == "true":
             # auto-compaction (round 9, delta's autoCompact semantics):
             # streaming ingestion is the #1 small-files producer — when
@@ -4513,7 +4486,7 @@ class DeltaTable:
         # CDC consumers, exactly like the append-evolution path)
         return self._rewrite(
             snap, "MERGE", touched, rewritten, change_rows=change_rows,
-            actions=[self._metadata_update(snap, evolved)] if evolved else [],
+            actions=[_metadata(snap, schema_string=evolved)] if evolved else [],
         )
 
     @staticmethod
@@ -4669,10 +4642,7 @@ class DeltaTable:
             upgrade = self._cdf_protocol_actions(protos[-1] if protos else snap.protocol)
             if upgrade:
                 out = [a for a in out if "protocol" not in a] + upgrade
-        return self._commit(
-            out, operation=operation, read_version=snap.version,
-            configuration=snap.configuration,
-        )
+        return self._commit(snap, out, operation=operation, read_version=snap.version)
 
     def delete_where_dv(
         self,
@@ -5014,19 +4984,10 @@ class DeltaTable:
             self._validate_constraints(
                 self.read(spark), {self.CONSTRAINT_PREFIX + name: expr}
             )
-        config = dict(snap.configuration)
-        config[self.CONSTRAINT_PREFIX + name] = expr
-        md = {
-            "metaData": {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": snap.schema_string,
-                "partitionColumns": snap.partition_columns,
-                "configuration": config,
-            }
-        }
+        config = {**snap.configuration, self.CONSTRAINT_PREFIX + name: expr}
         return self._commit(
-            [md], operation="ADD CONSTRAINT", read_version=snap.version
+            snap, [_metadata(snap, configuration=config)],
+            operation="ADD CONSTRAINT", read_version=snap.version,
         )
 
     def drop_constraint(self, name: str) -> int:
@@ -5035,17 +4996,9 @@ class DeltaTable:
         if key not in snap.configuration:
             raise DeltaProtocolError(f"no such constraint: {name}")
         config = {k: v for k, v in snap.configuration.items() if k != key}
-        md = {
-            "metaData": {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": snap.schema_string,
-                "partitionColumns": snap.partition_columns,
-                "configuration": config,
-            }
-        }
         return self._commit(
-            [md], operation="DROP CONSTRAINT", read_version=snap.version
+            snap, [_metadata(snap, configuration=config)],
+            operation="DROP CONSTRAINT", read_version=snap.version,
         )
 
     # domains whose semantics THIS writer implements and maintains via
@@ -5113,10 +5066,7 @@ class DeltaTable:
             }
         )
         return self._commit(
-            actions,
-            operation="SET DOMAIN METADATA",
-            read_version=snap.version,
-            configuration=snap.configuration,
+            snap, actions, operation="SET DOMAIN METADATA", read_version=snap.version
         )
 
     def remove_domain_metadata(self, domain: str) -> int:
@@ -5134,6 +5084,7 @@ class DeltaTable:
                 f"(live domains: {sorted(snap.domain_metadata) or 'none'})"
             )
         return self._commit(
+            snap,
             [
                 {
                     "domainMetadata": {
@@ -5145,7 +5096,6 @@ class DeltaTable:
             ],
             operation="REMOVE DOMAIN METADATA",
             read_version=snap.version,
-            configuration=snap.configuration,
         )
 
     def restore(self, version: int | None = None, timestamp_ms: int | None = None) -> int:
@@ -5185,18 +5135,13 @@ class DeltaTable:
             target.schema_string != cur.schema_string
             or target.configuration != cur.configuration
         ):
-            actions.append(
-                {
-                    "metaData": {
-                        "id": "restore",
-                        "schemaString": target.schema_string,
-                        "partitionColumns": target.partition_columns,
-                        "format": {"provider": "parquet", "options": {}},
-                        "configuration": dict(target.configuration),
-                    }
-                }
-            )
-        return self._commit(actions, operation="RESTORE", read_version=cur.version)
+            actions.append(_metadata(
+                cur,
+                schema_string=target.schema_string,
+                partition_columns=target.partition_columns,
+                configuration=target.configuration,
+            ))
+        return self._commit(cur, actions, operation="RESTORE", read_version=cur.version)
 
     def clone_from(
         self,
@@ -5233,15 +5178,13 @@ class DeltaTable:
 
         actions: list[dict] = [
             {"protocol": dict(snap.protocol)},
-            {
-                "metaData": {
-                    "id": str(uuid.uuid4()),
-                    "schemaString": snap.schema_string,
-                    "partitionColumns": list(snap.partition_columns),
-                    "format": {"provider": "parquet", "options": {}},
-                    "configuration": dict(snap.configuration),
-                }
-            },
+            # a clone is a new table: a fresh id over the source's metadata
+            _metadata(
+                None,
+                schema_string=snap.schema_string,
+                partition_columns=snap.partition_columns,
+                configuration=snap.configuration,
+            ),
         ]
         # domain state rides along (spec: writers must preserve domains
         # they don't own) — without it a row-tracked clone would restart
@@ -5266,9 +5209,7 @@ class DeltaTable:
                 }
             add["dataChange"] = True
             actions.append({"add": add})
-        return self._commit(
-            actions, operation="CLONE", configuration=snap.configuration
-        )
+        return self._commit(None, actions, operation="CLONE")
 
     def convert_from_parquet(self, spark: SparkSession) -> int:
         """CONVERT TO DELTA parquet.`path` (delta-spark surface): create
@@ -5325,15 +5266,9 @@ class DeltaTable:
             }})
         actions: list[dict] = [
             {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-            {"metaData": {
-                "id": f"meta-{uuid.uuid4().hex[:12]}",
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": df.schema.json(),
-                "partitionColumns": pcols or [],
-                "configuration": {},
-            }},
+            _metadata(None, schema_string=df.schema.json(), partition_columns=pcols or []),
         ] + adds
-        return self._commit(actions, operation="CONVERT")
+        return self._commit(None, actions, operation="CONVERT")
 
     def commit_external_adds(
         self,
@@ -5357,6 +5292,7 @@ class DeltaTable:
         while True:
             actions: list[dict] = []
             read_version: int | None = None
+            prior: Snapshot | None = None
             first = not (self.exists() and self.versions())
             if txn is not None:
                 app_id, txn_version = txn
@@ -5373,17 +5309,9 @@ class DeltaTable:
                 # never blind-append a second protocol/metaData at v1
                 read_version = -1
                 actions.append({"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}})
-                actions.append(
-                    {
-                        "metaData": {
-                            "id": str(uuid.uuid4()),
-                            "format": {"provider": "parquet", "options": {}},
-                            "schemaString": schema_json,
-                            "partitionColumns": partition_by or [],
-                            "configuration": {},
-                        }
-                    }
-                )
+                actions.append(_metadata(
+                    None, schema_string=schema_json, partition_columns=partition_by or []
+                ))
             else:
                 prior = self.snapshot()
                 merged = self._merge_schema_strings(prior.schema_string, schema_json)
@@ -5394,21 +5322,15 @@ class DeltaTable:
                     list(partition_by) if partition_by is not None else prior.partition_columns
                 )
                 if merged is not None or new_pcols != prior.partition_columns:
-                    actions.append(
-                        {
-                            "metaData": {
-                                "id": str(uuid.uuid4()),
-                                "format": {"provider": "parquet", "options": {}},
-                                "schemaString": merged if merged is not None else (prior.schema_string or schema_json),
-                                "partitionColumns": new_pcols,
-                                "configuration": {},
-                            }
-                        }
-                    )
+                    actions.append(_metadata(
+                        prior,
+                        schema_string=merged or prior.schema_string or schema_json,
+                        partition_columns=new_pcols,
+                    ))
                     read_version = prior.version  # don't clobber a racing schema change
             actions.extend({"add": a} for a in adds)
             try:
-                return self._commit(actions, operation, read_version=read_version)
+                return self._commit(prior, actions, operation, read_version=read_version)
             except DeltaConcurrentCommit:
                 if txn is not None and self.last_txn_version(txn[0]) >= txn[1]:
                     return -1  # a racer delivered this exact batch
@@ -5437,47 +5359,19 @@ class DeltaTable:
             meta["delta.columnMapping.id"] = i
             meta["delta.columnMapping.physicalName"] = f["name"]
             f["metadata"] = meta
-        config = dict(snap.configuration or {})
-        config["delta.columnMapping.mode"] = "name"
-        config["delta.columnMapping.maxColumnId"] = str(len(s["fields"]))
-        md = {
-            "metaData": {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": json.dumps(s),
-                "partitionColumns": snap.partition_columns,
-                "configuration": config,
-            }
+        config = {
+            **snap.configuration,
+            "delta.columnMapping.mode": "name",
+            "delta.columnMapping.maxColumnId": str(len(s["fields"])),
         }
         actions = [
             {"protocol": _upgraded_protocol(
                 snap.protocol, ("columnMapping",), ("columnMapping",)
             )},
-            md,
+            _metadata(snap, schema_string=json.dumps(s), configuration=config),
         ]
         return self._commit(
-            actions, operation="UPGRADE", read_version=snap.version
-        )
-
-    def _mapped_metadata_commit(
-        self, snap: Snapshot, schema: dict, operation: str,
-        configuration: dict | None = None,
-    ) -> int:
-        config = dict(
-            snap.configuration if configuration is None else configuration
-        )
-        md = {
-            "metaData": {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": json.dumps(schema),
-                "partitionColumns": snap.partition_columns,
-                "configuration": config,
-            }
-        }
-        return self._commit(
-            [md], operation=operation, read_version=snap.version,
-            configuration=config,
+            snap, actions, operation="UPGRADE", read_version=snap.version
         )
 
     def _guard_column_referenced(self, snap: Snapshot, name: str) -> None:
@@ -5550,7 +5444,7 @@ class DeltaTable:
         # existing file's min/max keeps pruning; without the rewrite
         # the next write would refuse (stats-column validation) or,
         # before round 12, silently go stats-blind on the column.
-        config = dict(snap.configuration or {})
+        config = snap.configuration
         stats_cols = config.get("delta.dataSkippingStatsColumns")
         if stats_cols is not None:
             parts = [c.strip().strip("`") for c in stats_cols.split(",")]
@@ -5558,8 +5452,9 @@ class DeltaTable:
                 config["delta.dataSkippingStatsColumns"] = ",".join(
                     new if p == old else p for p in parts if p
                 )
-        return self._mapped_metadata_commit(
-            snap, s, "RENAME COLUMN", configuration=config
+        return self._commit(
+            snap, [_metadata(snap, schema_string=json.dumps(s), configuration=config)],
+            operation="RENAME COLUMN", read_version=snap.version,
         )
 
     def drop_column(self, name: str) -> int:
@@ -5586,7 +5481,10 @@ class DeltaTable:
         self._guard_column_referenced(snap, name)
         self._guard_stats_cols_referenced(snap, name)
         s["fields"] = [f for f in s["fields"] if f["name"] != name]
-        return self._mapped_metadata_commit(snap, s, "DROP COLUMN")
+        return self._commit(
+            snap, [_metadata(snap, schema_string=json.dumps(s))],
+            operation="DROP COLUMN", read_version=snap.version,
+        )
 
     def compact(
         self,
@@ -5692,10 +5590,9 @@ class DeltaTable:
             actions.append({"protocol": _upgraded_protocol(
                 snap.protocol, (), ("allowColumnDefaults",)
             )})
-        actions.append(self._metadata_update(snap, json.dumps(s)))
+        actions.append(_metadata(snap, schema_string=json.dumps(s)))
         return self._commit(
-            actions, operation="ALTER COLUMN", read_version=snap.version,
-            configuration=snap.configuration,
+            snap, actions, operation="ALTER COLUMN", read_version=snap.version
         )
 
     def drop_column_default(self, column: str) -> int:
@@ -5709,25 +5606,9 @@ class DeltaTable:
             return snap.version  # no default: no-op
         del field["metadata"]["CURRENT_DEFAULT"]
         return self._commit(
-            [self._metadata_update(snap, json.dumps(s))],
+            snap, [_metadata(snap, schema_string=json.dumps(s))],
             operation="ALTER COLUMN", read_version=snap.version,
-            configuration=snap.configuration,
         )
-
-    def _metadata_update(
-        self, snap: Snapshot, schema_string: str, configuration: dict | None = None
-    ) -> dict:
-        """A metaData action carrying the current table identity with a
-        replaced schemaString (and optionally a replaced configuration)."""
-        return {"metaData": {
-            "id": f"meta-{uuid.uuid4().hex[:12]}",
-            "format": {"provider": "parquet", "options": {}},
-            "schemaString": schema_string,
-            "partitionColumns": snap.partition_columns,
-            "configuration": dict(
-                snap.configuration or {} if configuration is None else configuration
-            ),
-        }}
 
     def set_properties(self, props: dict[str, str]) -> int:
         """ALTER TABLE ... SET TBLPROPERTIES: a metadata-only commit
@@ -5740,8 +5621,6 @@ class DeltaTable:
         — the handshake delta-spark performs on ALTER TABLE
         (PROTOCOL.md "In-Commit Timestamps")."""
         snap = self.snapshot()
-        cfg = dict(snap.configuration or {})
-        cfg.update(props)
         actions: list[dict] = []
         if props.get("delta.enableInCommitTimestamps") == "true":
             feats = set(snap.protocol.get("writerFeatures") or ())
@@ -5758,10 +5637,9 @@ class DeltaTable:
                 actions.append({"protocol": _upgraded_protocol(
                     snap.protocol, (), ("checkpointProtection",)
                 )})
-        actions.append(self._metadata_update(snap, snap.schema_string, cfg))
+        actions.append(_metadata(snap, configuration={**snap.configuration, **props}))
         return self._commit(
-            actions, operation="SET TBLPROPERTIES", read_version=snap.version,
-            configuration=snap.configuration,
+            snap, actions, operation="SET TBLPROPERTIES", read_version=snap.version
         )
 
     def alter_cluster_by(self, cluster_by: list[str]) -> int:
@@ -5802,8 +5680,7 @@ class DeltaTable:
         else:
             return snap.version  # CLUSTER BY NONE on unclustered: no-op
         return self._commit(
-            actions, operation="CLUSTER BY", read_version=snap.version,
-            configuration=snap.configuration,
+            snap, actions, operation="CLUSTER BY", read_version=snap.version
         )
 
     def optimize_clustered(

@@ -278,6 +278,7 @@ def test_v2_auto_selected_when_protocol_demands(spark, tmp_path):
     t.write(_events(spark, 6).coalesce(1))
     snap = t.snapshot()
     t._commit(
+        snap,
         [{"protocol": {"minReaderVersion": 3, "minWriterVersion": 7,
                        "readerFeatures": ["v2Checkpoint"],
                        "writerFeatures": ["appendOnly", "invariants", "v2Checkpoint"]}}],
@@ -377,6 +378,7 @@ def test_domain_metadata_preserved_across_checkpoints(spark, tmp_path):
     t.write(_events(spark, 6).coalesce(1))
     snap = t.snapshot()
     t._commit(
+        snap,
         [
             {"domainMetadata": {"domain": "delta.clustering",
                                 "configuration": "{\"cols\":[\"event_id\"]}",
@@ -390,6 +392,7 @@ def test_domain_metadata_preserved_across_checkpoints(spark, tmp_path):
     assert set(t.snapshot().domain_metadata) == {"delta.clustering", "app.custom"}
     # removal drops the domain
     t._commit(
+        t.snapshot(),
         [{"domainMetadata": {"domain": "app.custom", "configuration": "",
                              "removed": True}}],
         operation="SET DOMAIN",

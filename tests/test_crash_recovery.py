@@ -191,6 +191,7 @@ def test_occ_concurrent_committers_no_lost_commit():
             {"name": "x", "type": "long", "nullable": True, "metadata": {}}]}
     )
     DeltaTable(root, fs=fs)._commit(
+        None,
         [
             {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
             {"metaData": {"id": "m0", "format": {"provider": "parquet", "options": {}},
@@ -207,6 +208,7 @@ def test_occ_concurrent_committers_no_lost_commit():
         for seq in range(each):
             try:
                 t._commit(
+                    None,
                     [
                         {"txn": {"appId": f"c{cid}", "version": seq}},
                         {"add": {"path": f"part-{cid}-{seq}.parquet",
@@ -259,6 +261,7 @@ def test_commit_stall_detection_still_bounded():
     )
     t = DeltaTable(root, fs=fs)
     t._commit(
+        None,
         [
             {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
             {"metaData": {"id": "m0",
@@ -279,6 +282,7 @@ def test_commit_stall_detection_still_bounded():
     try:
         with pytest.raises(DeltaProtocolError, match="stalled"):
             t._commit(
+                t.snapshot(),
                 [{"add": {"path": "p.parquet", "partitionValues": {},
                           "size": 1, "modificationTime": 1,
                           "dataChange": True}}],

@@ -7,6 +7,7 @@ import pytest
 from pulsar_io_delta_spark.sources.delta_log import (
     DeltaProtocolError,
     DeltaTable,
+    _metadata,
 )
 
 
@@ -142,7 +143,8 @@ def test_generated_column_partition_pruning(spark, tmp_path):
                 "CAST(ts AS DATE)"
             )
     t._commit(
-        [t._metadata_update(snap, json.dumps(s))],
+        snap,
+        [_metadata(snap, schema_string=json.dumps(s))],
         operation="UPGRADE", read_version=snap.version,
     )
     snap = t.snapshot()
@@ -274,7 +276,8 @@ def test_generated_pruning_skips_tz_aware_values(spark, tmp_path):
                 "CAST(ts AS DATE)"
             )
     t._commit(
-        [t._metadata_update(snap, json.dumps(s))],
+        snap,
+        [_metadata(snap, schema_string=json.dumps(s))],
         operation="UPGRADE", read_version=snap.version,
     )
     snap = t.snapshot()
@@ -293,7 +296,8 @@ def test_generated_pruning_skips_tz_aware_values(spark, tmp_path):
         if f["name"] == "event_date":
             f["metadata"]["delta.generationExpression"] = "YEAR(ts)"
     t._commit(
-        [t._metadata_update(snap, json.dumps(s))],
+        snap,
+        [_metadata(snap, schema_string=json.dumps(s))],
         operation="UPGRADE", read_version=snap.version,
     )
     snap = t.snapshot()

@@ -203,6 +203,53 @@ def test_decimal_and_timestamp_round_trip(spark, tmp_path):
     assert _rows(DeltaTable(sink).read(spark), cols) == want
 
 
+_SINK_TABLES = {
+    "evolve": {"delta.enableChangeDataFeed": "true", "delta.constraints.pos": "value >= 0"},
+    "ict": {"delta.enableInCommitTimestamps": "true"},
+    "row_tracking": {"delta.enableRowTracking": "true"},
+}
+
+
+@pytest.mark.parametrize("kind", list(_SINK_TABLES))
+def test_sink_commit_inherits_table_metadata(spark, tmp_path, kind):
+    """A pulsar_delta_cdc batch write commits under the table's own
+    metadata: an evolving append keeps the change-feed flag and CHECK
+    constraints, an in-commit-timestamp table gets its monotonic
+    ``inCommitTimestamp``, and a row-tracked table gets ``baseRowId``
+    ranges that advance the high-water mark."""
+    path = str(tmp_path / "t")
+    t = DeltaTable(path)
+    rows = lambda lo, hi: spark.createDataFrame(  # noqa: E731
+        [(i, "click", float(i)) for i in range(lo, hi)],
+        "event_id long, event_type string, value double",
+    )
+    t.write(rows(0, 4).coalesce(1), configuration=_SINK_TABLES[kind])
+    register_delta_cdc(spark)
+    df = rows(4, 7).coalesce(1)
+    if kind == "evolve":
+        df = df.withColumn("tag", F.lit("x"))
+    df.write.format("pulsar_delta_cdc").option("tablePath", path).mode("append").save()
+
+    snap = t.snapshot()
+    assert snap.version == 1
+    assert snap.configuration.items() >= t.snapshot(0).configuration.items()
+    actions = t.actions(1)
+    (info,) = [a["commitInfo"] for a in actions if "commitInfo" in a]
+    adds = [a["add"] for a in actions if "add" in a]
+    if kind == "evolve":
+        assert "tag" in snap.schema_string
+    if kind == "ict":
+        assert info["inCommitTimestamp"] > t.commit_timestamp_ms(0)
+    if kind == "row_tracking":
+        assert [a["baseRowId"] for a in adds] == [4]
+        assert t.snapshot().domain_metadata["delta.rowTracking"]["configuration"] == (
+            '{"rowIdHighWaterMark": 6}'
+        )
+        ids = sorted(r.row_id for r in t.read_with_row_ids(spark).collect())
+        assert ids == list(range(7))
+    assert sorted(r.event_id for r in t.read(spark).collect()) == list(range(7))
+
+
 def test_append_refuses_null_into_not_null_column(spark, tmp_path):
     """A column the log declares non-nullable refuses a null before
     commit (Delta's NOT NULL invariant), so the source can still read

@@ -513,7 +513,7 @@ def test_append_only_table_refuses_data_changing_removes(spark, tmp_path):
                        "partitionColumns": [],
                        "format": {"provider": "parquet", "options": {}},
                        "configuration": {"delta.appendOnly": "true"}}}
-    t2._commit([md], operation="SET TBLPROPERTIES", read_version=snap.version)
+    t2._commit(snap, [md], operation="SET TBLPROPERTIES", read_version=snap.version)
     with pytest.raises(DeltaProtocolError, match="appendOnly"):
         t2.delete_where(spark, "event_id = 0")
     with pytest.raises(DeltaProtocolError, match="appendOnly"):

@@ -14,6 +14,7 @@ from pulsar_io_delta_spark.sources.delta_log import (
     DeltaConcurrentCommit,
     DeltaProtocolError,
     DeltaTable,
+    _metadata,
     delta_sink,
 )
 
@@ -895,6 +896,7 @@ def test_check_constraints_writer_feature_table_enforced(spark, tmp_path):
     )
     snap = t.snapshot()
     t._commit(
+        snap,
         [{"protocol": {"minReaderVersion": 1, "minWriterVersion": 7,
                        "writerFeatures": ["appendOnly", "invariants",
                                           "checkConstraints"]}}],
@@ -958,7 +960,7 @@ def _arm_generated(t, spark):
     proto = {"protocol": {"minReaderVersion": 1, "minWriterVersion": 7,
                           "writerFeatures": ["appendOnly", "invariants",
                                              "generatedColumns"]}}
-    t._commit([proto, md], operation="UPGRADE", read_version=snap.version)
+    t._commit(snap, [proto, md], operation="UPGRADE", read_version=snap.version)
 
 
 def test_generated_columns_computed_validated_recomputed(spark, tmp_path):
@@ -1007,14 +1009,11 @@ def _arm_identity(t, allow=False, start=100, step=10):
                       "delta.identity.step": step,
                       "delta.identity.allowExplicitInsert": allow}}
     )
-    md = {"metaData": {"id": "ident", "schemaString": json.dumps(s),
-                       "partitionColumns": [],
-                       "format": {"provider": "parquet", "options": {}},
-                       "configuration": dict(snap.configuration or {})}}
+    md = _metadata(snap, schema_string=json.dumps(s))
     proto = {"protocol": {"minReaderVersion": 1, "minWriterVersion": 7,
                           "writerFeatures": ["appendOnly", "invariants",
                                              "identityColumns"]}}
-    t._commit([proto, md], operation="UPGRADE", read_version=snap.version)
+    t._commit(snap, [proto, md], operation="UPGRADE", read_version=snap.version)
 
 
 def test_identity_columns_assign_unique_lattice_values(spark, tmp_path):
@@ -1141,6 +1140,7 @@ def test_type_widening_reads_narrow_files_as_wide(spark, tmp_path):
         "delta.typeChanges": [{"fromType": "integer", "toType": "long"}]
     }
     t._commit(
+        snap,
         [
             {"protocol": {"minReaderVersion": 3, "minWriterVersion": 7,
                           "readerFeatures": ["typeWidening"],
@@ -1522,6 +1522,9 @@ def test_restore_to_timestamp_ict(spark, tmp_path):
     v = t.restore(timestamp_ms=ict_v1)
     assert v == 3
     assert t.read(spark).count() == 8  # v1 state: 3 + 5 rows
+    # the RESTORE commit itself carries the monotonic commit clock
+    (info,) = [a["commitInfo"] for a in t.actions(3) if "commitInfo" in a]
+    assert info["inCommitTimestamp"] > t.commit_timestamp_ms(2)
     import pytest
 
     with pytest.raises(DeltaProtocolError, match="exactly one"):
@@ -2151,3 +2154,160 @@ def test_one_rewrite_path(spark, tmp_path, monkeypatch, op, kind):
         assert {k: after[k] for k in after if k in ids} == {
             k: ids[k] for k in after if k in ids
         }
+
+
+def _evolved(spark, n=3):
+    return events_df(spark, range(100, 100 + n)).withColumn("tag", F.lit("x"))
+
+
+def _convert(spark, t, tmp_path):
+    path = str(tmp_path / "pq")
+    events_df(spark, range(4)).coalesce(1).write.parquet(path)
+    out = DeltaTable(path)
+    out.convert_from_parquet(spark)
+    return out
+
+
+def _clone(spark, t, tmp_path):
+    out = DeltaTable(str(tmp_path / "clone"))
+    out.clone_from(t)
+    return out
+
+
+def _mapped(op):
+    def run(spark, t, tmp_path):
+        t.enable_column_mapping()
+        op(t)
+    return run
+
+
+# every operation that commits a metaData action, each run on a table
+# written once at v0; clone and convert create a new table
+_METADATA_OPS = {
+    "set_constraint": lambda spark, t, _p: t.set_constraint(spark, "pos", "value >= 0"),
+    "drop_constraint": lambda spark, t, _p: (
+        t.set_constraint(spark, "pos", "value >= 0"), t.drop_constraint("pos")
+    ),
+    "enable_row_tracking": lambda spark, t, _p: t.enable_row_tracking(spark),
+    "enable_column_mapping": lambda spark, t, _p: t.enable_column_mapping(),
+    "identity_watermark": lambda spark, t, _p: (
+        _arm_identity(t), t.write(events_df(spark, range(3)))
+    ),
+    "write_evolve": lambda spark, t, _p: t.write(_evolved(spark)),
+    "overwrite_schema": lambda spark, t, _p: t.write(
+        _evolved(spark).drop("value"), mode="overwrite", overwrite_schema=True
+    ),
+    "merge_evolve": lambda spark, t, _p: t.merge_upsert(
+        spark, _evolved(spark), ["event_id"], schema_evolution=True
+    ),
+    "restore": lambda spark, t, _p: (
+        t.set_properties({"delta.appendOnly": "false"}), t.restore(version=0)
+    ),
+    "commit_external_adds": lambda spark, t, _p: t.commit_external_adds(
+        [], "WRITE", schema_json=_evolved(spark).schema.json()
+    ),
+    "rename_column": _mapped(lambda t: t.rename_column("value", "amount")),
+    "drop_column": _mapped(lambda t: t.drop_column("value")),
+    "set_column_default": lambda spark, t, _p: t.set_column_default("event_type", "'click'"),
+    "drop_column_default": lambda spark, t, _p: (
+        t.set_column_default("event_type", "'click'"), t.drop_column_default("event_type")
+    ),
+    "set_properties": lambda spark, t, _p: t.set_properties({"delta.appendOnly": "false"}),
+    "checkpoint": lambda spark, t, _p: (t.checkpoint(), t.expire_log()),
+    "checkpoint_v2": lambda spark, t, _p: (t.checkpoint(v2=True), t.expire_log()),
+    "clone": _clone,
+    "convert": _convert,
+}
+
+
+@pytest.mark.parametrize("op", list(_METADATA_OPS))
+def test_table_id_stable(spark, tmp_path, op):
+    """A table keeps its v0 metaData id through every metadata commit,
+    a checkpoint in either layout and the log expiry after it, and the
+    next metadata commit; clone and convert create a table with a fresh
+    id that then stays put the same way."""
+    import uuid
+
+    t = DeltaTable(str(tmp_path / "t"))
+    t.write(events_df(spark, range(6)).coalesce(1))
+    v0_id = t.snapshot().metadata["id"]
+    made = _METADATA_OPS[op](spark, t, tmp_path)
+    out = made if isinstance(made, DeltaTable) else t
+    out.set_properties({"delta.checkpointInterval": "100"})
+    ids = {out.snapshot().metadata["id"]} | {
+        a["metaData"]["id"]
+        for v in out.json_versions()
+        for a in out.actions(v)
+        if "metaData" in a
+    }
+    assert len(ids) == 1, ids
+    (table_id,) = ids
+    assert (table_id != v0_id) == (op in ("clone", "convert"))
+    uuid.UUID(table_id)
+    assert DeltaTable(out.path).snapshot().metadata["id"] == table_id
+
+
+def test_one_metadata_builder():
+    """delta_log.py builds a "metaData" dict literal in one function,
+    ``_metadata``, and ``_commit`` takes the snapshot its actions were
+    built against instead of a configuration to arm."""
+    import ast
+    import inspect
+
+    from pulsar_io_delta_spark.sources import delta_log
+
+    builders = set()
+    for fn in ast.walk(ast.parse(inspect.getsource(delta_log))):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        for n in ast.walk(fn):
+            if isinstance(n, ast.Dict) and any(
+                isinstance(k, ast.Constant) and k.value == "metaData" for k in n.keys
+            ):
+                builders.add(fn.name)
+    assert builders == {"_metadata"}
+    params = inspect.signature(DeltaTable._commit).parameters
+    assert "configuration" not in params
+    assert list(params)[:2] == ["self", "snap"]
+
+
+def test_external_adds_read_state_once(spark, tmp_path, monkeypatch):
+    """commit_external_adds reads the table state once before it
+    commits and once after, for the version checksum. On a row-tracked
+    table the row-id high-water mark comes from that first read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = DeltaTable(str(tmp_path / "t"))
+    t.write(
+        events_df(spark, range(4)).coalesce(1),
+        configuration={"delta.enableRowTracking": "true"},
+    )
+    schema_json = events_df(spark, []).schema.json()
+    calls: list[str] = []
+    snapshot, commit = t.snapshot, t._commit
+
+    def counted_snapshot(*args, **kwargs):
+        calls.append("snapshot")
+        return snapshot(*args, **kwargs)
+
+    def counted_commit(*args, **kwargs):
+        calls.append("commit")
+        return commit(*args, **kwargs)
+
+    monkeypatch.setattr(t, "snapshot", counted_snapshot)
+    monkeypatch.setattr(t, "_commit", counted_commit)
+    for k in range(2):
+        rel = f"part-ext-{k}.parquet"
+        fp = os.path.join(t.path, rel)
+        pq.write_table(
+            pa.table({"event_id": [10 + k], "event_type": ["x"], "value": [1.0]}), fp
+        )
+        add = {"path": rel, "partitionValues": {}, "size": os.path.getsize(fp),
+               "modificationTime": 1, "dataChange": True,
+               "stats": '{"numRecords": 1}'}
+        calls.clear()
+        v = t.commit_external_adds([add], "WRITE", schema_json=schema_json)
+        assert calls == ["snapshot", "commit", "snapshot"]
+        (logged,) = [a["add"] for a in t.actions(v) if "add" in a]
+        assert logged["baseRowId"] == 4 + k

@@ -404,3 +404,26 @@ def test_one_superstep_loop():
                 outside.append(f"{path.name}:{node.lineno} {kind}")
     assert outside == []
     assert inside == {"mkdtemp", "parquet write"}
+
+
+def test_barrier_runs_one_job(spark, tmp_path):
+    """A barrier costs its write job alone: the table is read back with
+    the written frame's schema instead of a schema-inference job, and
+    the observed count rides that same job."""
+    sc = spark.sparkContext
+    steps = graph.Supersteps(spark, str(tmp_path))
+    df = spark.range(40).select((F.col("id") % 7).alias("id"), F.col("id").alias("comp"))
+    try:
+        for i, run in enumerate((
+            lambda: steps.barrier(df, "plain"),
+            lambda: steps.counted(df, "counted", F.col("id") == 0)[0],
+        )):
+            group = f"barrier-{i}"
+            sc.setJobGroup(group, "one barrier")
+            out = run()
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+            sc.setJobGroup(f"read-{i}", "read back")
+            assert sorted(map(tuple, out.collect())) == sorted(map(tuple, df.collect()))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        steps.close()

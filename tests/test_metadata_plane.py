@@ -85,6 +85,7 @@ def test_vector_scalar_parity_after_checkpoint_and_tail(spark, tmp_path):
     new_add = dict(old_add)
     new_add["stats"] = json.dumps(shifted)
     t._commit(
+        snap0,
         [
             {"remove": {"path": victim, "dataChange": True}},
             {"add": {**new_add, "dataChange": True}},
@@ -98,6 +99,7 @@ def test_vector_scalar_parity_after_checkpoint_and_tail(spark, tmp_path):
     assert t.prune_files(snap, [("event_id", ">", 8000)]) == [victim]
     # and a plain remove actually drops the file from every view
     t._commit(
+        snap,
         [{"remove": {"path": snap.files[1], "dataChange": True}}],
         "MANUAL",
     )
@@ -135,6 +137,7 @@ def test_vector_scalar_parity_missing_stats(spark, tmp_path):
     stripped = dict(snap0.adds[victim])
     stripped.pop("stats", None)
     t._commit(
+        snap0,
         [
             {"remove": {"path": victim, "dataChange": True}},
             {"add": {**stripped, "dataChange": True}},

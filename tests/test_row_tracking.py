@@ -95,10 +95,10 @@ def test_lost_race_restamps_instead_of_colliding(spark, tbl):
     fresh["path"] = adds[0]["path"]  # same file re-added (shape only)
     with pytest.raises(DeltaConcurrentCommit):
         tbl._commit(
+            tbl.snapshot(),
             [{"add": dict(fresh)}],
             operation="APPEND",
             read_version=tbl.snapshot().version + 5,  # guaranteed stale
-            configuration=RT,
         )
     assert "baseRowId" not in fresh
 

@@ -299,6 +299,7 @@ def occ_axis(n_committers: int = 16, commits_each: int = 8) -> None:
             {"name": "x", "type": "long", "nullable": True, "metadata": {}}]}
     )
     DeltaTable(root, fs=fs)._commit(
+        None,
         [
             {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
             {"metaData": {"id": "m0", "format": {"provider": "parquet", "options": {}},
@@ -326,6 +327,7 @@ def occ_axis(n_committers: int = 16, commits_each: int = 8) -> None:
             t0 = time.time()
             try:
                 t._commit(
+                    None,  # blind append: the table has no configuration to arm
                     [
                         {"txn": {"appId": f"c{cid}", "version": seq}},
                         {"add": {"path": f"part-{cid}-{seq}.parquet",
