@@ -188,7 +188,9 @@ class DeltaCdcConnector:
         frm = cursor.snapshot_version + (0 if cursor.state == FULL_COPY else 1)
         if latest < frm:
             return None, cursor
-        df = self.table.cdc(spark, start_version=frm)
+        # bounded at the version the cursor advances to: a commit racing
+        # in after latest_version() belongs to the next poll, not both
+        df = self.table.cdc(spark, start_version=frm, end_version=latest)
         return df, Checkpoint(state=INCREMENTAL_COPY, snapshot_version=latest)
 
     def run(self, spark: SparkSession, sink, max_polls: int = 1) -> Checkpoint:

@@ -561,9 +561,10 @@ def _distinct_grams(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFr
     counts, and both sides of the downstream gram equi-joins carry
     8-byte longs (guide §2.3, narrower types). Downstream counts and
     intersections are identical unless two distinct n-grams of the
-    corpus collide under xxhash64 (~|distinct grams|²/2^65 — the same
-    accepted risk q_dedup_substr documents, and every oracle gate
-    verifies hash-exact output). The previous shape
+    corpus collide under xxhash64 (~|distinct grams|²/2^65, a ±1 count
+    error; the bound and why it is accepted: PERF.md "xxhash64 gram
+    keys: the collision contract"; every oracle gate verifies
+    hash-exact output). The previous shape
     (``explode(char_ngrams_col(...))``) built a per-row gram-string
     array through a higher-order ``transform`` lambda, which always
     evaluates on the INTERPRETED expression path — the

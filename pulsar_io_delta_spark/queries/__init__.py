@@ -10,8 +10,9 @@ round, CORRECTNESS_r17 (the superstep loop, the columnar egress and
 murmur3 routing, the change-log walk and its partition-value form,
 the in-commit-timestamp readers, every partitioned write through
 ``_stage_and_move``, every file rewrite through ``DeltaTable._rewrite``,
-and every metadata commit through the one ``metaData`` builder), so
-each gets a fresh gate row. The remaining
+every metadata commit through ``delta_log._metadata``, and one
+batch and one stream read of a fixture schema through
+``tables.parquet_schema``), so each gets a fresh gate row. The remaining
 slots go to the queries whose latest gate row is oldest (round 12),
 fewest rows first. Next round, rebuild the list the same way rather
 than appending to it.
@@ -85,9 +86,10 @@ WINDOW = [
     "q_column_defaults",
     "q_identity_columns",
     "q_schema_widening",
+    # fixture schemas from the process-level map, tables.parquet_schema
+    "q_sql_tpch_q18",
+    "q_stream_late_data",
     # latest gate row oldest (round 12)
-    "q_column_mapping_read",
-    "q_column_rename_drop",
     "q_html_extract",
     "q_multimodal_audio_probe",
 ]

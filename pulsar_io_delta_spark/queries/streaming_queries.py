@@ -25,6 +25,7 @@ from pulsar_io_delta_spark.streaming.runner import (
     run_to_memory,
     sized_shuffle,
 )
+from pulsar_io_delta_spark.tables import parquet_schema
 
 
 @register(
@@ -238,9 +239,8 @@ def q_stream_late_data(spark, sf_dir):
     the reference enforces by refusing out-of-order checkpoints; the
     Spark-native equivalent is watermark-bounded state."""
     d = late_split_stream_dir(spark, sf_dir)
-    batch = spark.read.parquet(d)
     s = (
-        spark.readStream.schema(batch.schema)
+        spark.readStream.schema(parquet_schema(spark, d))
         .option("maxFilesPerTrigger", 1)
         .parquet(d)
     )

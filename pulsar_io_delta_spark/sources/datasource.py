@@ -613,12 +613,23 @@ def _rows_to_adds(iterator, schema: StructType, table_path: str, partition_by: l
 
 class _DeltaWriterBase:
     def __init__(self, schema: StructType, options):
+        from pulsar_io_delta_spark.sources.delta_log import DeltaProtocolError, DeltaTable
+
         self.schema_ = schema
         self.table_path = options["tablePath"]
-        self.partition_by = [
-            c for c in (options.get("partitionBy") or "").split(",") if c
-        ]
         self.app_id = options.get("appId", "pulsar_delta_cdc_sink")
+        explicit = [c for c in (options.get("partitionBy") or "").split(",") if c]
+        # partitioning is a TABLE property, as in write(): an append into
+        # an existing table stages by its columns and commits None (keep
+        # them); only the creating commit takes partitionBy
+        t = DeltaTable(self.table_path)
+        existing = t.snapshot().partition_columns if t.exists() and t.versions() else None
+        if existing is not None and explicit and explicit != existing:
+            raise DeltaProtocolError(
+                f"partitionBy {explicit} conflicts with the table's partitioning {existing}"
+            )
+        self.partition_by = explicit if existing is None else list(existing)
+        self.commit_partition_by = explicit if existing is None else None
 
     def write(self, iterator):
         return _rows_to_adds(iterator, self.schema_, self.table_path, self.partition_by)
@@ -631,7 +642,7 @@ class _DeltaWriterBase:
             adds,
             operation="STREAMING UPDATE" if txn else "WRITE",
             schema_json=self.schema_.json(),
-            partition_by=self.partition_by,
+            partition_by=self.commit_partition_by,
             txn=txn,
         )
 

@@ -3356,12 +3356,15 @@ class DeltaTable:
                 )
         return ChangeLog(files, epochs)
 
-    def cdc(self, spark: SparkSession, start_version: int = 0) -> DataFrame:
-        """Change-data rows from the log tail: op 'c' for rows of added
-        files, 'r' for rows of removed (pre-vacuum) files, with the
+    def cdc(
+        self, spark: SparkSession, start_version: int = 0, end_version: int | None = None
+    ) -> DataFrame:
+        """Change-data rows of versions ``[start_version, end_version]``
+        (the log head when ``end_version`` is None): op 'c' for rows of
+        added files, 'r' for rows of removed (pre-vacuum) files, with the
         partition_value string, each file's own event time ``ts``, and
         the commit version (``change_log`` decides all three)."""
-        out = self._scan_changes(spark, self.change_log(start_version))
+        out = self._scan_changes(spark, self.change_log(start_version, end_version))
         return out.withColumn("ts", F.timestamp_millis(F.col("_ts_ms"))).drop(
             "_ts_ms", "_change_type"
         )

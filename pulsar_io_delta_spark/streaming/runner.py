@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pulsar_io_delta_spark.session import pin_session
-from pulsar_io_delta_spark.tables import normalize_events_ts
+from pulsar_io_delta_spark.tables import normalize_events_ts, parquet_schema
 
 
 def stream_dir_for(sf_dir: str, name: str) -> str:
@@ -60,10 +60,11 @@ def events_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: int |
     that hard-coding one silently corrupts data when the driver
     regenerates the fixture with a different physical encoding (a
     forced ``ts: long`` read µs values, ``div 1000`` landed every
-    window in January 1970 — wrong answers with no error). So: read
-    the parquet footer once (batch, metadata-only) to get the *actual*
-    schema, stream with that, and reuse the batch loader's type
-    dispatch (:func:`normalize_events_ts`). A one-row probe asserts the
+    window in January 1970 — wrong answers with no error). So: take
+    the *actual* schema from the footer (:func:`parquet_schema`, once
+    per process while the fixture is unchanged), stream with that, and
+    reuse the batch loader's type dispatch
+    (:func:`normalize_events_ts`). A one-row probe asserts the
     normalized timestamps are in a plausible range so any future
     fixture drift fails loudly instead of silently; the probe result is
     cached per directory+schema (several declared streaming queries
@@ -72,14 +73,15 @@ def events_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: int |
     """
     pin_session(spark)
     d = stream_dir_for(sf_dir, "events")
-    batch = spark.read.parquet(d)  # footer-only: schema inference, no scan
-    reader = spark.readStream.schema(batch.schema)
+    schema = parquet_schema(spark, d)
+    reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     raw = reader.parquet(d)
     out = normalize_events_ts(raw)
-    key = (d, batch.schema["ts"].dataType.simpleString())
+    key = (d, schema["ts"].dataType.simpleString())
     if key not in _PROBED_OK:
+        batch = spark.read.schema(schema).parquet(d)
         probe = normalize_events_ts(batch).select(F.year("ts").alias("y")).first()
         if probe is not None and not (2000 <= probe.y <= 2100):
             raise ValueError(

@@ -20,13 +20,33 @@ one encoding:
 
 Any other type fails loudly: silent mis-conversion here produced
 wrong-answer streams in round 4 (VERDICT.md "What's wrong" #2).
+
+Schemas are resolved once per process, not once per read:
+:func:`parquet_schema` is the package's one schema-inference path for
+fixture reads (the batch loader and the file streams). A bare
+``spark.read.parquet(path)`` runs a Spark job to infer the schema on
+every call; :func:`table` instead reads with ``.schema(...)`` from a
+process-level map keyed on the path, the files' sizes and mtimes, and
+the session confs that steer inference, so a rewritten fixture or a
+flipped conf is inferred again. Only schemas are kept, never frames
+or data. A catalog plays this role in a real deployment.
 """
 
 from __future__ import annotations
 
+import os
+import re
+import threading
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType, LongType, TimestampNTZType, TimestampType
+from pyspark.sql.types import (
+    DataType,
+    LongType,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 from pulsar_io_delta_spark.session import pin_session
 
@@ -92,9 +112,72 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return normalize_ts_columns(df, ("ts",))
 
 
+# Session confs that change what Spark infers from the same files.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+# A process reads ten fixture tables per scale directory, but a long
+# run (a bench sweep, a test session's tmp dirs) also reads many
+# generated paths, and every in-place rewrite leaves its old key
+# behind: the bound keeps that from growing without end. Oldest-first
+# eviction; a StructType is a few KB.
+_SCHEMA_CACHE_MAX = 256
+_schema_lock = threading.Lock()
+_schemas: dict[tuple, StructType] = {}
+
+
+def _listing(path: str) -> tuple | None:
+    """``(relpath, size, st_mtime_ns)`` of the file at *path* or of every
+    file under it (symlinks followed, so a link dir tracks its target);
+    ``None`` when the path does not exist (Spark reports that)."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    if not os.path.isdir(path):
+        return None
+    out = []
+    for root, dirs, files in os.walk(path, followlinks=True):
+        dirs.sort()
+        for f in sorted(files):
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """Spark's own inferred schema of the parquet file or directory at
+    *path*, memoized per process (see the module docstring). A miss
+    calls ``spark.read.parquet(path).schema``, so types, nullability
+    and field metadata are exactly what Spark infers; a path with a
+    URI scheme is never cached."""
+    listing = None if re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", path) else _listing(path)
+    if listing is None:
+        return spark.read.parquet(path).schema
+    key = (
+        os.path.abspath(path),
+        listing,
+        tuple(spark.conf.get(c) for c in _INFERENCE_CONFS),
+    )
+    with _schema_lock:
+        hit = _schemas.get(key)
+    if hit is not None:
+        return hit
+    schema = spark.read.parquet(path).schema
+    with _schema_lock:
+        if key not in _schemas and len(_schemas) >= _SCHEMA_CACHE_MAX:
+            del _schemas[next(iter(_schemas))]
+        return _schemas.setdefault(key, schema)
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     pin_session(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     cols = TS_COLUMNS.get(name)
     if cols:
         df = normalize_ts_columns(df, cols)

@@ -118,6 +118,35 @@ def test_connector_plans_without_spark_jobs(spark, populated):
         assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
+def test_poll_delivers_racing_commit_once(spark, populated, monkeypatch):
+    """A commit that lands between ``poll``'s read of the head and its
+    change read belongs to the next poll only: across two polls every
+    id is delivered exactly once."""
+    t = DeltaTable(populated)
+    rows = lambda lo: spark.createDataFrame(  # noqa: E731
+        [(i, "click", float(i)) for i in range(lo, lo + 3)],
+        "event_id long, event_type string, value double",
+    )
+    t.write(rows(100), partition_by=["event_type"])  # v2
+    conn = DeltaCdcConnector(ConnectorConfig.load({"tablePath": populated, "startingVersion": 1}))
+    latest = DeltaTable.latest_version
+
+    def racing(self):
+        v = latest(self)
+        monkeypatch.setattr(DeltaTable, "latest_version", latest)
+        DeltaTable(populated).write(rows(200), partition_by=["event_type"])  # v3
+        return v
+
+    monkeypatch.setattr(DeltaTable, "latest_version", racing)
+    ids = []
+    cursor = Checkpoint(INCREMENTAL_COPY, 1)
+    for _ in range(2):
+        df, cursor = conn.poll(spark, cursor)
+        ids += [r.event_id for r in df.select("event_id").collect()]
+    assert cursor.snapshot_version == 3
+    assert sorted(ids) == [100, 101, 102, 200, 201, 202]
+
+
 def test_incremental_only(spark, populated):
     cfg = ConnectorConfig.load({"tablePath": populated, "startingVersion": 1})
     conn = DeltaCdcConnector(cfg)

@@ -250,6 +250,30 @@ def test_sink_commit_inherits_table_metadata(spark, tmp_path, kind):
     assert sorted(r.event_id for r in t.read(spark).collect()) == list(range(7))
 
 
+def test_sink_append_keeps_table_partitioning(spark, tmp_path):
+    """A pulsar_delta_cdc append without ``partitionBy`` into a
+    partitioned table stages hive directories by the table's columns
+    and keeps them; a conflicting ``partitionBy`` is refused, as
+    ``write()`` refuses it."""
+    path = str(tmp_path / "t")
+    t = DeltaTable(path)
+    t.write(spark.createDataFrame([(1, "a"), (2, "b")], "id long, g string"), partition_by=["g"])
+    register_delta_cdc(spark)
+    new = spark.createDataFrame([(3, "a")], "id long, g string").coalesce(1)
+    new.write.format("pulsar_delta_cdc").option("tablePath", path).mode("append").save()
+
+    assert t.snapshot().partition_columns == ["g"]
+    (add,) = [a["add"] for a in t.actions(1) if "add" in a]
+    assert add["partitionValues"] == {"g": "a"} and add["path"].startswith("g=a/")
+    assert sorted(tuple(r) for r in t.read(spark).collect()) == [(1, "a"), (2, "b"), (3, "a")]
+    with pytest.raises(Exception, match="conflicts with the table's partitioning"):
+        (
+            new.write.format("pulsar_delta_cdc").option("tablePath", path)
+            .option("partitionBy", "id").mode("append").save()
+        )
+    assert t.latest_version() == 1
+
+
 def test_append_refuses_null_into_not_null_column(spark, tmp_path):
     """A column the log declares non-nullable refuses a null before
     commit (Delta's NOT NULL invariant), so the source can still read
