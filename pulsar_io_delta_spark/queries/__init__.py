@@ -10,9 +10,11 @@ round, CORRECTNESS_r17 (the superstep loop, the columnar egress and
 murmur3 routing, the change-log walk and its partition-value form,
 the in-commit-timestamp readers, every partitioned write through
 ``_stage_and_move``, every file rewrite through ``DeltaTable._rewrite``,
-every metadata commit through ``delta_log._metadata``, and one
-batch and one stream read of a fixture schema through
-``tables.parquet_schema``), so each gets a fresh gate row. The remaining
+every metadata commit through ``delta_log._metadata``, one batch and
+one stream read of a fixture schema through ``tables.parquet_schema``,
+and the appends that now plan and commit through
+``DeltaTable._plan_append`` / ``_commit_append``), so each gets a fresh
+gate row. The remaining
 slots go to the queries whose latest gate row is oldest (round 12),
 fewest rows first. Next round, rebuild the list the same way rather
 than appending to it.
@@ -34,6 +36,13 @@ from pulsar_io_delta_spark.registry import reorder
 
 WINDOW = [
     "q_stream_tumbling",  # canary
+    # appends through DeltaTable._plan_append and _commit_append:
+    # table rules, mapped names, generated, identity, schema evolution
+    "q_constraints_lifecycle",
+    "q_column_mapping_write",
+    "q_generated_columns",
+    "q_identity_columns",
+    "q_cdc_schema_evolution",
     # superstep loop: connected components, BFS, BPE training
     "q_dedup_cc",
     "q_dedup_keep_best",
@@ -56,11 +65,9 @@ WINDOW = [
     "q_stream_cdf",
     "q_stream_rate_limit",
     "q_stream_rate_limit_drain",
-    "q_cdc_schema_evolution",
     # partition values in the protocol's form (hive_value) and ICT reads
     "q_convert_delta",
     "q_clone_shallow",
-    "q_column_mapping_write",
     "q_log_compaction",
     "q_log_lifecycle",
     "q_reorg_purge",
@@ -75,16 +82,13 @@ WINDOW = [
     "q_checkpoint_v2",
     "q_compact_roundtrip",
     "q_dv_read",
-    "q_generated_columns",
     "q_liquid_cluster",
     "q_mapping_upgrade",
     "q_merge_upsert",
     "q_row_tracking",
     "q_variant",
     # table metadata through the one builder, delta_log._metadata
-    "q_constraints_lifecycle",
     "q_column_defaults",
-    "q_identity_columns",
     "q_schema_widening",
     # fixture schemas from the process-level map, tables.parquet_schema
     "q_sql_tpch_q18",

@@ -551,10 +551,11 @@ class _WroteFiles(WriterCommitMessage):
     adds: tuple  # tuple of add-action dicts
 
 
-def _rows_to_adds(iterator, schema: StructType, table_path: str, partition_by: list[str]):
+def _rows_to_adds(iterator, schema: StructType, table_path: str, plan):
     """Executor-side: write this partition's rows as parquet file(s)
-    under the table dir (one per partition-value combo), return add
-    actions. Files become visible only when the driver commits them."""
+    under the table dir (one per partition-value combo) by the append
+    ``plan``'s physical names, partition columns and stats allowlist;
+    return add actions. Files become visible only when committed."""
     import time as _time
     import uuid as _uuid
     from datetime import timezone
@@ -563,7 +564,7 @@ def _rows_to_adds(iterator, schema: StructType, table_path: str, partition_by: l
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from pulsar_io_delta_spark.sources.delta_log import hive_segment
+    from pulsar_io_delta_spark.sources.delta_log import _file_stats, hive_segment
 
     def pv(v) -> str | None:
         # protocol form: the value's string, null as None (Spark's writer
@@ -572,14 +573,25 @@ def _rows_to_adds(iterator, schema: StructType, table_path: str, partition_by: l
             return None
         return ("true" if v else "false") if isinstance(v, bool) else str(v)
 
+    pcols = plan.partition_columns
     groups: dict[tuple, list] = {}
     for row in iterator:
-        key = tuple(pv(row[c]) for c in partition_by)
+        key = tuple(pv(row[c]) for c in pcols)
         groups.setdefault(key, []).append(row)
     adds = []
-    data_schema = to_arrow_schema(
-        StructType([f for f in schema.fields if f.name not in partition_by])
-    )
+    data_schema = to_arrow_schema(StructType([f for f in schema.fields if f.name not in pcols]))
+
+    def physical(name: str) -> str:
+        return plan.physical.get(name, (name, None))[0]
+
+    # every file column is optional: a null in a NOT NULL column must
+    # reach the commit's check, not turn into a zero in the file
+    ids = {c: str(fid) for c, (_p, fid) in plan.physical.items() if fid is not None}
+    file_schema = pa.schema([
+        pa.field(physical(f.name), f.type, True,
+                 {"PARQUET:field_id": ids[f.name]} if f.name in ids else None)
+        for f in data_schema
+    ])
 
     def values(field, rows):
         vals = [r[field.name] for r in rows]
@@ -590,9 +602,9 @@ def _rows_to_adds(iterator, schema: StructType, table_path: str, partition_by: l
 
     for key, rows in groups.items():
         table = pa.Table.from_arrays(
-            [pa.array(values(f, rows), f.type) for f in data_schema], schema=data_schema
+            [pa.array(values(f, rows), f.type) for f in data_schema], schema=file_schema
         )
-        rel_dir = "/".join(f"{c}={hive_segment(v)}" for c, v in zip(partition_by, key))
+        rel_dir = "/".join(f"{physical(c)}={hive_segment(v)}" for c, v in zip(pcols, key))
         rel_path = (rel_dir + "/" if rel_dir else "") + f"part-{_uuid.uuid4().hex}.parquet"
         abs_path = os.path.join(table_path, rel_path)
         os.makedirs(os.path.dirname(abs_path), exist_ok=True)
@@ -600,12 +612,11 @@ def _rows_to_adds(iterator, schema: StructType, table_path: str, partition_by: l
         adds.append(
             {
                 "path": rel_path,
-                "partitionValues": dict(zip(partition_by, key)),
+                "partitionValues": {physical(c): v for c, v in zip(pcols, key)},
                 "size": os.path.getsize(abs_path),
                 "modificationTime": int(_time.time() * 1000),
                 "dataChange": True,
-                # a row-tracked table numbers rows from this count
-                "stats": json.dumps({"numRecords": table.num_rows}),
+                "stats": json.dumps(_file_stats(abs_path, plan.stats_cols)),
             }
         )
     return _WroteFiles(adds=tuple(adds))
@@ -619,31 +630,29 @@ class _DeltaWriterBase:
         self.table_path = options["tablePath"]
         self.app_id = options.get("appId", "pulsar_delta_cdc_sink")
         explicit = [c for c in (options.get("partitionBy") or "").split(",") if c]
-        # partitioning is a TABLE property, as in write(): an append into
-        # an existing table stages by its columns and commits None (keep
-        # them); only the creating commit takes partitionBy
+        # one append plan, as write() makes: the executors stage by it
+        # and the commit checks the table still matches it
         t = DeltaTable(self.table_path)
-        existing = t.snapshot().partition_columns if t.exists() and t.versions() else None
-        if existing is not None and explicit and explicit != existing:
+        snap = t.snapshot() if t.exists() and t.versions() else None
+        self.plan = DeltaTable._plan_append(snap, schema.json(), explicit or None)
+        # executors write rows as they come: nothing fills a column later
+        r = self.plan.rules
+        missing = [c for c in (*r.generated, *r.identity, *r.defaults) if c not in schema.names]
+        if missing:
             raise DeltaProtocolError(
-                f"partitionBy {explicit} conflicts with the table's partitioning {existing}"
+                f"the pulsar_delta_cdc sink cannot fill generated, identity or "
+                f"default column(s) {missing}: its input must carry them"
             )
-        self.partition_by = explicit if existing is None else list(existing)
-        self.commit_partition_by = explicit if existing is None else None
 
     def write(self, iterator):
-        return _rows_to_adds(iterator, self.schema_, self.table_path, self.partition_by)
+        return _rows_to_adds(iterator, self.schema_, self.table_path, self.plan)
 
     def _commit_adds(self, messages, txn):
         from pulsar_io_delta_spark.sources.delta_log import DeltaTable
 
         adds = [a for m in messages if m is not None for a in m.adds]
-        DeltaTable(self.table_path).commit_external_adds(
-            adds,
-            operation="STREAMING UPDATE" if txn else "WRITE",
-            schema_json=self.schema_.json(),
-            partition_by=self.commit_partition_by,
-            txn=txn,
+        DeltaTable(self.table_path)._commit_append(
+            self.plan, adds, txn, "STREAMING UPDATE" if txn else "WRITE"
         )
 
 

@@ -56,6 +56,7 @@ vectorized parquet scan with partition-directory inference
 from __future__ import annotations
 
 import copy
+import decimal
 import json
 import os
 import random
@@ -259,8 +260,10 @@ def _file_stats(source, indexed: "frozenset | None" = None) -> dict:
                 mn, mx = st.min, st.max
             except NotImplementedError:
                 continue  # e.g. a decimal stored as int64: no typed bound
-            if isinstance(mn, bytes):
-                continue  # undecoded physical bytes — not comparable
+            if isinstance(mn, (bytes, decimal.Decimal)):
+                # undecoded physical bytes are not comparable; a decimal
+                # has no exact JSON number (as the int-stored ones above)
+                continue
             mins[name] = mn if name not in mins else min(mins[name], mn)
             maxs[name] = mx if name not in maxs else max(maxs[name], mx)
     for name, mn in list(mins.items()):
@@ -453,6 +456,130 @@ def _committed_metadata(snap: Snapshot | None, actions: list[dict]) -> dict:
     return snap.metadata if snap is not None else {}
 
 
+class _Rules(NamedTuple):
+    """The rules rows written to a table must meet or fill: CHECK
+    constraints (name → SQL), NOT NULL columns, generated columns
+    (Delta PROTOCOL.md "Generated Columns": column → SQL), identity
+    columns ("Identity Columns": column → {start, step, hw, allow},
+    ``hw`` None until the first write, ``allow`` for GENERATED BY
+    DEFAULT) and default columns (column → SQL)."""
+
+    checks: dict
+    not_null: tuple
+    generated: dict
+    identity: dict
+    defaults: dict
+
+    @classmethod
+    def of(cls, schema_string: str | None, configuration: dict | None) -> "_Rules":
+        fields = json.loads(schema_string)["fields"] if schema_string else []
+        meta = {f["name"]: f.get("metadata") or {} for f in fields}
+        prefix = DeltaTable.CONSTRAINT_PREFIX
+        hw = "delta.identity.highWaterMark"
+        return cls(
+            checks={
+                k[len(prefix):]: v
+                for k, v in (configuration or {}).items()
+                if k.startswith(prefix)
+            },
+            not_null=tuple(f["name"] for f in fields if not f.get("nullable", True)),
+            generated={
+                c: m["delta.generationExpression"]
+                for c, m in meta.items()
+                if m.get("delta.generationExpression")
+            },
+            identity={
+                c: {
+                    "start": int(m.get("delta.identity.start", 1)),
+                    "step": int(m.get("delta.identity.step", 1)),
+                    "hw": None if m.get(hw) is None else int(m[hw]),
+                    "allow": bool(m.get("delta.identity.allowExplicitInsert", False)),
+                }
+                for c, m in meta.items()
+                if "delta.identity.start" in m or "delta.identity.step" in m
+            },
+            defaults={
+                c: m["CURRENT_DEFAULT"] for c, m in meta.items() if "CURRENT_DEFAULT" in m
+            },
+        )
+
+    def probes(self, columns, quote, generated: bool = False) -> list[tuple[str, str]]:
+        """``(rule, violation predicate)`` pairs over a frame with
+        ``columns`` (identifiers quoted by ``quote``): each CHECK, NULL
+        results included (Delta CHECK semantics), all NOT NULL columns
+        at once and, with ``generated``, each generated column."""
+        out = [
+            (f"CHECK constraint {name!r} ({e})", f"NOT ({e}) OR ({e}) IS NULL")
+            for name, e in self.checks.items()
+        ]
+        required = [c for c in self.not_null if c in columns]
+        if required:
+            out.append((f"NOT NULL constraint on {required}",
+                        " OR ".join(f"{quote(c)} IS NULL" for c in required)))
+        return out + [
+            (f"generated column {c!r} ({e})", f"NOT ({quote(c)} IS NOT DISTINCT FROM ({e}))")
+            for c, e in self.generated.items()
+            if generated and c in columns
+        ]
+
+
+class _AppendPlan(NamedTuple):
+    """What an append stages and commits by (``DeltaTable._plan_append``);
+    plain data, so it pickles to the executors staging a sink's files."""
+
+    version: int  # the snapshot's version; -1 creates the table
+    actions: list  # the protocol/metaData actions the append commits
+    partition_columns: list
+    physical: dict  # column → (physical name, parquet field id in id mode)
+    stats_cols: "frozenset | None"  # the footer-stats allowlist
+    rules: _Rules
+    schema_json: str  # the input schema, to plan again after a lost race
+    partition_by: "list | None"
+
+    def stages_like(self, other: "_AppendPlan") -> bool:
+        """Files staged under this plan are valid under ``other``: the
+        same physical names, partitioning and rules. An identity
+        column's high-water mark counts only where the append fills the
+        column from it."""
+        def fit(plan: "_AppendPlan") -> tuple:
+            given = {f["name"] for f in json.loads(plan.schema_json)["fields"]}
+            ident = {c: {**v, "hw": None} if c in given else v for c, v in plan.rules.identity.items()}
+            return plan.physical, plan.partition_columns, plan.rules._replace(identity=ident)
+
+        return fit(self) == fit(other)
+
+
+def _physical_names(
+    schema_string: str | None, configuration: dict | None, columns=None
+) -> dict[str, tuple[str, int | None]]:
+    """Column → (physical name, parquet field id) for each of
+    ``columns`` (None: every field). Unmapped tables keep the logical
+    name; only id mode carries a field id."""
+    mode = (configuration or {}).get("delta.columnMapping.mode", "none")
+    mapped = mode in ("name", "id")
+    fields = {f["name"]: f for f in json.loads(schema_string)["fields"]} if schema_string else {}
+    out = {}
+    for c in fields if columns is None else columns:
+        meta = ((fields.get(c) or {}).get("metadata") or {}) if mapped else {}
+        fid = meta.get("delta.columnMapping.id") if mode == "id" else None
+        out[c] = (
+            meta.get("delta.columnMapping.physicalName", c),
+            None if fid is None else int(fid),
+        )
+    return out
+
+
+def _variant_upgrade(protocol: dict, schema_json: str) -> list[dict]:
+    """The protocol action a commit of ``schema_json`` needs: variant
+    columns demand the variantType feature (a featureless reader would
+    mis-read the physical struct<metadata,value> as data)."""
+    if _schema_has_variant(schema_json) and "variantType" not in (
+        protocol.get("readerFeatures") or ()
+    ):
+        return [{"protocol": _upgraded_protocol(protocol, ("variantType",), ("variantType",))}]
+    return []
+
+
 # Reader features this engine actually implements (Delta PROTOCOL.md
 # table-features model, minReaderVersion 3). Anything else still fails
 # loudly — a feature we silently ignored could mis-read data (e.g. v2
@@ -545,7 +672,7 @@ _SUPPORTED_WRITER_FEATURES = {
     "clusteredTable",
     # default column values (round 9): write() evaluates a field's
     # CURRENT_DEFAULT expression for columns the incoming frame omits
-    # (_apply_column_defaults) — the spec's write-time-only semantics
+    # (DeltaTable._fill_append) — the spec's write-time-only semantics
     "allowColumnDefaults",
     # checkpoint protection (round 11, spec "Checkpoint Protection"):
     # history before delta.requireCheckpointProtectionBeforeVersion
@@ -697,71 +824,6 @@ def _contains_struct(t) -> bool:
     if tt == "map":
         return _contains_struct(t["keyType"]) or _contains_struct(t["valueType"])
     return False
-
-
-def _generation_exprs(schema_string: str | None) -> dict[str, str]:
-    """Generated columns (Delta PROTOCOL.md "Generated Columns"): map of
-    column → SQL generation expression from the schema fields'
-    ``delta.generationExpression`` metadata."""
-    if not schema_string:
-        return {}
-    out: dict[str, str] = {}
-    for f in json.loads(schema_string)["fields"]:
-        e = (f.get("metadata") or {}).get("delta.generationExpression")
-        if e:
-            out[f["name"]] = e
-    return out
-
-
-def _identity_cols(schema_string: str | None) -> dict[str, dict]:
-    """Identity columns (Delta PROTOCOL.md "Identity Columns"): col →
-    {start, step, hw, allow} from the schema fields' ``delta.identity.*``
-    metadata. ``hw`` (highWaterMark) is None until the first write
-    assigns values; ``allow`` is allowExplicitInsert (GENERATED BY
-    DEFAULT vs ALWAYS)."""
-    if not schema_string:
-        return {}
-    out: dict[str, dict] = {}
-    for f in json.loads(schema_string)["fields"]:
-        meta = f.get("metadata") or {}
-        if "delta.identity.start" not in meta and "delta.identity.step" not in meta:
-            continue
-        out[f["name"]] = {
-            "start": int(meta.get("delta.identity.start", 1)),
-            "step": int(meta.get("delta.identity.step", 1)),
-            "hw": (
-                int(meta["delta.identity.highWaterMark"])
-                if meta.get("delta.identity.highWaterMark") is not None
-                else None
-            ),
-            "allow": bool(meta.get("delta.identity.allowExplicitInsert", False)),
-        }
-    return out
-
-
-def _apply_column_defaults(df: DataFrame, schema_string: str | None) -> DataFrame:
-    """Default column values (Delta PROTOCOL.md "Default columns",
-    writer feature allowColumnDefaults): a write that OMITS a column
-    whose schema field carries CURRENT_DEFAULT metadata gets the
-    default expression evaluated at write time — write-time only, no
-    backfill of existing rows (that is Iceberg's initial-default, not
-    Delta's). Pure column expressions, codegen'd per row batch."""
-    if not schema_string:
-        return df
-    from pyspark.sql.types import StructType
-
-    struct = None
-    for f in json.loads(schema_string)["fields"]:
-        meta = f.get("metadata") or {}
-        dflt = meta.get("CURRENT_DEFAULT")
-        if dflt is None or f["name"] in df.columns:
-            continue
-        if struct is None:
-            struct = StructType.fromJson(json.loads(schema_string))
-        df = df.withColumn(
-            f["name"], F.expr(dflt).cast(struct[f["name"]].dataType)
-        )
-    return df
 
 
 def _guard_collations(schema_string: str | None) -> None:
@@ -3864,14 +3926,14 @@ class DeltaTable:
                 return
         actions.append(_metadata(snap, schema_string=json.dumps(s)))
 
-    def _apply_generated(self, df: DataFrame, schema_string: str | None) -> DataFrame:
+    @staticmethod
+    def _apply_generated(df: DataFrame, generated: dict[str, str]) -> DataFrame:
         """Generated-column write semantics: columns MISSING from the
         incoming frame are computed from their generation expression;
         columns the caller DID provide are validated against it (one
         limit(1) probe each — a mismatch means the invariant every
         downstream reader relies on would silently break)."""
-        gen = _generation_exprs(schema_string)
-        for c, expr in gen.items():
+        for c, expr in generated.items():
             if c not in df.columns:
                 df = df.withColumn(c, F.expr(expr))
             else:
@@ -3882,6 +3944,34 @@ class DeltaTable:
                         f"generation expression ({expr}) on incoming rows"
                     )
         return df
+
+    @classmethod
+    def _fill_append(cls, df: DataFrame, rules: _Rules, schema_string: str) -> DataFrame:
+        """Fill the columns an appended frame omits. Generated columns
+        are computed (``_apply_generated``). Default columns (Delta
+        PROTOCOL.md "Default columns") take their CURRENT_DEFAULT at
+        write time, with no backfill of existing rows. Identity columns
+        take unique values on the start+k*step lattice, assigned
+        distributedly: gaps are legal, and the watermark advances from
+        the staged files' footer stats."""
+        df = cls._apply_generated(df, rules.generated)
+        fills = {}
+        if any(c not in df.columns for c in rules.defaults):
+            from pyspark.sql.types import StructType
+
+            types = StructType.fromJson(json.loads(schema_string))
+            fills = {
+                c: F.expr(sql).cast(types[c].dataType)
+                for c, sql in rules.defaults.items()
+                if c not in df.columns
+            }
+        for c, spec in rules.identity.items():
+            if c not in df.columns:
+                base = spec["start"] - spec["step"] if spec["hw"] is None else spec["hw"]
+                fills[c] = (
+                    F.lit(base) + F.lit(spec["step"]) * (F.monotonically_increasing_id() + 1)
+                ).cast("long")
+        return df.withColumns(fills) if fills else df
 
     @staticmethod
     def _cdf_protocol_actions(protocol: dict) -> list[dict]:
@@ -3894,31 +3984,21 @@ class DeltaTable:
         return [{"protocol": _upgraded_protocol(protocol, (), ("changeDataFeed",))}]
 
     @staticmethod
-    def _to_physical(df: DataFrame, mapping) -> DataFrame:
+    def _to_physical(df: DataFrame, physical: dict) -> DataFrame:
         """Rename logical → physical columns for staging into a
-        name-mode column-mapped table (only columns present in df are
-        renamed; the physical schemaString null-fills the rest on
-        read)."""
-        if not mapping:
-            return df
-        to_phys = {logical: phys for phys, logical in mapping[1]}
-        ids = {
-            f["name"]: int(f["metadata"]["parquet.field.id"])
-            for f in json.loads(mapping[0])["fields"]
-            if "parquet.field.id" in (f.get("metadata") or {})
-        }
+        column-mapped table (``physical`` from ``_physical_names``;
+        columns it does not name pass through, and the physical
+        schemaString null-fills absent ones on read)."""
         cols = []
         for c in df.columns:
-            p = to_phys.get(c, c)
-            if p in ids:
+            p, fid = physical.get(c, (c, None))
+            if fid is not None:
                 # id-mode staging: stamp parquet field ids so an
                 # id-matching reader resolves our files regardless of
                 # column names (JVM parquet writes the ids from column
                 # metadata under fieldId.write.enabled, default on —
                 # distributed, no driver-side pyarrow detour)
-                cols.append(
-                    F.col(c).alias(p, metadata={"parquet.field.id": ids[p]})
-                )
+                cols.append(F.col(c).alias(p, metadata={"parquet.field.id": fid}))
             else:
                 cols.append(F.col(c).alias(p))
         return df.select(cols)
@@ -3938,33 +4018,30 @@ class DeltaTable:
         column-mapped table are keyed by PHYSICAL names."""
         if not filters:
             return filters
-        mapping = self._mapping_of(snap)
-        if not mapping:
-            return filters
-        to_phys = {logical: phys for phys, logical in mapping[1]}
-        return [(to_phys.get(c, c), op, v) for c, op, v in filters]
+        phys = _physical_names(snap.schema_string, snap.configuration)
+        return [(phys.get(c, (c, None))[0], op, v) for c, op, v in filters]
 
     def _stage_and_move(
         self,
         df: DataFrame,
         partition_by: list[str],
         stats_cols: "frozenset | None",
-        mapping=None,
+        physical: dict | None = None,
         cdc: bool = False,
     ) -> list[dict]:
         """Write df as parquet into the table dir; return add actions.
         ``stats_cols`` is the footer-stats allowlist of the table state
         the caller commits against (``_stats_index_cols``; None = all).
-        ``mapping`` (from _column_mapping) stages under PHYSICAL column
-        names — data files and hive partition dirs of a mapped table
-        must never contain logical names. ``cdc=True`` stages CHANGE
+        ``physical`` (from ``_physical_names``) stages under PHYSICAL
+        column names — data files and hive partition dirs of a mapped
+        table must never contain logical names. ``cdc=True`` stages CHANGE
         DATA files instead (Delta PROTOCOL.md "Add CDC File"): they land
         under ``_change_data/``, the action key is ``cdc`` with
         ``dataChange=false`` (change files never count as table data),
         and the ``_change_type`` column passes through un-renamed."""
-        if mapping:
-            df = self._to_physical(df, mapping)
-            partition_by = self._physical_pcols(mapping, partition_by)
+        if any(p != c or fid is not None for c, (p, fid) in (physical or {}).items()):
+            df = self._to_physical(df, physical)
+            partition_by = [physical.get(c, (c, None))[0] for c in partition_by]
         staging = os.path.join(self.path, f"_staging_{uuid.uuid4().hex}")
         writer = df.write.mode("overwrite")
         if partition_by:
@@ -4048,6 +4125,180 @@ class DeltaTable:
         old_s["fields"] = old_s["fields"] + added
         return json.dumps(old_s)
 
+    @staticmethod
+    def _plan_append(
+        snap: Snapshot | None, schema_json: str, partition_by: list[str] | None
+    ) -> _AppendPlan:
+        """Plan an append of rows with schema ``schema_json`` against
+        ``snap`` (None creates the table), without a Spark job.
+        ``partition_by`` None keeps the table's partitioning; another
+        list must equal it. New columns extend the schema in a metaData
+        action (named and numbered on a mapped table). The plan holds
+        the physical names of the input columns and of the columns the
+        table fills, the stats allowlist and the rules rows must meet."""
+        inputs = [f["name"] for f in json.loads(schema_json)["fields"]]
+        if snap is None:
+            pcols = list(partition_by or [])
+            schema, config, rules = schema_json, {}, _Rules.of(schema_json, None)
+            actions = (
+                _variant_upgrade({}, schema_json)
+                or [{"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}]
+            ) + [_metadata(None, schema_string=schema_json, partition_columns=pcols)]
+        else:
+            DeltaTable._guard_writable(snap, data_change_removes=False)
+            pcols = list(snap.partition_columns)
+            if partition_by is not None and list(partition_by) != pcols:
+                raise DeltaProtocolError(
+                    f"partition_by {partition_by} conflicts with the "
+                    f"table's partitioning {pcols}"
+                )
+            rules = _Rules.of(snap.schema_string, snap.configuration)
+            mapped = DeltaTable._mapping_of(snap)
+            if rules.identity and mapped:
+                raise DeltaProtocolError(
+                    "identity columns on column-mapped tables are not supported"
+                )
+            for c, spec in rules.identity.items():
+                if c in inputs and not spec["allow"]:
+                    raise DeltaProtocolError(
+                        f"identity column {c!r} is GENERATED ALWAYS; "
+                        "explicit values are not allowed"
+                    )
+            schema, config, actions = snap.schema_string, snap.configuration, []
+            # additive evolution: the metaData action is the op='m'
+            # boundary downstream CDC consumers restart at
+            merged = DeltaTable._merge_schema_strings(schema, schema_json)
+            if merged is not None:
+                if mapped:
+                    merged, config = _assign_mapping_metadata(merged, config)
+                actions = [_metadata(snap, schema_string=merged, configuration=config)]
+                actions += _variant_upgrade(snap.protocol, merged)
+                schema = merged
+        filled = [
+            c for c in (*rules.generated, *rules.defaults, *rules.identity) if c not in inputs
+        ]
+        return _AppendPlan(
+            version=-1 if snap is None else snap.version,
+            actions=actions,
+            partition_columns=pcols,
+            physical=_physical_names(schema, config, inputs + filled),
+            stats_cols=_stats_index_cols(schema, config),
+            rules=rules,
+            schema_json=schema_json,
+            partition_by=partition_by,
+        )
+
+    def _commit_append(
+        self,
+        plan: _AppendPlan,
+        adds: list[dict],
+        txn: tuple[str, int] | None,
+        operation: str,
+        *,
+        snap: Snapshot | None = None,
+        rows: DataFrame | None = None,
+        removes: list[dict] = (),
+        pinned: bool = False,
+    ) -> int:
+        """The one append commit: ``adds`` (files staged under
+        ``plan``) and ``rows`` (a frame, staged here by the plan) land
+        with the plan's actions and ``removes``; ``snap`` is the
+        plan's snapshot when the caller holds it. An already delivered
+        ``txn=(app_id, version)`` returns -1 before anything is staged.
+        The rows are checked against the plan's rules first. The commit
+        is pinned to the plan's version: after a lost race it plans
+        again against the head and commits there while the staged
+        files still fit (``stages_like``), else it raises
+        DeltaConcurrentCommit, as a ``pinned`` commit does at once."""
+        if txn is not None and self.last_txn_version(txn[0]) >= txn[1]:
+            return -1
+
+        def replan(head: Snapshot) -> _AppendPlan:
+            new = self._plan_append(head, plan.schema_json, plan.partition_by)
+            if not plan.stages_like(new):
+                raise DeltaConcurrentCommit(
+                    f"{operation}: v{head.version} changed what the files "
+                    f"staged at v{plan.version} were staged by; stage again"
+                )
+            return new
+
+        if snap is None and not pinned and self.exists() and self.versions():
+            # planned elsewhere (a sink's writer): the table may have moved
+            snap = self.snapshot()
+            if snap.version != plan.version:
+                plan = replan(snap)
+        files = [{"add": a} for a in adds]
+        if rows is not None:
+            self._validate_constraints(rows, plan.rules)
+            files += self._stage_and_move(
+                rows, plan.partition_columns, plan.stats_cols, plan.physical
+            )
+        else:
+            self._validate_staged(plan, adds)
+        marker = [] if txn is None else [{"txn": {
+            "appId": txn[0], "version": txn[1], "lastUpdated": int(time.time() * 1000),
+        }}]
+        while True:
+            actions = marker + plan.actions + list(removes) + files
+            if plan.rules.identity:
+                self._advance_identity_watermarks(snap, actions, plan.rules.identity)
+            try:
+                return self._commit(snap, actions, operation, read_version=plan.version)
+            except DeltaConcurrentCommit:
+                if txn is not None and self.last_txn_version(txn[0]) >= txn[1]:
+                    return -1  # a racer delivered this exact batch
+                if pinned:
+                    raise
+                head = self.snapshot()
+                if head.version <= plan.version:
+                    raise DeltaProtocolError(
+                        f"commit stalled: {operation} lost v{plan.version + 1}, "
+                        "which the log does not list (wedged filesystem or "
+                        "orphan commit file?)"
+                    )
+                snap, plan = head, replan(head)
+
+    def _validate_staged(self, plan: _AppendPlan, adds: list[dict]) -> None:
+        """``_validate_constraints`` for files staged elsewhere, whose
+        committer (a sink's commit worker) has no Spark session: the
+        plan's probes, generated columns included, run in DuckDB over
+        the files and their partition values. DuckDB shares Spark's SQL
+        for the comparisons, arithmetic and string functions of typical
+        rules; a rule it cannot evaluate refuses the commit."""
+        if not adds or not plan.rules.probes(plan.physical, str, generated=True):
+            return
+        import duckdb
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_type
+        from pyspark.sql.types import StructType
+
+        logical = {p: c for c, (p, _fid) in plan.physical.items()}
+        inputs = StructType.fromJson(json.loads(plan.schema_json))
+        parts = []
+        for a in adds:
+            with self.fs.open_read(os.path.join(self.path, a["path"])) as f:
+                t = pq.read_table(f)
+            t = t.rename_columns([logical.get(n, n) for n in t.column_names])
+            for c in plan.partition_columns:
+                typ = to_arrow_type(inputs[c].dataType) if c in inputs.names else pa.string()
+                if pa.types.is_timestamp(typ):
+                    typ = pa.timestamp(typ.unit)  # partition values carry no zone
+                v = a["partitionValues"].get(plan.physical.get(c, (c, None))[0])
+                t = t.append_column(c, pa.array([v] * t.num_rows, pa.string()).cast(typ))
+            parts.append(t)
+        staged = pa.concat_tables(parts, promote_options="default")
+        quote = lambda c: '"{}"'.format(c.replace('"', '""'))  # noqa: E731
+        with duckdb.connect() as con:
+            rows = con.from_arrow(staged)
+            for what, violation in plan.rules.probes(staged.column_names, quote, generated=True):
+                try:
+                    bad = rows.filter(violation).limit(1).fetchone()
+                except duckdb.Error as e:
+                    raise DeltaProtocolError(f"{what} cannot be checked without Spark: {e}") from e
+                if bad:
+                    raise DeltaConstraintViolation(f"{what} violated by incoming rows")
+
     def write(
         self,
         df: DataFrame,
@@ -4074,7 +4325,8 @@ class DeltaTable:
         REPLACE the table schema and partitioning from this frame /
         ``partition_by`` instead of inheriting — the only way to change
         a table's partition layout."""
-        partition_by = partition_by or []
+        if mode not in ("append", "overwrite"):
+            raise ValueError(f"unsupported mode: {mode}")
         first = not (self.exists() and self.versions())
         if cluster_by:
             if partition_by:
@@ -4093,47 +4345,29 @@ class DeltaTable:
                 raise DeltaProtocolError(
                     f"clustering columns not in schema: {missing}"
                 )
-        actions: list[dict] = []
-        if first and _rt_enabled(configuration):
-            # choose the materialized row-id/commit-version PHYSICAL
-            # column names once at enable time (spec: stored in table
-            # config; rewrites carry row identity through them)
-            configuration = {
-                **configuration,
-                "delta.rowTracking.materializedRowIdColumnName":
-                    f"_row_id_mat_{uuid.uuid4().hex[:8]}",
-                "delta.rowTracking.materializedRowCommitVersionColumnName":
-                    f"_rcv_mat_{uuid.uuid4().hex[:8]}",
-            }
-        read_version: int | None = None  # blind append unless state-dependent
-        state_dependent = False
-        prior: Snapshot | None = None  # the state a non-first write reads
-        mapping = None  # set for non-first writes to name-mode mapped tables
-        idents: dict[str, dict] = {}
-        if txn is not None:
-            app_id, txn_version = txn
-            if self.last_txn_version(app_id) >= txn_version:
-                return -1  # already committed — idempotent no-op
-            actions.append({"txn": {"appId": app_id, "version": txn_version, "lastUpdated": int(time.time() * 1000)}})
-            if not first:
-                # the idempotency check above is only valid for this
-                # version; a racing committer forces a re-check
-                read_version = self.versions()[-1]
+        schema_json = df.schema.json()
+        prior = None if first else self.snapshot()
+        removes: list[dict] = []
+        if mode == "overwrite" and not first:
+            # removes, validation and metadata all come from the one
+            # state this write read: a racer's commit (say, a new CHECK
+            # constraint) raises instead of being silently overwritten
+            self._guard_writable(prior)
+            now_ms = int(time.time() * 1000)
+            removes = [self._remove_action(prior, p, now_ms) for p in prior.files]
         if first:
-            # losing a concurrent CREATE race must surface as
-            # DeltaConcurrentCommit (caller recomputes against the
-            # racer's table), not blind-append a second metaData at v1
-            # clobbering the racer's schema
-            read_version = -1
-            state_dependent = True
-            need_reader: tuple[str, ...] = ()
+            if _rt_enabled(configuration):
+                # choose the materialized row-id/commit-version PHYSICAL
+                # column names once at enable time (spec: stored in table
+                # config; rewrites carry row identity through them)
+                configuration = {
+                    **configuration,
+                    "delta.rowTracking.materializedRowIdColumnName":
+                        f"_row_id_mat_{uuid.uuid4().hex[:8]}",
+                    "delta.rowTracking.materializedRowCommitVersionColumnName":
+                        f"_rcv_mat_{uuid.uuid4().hex[:8]}",
+                }
             need_writer: tuple[str, ...] = ()
-            if _schema_has_variant(df.schema.json()):
-                # variant columns demand the variantType table feature
-                # from creation (a featureless reader would mis-read the
-                # physical struct<metadata,value> as data)
-                need_reader += ("variantType",)
-                need_writer += ("variantType",)
             if _rt_enabled(configuration):
                 # writer-only features: row-tracked files stay readable
                 # by any reader (spec) — but every writer must maintain
@@ -4146,18 +4380,15 @@ class DeltaTable:
                 # same commit (spec); no enablement provenance needed —
                 # absent properties mean "enabled since version 0"
                 need_writer += ("inCommitTimestamp",)
-            if need_reader or need_writer:
-                actions.append(
-                    {"protocol": _upgraded_protocol({}, need_reader, need_writer)}
-                )
-            else:
-                actions.append(
-                    {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
-                )
-            actions.append(_metadata(
-                None, schema_string=df.schema.json(),
-                partition_columns=partition_by, configuration=configuration,
-            ))
+            plan = self._plan_append(None, schema_json, partition_by)
+            protocol = plan.actions[0]["protocol"]
+            actions = [
+                {"protocol": _upgraded_protocol(protocol, (), need_writer) if need_writer else protocol},
+                _metadata(
+                    None, schema_string=schema_json,
+                    partition_columns=plan.partition_columns, configuration=configuration,
+                ),
+            ]
             if cluster_by:
                 actions.append({"domainMetadata": {
                     "domain": "delta.clustering",
@@ -4166,167 +4397,50 @@ class DeltaTable:
                     ),
                     "removed": False,
                 }})
-        else:
-            # Additive schema evolution: appending a frame with new
-            # columns emits the op='m' boundary (merged schemaString);
-            # downstream CDC consumers restart into the new epoch
-            # (streaming/runner.py::run_cdc_with_schema_evolution).
-            prior = self.snapshot()
-            # overwrite emits data-changing removes; append does not
-            self._guard_writable(prior, data_change_removes=(mode == "overwrite"))
-            if overwrite_schema:
-                # delta-spark's overwriteSchema: replace schema AND
-                # partitioning from this frame — the only legal way to
-                # change a table's partition layout
-                if mode != "overwrite":
-                    raise DeltaProtocolError(
-                        "overwrite_schema requires mode='overwrite'"
-                    )
-                if self._mapping_of(prior):
-                    raise DeltaProtocolError(
-                        "overwrite_schema on column-mapped tables is "
-                        "not supported (fresh physical names would need "
-                        "mapping reassignment)"
-                    )
-                if prior.domain_metadata.get("delta.clustering"):
-                    raise DeltaProtocolError(
-                        "overwrite_schema on a liquid-clustered table is "
-                        "not supported; alter_cluster_by([]) first"
-                    )
-            else:
-                # partitioning is a TABLE property: appends inherit it
-                # (an add without partitionValues on a partitioned table
-                # is protocol-invalid — caught by the round-9 OPTIMIZE
-                # WHERE test); changing it is overwrite_schema's job
-                if partition_by and partition_by != prior.partition_columns:
-                    raise DeltaProtocolError(
-                        f"partition_by {partition_by} conflicts with the "
-                        f"table's partitioning {prior.partition_columns}"
-                    )
-                partition_by = list(prior.partition_columns)
-            mapping = self._mapping_of(prior)
-            if overwrite_schema:
-                # prior-schema semantics (generated/default/identity
-                # columns) do not carry into the REPLACED schema; the
-                # frame defines the new table
-                self._validate_constraints(df, prior.configuration)
-                actions.append(_metadata(
-                    prior, schema_string=df.schema.json(), partition_columns=partition_by
-                ))
-                if _schema_has_variant(df.schema.json()) and "variantType" not in (
-                    prior.protocol.get("readerFeatures") or ()
-                ):
-                    actions.append(
-                        {"protocol": _upgraded_protocol(
-                            prior.protocol, ("variantType",), ("variantType",)
-                        )}
-                    )
-                read_version = prior.version
-                state_dependent = True
-                idents = {}
-            else:
-                df = self._apply_generated(df, prior.schema_string)
-                df = _apply_column_defaults(df, prior.schema_string)
-                idents = _identity_cols(prior.schema_string)
-            if idents and mapping:
-                raise DeltaProtocolError(
-                    "identity columns on column-mapped tables are not supported"
-                )
-            for c, spec in idents.items():
-                if c in df.columns:
-                    if not spec["allow"]:
-                        raise DeltaProtocolError(
-                            f"identity column {c!r} is GENERATED ALWAYS; "
-                            "explicit values are not allowed"
-                        )
-                else:
-                    # unique values on the start+k*step lattice, assigned
-                    # distributedly (gaps are legal; the watermark
-                    # advances from the staged files' footer stats —
-                    # zero extra jobs)
-                    base = (
-                        spec["hw"]
-                        if spec["hw"] is not None
-                        else spec["start"] - spec["step"]
-                    )
-                    df = df.withColumn(
-                        c,
-                        (
-                            F.lit(base)
-                            + F.lit(spec["step"])
-                            * (F.monotonically_increasing_id() + 1)
-                        ).cast("long"),
-                    )
-            if idents:
-                # the watermark advance races with concurrent writers —
-                # pin the snapshot so a lost race recomputes
-                read_version = prior.version
-                state_dependent = True
-            if not overwrite_schema:
-                self._validate_constraints(
-                    df, prior.configuration, prior.schema_string
-                )
-                merged = self._merge_schema_strings(
-                    prior.schema_string, df.schema.json()
-                )
-                if merged is not None:
-                    config = prior.configuration
-                    if mapping:
-                        # new columns on a mapped table get a col-<uuid>
-                        # physicalName + the next columnMapping.id, and
-                        # the staging mapping must include them
-                        merged, config = _assign_mapping_metadata(merged, config)
-                        mapping = _column_mapping(merged, config)
-                    actions.append(
-                        _metadata(prior, schema_string=merged, configuration=config)
-                    )
-                    if _schema_has_variant(merged) and "variantType" not in (
-                        prior.protocol.get("readerFeatures") or ()
-                    ):
-                        actions.append(
-                            {"protocol": _upgraded_protocol(
-                                prior.protocol, ("variantType",), ("variantType",)
-                            )}
-                        )
-                    read_version = prior.version  # don't clobber a racing schema change
-                    state_dependent = True
-        if mode == "overwrite" and not first:
-            # removes, validation and metadata all come from the one
-            # state this write read: a racer's commit (say, a new CHECK
-            # constraint) raises instead of being silently overwritten
-            read_version = prior.version
-            state_dependent = True
-            now_ms = int(time.time() * 1000)
-            actions.extend(self._remove_action(prior, p, now_ms) for p in prior.files)
-        elif mode not in ("append", "overwrite"):
-            raise ValueError(f"unsupported mode: {mode}")
-        # stats follow the schema and configuration this commit leaves
-        # behind (CREATE-time ones on the creating write)
-        leaves = _committed_metadata(prior, actions)
-        actions.extend(
-            self._stage_and_move(
-                df,
-                partition_by,
-                _stats_index_cols(leaves.get("schemaString"), leaves.get("configuration")),
-                mapping=mapping,
+            # stats follow the CREATE-time configuration; the frame
+            # defines the table, so there are no rules to check it by
+            plan = plan._replace(
+                actions=actions, stats_cols=_stats_index_cols(schema_json, configuration),
+                rules=_Rules.of(None, None),
             )
-        )
-        if idents:
-            self._advance_identity_watermarks(prior, actions, idents)
-        while True:
-            try:
-                committed = self._commit(
-                    prior, actions, operation=mode.upper(), read_version=read_version
+        elif overwrite_schema:
+            # delta-spark's overwriteSchema: replace schema AND
+            # partitioning from this frame — the only legal way to
+            # change a table's partition layout. Generated, default and
+            # identity columns of the old schema do not carry over; its
+            # CHECK constraints do.
+            if mode != "overwrite":
+                raise DeltaProtocolError(
+                    "overwrite_schema requires mode='overwrite'"
                 )
-                break
-            except DeltaConcurrentCommit:
-                if txn is not None and self.last_txn_version(txn[0]) >= txn[1]:
-                    return -1  # a racer delivered this exact batch
-                if state_dependent:
-                    raise  # stale removes/metadata: caller must recompute
-                read_version = self.versions()[-1]  # txn append: re-race
-        cfg = leaves.get("configuration") or {}
-        if cfg.get("delta.autoOptimize.autoCompact") == "true":
+            if self._mapping_of(prior):
+                raise DeltaProtocolError(
+                    "overwrite_schema on column-mapped tables is "
+                    "not supported (fresh physical names would need "
+                    "mapping reassignment)"
+                )
+            if prior.domain_metadata.get("delta.clustering"):
+                raise DeltaProtocolError(
+                    "overwrite_schema on a liquid-clustered table is "
+                    "not supported; alter_cluster_by([]) first"
+                )
+            plan = self._plan_append(None, schema_json, partition_by)._replace(
+                version=prior.version,
+                actions=[_metadata(
+                    prior, schema_string=schema_json, partition_columns=list(partition_by or [])
+                )] + _variant_upgrade(prior.protocol, schema_json),
+                stats_cols=_stats_index_cols(schema_json, prior.configuration),
+                rules=_Rules.of(None, prior.configuration),
+            )
+        else:
+            plan = self._plan_append(prior, schema_json, partition_by or None)
+            df = self._fill_append(df, plan.rules, prior.schema_string)
+        committed = self._commit_append(
+            plan, [], txn, mode.upper(), snap=prior, rows=df, removes=removes,
+            pinned=first or mode == "overwrite",
+        )
+        cfg = _committed_metadata(prior, plan.actions).get("configuration") or {}
+        if committed >= 0 and cfg.get("delta.autoOptimize.autoCompact") == "true":
             # auto-compaction (round 9, delta's autoCompact semantics):
             # streaming ingestion is the #1 small-files producer — when
             # armed, a post-write check bin-packs once the live file
@@ -4404,7 +4518,7 @@ class DeltaTable:
             return df
         bad_ident = [
             c
-            for c, spec in _identity_cols(snap.schema_string).items()
+            for c, spec in _Rules.of(snap.schema_string, None).identity.items()
             if c not in source.columns or not spec["allow"]
         ]
         if bad_ident:
@@ -4433,7 +4547,9 @@ class DeltaTable:
         touched = [os.path.relpath(p, base) for p in touched_abs]
         # generated columns: compute the ones the source omits, validate
         # the ones it provides; remaining absent columns null-fill
-        aligned_source = self._apply_generated(source, snap.schema_string)
+        aligned_source = self._apply_generated(
+            source, _Rules.of(snap.schema_string, None).generated
+        )
         for c in table_cols:
             if c not in aligned_source.columns:
                 aligned_source = aligned_source.withColumn(c, F.lit(None))
@@ -4463,7 +4579,7 @@ class DeltaTable:
                 .unionByName(rewritten.select(*table_cols, *rt_cols))
             )
         self._validate_constraints(
-            rewritten, snap.configuration, evolved or snap.schema_string
+            rewritten, _Rules.of(evolved or snap.schema_string, snap.configuration)
         )
 
         def change_rows() -> DataFrame:
@@ -4619,7 +4735,7 @@ class DeltaTable:
         The commit is pinned to ``snap.version``: a racer's commit
         raises DeltaConcurrentCommit."""
         cfg = snap.configuration or {}
-        mapping = self._mapping_of(snap)
+        physical = _physical_names(snap.schema_string, cfg)
         stats_cols = _stats_index_cols(snap.schema_string, cfg)
         now_ms = int(time.time() * 1000)
         out = [self._remove_action(snap, p, now_ms, data_change) for p in removed]
@@ -4630,13 +4746,13 @@ class DeltaTable:
                 rows = rows.withColumnRenamed("row_id", mat_id).withColumnRenamed(
                     "row_commit_version", mat_rcv
                 )
-            out += self._stage_and_move(rows, snap.partition_columns, stats_cols, mapping)
+            out += self._stage_and_move(rows, snap.partition_columns, stats_cols, physical)
         for a in out:
             if "add" in a:
                 a["add"]["dataChange"] = data_change
         if change_rows is not None and _cdf_enabled(cfg):
             out += self._stage_and_move(
-                change_rows(), snap.partition_columns, stats_cols, mapping, cdc=True
+                change_rows(), snap.partition_columns, stats_cols, physical, cdc=True
             )
             # one protocol action per commit: merge the feature into a
             # caller's upgrade (e.g. deletion vectors) instead of
@@ -4787,7 +4903,8 @@ class DeltaTable:
         unknown = [c for c in assignments if c not in table_cols]
         if unknown:
             raise DeltaProtocolError(f"UPDATE assigns unknown columns: {unknown}")
-        gen = _generation_exprs(snap.schema_string)
+        rules = _Rules.of(snap.schema_string, snap.configuration)
+        gen = rules.generated
         assigned_gen = [c for c in assignments if c in gen]
         if assigned_gen:
             raise DeltaProtocolError(
@@ -4795,7 +4912,7 @@ class DeltaTable:
                 "they are recomputed from their generation expressions"
             )
         assigned_ident = [
-            c for c in assignments if c in _identity_cols(snap.schema_string)
+            c for c in assignments if c in rules.identity
         ]
         if assigned_ident:
             raise DeltaProtocolError(
@@ -4836,10 +4953,8 @@ class DeltaTable:
         if gen:
             # recompute generated columns over the post-assignment row
             # (their referenced base columns may have changed)
-            updated = self._apply_generated(
-                updated.drop(*gen.keys()), snap.schema_string
-            ).select(*table_cols, *rt_keep)
-        self._validate_constraints(updated, snap.configuration, snap.schema_string)
+            updated = self._apply_generated(updated.drop(*gen.keys()), gen).select(*table_cols, *rt_keep)
+        self._validate_constraints(updated, rules)
         return self._rewrite(
             snap, "UPDATE", touched, kept.unionByName(updated),
             change_rows=lambda: matched.select(*table_cols)
@@ -4942,35 +5057,13 @@ class DeltaTable:
 
     CONSTRAINT_PREFIX = "delta.constraints."
 
-    def _validate_constraints(
-        self, df: DataFrame, configuration: dict, schema_string: str | None = None
-    ) -> None:
-        """Refuse a write whose rows violate any CHECK constraint in the
-        table configuration, or (given the table's ``schema_string``)
-        put a null into a column it declares ``"nullable": false`` —
-        Delta's NOT NULL invariant. One limit(1) probe per CHECK
-        constraint and one for all NOT NULL columns the frame carries —
-        skipped entirely (zero cost) when the table has none; NULL
-        predicate results count as violations (Delta CHECK semantics)."""
-        probes = [
-            (
-                f"CHECK constraint {key[len(self.CONSTRAINT_PREFIX):]!r} ({expr})",
-                f"NOT ({expr}) OR ({expr}) IS NULL",
-            )
-            for key, expr in (configuration or {}).items()
-            if key.startswith(self.CONSTRAINT_PREFIX)
-        ]
-        required = [
-            f["name"]
-            for f in (json.loads(schema_string)["fields"] if schema_string else ())
-            if not f.get("nullable", True) and f["name"] in df.columns
-        ]
-        if required:
-            probes.append((
-                f"NOT NULL constraint on {required}",
-                " OR ".join("`{}` IS NULL".format(c.replace("`", "``")) for c in required),
-            ))
-        for what, violation in probes:
+    def _validate_constraints(self, df: DataFrame, rules: _Rules) -> None:
+        """Refuse a write whose rows violate a CHECK constraint of
+        ``rules`` or put a null into one of its NOT NULL columns the
+        frame carries. One limit(1) probe per CHECK constraint and one
+        for all NOT NULL columns — none when the table has no rule."""
+        quote = lambda c: "`{}`".format(c.replace("`", "``"))  # noqa: E731
+        for what, violation in rules.probes(df.columns, quote):
             if df.where(violation).limit(1).count():
                 raise DeltaConstraintViolation(f"{what} violated by incoming rows")
 
@@ -4985,7 +5078,7 @@ class DeltaTable:
             raise DeltaProtocolError("cannot add a constraint to a schemaless table")
         if snap.files:
             self._validate_constraints(
-                self.read(spark), {self.CONSTRAINT_PREFIX + name: expr}
+                self.read(spark), _Rules.of(None, {self.CONSTRAINT_PREFIX + name: expr})
             )
         config = {**snap.configuration, self.CONSTRAINT_PREFIX + name: expr}
         return self._commit(
@@ -5259,19 +5352,16 @@ class DeltaTable:
                 )
             pv = {k: hive_value(v) for k, v in kv}
             fp = os.path.join(base, rel)
-            adds.append({"add": {
+            adds.append({
                 "path": rel,
                 "partitionValues": pv,
                 "size": self.fs.size(fp),
                 "modificationTime": self.fs.mtime_ms(fp),
                 "dataChange": True,
                 "stats": json.dumps(self._stats_for(fp, conv_stats_cols)),
-            }})
-        actions: list[dict] = [
-            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-            _metadata(None, schema_string=df.schema.json(), partition_columns=pcols or []),
-        ] + adds
-        return self._commit(None, actions, operation="CONVERT")
+            })
+        plan = self._plan_append(None, df.schema.json(), pcols)
+        return self._commit_append(plan, adds, None, "CONVERT", pinned=True)
 
     def commit_external_adds(
         self,
@@ -5281,64 +5371,20 @@ class DeltaTable:
         partition_by: list[str] | None = None,
         txn: tuple[str, int] | None = None,
     ) -> int:
-        """Commit pre-staged data files (written by an external writer,
-        e.g. the pulsar_delta_cdc DataSourceStreamWriter's executors).
-        ``adds`` are raw add-action dicts with table-relative paths.
-
-        Like ``write()``, an evolved ``schema_json`` (new columns vs the
-        current snapshot) or changed ``partition_by`` emits a fresh
-        ``metaData`` action — without it, a schema evolution arriving
-        through the streaming sink (sources/datasource.py) would never
-        reach the log and schema-pinned readers would silently drop the
-        new column. Actions are rebuilt per OCC retry so a racing
-        metadata commit is re-merged, never clobbered."""
-        while True:
-            actions: list[dict] = []
-            read_version: int | None = None
-            prior: Snapshot | None = None
-            first = not (self.exists() and self.versions())
-            if txn is not None:
-                app_id, txn_version = txn
-                if not first and self.last_txn_version(app_id) >= txn_version:
-                    return -1  # replayed batch: files stay orphaned outside the log
-                actions.append(
-                    {"txn": {"appId": app_id, "version": txn_version, "lastUpdated": int(time.time() * 1000)}}
-                )
-                if not first:
-                    read_version = self.versions()[-1]  # idempotency checked here
-            if first:
-                # expected-v0 guard: losing a concurrent CREATE race must
-                # re-enter the loop as a non-first commit (schema merge),
-                # never blind-append a second protocol/metaData at v1
-                read_version = -1
-                actions.append({"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}})
-                actions.append(_metadata(
-                    None, schema_string=schema_json, partition_columns=partition_by or []
-                ))
-            else:
-                prior = self.snapshot()
-                merged = self._merge_schema_strings(prior.schema_string, schema_json)
-                # partition_by=None means "keep the table's partitioning"
-                # — only an explicit list participates in change detection
-                # (resetting a partitioned table to [] must be deliberate)
-                new_pcols = (
-                    list(partition_by) if partition_by is not None else prior.partition_columns
-                )
-                if merged is not None or new_pcols != prior.partition_columns:
-                    actions.append(_metadata(
-                        prior,
-                        schema_string=merged or prior.schema_string or schema_json,
-                        partition_columns=new_pcols,
-                    ))
-                    read_version = prior.version  # don't clobber a racing schema change
-            actions.extend({"add": a} for a in adds)
-            try:
-                return self._commit(prior, actions, operation, read_version=read_version)
-            except DeltaConcurrentCommit:
-                if txn is not None and self.last_txn_version(txn[0]) >= txn[1]:
-                    return -1  # a racer delivered this exact batch
-                # loop: rebuild actions (txn read_version, schema merge)
-                # against the post-race snapshot
+        """Append files another writer staged in the table dir
+        (``adds``: add actions with table-relative paths, in the table's
+        partition dirs under its physical column names): ``write()``'s
+        append without the frame, one ``_plan_append`` and one
+        ``_commit_append``. ``schema_json`` is the files' schema (new
+        columns extend the table's); ``partition_by`` None keeps the
+        table's partitioning, another list must equal it. The files are
+        checked against the table's CHECK, NOT NULL and generated
+        columns; a delivered ``txn`` returns -1 and leaves them outside
+        the log; a lost race commits at the next version while they
+        still fit the table."""
+        snap = self.snapshot() if self.exists() and self.versions() else None
+        plan = self._plan_append(snap, schema_json, partition_by)
+        return self._commit_append(plan, adds, txn, operation, snap=snap)
 
     def enable_column_mapping(self) -> int:
         """``ALTER TABLE ... SET ('delta.columnMapping.mode'='name')``
@@ -5380,16 +5426,18 @@ class DeltaTable:
     def _guard_column_referenced(self, snap: Snapshot, name: str) -> None:
         """A rename/drop must not silently break expressions that
         reference the column by its LOGICAL name."""
-        for c, expr in _generation_exprs(snap.schema_string).items():
+        rules = _Rules.of(snap.schema_string, snap.configuration)
+        for c, expr in rules.generated.items():
             if name in expr:
                 raise DeltaProtocolError(
                     f"column {name!r} is referenced by generated column "
                     f"{c!r} ({expr!r}); drop or redefine it first"
                 )
-        for k, v in (snap.configuration or {}).items():
-            if k.startswith("delta.constraints.") and name in v:
+        for k, v in rules.checks.items():
+            if name in v:
                 raise DeltaProtocolError(
-                    f"column {name!r} is referenced by constraint {k} ({v!r})"
+                    f"column {name!r} is referenced by constraint "
+                    f"{self.CONSTRAINT_PREFIX}{k} ({v!r})"
                 )
 
     def _guard_stats_cols_referenced(self, snap: Snapshot, name: str) -> None:

@@ -23,6 +23,7 @@ replacement for the reference's per-partition state-store checkpoints
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import threading
 import uuid
@@ -98,6 +99,19 @@ def events_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: int |
 _PROBED_OK: set[tuple[str, str]] = set()
 
 
+_PROCESS_DIR: list[tempfile.TemporaryDirectory] = []
+_PROCESS_DIR_LOCK = threading.Lock()
+
+
+def _process_dir() -> str:
+    """A temp dir this process owns; its finalizer removes it when the
+    interpreter exits."""
+    with _PROCESS_DIR_LOCK:
+        if not _PROCESS_DIR:
+            _PROCESS_DIR.append(tempfile.TemporaryDirectory(prefix="pids_proc_"))
+        return _PROCESS_DIR[0].name
+
+
 def late_split_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     """Three-file OUT-OF-ORDER split of the events fixture, for driving
     watermark late-data semantics through real micro-batches
@@ -118,16 +132,17 @@ def late_split_stream_dir(spark: SparkSession, sf_dir: str) -> str:
 
     The split is rebuilt whenever the fixture file changes (dir keyed by
     mtime+size — the round-4 drift lesson), and the max(ts) aggregation
-    here is stream-PREP materialization, not query-plan work."""
+    here is stream-PREP materialization, not query-plan work. It lives
+    in this process's own temp dir (:func:`_process_dir`), so every
+    process builds its own once and none is left behind."""
     import hashlib
-    import shutil
 
     src = os.path.join(sf_dir, "events.parquet")
     st = os.stat(src)
     key = hashlib.md5(
         f"{os.path.abspath(sf_dir)}:{st.st_mtime_ns}:{st.st_size}".encode()
     ).hexdigest()[:10]
-    d = os.path.join(tempfile.gettempdir(), f"pids_late_events_{key}")
+    d = os.path.join(_process_dir(), f"pids_late_events_{key}")
     marker = os.path.join(d, "_SPLIT_DONE")
     if os.path.exists(marker):
         return d

@@ -769,7 +769,8 @@ def test_occ_checkpoint_and_expiry_roundtrip(occ_fs):
 
 def test_external_adds_partition_by_none_keeps_partitioning(spark, tmp_path):
     """partition_by=None on a later external-adds commit must keep the
-    table's partition columns, not silently reset them to []."""
+    table's partition columns, not silently reset them to []; an
+    explicit different list is refused, as write() refuses it."""
     path = str(tmp_path / "pext")
     t = DeltaTable(path)
     df = spark.createDataFrame([(1, "a"), (2, "b")], "event_id long, part string")
@@ -780,13 +781,14 @@ def test_external_adds_partition_by_none_keeps_partitioning(spark, tmp_path):
     # responsibility; here we only assert the metadata semantics
     t.commit_external_adds([_ext_add("extra.parquet")], "WRITE", schema_json=schema)
     assert t.snapshot().partition_columns == ["part"]
-    # explicit [] IS a deliberate reset and records a metaData action
-    v = t.commit_external_adds(
-        [_ext_add("extra2.parquet")], "WRITE", schema_json=schema, partition_by=[]
-    )
-    _write_pq(path, "extra2.parquet", [4])
-    assert t.snapshot().partition_columns == []
-    assert any("metaData" in a for a in t.actions(v))
+    # changing the partitioning takes write(..., overwrite_schema=True)
+    v = t.latest_version()
+    with pytest.raises(DeltaProtocolError, match="conflicts with the table's partitioning"):
+        t.commit_external_adds(
+            [_ext_add("extra2.parquet")], "WRITE", schema_json=schema, partition_by=[]
+        )
+    assert t.latest_version() == v
+    assert t.snapshot().partition_columns == ["part"]
 
 
 def test_occ_concurrent_create_race_merges_not_clobbers(occ_fs):

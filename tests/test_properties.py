@@ -175,6 +175,38 @@ def test_late_split_dir_rebuilds_on_fixture_change(spark, tmp_path):
     assert d2 != d1, "split dir must rebuild when the fixture changes"
 
 
+def test_late_split_dir_does_not_outlive_its_process(spark, sf_dir, tmp_path):
+    """The split is built under the process's own temp dir, which
+    the process removes at exit: no ``pids_late_events_*`` dir survives
+    the process that made it."""
+    import os
+    import shutil
+    import subprocess
+    import sys
+
+    from pulsar_io_delta_spark.streaming import runner
+
+    fixture_dir = str(tmp_path / "sf")
+    os.makedirs(fixture_dir)
+    shutil.copy(os.path.join(sf_dir, "events.parquet"), fixture_dir + "/events.parquet")
+    d = runner.late_split_stream_dir(spark, fixture_dir)
+    assert os.path.basename(d).startswith("pids_late_events_")
+    assert os.path.dirname(d) == runner._process_dir()
+    # a child process's dir, with a split-named dir inside, is gone
+    # once the child exits
+    made = subprocess.run(
+        [sys.executable, "-c",
+         "import os\n"
+         "from pulsar_io_delta_spark.streaming.runner import _process_dir\n"
+         "d = os.path.join(_process_dir(), 'pids_late_events_x')\n"
+         "os.makedirs(d)\n"
+         "print(d)\n"],
+        capture_output=True, text=True, check=True, cwd=os.getcwd(),
+    ).stdout.strip()
+    assert os.path.basename(made) == "pids_late_events_x"
+    assert not os.path.exists(os.path.dirname(made))
+
+
 def _interleave(b1: int, b2: int, bits: int = 16) -> int:
     z = 0
     for i in range(bits):
