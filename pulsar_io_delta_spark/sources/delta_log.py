@@ -326,6 +326,58 @@ def _where_filters(
     return df
 
 
+class _Replay:
+    """Snapshot replay's running state: the log-tail overlay and
+    tombstones over the checkpoint bases, the last metaData, protocol
+    and domains, and the latest txn version per appId."""
+
+    def __init__(self, bases=(), overlay=None, removed=None, metadata=None,
+                 protocol=None, domains=None, txns=None):
+        self.bases = list(bases)
+        self.overlay = dict(overlay or {})
+        self.removed = set(removed or ())
+        self.metadata = metadata or {}
+        self.protocol = dict(protocol or {"minReaderVersion": 1, "minWriterVersion": 2})
+        self.domains = dict(domains or {})
+        self.txns = dict(txns or {})
+
+    def apply(self, actions: list[dict]) -> None:
+        for action in actions:
+            if "add" in action:
+                p = action["add"]["path"]
+                self.overlay[p] = action["add"]
+                self.removed.discard(p)
+            elif "remove" in action:
+                p = action["remove"]["path"]
+                self.overlay.pop(p, None)
+                self.removed.add(p)
+            elif "metaData" in action:
+                self.metadata = action["metaData"]
+            elif "protocol" in action:
+                self.protocol = action["protocol"]
+                _check_protocol(self.protocol)
+            elif "domainMetadata" in action:
+                dm = action["domainMetadata"]
+                if dm.get("removed"):
+                    self.domains.pop(dm.get("domain"), None)
+                else:
+                    self.domains[dm["domain"]] = dm
+            elif "txn" in action:
+                t = action["txn"]
+                if t.get("appId"):
+                    self.txns[t["appId"]] = max(self.txns.get(t["appId"], -1), int(t.get("version", -1)))
+
+    def snapshot(self, version: int) -> "Snapshot":
+        return Snapshot(
+            version=version,
+            metadata=self.metadata,
+            protocol=self.protocol,
+            domain_metadata=self.domains,
+            txns=self.txns,
+            store=_LiveStore(self.bases, self.overlay, self.removed),
+        )
+
+
 class Snapshot:
     """Versioned table state. The live-file plane is COLUMNAR: a
     checkpoint's add rows stay inside one arrow table (`_LiveStore`)
@@ -349,6 +401,7 @@ class Snapshot:
         protocol: dict | None = None,
         domain_metadata: dict[str, dict] | None = None,
         store: "_LiveStore | None" = None,
+        txns: dict[str, int] | None = None,
     ):
         self.version = version
         # the table's current metaData action as logged (empty before
@@ -362,6 +415,9 @@ class Snapshot:
         # writers must PRESERVE these across checkpoints —
         # liquid-clustered tables carry their clustering state here)
         self.domain_metadata = dict(domain_metadata or {})
+        # appId → the latest txn version through this snapshot: what an
+        # idempotent sink has already delivered
+        self.txns = dict(txns or {})
         if store is None:
             store = _LiveStore([], dict(adds or {}), set())
         self._store = store
@@ -373,6 +429,16 @@ class Snapshot:
     @property
     def schema_string(self) -> str | None:
         return self.metadata.get("schemaString")
+
+    def advanced(self, version: int, actions: list[dict]) -> "Snapshot":
+        """The snapshot at ``version`` when ``actions`` are that commit
+        and this snapshot is ``version - 1``: replay's fold over one
+        more commit, without reading the log again."""
+        st = self._store
+        replay = _Replay(st._bases, st._overlay, st._removed, self.metadata,
+                         self.protocol, self.domain_metadata, self.txns)
+        replay.apply(actions)
+        return replay.snapshot(version)
 
     @property
     def partition_columns(self) -> list[str]:
@@ -2253,21 +2319,13 @@ class DeltaTable:
 
     def snapshot(self, version: int | None = None, timestamp_ms: int | None = None) -> Snapshot:
         v = self.resolve_version(version, timestamp_ms)
-        bases: list[_AddColumns] = []
-        overlay: dict[str, dict] = {}
-        removed: set[str] = set()
-        metadata: dict = {}
-        protocol: dict = {"minReaderVersion": 1, "minWriterVersion": 2}
-        domains: dict[str, dict] = {}
+        replay = _Replay()
         replay_from = 0
         usable_ckpts = [c for c in self.checkpoint_versions() if c <= v]
         if usable_ckpts:
             ck = self._load_checkpoint(usable_ckpts[-1])
-            bases = list(ck["live_bases"])
-            overlay = dict(ck["live_extra"])
-            metadata = ck["metadata"]
-            protocol = dict(ck.get("protocol") or protocol)
-            domains = dict(ck.get("domain_metadata") or {})
+            replay = _Replay(ck["live_bases"], ck["live_extra"], (), ck["metadata"],
+                             ck.get("protocol"), ck.get("domain_metadata"), ck["txns"])
             replay_from = usable_ckpts[-1] + 1
         # minor log compactions: a range file standing in for its
         # commits — replay reads ONE file and jumps past the range
@@ -2286,33 +2344,8 @@ class DeltaTable:
                 skip_until = comp[0]
             else:
                 acts = self.actions(ver)
-            for action in acts:
-                if "add" in action:
-                    p = action["add"]["path"]
-                    overlay[p] = action["add"]
-                    removed.discard(p)
-                elif "remove" in action:
-                    p = action["remove"]["path"]
-                    overlay.pop(p, None)
-                    removed.add(p)
-                elif "metaData" in action:
-                    metadata = action["metaData"]
-                elif "protocol" in action:
-                    protocol = action["protocol"]
-                    _check_protocol(protocol)
-                elif "domainMetadata" in action:
-                    dm = action["domainMetadata"]
-                    if dm.get("removed"):
-                        domains.pop(dm.get("domain"), None)
-                    else:
-                        domains[dm["domain"]] = dm
-        snap = Snapshot(
-            version=v,
-            metadata=metadata,
-            protocol=protocol,
-            domain_metadata=domains,
-            store=_LiveStore(bases, overlay, removed),
-        )
+            replay.apply(acts)
+        snap = replay.snapshot(v)
         if v not in self._crc_checked:
             # once per (table handle, version): the committer's .crc
             # sidecar must agree with this replay — corruption tripwire
@@ -2440,7 +2473,7 @@ class DeltaTable:
                     "defaultRowCommitVersion": a.get("defaultRowCommitVersion"),
                 }
             )
-        for app_id, txn_v in self._txns_through(v).items():
+        for app_id, txn_v in snap.txns.items():
             rows.append({"action_type": "txn", "txn_appId": app_id, "txn_version": txn_v})
         for dm in snap.domain_metadata.values():
             # spec: writers must PRESERVE domain metadata across
@@ -2533,7 +2566,7 @@ class DeltaTable:
             )
         else:
             actions.extend({"add": add} for add in file_actions)
-        for app_id, txn_v in self._txns_through(v).items():
+        for app_id, txn_v in snap.txns.items():
             actions.append({"txn": {"appId": app_id, "version": txn_v}})
         for dm in snap.domain_metadata.values():
             actions.append({"domainMetadata": dm})
@@ -2786,20 +2819,6 @@ class DeltaTable:
             "domain_metadata": domains,
             "timestamp": ts,
         }
-
-    def _txns_through(self, version: int) -> dict[str, int]:
-        txns: dict[str, int] = {}
-        ckpts = [c for c in self.checkpoint_versions() if c <= version]
-        if ckpts:
-            txns.update(self._load_checkpoint(ckpts[-1])["txns"])
-        for ver in self.json_versions():
-            if ver > version:
-                continue
-            for action in self.actions(ver):
-                t = action.get("txn")
-                if t and t.get("appId"):
-                    txns[t["appId"]] = max(txns.get(t["appId"], -1), int(t.get("version", -1)))
-        return txns
 
     def expire_log(self, retention_ms: int | None = None) -> list[int]:
         """Delete JSON commits already covered by the newest checkpoint
@@ -3768,7 +3787,7 @@ class DeltaTable:
             try:
                 self.fs.create_exclusive(fp, body)
                 try:
-                    self._write_checksum(version, actions)
+                    self._write_checksum(version, actions, snap)
                 except OSError:
                     # the commit is already durable; the checksum is a
                     # best-effort integrity sidecar (delta-spark
@@ -3810,7 +3829,7 @@ class DeltaTable:
         except (ValueError, OSError):
             return None  # unreadable sidecar: validation just skips
 
-    def _write_checksum(self, version: int, actions: list[dict]) -> None:
+    def _write_checksum(self, version: int, actions: list[dict], snap: Snapshot | None) -> None:
         """Version-checksum sidecar (delta-spark's ``<version>.crc``):
         the table's live-file count and byte total as of this commit,
         written by the committer and VALIDATED against every snapshot
@@ -3819,16 +3838,20 @@ class DeltaTable:
 
         The account comes from one columnar totals pass over the
         post-commit snapshot (arrow sum on the checkpoint base + the
-        O(churn) tail overlay — the same replay the surrounding write
-        path already pays). An adds-minus-removes increment would be
-        cheaper but WRONG for re-add commits: a row-tracking backfill
-        or DV update re-adds an already-live path without a paired
-        remove, which double-counts. Tables whose file actions lack
+        O(churn) tail overlay): ``snap``, the state the commit was built
+        on, advanced by replay's own fold over ``actions``, or a fresh
+        replay when a racer's commit landed in between. An
+        adds-minus-removes increment would be cheaper but WRONG for
+        re-add commits: a row-tracking backfill or DV update re-adds an
+        already-live path without a paired remove, which double-counts.
+        Tables whose file actions lack
         sizes (handwritten fixture logs) skip the sidecar — validation
         is opt-in by construction."""
         if any(a["add"].get("size") is None for a in actions if "add" in a):
             return
-        totals = self.snapshot(version).adds.file_stats_totals()
+        post = (snap.advanced(version, actions) if snap is not None and snap.version == version - 1
+                else self.snapshot(version))
+        totals = post.adds.file_stats_totals()
         if totals is None:
             return
         nf, tb = totals
@@ -4210,8 +4233,9 @@ class DeltaTable:
         again against the head and commits there while the staged
         files still fit (``stages_like``), else it raises
         DeltaConcurrentCommit, as a ``pinned`` commit does at once."""
-        if txn is not None and self.last_txn_version(txn[0]) >= txn[1]:
-            return -1
+
+        def delivered(s: Snapshot | None) -> bool:
+            return txn is not None and s is not None and s.txns.get(txn[0], -1) >= txn[1]
 
         def replan(head: Snapshot) -> _AppendPlan:
             new = self._plan_append(head, plan.schema_json, plan.partition_by)
@@ -4225,8 +4249,10 @@ class DeltaTable:
         if snap is None and not pinned and self.exists() and self.versions():
             # planned elsewhere (a sink's writer): the table may have moved
             snap = self.snapshot()
-            if snap.version != plan.version:
-                plan = replan(snap)
+        if delivered(snap):
+            return -1
+        if snap is not None and snap.version != plan.version:
+            plan = replan(snap)
         files = [{"add": a} for a in adds]
         if rows is not None:
             self._validate_constraints(rows, plan.rules)
@@ -4245,11 +4271,11 @@ class DeltaTable:
             try:
                 return self._commit(snap, actions, operation, read_version=plan.version)
             except DeltaConcurrentCommit:
-                if txn is not None and self.last_txn_version(txn[0]) >= txn[1]:
+                head = self.snapshot()
+                if delivered(head):
                     return -1  # a racer delivered this exact batch
                 if pinned:
                     raise
-                head = self.snapshot()
                 if head.version <= plan.version:
                     raise DeltaProtocolError(
                         f"commit stalled: {operation} lost v{plan.version + 1}, "
@@ -5916,7 +5942,7 @@ class DeltaTable:
     def last_txn_version(self, app_id: str) -> int:
         if not (self.exists() and self.versions()):
             return -1
-        return self._txns_through(self.latest_version()).get(app_id, -1)
+        return self.snapshot().txns.get(app_id, -1)
 
 
 def delta_sink(table_path: str, app_id: str, partition_by: list[str] | None = None):

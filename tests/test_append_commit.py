@@ -3,6 +3,7 @@ the ``pulsar_delta_cdc`` sink plan through ``_plan_append`` and commit
 through ``_commit_append``, so every append meets the same table rules."""
 
 import ast
+import json
 import inspect
 import os
 
@@ -231,8 +232,8 @@ def test_stream_writer_keeps_explicit_identity_values(spark, tmp_path):
 
 def test_one_append_commit():
     """In delta_log.py one function commits a freshly built txn marker
-    and one re-checks ``last_txn_version`` after a lost race: both are
-    ``_commit_append``."""
+    and one re-checks the delivered txns (``delivered``, on the head
+    snapshot) after a lost race: both are ``_commit_append``."""
     tree = ast.parse(inspect.getsource(delta_log))
     markers, rechecks = set(), set()
     for fn in ast.walk(tree):
@@ -255,7 +256,7 @@ def test_one_append_commit():
                 and isinstance(n.type, ast.Name)
                 and n.type.id == "DeltaConcurrentCommit"
                 and any(
-                    isinstance(m, ast.Attribute) and m.attr == "last_txn_version"
+                    isinstance(m, ast.Name) and m.id == "delivered"
                     for m in ast.walk(n)
                 )
             ):
@@ -272,3 +273,34 @@ def test_one_append_commit():
         )
     }
     assert callers == {"write", "commit_external_adds", "convert_from_parquet"}
+
+
+def test_txn_append_parses_each_commit_once(tmp_path, monkeypatch):
+    """A txn append reads the delivered versions and the post-commit
+    checksum from the snapshot it plans against: on an 800-commit log
+    with no checkpoint, each JSON commit is parsed at most once."""
+    log_dir = tmp_path / "_delta_log"
+    log_dir.mkdir()
+    schema = '{"type":"struct","fields":[{"name":"k","type":"long","nullable":true,"metadata":{}}]}'
+
+    def add(i):
+        return {"add": {"path": f"f{i}.parquet", "partitionValues": {}, "size": 10,
+                        "modificationTime": 0, "dataChange": True, "stats": '{"numRecords": 1}'}}
+
+    head = [{"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+            {"metaData": {"id": "t", "format": {"provider": "parquet", "options": {}},
+                          "schemaString": schema, "partitionColumns": [], "configuration": {}}}]
+    for v in range(800):
+        acts = (head if v == 0 else [{"txn": {"appId": "app", "version": v}}]) + [add(v)]
+        (log_dir / f"{v:020d}.json").write_text("".join(json.dumps(a) + "\n" for a in acts))
+    parsed = []
+    real = DeltaTable.actions
+    monkeypatch.setattr(DeltaTable, "actions", lambda self, v: parsed.append(v) or real(self, v))
+    t = DeltaTable(str(tmp_path))
+    for txn_version, committed in ((799, -1), (800, 800)):
+        parsed.clear()
+        assert t.commit_external_adds(
+            [add(800)["add"]], "STREAMING UPDATE", schema, txn=("app", txn_version)
+        ) == committed
+        assert sorted(parsed) == list(range(800))
+    assert DeltaTable(str(tmp_path)).last_txn_version("app") == 800

@@ -2274,9 +2274,10 @@ def test_one_metadata_builder():
 
 
 def test_external_adds_read_state_once(spark, tmp_path, monkeypatch):
-    """commit_external_adds reads the table state once before it
-    commits and once after, for the version checksum. On a row-tracked
-    table the row-id high-water mark comes from that first read."""
+    """commit_external_adds reads the table state once, before it
+    commits; the version checksum advances that state by the commit's
+    actions. On a row-tracked table the row-id high-water mark comes
+    from the same read."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -2310,6 +2311,6 @@ def test_external_adds_read_state_once(spark, tmp_path, monkeypatch):
                "stats": '{"numRecords": 1}'}
         calls.clear()
         v = t.commit_external_adds([add], "WRITE", schema_json=schema_json)
-        assert calls == ["snapshot", "commit", "snapshot"]
+        assert calls == ["snapshot", "commit"]
         (logged,) = [a["add"] for a in t.actions(v) if "add" in a]
         assert logged["baseRowId"] == 4 + k
