@@ -405,7 +405,7 @@ def q_column_mapping_write(spark, sf_dir):
     - delete_where('event_id % 7 = 1', filters=[event_type='click']) —
       rewrite path, partition pruning translated logical → physical
       (only the click partition's files are rewritten; the DV survives
-      the rewrite via _scan_live);
+      the rewrite via _live_rows);
     - compact(target_files=2) — dataChange=false physical re-staging.
 
     Scale shape: identical to the unmapped paths (the rename is a

@@ -85,7 +85,10 @@ class _ClassDataSharing:
         except OSError:
             self.reuses = False
         opt = "SharedArchiveFile" if self.reuses else "ArchiveClassesAtExit"
-        self.flags = f'"-XX:{opt}={archive}" {_CDS_LOG}'
+        # a JVM that dies mapping a damaged archive writes its crash log
+        # next to the archive, not into the caller's working directory
+        crash_log = os.path.join(os.path.dirname(archive), "hs_err_pid%p.log")
+        self.flags = f'"-XX:{opt}={archive}" "-XX:ErrorFile={crash_log}" {_CDS_LOG}'
 
     @classmethod
     def for_launch(cls) -> "_ClassDataSharing | None":

@@ -51,6 +51,11 @@ Scale notes: the log is small (one JSON per commit); only the driver
 reads it. Data files are read by executors through the ordinary
 vectorized parquet scan with partition-directory inference
 (``basePath``), so snapshot reads get pruning/pushdown for free.
+Snapshot reads, rewrites and change reads all build that scan in one
+place, ``DeltaTable._scan``: what the log knows per file (a clone
+file's partition values, row-id bases, commit version and times, the
+deletion vector) joins in from one small Arrow-built broadcast lookup,
+and a table that needs none of it reads as the bare scan.
 """
 
 from __future__ import annotations
@@ -447,6 +452,15 @@ class Snapshot:
     @property
     def configuration(self) -> dict:
         return dict(self.metadata.get("configuration") or {})
+
+    @property
+    def epoch(self) -> "Epoch":
+        """The partition columns, schema and configuration this
+        snapshot's files are read under."""
+        return Epoch(
+            self.version, tuple(self.partition_columns), self.schema_string,
+            self.configuration,
+        )
 
     @property
     def files(self) -> list[str]:
@@ -1990,6 +2004,21 @@ def hive_value(segment: str) -> str | None:
     return None if segment == _HIVE_NULL else urllib.parse.unquote(segment)
 
 
+def _deleting_dv(action: dict) -> dict | None:
+    """An add or remove action's deletion vector when it deletes rows."""
+    dv = action.get("deletionVector")
+    return dv if dv and int(dv.get("cardinality") or 0) > 0 else None
+
+
+class _ScanFile(NamedTuple):
+    """A live file as ``DeltaTable._scan`` reads it (``ChangeFile``
+    carries the same three fields)."""
+
+    path: str
+    partition_values: dict  # protocol form: raw strings, null as None
+    dv: dict | None  # deletion-vector descriptor, only when rows are deleted
+
+
 class ChangeFile(NamedTuple):
     """One data-changing file of a commit, as every change reader sees
     it (``DeltaTable.change_log``)."""
@@ -2878,111 +2907,270 @@ class DeltaTable:
         return expired
 
     # ---------- reading data ----------
+    #
+    # Every row a reader or a rewriter sees comes out of ``_scan``: one
+    # epoch's files read under its schema and column mapping, per-file
+    # columns from the log attached by one broadcast join, and rows the
+    # deletion vectors delete removed. ``_live_rows`` feeds it a
+    # snapshot's files, ``_scan_changes`` a change log's.
 
     def _read_files(
         self,
         spark: SparkSession,
-        rel_paths: list[str],
-        schema_string: str | None = None,
+        paths: list[str],
+        schema,
+        pcols: list[str],
         base_path: str | None = None,
-        pv_by_abs: dict[str, dict] | None = None,
-        partition_cols: list[str] | None = None,
-    ) -> DataFrame:
+    ) -> list[DataFrame]:
+        """The parquet scans of ``paths`` under ``schema`` (the log's,
+        physical names; None infers): one of the table's own files,
+        with partition columns from the hive directories under
+        ``base_path`` (default the table root), and one of ABSOLUTE-path
+        adds (Delta PROTOCOL.md, the shallow-clone layout). Those live
+        under another table's layout, so their partition columns
+        ``pcols`` are typed nulls here and ``_scan`` fills them from
+        the log. Both scans order columns as Spark's hive scan does:
+        data columns, then partition columns. The log schema governs:
+        files written before a schema evolution null-fill the new
+        columns instead of letting inference drop them."""
         pin_session(spark)
-        from pyspark.sql.types import StructType
-
-        _guard_collations(schema_string)
-        schema = (
-            StructType.fromJson(json.loads(schema_string))
-            if schema_string is not None
-            else None
-        )
-        # add.path may be an ABSOLUTE reference outside the table root
-        # (Delta PROTOCOL.md — the shallow-clone layout). Those files
-        # can't share the hive-basePath scan: partition columns come
-        # from the log instead (``pv_by_abs``), see _read_external.
-        rel = [p for p in rel_paths if not os.path.isabs(p)]
-        ext = [p for p in rel_paths if os.path.isabs(p)]
-        branches: list[DataFrame] = []
+        rel = [os.path.join(self.path, p) for p in paths if not os.path.isabs(p)]
+        ext = [p for p in paths if os.path.isabs(p)]
+        scans: list[DataFrame] = []
         if rel:
-            reader = spark.read
-            if schema is not None:
-                # Log schema governs (Delta semantics): files written
-                # before a schema evolution lack the new columns —
-                # explicit schema null-fills them instead of letting
-                # inference drop them.
-                reader = reader.schema(schema)
-            df = reader.option("basePath", base_path or self.path).parquet(
-                *[os.path.join(self.path, p) for p in rel]
-            )
-            if ext:
-                # materialize the metadata struct so it survives the
-                # union (virtual _metadata doesn't propagate through one)
-                df = df.withColumn("_metadata", F.col("_metadata"))
-            branches.append(df)
+            reader = spark.read if schema is None else spark.read.schema(schema)
+            scans.append(reader.option("basePath", base_path or self.path).parquet(*rel))
         if ext:
-            branches.append(
-                self._read_external(
-                    spark, ext, schema, pv_by_abs or {}, partition_cols or []
+            if schema is None:
+                raise DeltaProtocolError(
+                    "absolute-path adds require a log schemaString to scan"
+                )
+            from pyspark.sql.types import StructType
+
+            data = StructType([f for f in schema.fields if f.name not in pcols])
+            scans.append(
+                spark.read.schema(data).parquet(*ext).select(
+                    *data.fieldNames(),
+                    *[F.lit(None).cast(schema[c].dataType).alias(c) for c in pcols],
                 )
             )
-        out = branches[0]
-        for b in branches[1:]:
-            out = out.unionByName(b)
-        return out
+        return scans
 
-    def _read_external(
+    def _scan(
         self,
         spark: SparkSession,
-        abs_paths: list[str],
-        schema,
-        pv_by_abs: dict[str, dict],
-        pcols: list[str],
+        epoch: Epoch,
+        files: list,
+        columns: dict[str, list] | None = None,
+        *,
+        extra: dict[str, str] | None = None,
+        keys: tuple[str, ...] = (),
+        base_path: str | None = None,
     ) -> DataFrame:
-        """Scan ABSOLUTE-path adds (shallow clone). No hive directory
-        inference applies — the files live under ANOTHER table's layout
-        — so partition columns are attached from the log's per-file
-        ``partitionValues`` (the spec's source of truth) via a broadcast
-        join keyed on the decoded file path: O(live files) string rows,
-        never data-sized. ``_metadata`` is materialized as a regular
-        column so downstream ``_metadata.*`` references (DV anti-join,
-        CDC lookup keys) keep resolving after the union with the
-        relative-path branch."""
-        if schema is None:
-            raise DeltaProtocolError(
-                "absolute-path adds require a log schemaString to scan"
-            )
-        from pyspark.sql.types import StringType, StructField, StructType
+        """The one file scan: the rows of ``files`` (records with
+        ``path``, ``partition_values`` and ``dv``, as ``_ScanFile`` and
+        ``ChangeFile`` carry them; a path may repeat) read under
+        ``epoch``.
 
-        data_fields = [f for f in schema.fields if f.name not in set(pcols)]
-        df = (
-            spark.read.schema(StructType(data_fields))
-            .parquet(*abs_paths)
-            .withColumn("_metadata", F.col("_metadata"))
-        )
-        if pcols:
-            pv_schema = StructType(
-                [StructField("__pv_fp", StringType())]
-                + [StructField(f"__pv_{i}", StringType()) for i in range(len(pcols))]
-            )
-            pv_rows = [
-                [p] + [(pv_by_abs.get(p) or {}).get(c) for c in pcols]
-                for p in abs_paths
+        - The epoch's schemaString pins the read schema, with physical
+          names under column mapping, plus the ``extra`` columns
+          (name → type) the files carry outside it.
+        - ``columns`` (name → one value per record), an absolute-path
+          file's partition values and a deletion vector's digest come
+          from ONE lookup, built from Arrow and broadcast-joined on the
+          decoded file path ``_fp``: O(records) rows, never data-sized,
+          and each record of a repeated path gets the file's rows.
+        - Rows a record's deletion vector deletes are anti-joined away
+          on (``_fp``, ``_dv``, ``_ridx``): two records of one file with
+          different vectors filter differently. ``_ridx`` is the parquet
+          row index, the physical ordinal a vector addresses.
+        - The result has the table's columns under logical names,
+          ``extra``, ``keys`` (``_fp`` / ``_ridx``) and ``columns``.
+
+        Without column mapping, deletion vectors, absolute paths,
+        ``columns`` or ``keys`` it is the bare parquet scan, with no
+        ``_metadata`` column and no join."""
+        import pyarrow as pa
+        from pyspark.sql.types import StructType
+
+        _guard_collations(epoch.schema_string)
+        extra = extra or {}
+        columns = columns or {}
+        mapping = _column_mapping(epoch.schema_string, epoch.configuration)
+        schema = None
+        if epoch.schema_string is not None:
+            s = json.loads(mapping[0] if mapping else epoch.schema_string)
+            s["fields"] += [
+                {"name": n, "type": t, "nullable": True, "metadata": {}}
+                for n, t in extra.items()
             ]
-            by_name = {f.name: f for f in schema.fields}
+            schema = StructType.fromJson(s)
+        pcols = self._physical_pcols(mapping, list(epoch.partition_columns))
+        lookup = dict(columns)
+        ext_pv = bool(pcols) and any(os.path.isabs(f.path) for f in files)
+        for i, c in enumerate(pcols if ext_pv else []):
+            lookup[f"__pv_{i}"] = pa.array(
+                [f.partition_values.get(c) if os.path.isabs(f.path) else None for f in files],
+                pa.string(),
+            )
+        fps = [os.path.abspath(os.path.join(self.path, f.path)) for f in files]
+        digests = [json.dumps(f.dv, sort_keys=True) if f.dv else None for f in files]
+        deleted = sorted({(fp, d) for fp, d in zip(fps, digests) if d})
+        if deleted:
+            lookup["_dv"] = pa.array(digests, pa.string())
+        scans = self._read_files(
+            spark, list(dict.fromkeys(f.path for f in files)), schema, pcols, base_path
+        )
+        df = None
+        for scan in scans:
+            # _metadata.file_path is a percent-encoded Hadoop URI
+            # (file:/abs/path); decoded, it is the lookup key
+            if lookup or "_fp" in keys:
+                scan = scan.withColumn("_fp", _posix_path_col(F.col("_metadata.file_path")))
+            if deleted or "_ridx" in keys:
+                scan = scan.withColumn("_ridx", F.col("_metadata.row_index"))
+            df = scan if df is None else df.unionByName(scan)
+        if not (mapping or lookup or keys):
+            return df
+        if lookup:
+            lookup["_fp"] = pa.array(fps, pa.string())
+            df = df.join(F.broadcast(spark.createDataFrame(pa.table(lookup))), "_fp")
+        for i, c in enumerate(pcols if ext_pv else []):
+            # the logged value, cast like a partition directory's; the
+            # table's own files keep the directory's (their lookup is null)
             df = df.withColumn(
-                "__pv_fp", _posix_path_col(F.col("_metadata.file_path"))
-            ).join(F.broadcast(spark.createDataFrame(pv_rows, pv_schema)), "__pv_fp")
-            for i, c in enumerate(pcols):
-                # canonical partition-value string → declared type (the
-                # same encoding partition dirs carry; null stays null)
-                df = df.withColumn(c, F.col(f"__pv_{i}").cast(by_name[c].dataType))
-            df = df.drop("__pv_fp", *[f"__pv_{i}" for i in range(len(pcols))])
-        # Spark's hive scan surfaces partition columns LAST regardless of
-        # schema position — mirror that so both branches union cleanly
-        # and a clone read orders columns exactly like the source read
-        order = [f.name for f in data_fields] + list(pcols)
-        return df.select([F.col(c) for c in order] + [F.col("_metadata")])
+                c, F.coalesce(F.col(f"__pv_{i}").cast(schema[c].dataType), F.col(c))
+            )
+        if deleted:
+            df = df.join(self._expand_dv_df(spark, deleted), ["_fp", "_dv", "_ridx"], "left_anti")
+        if mapping:
+            return df.select(
+                *_mapping_select_exprs(epoch.schema_string, mapping), *extra, *keys, *columns
+            )
+        return df.drop(
+            *[c for c in ("_fp", "_ridx", "_dv") if c not in keys],
+            *[f"__pv_{i}" for i in range(len(pcols) if ext_pv else 0)],
+        )
+
+    def _expand_dv_df(self, spark: SparkSession, entries: list[tuple[str, str]]) -> DataFrame:
+        """The rows deletion vectors delete, as ``_fp, _dv, _ridx``;
+        ``entries`` are (abs file path, descriptor digest: its sorted
+        JSON, from which the vector resolves).
+
+        Scale shape: descriptors are O(files-with-DVs) small dicts; the
+        bitmap → row-index expansion runs ON EXECUTORS (mapInPandas over
+        the descriptor list), so millions of deleted rows never touch
+        the driver. The log records exact cardinalities, so the
+        broadcast-vs-shuffle choice is made on real numbers, not a
+        guess. Non-local FileSystem shims (in-memory test store) aren't
+        executor-visible — those resolve on the driver, bounded by the
+        test-scale DV size."""
+        import pyarrow as pa
+
+        from pulsar_io_delta_spark.sources.deletion_vectors import resolve_dv
+
+        total_card = sum(int(json.loads(dj)["cardinality"]) for _, dj in entries)
+        if type(self.fs) is LocalFileSystem:
+            table_path, fs = self.path, self.fs
+            desc_df = spark.createDataFrame(
+                pa.table(
+                    {
+                        "_fp": pa.array([fp for fp, _ in entries], pa.string()),
+                        "_dv": pa.array([dj for _, dj in entries], pa.string()),
+                    }
+                )
+            )
+
+            def expand(batches):
+                import pandas as pd
+
+                for pdf in batches:
+                    for fp, dj in zip(pdf["_fp"], pdf["_dv"]):
+                        idx = resolve_dv(json.loads(dj), table_path, fs)
+                        yield pd.DataFrame(
+                            {"_fp": fp, "_dv": dj, "_ridx": pd.Series(idx, dtype="int64")}
+                        )
+
+            deleted = desc_df.repartition(min(len(entries), 32)).mapInPandas(
+                expand, "_fp string, _dv string, _ridx long"
+            )
+        else:
+            rows = [
+                {"_fp": fp, "_dv": dj, "_ridx": int(i)}
+                for fp, dj in entries
+                for i in resolve_dv(json.loads(dj), self.path, self.fs)
+            ]
+            deleted = spark.createDataFrame(
+                pa.Table.from_pylist(
+                    rows,
+                    pa.schema([("_fp", pa.string()), ("_dv", pa.string()), ("_ridx", pa.int64())]),
+                )
+            )
+        if total_card <= 4_000_000:  # ≈64 MB of (path-hash, long) — safe to ship
+            deleted = F.broadcast(deleted)
+        return deleted
+
+    def _live_rows(
+        self,
+        spark: SparkSession,
+        snap: Snapshot,
+        paths: list[str],
+        row_ids: bool | None = None,
+        keys: tuple[str, ...] = (),
+    ) -> DataFrame:
+        """The rows of ``paths`` that ``snap`` shows — its deletion
+        vectors applied, logical names — through ``_scan``.
+
+        ``row_ids`` (default: when the table tracks rows, which is how
+        a rewrite reads them) attaches each row's stable ``row_id`` /
+        ``row_commit_version``: the file's materialized columns when
+        present (rewritten files), else ``add.baseRowId`` + the parquet
+        row index / ``add.defaultRowCommitVersion`` (Delta PROTOCOL.md
+        "Row Tracking"). The per-file bases ride the scan's lookup, so
+        nothing is counted or shuffled to derive ids, and ``_rewrite``
+        carries them into the materialized columns so rewritten rows
+        keep their identity. Such rows come in schema order."""
+        adds = [snap.adds[p] for p in paths]
+        files = [
+            _ScanFile(p, a.get("partitionValues") or {}, _deleting_dv(a))
+            for p, a in zip(paths, adds)
+        ]
+        if row_ids is None:
+            row_ids = _rt_enabled(snap.configuration)
+        if not row_ids:
+            return self._scan(spark, snap.epoch, files, keys=keys)
+        if self._mapping_of(snap):
+            raise DeltaProtocolError(
+                "row-id reads on column-mapped tables are not supported"
+            )
+        if not _rt_enabled(snap.configuration):
+            raise DeltaProtocolError(
+                "row tracking is not enabled on this table "
+                "(delta.enableRowTracking)"
+            )
+        for p, a in zip(paths, adds):
+            if a.get("baseRowId") is None:
+                raise DeltaProtocolError(
+                    f"row-tracked table has a file without baseRowId: {p}"
+                )
+        mat_id, mat_rcv = _rt_mat_cols(snap.configuration)
+        df = self._scan(
+            spark,
+            snap.epoch,
+            files,
+            {
+                "_base": [int(a["baseRowId"]) for a in adds],
+                "_dcv": [int(a.get("defaultRowCommitVersion") or 0) for a in adds],
+            },
+            extra={mat_id: "long", mat_rcv: "long"},
+            keys=tuple(dict.fromkeys(("_ridx", *keys))),
+        )
+        return df.select(
+            *[f["name"] for f in json.loads(snap.schema_string)["fields"]],
+            F.coalesce(F.col(mat_id), F.col("_base") + F.col("_ridx")).cast("long").alias("row_id"),
+            F.coalesce(F.col(mat_rcv), F.col("_dcv")).cast("long").alias("row_commit_version"),
+            *keys,
+        )
 
     def read(
         self,
@@ -3000,7 +3188,9 @@ class DeltaTable:
         scanning a date range. Filters on the SOURCE of a generated
         partition column (e.g. partition event_date = CAST(ts AS DATE),
         filter on ts) derive the implied partition predicate, exactly
-        like delta-spark's generated-column partition pruning.
+        like delta-spark's generated-column partition pruning. A table
+        without deletion vectors, column mapping or absolute-path files
+        reads as one bare parquet scan.
         """
         snap = self.snapshot(version, timestamp_ms)
         files = self._select_files(snap, filters)
@@ -3010,7 +3200,7 @@ class DeltaTable:
             from pyspark.sql.types import StructType
 
             return spark.createDataFrame([], StructType.fromJson(json.loads(snap.schema_string)))
-        return _where_filters(self._scan_live(spark, snap, files), filters)
+        return _where_filters(self._live_rows(spark, snap, files, row_ids=False), filters)
 
     def _select_files(
         self, snap: Snapshot, filters: list[tuple[str, str, object]] | None
@@ -3028,130 +3218,6 @@ class DeltaTable:
         filters = list(filters) + _generated_partition_filters(snap, filters)
         return self.prune_files(snap, self._phys_filters(snap, filters))
 
-    def _scan_live(self, spark: SparkSession, snap: Snapshot, rel_paths: list[str]) -> DataFrame:
-        """Scan ``rel_paths`` with the snapshot's ROW visibility applied:
-        deletion-vector rows filtered out and (name-mode) column mapping
-        renamed physical → logical. Every row-returning code path
-        (read / rewrite sources via _live_rows / diff sides) goes
-        through here — a path that used ``_read_files`` directly would
-        resurrect deleted rows."""
-        mapping = _column_mapping(snap.schema_string, snap.configuration)
-        schema_string = mapping[0] if mapping else snap.schema_string
-        ext_pv = {
-            p: (snap.adds.get(p, {}).get("partitionValues") or {})
-            for p in rel_paths
-            if os.path.isabs(p)
-        }
-        df = self._read_files(
-            spark,
-            rel_paths,
-            schema_string=schema_string,
-            pv_by_abs=ext_pv or None,
-            partition_cols=self._physical_pcols(mapping, list(snap.partition_columns))
-            if ext_pv
-            else None,
-        )
-        dv_by_abs = {
-            os.path.abspath(os.path.join(self.path, p)): dv
-            for p in rel_paths
-            if (dv := snap.adds.get(p, {}).get("deletionVector"))
-            and int(dv.get("cardinality") or 0) > 0
-        }
-        if dv_by_abs:
-            df = self._apply_dv_antijoin(spark, df, dv_by_abs)
-        if mapping:
-            # partition columns surface under physical names too (the
-            # hive dirs are physically named) — the rename covers them
-            df = df.select(_mapping_select_exprs(snap.schema_string, mapping))
-        # the external (absolute-path) branch materializes _metadata as a
-        # real column; it must not leak into the table's logical schema
-        return df.drop("_metadata")
-
-    def _scan_live_rt(
-        self, spark: SparkSession, snap: Snapshot, rel_paths: list[str]
-    ) -> DataFrame:
-        """Live-row scan of a ROW-TRACKED table with each row's stable
-        identity attached: ``row_id`` / ``row_commit_version`` =
-        the file's materialized columns when present (rewritten files),
-        else ``add.baseRowId + parquet row_index`` /
-        ``add.defaultRowCommitVersion`` (fresh files) — Delta
-        PROTOCOL.md "Row Tracking". Per-file bases come from the log via
-        a BROADCAST join on the decoded file path (O(live files) rows);
-        the row_index is the parquet reader's, so nothing is counted or
-        shuffled to derive ids; DV-deleted rows drop AFTER id derivation
-        (surviving rows keep their physical ordinals)."""
-        if self._mapping_of(snap):
-            raise DeltaProtocolError(
-                "row-id reads on column-mapped tables are not supported"
-            )
-        if not _rt_enabled(snap.configuration):
-            raise DeltaProtocolError(
-                "row tracking is not enabled on this table "
-                "(delta.enableRowTracking)"
-            )
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        mat_id, mat_rcv = _rt_mat_cols(snap.configuration)
-        base = json.loads(snap.schema_string)
-        aug = {
-            **base,
-            "fields": list(base["fields"])
-            + [
-                {"name": c, "type": "long", "nullable": True, "metadata": {}}
-                for c in (mat_id, mat_rcv)
-            ],
-        }
-        df = self._read_files(spark, rel_paths, schema_string=json.dumps(aug))
-        df = df.withColumn(
-            "_fp", _posix_path_col(F.col("_metadata.file_path"))
-        ).withColumn("_ridx", F.col("_metadata.row_index"))
-        rows = []
-        for p in rel_paths:
-            a = snap.adds.get(p, {})
-            if a.get("baseRowId") is None:
-                raise DeltaProtocolError(
-                    f"row-tracked table has a file without baseRowId: {p}"
-                )
-            rows.append(
-                [
-                    os.path.abspath(os.path.join(self.path, p)),
-                    int(a["baseRowId"]),
-                    int(a.get("defaultRowCommitVersion") or 0),
-                ]
-            )
-        b = spark.createDataFrame(
-            rows,
-            StructType(
-                [
-                    StructField("_fp", df.schema["_fp"].dataType),
-                    StructField("_base", LongType()),
-                    StructField("_dcv", LongType()),
-                ]
-            ),
-        )
-        df = (
-            df.join(F.broadcast(b), "_fp")
-            .withColumn(
-                "row_id",
-                F.coalesce(F.col(mat_id), F.col("_base") + F.col("_ridx")).cast("long"),
-            )
-            .withColumn(
-                "row_commit_version",
-                F.coalesce(F.col(mat_rcv), F.col("_dcv")).cast("long"),
-            )
-        )
-        entries = [
-            (os.path.abspath(os.path.join(self.path, p)), json.dumps(dv))
-            for p in rel_paths
-            if (dv := snap.adds.get(p, {}).get("deletionVector"))
-            and int(dv.get("cardinality") or 0) > 0
-        ]
-        if entries:
-            deleted = self._expand_dv_df(spark, entries, with_key=False)
-            df = df.join(deleted, ["_fp", "_ridx"], "left_anti")
-        logical = [f["name"] for f in base["fields"]]
-        return df.select(*logical, "row_id", "row_commit_version")
-
     def read_with_row_ids(
         self,
         spark: SparkSession,
@@ -3167,7 +3233,7 @@ class DeltaTable:
         files = self._select_files(snap, filters)
         if not files:
             raise DeltaProtocolError("row-id read of an empty file set")
-        return _where_filters(self._scan_live_rt(spark, snap, files), filters)
+        return _where_filters(self._live_rows(spark, snap, files, row_ids=True), filters)
 
     def enable_row_tracking(self, spark: SparkSession) -> int:
         """In-place row-tracking upgrade of an EXISTING table: one
@@ -3224,121 +3290,6 @@ class DeltaTable:
         return self._commit(
             snap, actions, operation="UPGRADE ROW TRACKING",
             read_version=snap.version,
-        )
-
-    def _live_rows(
-        self, spark: SparkSession, snap: Snapshot, rel_paths: list[str]
-    ) -> DataFrame:
-        """Live rows of ``rel_paths`` as a rewrite reads them: on a
-        row-tracked table with each row's logical ``row_id`` /
-        ``row_commit_version`` attached (``_rewrite`` carries them into
-        the materialized columns, so rewritten rows keep their
-        identity), else the ordinary live scan."""
-        if _rt_enabled(snap.configuration):
-            return self._scan_live_rt(spark, snap, rel_paths)
-        return self._scan_live(spark, snap, rel_paths)
-
-    def _expand_dv_df(
-        self, spark: SparkSession, entries: list[tuple[str, str]], with_key: bool
-    ) -> DataFrame:
-        """Expand DV descriptors into a deleted-row-index DataFrame
-        (``_fp [, _dv], _ridx``); ``entries`` are (abs file path,
-        descriptor JSON) and ``with_key`` keeps the descriptor digest as
-        a join column (the CDC path filters per (file, DV variant)).
-
-        Scale shape: descriptors are O(files-with-DVs) small dicts; the
-        bitmap → row-index expansion runs ON EXECUTORS (mapInPandas over
-        the descriptor list), so millions of deleted rows never touch
-        the driver. The log records exact cardinalities, so the
-        broadcast-vs-shuffle choice is made on real numbers, not a
-        guess. Non-local FileSystem shims (in-memory test store) aren't
-        executor-visible — those resolve on the driver, bounded by the
-        test-scale DV size."""
-        from pulsar_io_delta_spark.sources.deletion_vectors import resolve_dv
-
-        total_card = sum(int(json.loads(dj)["cardinality"]) for _, dj in entries)
-        out_schema = (
-            "_fp string, _dv string, _ridx long" if with_key else "_fp string, _ridx long"
-        )
-        if type(self.fs) is LocalFileSystem:
-            table_path, fs = self.path, self.fs
-            desc_df = spark.createDataFrame(entries, "_fp string, _dv string")
-
-            def expand(batches):
-                import pandas as pd
-
-                for pdf in batches:
-                    for fp, dj in zip(pdf["_fp"], pdf["_dv"]):
-                        idx = resolve_dv(json.loads(dj), table_path, fs)
-                        cols = {"_fp": fp}
-                        if with_key:
-                            cols["_dv"] = dj
-                        cols["_ridx"] = pd.Series(idx, dtype="int64")
-                        yield pd.DataFrame(cols)
-
-            deleted = desc_df.repartition(min(len(entries), 32)).mapInPandas(
-                expand, out_schema
-            )
-        else:
-            pairs = [
-                ((fp, dj, int(i)) if with_key else (fp, int(i)))
-                for fp, dj in entries
-                for i in resolve_dv(json.loads(dj), self.path, self.fs)
-            ]
-            deleted = spark.createDataFrame(pairs, out_schema)
-        if total_card <= 4_000_000:  # ≈64 MB of (path-hash, long) — safe to ship
-            deleted = F.broadcast(deleted)
-        return deleted
-
-    def _scan_logical_meta(
-        self, spark: SparkSession, snap: Snapshot, rel_paths: list[str], ridx: bool = False
-    ) -> DataFrame:
-        """Scan files under LOGICAL column names with ``_fp`` (decoded
-        file path) — and ``_ridx`` when asked — attached BEFORE any
-        column-mapping rename (file metadata must be captured on the
-        physical scan). Rows are NOT DV-filtered; writer paths that need
-        visibility use _scan_live instead."""
-        mapping = self._mapping_of(snap)
-        ext_pv = {
-            p: (snap.adds.get(p, {}).get("partitionValues") or {})
-            for p in rel_paths
-            if os.path.isabs(p)
-        }
-        df = self._read_files(
-            spark,
-            rel_paths,
-            schema_string=mapping[0] if mapping else snap.schema_string,
-            pv_by_abs=ext_pv or None,
-            partition_cols=self._physical_pcols(mapping, list(snap.partition_columns))
-            if ext_pv
-            else None,
-        )
-        df = df.withColumn("_fp", _posix_path_col(F.col("_metadata.file_path")))
-        if ridx:
-            df = df.withColumn("_ridx", F.col("_metadata.row_index"))
-        if mapping:
-            keep = ["_fp"] + (["_ridx"] if ridx else [])
-            df = df.select(
-                _mapping_select_exprs(snap.schema_string, mapping)
-                + [F.col(k) for k in keep]
-            )
-        return df.drop("_metadata")
-
-    def _apply_dv_antijoin(
-        self, spark: SparkSession, df: DataFrame, dv_by_abs: dict[str, dict]
-    ) -> DataFrame:
-        """Filter out DV-deleted rows: anti-join the scan (keyed by
-        ``_metadata.file_path`` + ``_metadata.row_index`` — the same
-        physical row ordinal Delta's DV row indexes address) against the
-        expanded deleted-index set (see _expand_dv_df for the scale
-        shape)."""
-        entries = [(p, json.dumps(d)) for p, d in sorted(dv_by_abs.items())]
-        deleted = self._expand_dv_df(spark, entries, with_key=False)
-        return (
-            df.withColumn("_fp", _posix_path_col(F.col("_metadata.file_path")))
-            .withColumn("_ridx", F.col("_metadata.row_index"))
-            .join(deleted, ["_fp", "_ridx"], "left_anti")
-            .drop("_fp", "_ridx")
         )
 
     # ---------- change feed / CDC ----------
@@ -3426,13 +3377,11 @@ class DeltaTable:
                     continue
                 if not f.get("dataChange", True):
                     continue
-                dv = f.get("deletionVector")
                 files.append(
                     ChangeFile(
                         f["path"], op, version, int(f.get(ts_key) or 0),
                         f.get("partitionValues") or {}, int(f.get("size") or 0),
-                        dv if dv and int(dv.get("cardinality") or 0) > 0 else None,
-                        epoch, f.get("stats"),
+                        _deleting_dv(f), epoch, f.get("stats"),
                     )
                 )
         return ChangeLog(files, epochs)
@@ -3446,8 +3395,12 @@ class DeltaTable:
         partition_value string, each file's own event time ``ts``, and
         the commit version (``change_log`` decides all three)."""
         out = self._scan_changes(spark, self.change_log(start_version, end_version))
-        return out.withColumn("ts", F.timestamp_millis(F.col("_ts_ms"))).drop(
-            "_ts_ms", "_change_type"
+        per_file = {"op", "_change_type", "_commit_version", "_ts_ms"}
+        return out.select(
+            "op",
+            *[c for c in out.columns if c not in per_file],
+            "_commit_version",
+            F.timestamp_millis(F.col("_ts_ms")).alias("ts"),
         )
 
     def table_changes(
@@ -3470,36 +3423,35 @@ class DeltaTable:
         (``commit_timestamp_ms``, in-commit timestamp first), never a
         file's event time."""
         log = self.change_log(start_version, end_version, change_feed=True)
-        out = self._scan_changes(spark, log)
-        vts = spark.createDataFrame(
-            [(v, self.commit_timestamp_ms(v)) for v in sorted({f.version for f in log.files})],
-            "_commit_version long, _vts_ms long",
-        )
-        return (
-            out.drop("op", "partition_value", "_ts_ms")
-            .join(F.broadcast(vts), ["_commit_version"])
-            .withColumn("_commit_timestamp", F.timestamp_millis(F.col("_vts_ms")))
-            .drop("_vts_ms")
+        out = self._scan_changes(spark, log, commit_clock=True)
+        per_file = {"op", "partition_value", "_commit_version", "_ts_ms", "_commit_timestamp"}
+        return out.select(
+            "_commit_version",
+            *[c for c in out.columns if c not in per_file],
+            F.timestamp_millis(F.col("_commit_timestamp")).alias("_commit_timestamp"),
         )
 
-    def _scan_changes(self, spark: SparkSession, log: ChangeLog) -> DataFrame:
-        """The rows of a change log's files: data columns plus ``op``,
-        ``_change_type``, ``partition_value``, ``_commit_version`` and
-        the event time ``_ts_ms``. A derived file's ``_change_type`` is
-        insert (op 'c') or delete (op 'r'); a ``_change_data`` file (op
-        'cdf') carries its own column.
+    def _scan_changes(
+        self, spark: SparkSession, log: ChangeLog, commit_clock: bool = False
+    ) -> DataFrame:
+        """The rows of a change log's files: data columns plus
+        ``_change_type`` and ``partition_value``, and from each file's
+        record ``op``, ``_commit_version``, the event time ``_ts_ms``
+        and, with ``commit_clock``, the commit's ``_commit_timestamp``
+        (ms, ``commit_timestamp_ms``). A derived file's ``_change_type``
+        is insert (op 'c') or delete (op 'r'); a ``_change_data`` file
+        (op 'cdf') carries its own column.
 
-        Files are grouped into ONE scan per (op, schema epoch) — a
-        10^5-commit backfill plans a handful of scans, not 10^5 union
-        branches, and no change row ever touches the driver. Each scan
-        is pinned to its epoch's schemaString (mirroring ``read()``'s
-        log-schema pin): a metaData action that evolves the schema but
-        keeps the partition columns must NOT share a schema-less scan
-        with old files, or Spark would infer the schema from one file
-        and silently drop (or null-fill) the evolved column. Per-file
-        commit version and event time are attached by a broadcast join
-        against a (file → version, ts) lookup keyed on the scan's
-        ``_metadata.file_path``."""
+        One ``_scan`` per schema epoch, plus one for the epoch's
+        ``_change_data`` files, whose hive root is their own directory:
+        a 10^5-commit backfill plans a handful of scans, not 10^5 union
+        branches, and no change row touches the driver. A file with
+        several records (added, then removed, or re-added with a new
+        deletion vector) is scanned once and its rows fan out per
+        record through the lookup. Each scan is pinned to its epoch's
+        schemaString: a metaData action that evolves the schema but
+        keeps the partition columns must NOT share a scan with old
+        files, or the evolved column would be dropped or null-filled."""
         from pulsar_io_delta_spark.operators.cdc import partition_value_expr
 
         if not log.files:
@@ -3507,118 +3459,51 @@ class DeltaTable:
         epochs = list(log.epochs)
         if log.files[0].epoch == 0:
             # the state entering the range: read only when a file needs it
-            snap = self.snapshot(log.files[0].version)
-            epochs[0] = Epoch(
-                snap.version, tuple(snap.partition_columns), snap.schema_string,
-                dict(snap.configuration),
-            )
-        groups: dict[tuple[str, int], dict[str, None]] = {}
-        # absolute-path adds (shallow clone commits) carry their
-        # partition values in the log, not in hive dirs — collect them
-        # for _read_files' external branch (stable per path)
-        pv_abs: dict[str, dict] = {}
-        # DV identity per (file, commit, op): an add/remove action that
-        # carries a deletionVector emits only the file's LIVE rows; the
-        # descriptor digest keys the per-variant row filter so a file
-        # whose DV evolves across commits is filtered per commit, not
-        # with one merged mask.
-        dv_registry: dict[tuple[str, str], dict] = {}
-        # path, op, epoch, dv, version, ts_ms — epoch is part of the join
-        # key: a file re-added after a schema/pcols change lives in TWO
-        # epoch buckets (scanned once per epoch, each pinned to its
-        # schema), and without epoch in the key each scan would join ALL
-        # of the file's commits, duplicating every CDC row
-        lookup_rows: list[tuple[str, str, int, str, int, int]] = []
-        for f in log.files:
-            abs_path = os.path.abspath(os.path.join(self.path, f.path))
-            if os.path.isabs(f.path):
-                pv_abs[f.path] = f.partition_values
-            dv_key = ""
-            if f.dv:
-                dv_key = json.dumps(f.dv, sort_keys=True)
-                dv_registry[(abs_path, dv_key)] = f.dv
-            lookup_rows.append((abs_path, f.op, f.epoch, dv_key, f.version, f.ts_ms))
-            # a re-added file is scanned once; the lookup fans out per commit
-            groups.setdefault((f.op, f.epoch), {})[f.path] = None
-        lookup = spark.createDataFrame(
-            lookup_rows,
-            "_fp string, op string, _epoch int, _dv string, _commit_version long, _ts_ms long",
+            epochs[0] = self.snapshot(log.files[0].version).epoch
+        clock = (
+            {v: self.commit_timestamp_ms(v) for v in sorted({f.version for f in log.files})}
+            if commit_clock
+            else {}
         )
+        groups: dict[tuple[int, bool], list[ChangeFile]] = {}
+        for f in log.files:
+            groups.setdefault((f.epoch, f.op == "cdf"), []).append(f)
         frames: list[DataFrame] = []
-        for (op, epoch_id), paths in groups.items():
+        for (epoch_id, cdf), files in groups.items():
             e = epochs[epoch_id]
-            rel_paths = list(paths)
-            mapping = _column_mapping(e.schema_string, e.configuration)
-            schema = json.loads(mapping[0] if mapping else e.schema_string)
-            keep = ["_fp"] + (["_ridx"] if dv_registry else [])
-            if op == "cdf":
-                schema["fields"].append(
-                    {"name": "_change_type", "type": "string", "nullable": True,
-                     "metadata": {}}
-                )
-                keep.append("_change_type")
-            has_ext = any(os.path.isabs(p) for p in rel_paths)
-            df = self._read_files(
+            columns = {
+                "op": [f.op for f in files],
+                "_commit_version": [f.version for f in files],
+                "_ts_ms": [f.ts_ms for f in files],
+            }
+            if not cdf:
+                columns["_change_type"] = [
+                    "insert" if f.op == OP_INSERT else "delete" for f in files
+                ]
+            if clock:
+                columns["_commit_timestamp"] = [clock[f.version] for f in files]
+            df = self._scan(
                 spark,
-                rel_paths,
-                schema_string=json.dumps(schema),
-                # cdc files live under _change_data/<pcol>=v/...; the
-                # basePath must be the dir whose children are the hive
-                # partition dirs or Spark's partition discovery chokes
-                base_path=os.path.join(self.path, "_change_data") if op == "cdf" else None,
-                pv_by_abs=pv_abs if has_ext else None,
-                partition_cols=self._physical_pcols(mapping, list(e.partition_columns))
-                if has_ext
-                else None,
+                e,
+                files,
+                columns,
+                extra={"_change_type": "string"} if cdf else None,
+                base_path=os.path.join(self.path, "_change_data") if cdf else None,
             )
-            # _metadata.file_path is a percent-encoded Hadoop URI
-            # (file:/abs/path); decode to the posix lookup key
-            df = df.withColumn("_fp", _posix_path_col(F.col("_metadata.file_path")))
-            if dv_registry:
-                df = df.withColumn("_ridx", F.col("_metadata.row_index"))
-            if mapping:
-                # metaData.partitionColumns stay LOGICAL under mapping
-                # (only partitionValues keys / dir names are physical),
-                # so after the rename the epoch's pcols apply unchanged
-                df = df.select(
-                    _mapping_select_exprs(e.schema_string, mapping)
-                    + [F.col(k) for k in keep]
-                )
-            if op != "cdf":
-                df = df.withColumn(
-                    "_change_type", F.lit("insert" if op == OP_INSERT else "delete")
-                )
+            # metaData.partitionColumns stay LOGICAL under mapping, so
+            # the scan's renamed columns carry them
             pv = (
                 partition_value_expr({c: F.col(c) for c in e.partition_columns})
                 if e.partition_columns
                 else F.lit("")
             )
-            frames.append(
-                df.drop("_metadata")
-                .withColumn("op", F.lit(op))
-                .withColumn("_epoch", F.lit(epoch_id))
-                .withColumn("partition_value", pv)
-            )
+            frames.append(df.withColumn("partition_value", pv))
         out = frames[0]
         for f in frames[1:]:
             # schema may evolve between epochs (op='m' boundary): align
             # by name, null-filling columns absent on either side
             out = out.unionByName(f, allowMissingColumns=True)
-        out = out.join(F.broadcast(lookup), ["_fp", "op", "_epoch"])
-        if dv_registry:
-            # an action carrying a DV contributes only its LIVE rows:
-            # anti-join the commit-fanned rows against the per-variant
-            # deleted indexes (keyed by file + descriptor digest so two
-            # commits with different DVs of one file filter differently).
-            # The digest IS the sorted descriptor JSON, so _expand_dv_df
-            # resolves straight from the key — and the bitmap expansion
-            # runs executor-side exactly like the batch read path
-            # (VERDICT r7 #3: the old driver-side list comprehension
-            # materialized every deleted row index on the driver).
-            entries = sorted((fp, key) for fp, key in dv_registry)
-            deleted = self._expand_dv_df(spark, entries, with_key=True)
-            out = out.join(deleted, ["_fp", "_dv", "_ridx"], "left_anti").drop("_ridx")
-        return out.drop("_fp", "_epoch", "_dv")
+        return out
 
     def schema_changes(self, start_version: int = 0) -> list[tuple[int, str]]:
         """(version, schemaString) for each metaData action from
@@ -4554,23 +4439,19 @@ class DeltaTable:
                 "delta.identity.allowExplicitInsert=true"
             )
         keys = source.select(*key_cols).distinct()
+        touched: list[str] = []
         if snap.files:
-            # logical-named scan with decoded _fp (the percent-encoded
-            # Hadoop URI is decoded so relpath keys survive spaces, '%',
-            # '+', non-ASCII; mapped tables rename physical → logical
-            # AFTER the metadata capture)
-            scan = self._scan_logical_meta(spark, snap, snap.files)
-            touched_abs = [
-                r._fp
+            # live rows with the decoded file path _fp, mapped back to
+            # the logged path (a clone's files keep their absolute one)
+            by_fp = {os.path.abspath(os.path.join(self.path, p)): p for p in snap.files}
+            scan = self._live_rows(spark, snap, snap.files, row_ids=False, keys=("_fp",))
+            touched = [
+                by_fp[r._fp]
                 for r in scan.join(keys, key_cols, "left_semi")
                 .select("_fp")
                 .distinct()
                 .collect()
             ]
-        else:
-            touched_abs = []
-        base = os.path.abspath(self.path)
-        touched = [os.path.relpath(p, base) for p in touched_abs]
         # generated columns: compute the ones the source omits, validate
         # the ones it provides; remaining absent columns null-fill
         aligned_source = self._apply_generated(
@@ -4589,10 +4470,9 @@ class DeltaTable:
         rewritten = aligned_source.select(*table_cols, *[nul.alias(c) for c in rt_cols])
         if touched:
             # live visibility: survivors of a DV-carrying file are its
-            # LIVE rows only (touch-detection above may over-touch on
-            # deleted rows — harmless, just an extra rewrite;
-            # resurrecting them here would be a wrong answer). On a
-            # row-tracked table survivors keep (row_id, commit version).
+            # LIVE rows only (resurrecting deleted ones would be a wrong
+            # answer). On a row-tracked table survivors keep (row_id,
+            # commit version).
             live = _fill_new(self._live_rows(spark, snap, touched))
             if rt:
                 old_ids = live.join(keys, key_cols, "left_semi").select(
@@ -4823,21 +4703,20 @@ class DeltaTable:
         candidates = self._select_files(snap, filters)
         if not candidates:
             return self._rewrite(snap, "DELETE", [], None)
-        # Already-deleted rows may re-match the predicate — harmless:
-        # the union with the old DV below makes re-deletion idempotent,
-        # and skipping the DV apply here saves a join. Mapped tables
-        # evaluate the (logical-name) predicate after the rename while
-        # _ridx stays the PHYSICAL row ordinal the DV addresses.
+        # Live rows only, so a file whose matches are all deleted
+        # already is left alone. Mapped tables evaluate the
+        # (logical-name) predicate after the rename while _ridx stays
+        # the PHYSICAL row ordinal the DV addresses.
         matched = (
-            self._scan_logical_meta(spark, snap, candidates, ridx=True)
+            self._live_rows(spark, snap, candidates, row_ids=False, keys=("_fp", "_ridx"))
             .where(predicate)
             .select("_fp", "_ridx")
         )
-        base = os.path.abspath(self.path)
+        by_fp = {os.path.abspath(os.path.join(self.path, p)): p for p in candidates}
         old_dv_data = {
-            os.path.join(base, p): resolve_dv_bytes(dv, self.path, self.fs)
-            for p in candidates
-            if (dv := snap.adds.get(p, {}).get("deletionVector"))
+            fp: resolve_dv_bytes(dv, self.path, self.fs)
+            for fp, p in by_fp.items()
+            if (dv := snap.adds[p].get("deletionVector"))
         }
 
         def stage_group(pdf):
@@ -4872,13 +4751,13 @@ class DeltaTable:
         descs = write_dv_payloads(
             self.path, [(bytes(r._payload), int(r._card)) for r in staged], fs=self.fs
         )
-        touched = [os.path.relpath(r._fp, base) for r in staged]
+        touched = [by_fp[r._fp] for r in staged]
         # DV writes require the table-features protocol; merged with the
         # prior protocol so existing features survive (the spec forbids
         # dropping features — ADVICE r7 #1)
         actions: list[dict] = [{"protocol": _dv_upgraded_protocol(snap.protocol)}]
-        for rel, desc in zip(touched, descs):
-            add = dict(snap.adds[rel])
+        for p, desc in zip(touched, descs):
+            add = dict(snap.adds[p])
             add["deletionVector"] = desc
             # spec ("Per-file Statistics" × DVs): a DV-carrying add's
             # stats keep the PHYSICAL numRecords and valid-but-not-
@@ -4895,7 +4774,7 @@ class DeltaTable:
         # must NOT re-report)
         return self._rewrite(
             snap, "DELETE", touched, None, actions=actions,
-            change_rows=lambda: self._scan_live(spark, snap, candidates)
+            change_rows=lambda: self._live_rows(spark, snap, candidates, row_ids=False)
             .where(predicate)
             .withColumn("_change_type", F.lit("delete")),
         )
@@ -4948,13 +4827,12 @@ class DeltaTable:
         if not candidates:
             return self._rewrite(snap, "UPDATE", [], None)
         # touch detection: only file paths reach the driver
-        probe = self._scan_logical_meta(spark, snap, candidates)
-        touched_abs = [
-            r._fp
+        probe = self._live_rows(spark, snap, candidates, row_ids=False, keys=("_fp",))
+        by_fp = {os.path.abspath(os.path.join(self.path, p)): p for p in candidates}
+        touched = [
+            by_fp[r._fp]
             for r in probe.where(predicate).select("_fp").distinct().collect()
         ]
-        base = os.path.abspath(self.path)
-        touched = [os.path.relpath(p, base) for p in touched_abs]
         if not touched:
             return self._rewrite(snap, "UPDATE", [], None)
         rt = _rt_enabled(snap.configuration)
@@ -5022,7 +4900,7 @@ class DeltaTable:
         return self._rewrite(
             snap, "DELETE", touched,
             self._live_rows(spark, snap, touched).where((~p) | p.isNull()),
-            change_rows=lambda: self._scan_live(spark, snap, touched)
+            change_rows=lambda: self._live_rows(spark, snap, touched, row_ids=False)
             .where(predicate)
             .withColumn("_change_type", F.lit("delete")),
         )
@@ -5068,9 +4946,9 @@ class DeltaTable:
         def _side(s: Snapshot, paths: list[str]) -> DataFrame:
             if not paths:
                 return spark.createDataFrame([], target)
-            # _scan_live applies the side's own DVs; conform to the
-            # target schema (evolution between versions null-fills)
-            df = self._scan_live(spark, s, paths)
+            # the side's own DVs apply; conform to the target schema
+            # (evolution between versions null-fills)
+            df = self._live_rows(spark, s, paths, row_ids=False)
             for f in target.fields:
                 if f.name not in df.columns:
                     df = df.withColumn(f.name, F.lit(None).cast(f.dataType))

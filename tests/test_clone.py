@@ -91,3 +91,21 @@ def test_clone_cdf_derives_inserts_with_dv_applied(spark, tmp_path, src):
     tc = clone.table_changes(spark, 0, 0)
     assert tc.count() == live  # DV-deleted rows never surface as inserts
     assert tc.select("_change_type").distinct().collect()[0][0] == "insert"
+
+
+def test_clone_dml_on_source_owned_files(spark, tmp_path, src):
+    """UPDATE, DV DELETE and MERGE on a clone find the source-owned
+    files their predicates touch by the logged absolute path: the clone
+    changes, the source does not."""
+    before = sorted(tuple(r) for r in src.read(spark).collect())
+    clone = DeltaTable(str(tmp_path / "cl"))
+    clone.clone_from(src)
+    ids = [r.event_id for r in src.read(spark).orderBy("event_id").limit(3).collect()]
+    clone.update_where(spark, f"event_id = {ids[0]}", {"value": "-1.0"})
+    clone.delete_where_dv(spark, f"event_id = {ids[1]}")
+    upsert = clone.read(spark).where(F.col("event_id") == ids[2]).withColumn("value", F.lit(-2.0))
+    clone.merge_upsert(spark, upsert, ["event_id"])
+    got = {r.event_id: r.value for r in clone.read(spark).where(F.col("event_id").isin(ids)).collect()}
+    assert got == {ids[0]: -1.0, ids[2]: -2.0}
+    assert clone.read(spark).count() == len(before) - 1
+    assert sorted(tuple(r) for r in src.read(spark).collect()) == before

@@ -2273,6 +2273,41 @@ def test_one_metadata_builder():
     assert list(params)[:2] == ["self", "snap"]
 
 
+def test_one_file_scan():
+    """Every data read in delta_log.py goes through ``DeltaTable._scan``:
+    it alone calls ``_read_files`` and keys rows on
+    ``_metadata.file_path``, deletion vectors filter on one key shape,
+    and per-file lookups are built from Arrow, never from a Python list
+    of rows (a Python RDD whose broadcast starts a Python worker)."""
+    import ast
+    import inspect
+
+    from pulsar_io_delta_spark.sources import delta_log
+
+    readers, keyers, local_rows = set(), set(), []
+    for fn in ast.walk(ast.parse(inspect.getsource(delta_log))):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        for n in ast.walk(fn):
+            if isinstance(n, ast.Constant) and n.value == "_metadata.file_path":
+                keyers.add(fn.name)
+            if not (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)):
+                continue
+            if n.func.attr == "_read_files":
+                readers.add(fn.name)
+            if n.func.attr == "createDataFrame":
+                data = n.args[0]
+                empty = isinstance(data, ast.List) and not data.elts
+                arrow = isinstance(data, ast.Call) and ast.unparse(data.func).startswith("pa.")
+                if not (empty or arrow):
+                    local_rows.append(f"{fn.name}:{n.lineno}")
+    assert readers == keyers == {"_scan"}
+    assert local_rows == []
+    for gone in ("_scan_live", "_scan_live_rt", "_scan_logical_meta", "_apply_dv_antijoin"):
+        assert not hasattr(DeltaTable, gone), gone
+    assert "with_key" not in inspect.signature(DeltaTable._expand_dv_df).parameters
+
+
 def test_external_adds_read_state_once(spark, tmp_path, monkeypatch):
     """commit_external_adds reads the table state once, before it
     commits; the version checksum advances that state by the commit's

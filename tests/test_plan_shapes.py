@@ -282,8 +282,9 @@ def test_multimodal_codec_pipeline_payloads_never_shuffle(spark, sf_dir):
 
 def test_table_changes_one_scan_per_epoch_broadcast_lookup(spark, tmp_path):
     """A CDF read over MANY cdc commits (one schema epoch) plans ONE
-    parquet scan for all change files, with commit metadata attached by
-    a BROADCAST join — at 10^5 commits the plan stays a handful of
+    parquet scan for all change files, with commit version, event time
+    and commit timestamp attached by ONE broadcast join against an
+    Arrow-built lookup — at 10^5 commits the plan stays a handful of
     nodes, never 10^5 union branches, and no change row touches the
     driver."""
     from pulsar_io_delta_spark.sources.delta_log import DeltaTable
@@ -298,7 +299,9 @@ def test_table_changes_one_scan_per_epoch_broadcast_lookup(spark, tmp_path):
     ch = t.table_changes(spark, start_version=1)
     plan = ch._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 1, plan
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoop" not in plan
+    lookups = [l for l in plan.splitlines() if "BroadcastHashJoin" in l and "LeftAnti" not in l]
+    assert len(lookups) == 1, plan
+    assert "ExistingRDD" not in plan, plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     # and the rows are right: each commit deleted 4 live rows
     assert ch.count() == 16
@@ -328,6 +331,7 @@ def test_clone_read_broadcasts_partition_values(spark, tmp_path):
     clone.clone_from(src)
     plan = clone.read(spark)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, plan
+    assert "ExistingRDD" not in plan, plan
     assert "NestedLoop" not in plan and "CartesianProduct" not in plan, plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
 
@@ -349,8 +353,36 @@ def test_row_id_read_broadcasts_file_bases(spark, tmp_path):
         t.read_with_row_ids(spark)._jdf.queryExecution().executedPlan().toString()
     )
     assert "BroadcastHashJoin" in plan, plan
+    assert "ExistingRDD" not in plan, plan
     assert "NestedLoop" not in plan and "CartesianProduct" not in plan, plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+
+
+def test_plain_read_is_one_bare_scan(spark, tmp_path):
+    """A table with no deletion vector, no column mapping and no
+    absolute-path file reads as the bare parquet scan (the CDC
+    connector's bootstrap path): no join, no ``_metadata`` column in the
+    scan, and one Spark job to drain it."""
+    from pulsar_io_delta_spark.sources.delta_log import DeltaTable
+
+    t = DeltaTable(str(tmp_path / "t"))
+    df = spark.createDataFrame(
+        [(i, "abc"[i % 3], float(i)) for i in range(60)], "k long, g string, v double"
+    )
+    t.write(df.repartition(2), partition_by=["g"])
+    t.write(df.coalesce(1), partition_by=["g"])
+    read = t.read(spark)
+    plan = read._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" not in plan, plan
+    scans = [l for l in plan.splitlines() if "FileScan" in l]
+    assert len(scans) == 1 and "file_path" not in scans[0], plan
+    sc = spark.sparkContext
+    sc.setJobGroup("bare-read", "noop drain")
+    try:
+        read.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("bare-read")) == 1
 
 
 def test_liquid_optimize_single_range_exchange(spark, sf_dir, tmp_path):

@@ -45,7 +45,7 @@ print("REPORT " + json.dumps(report), file=sys.stderr)
 PYSPARK_ENV = ["SPARK_AUTH_SOCKET_TIMEOUT", "SPARK_BUFFER_SIZE"]
 
 
-def _session(cache, extra_conf=None, conf_dir=None):
+def _session(cache, extra_conf=None, conf_dir=None, cwd=None):
     env = dict(os.environ, XDG_CACHE_HOME=str(cache), SPARK_DRIVER_MEM="2g",
                PYTHONPATH=os.pathsep.join(filter(None, [REPO, os.environ.get("PYTHONPATH")])))
     for k in ["SPARK_CONF_DIR", *PYSPARK_ENV]:
@@ -55,7 +55,7 @@ def _session(cache, extra_conf=None, conf_dir=None):
     os.makedirs(cache, exist_ok=True)
     out = subprocess.run(
         [sys.executable, "-c", CHILD, json.dumps(extra_conf or {})],
-        cwd=cache, env=env, capture_output=True, text=True, timeout=300,
+        cwd=cwd or cache, env=env, capture_output=True, text=True, timeout=300,
     )
     assert out.returncode == 0, out.stderr[-3000:]
     line = next(x for x in out.stderr.splitlines() if x.startswith("REPORT "))
@@ -114,17 +114,22 @@ def test_next_session_maps_it_and_keeps_caller_options(built):
 
 
 def test_truncated_archive_is_removed_and_session_starts(built, tmp_path):
+    """The JVM that dies mapping the archive leaves its crash log in
+    the cache, not in the caller's working directory."""
     cache, _ = built
     [archive] = _archives(cache)
-    os.makedirs(_cds_dir(tmp_path))
-    bad = os.path.join(_cds_dir(tmp_path), os.path.basename(archive))
+    other, work = tmp_path / "cache", tmp_path / "work"
+    os.makedirs(_cds_dir(other))
+    os.makedirs(work)
+    bad = os.path.join(_cds_dir(other), os.path.basename(archive))
     with open(archive, "rb") as src, open(bad, "wb") as dst:
         dst.write(src.read(50 << 20))
-    report = _session(tmp_path)
+    report = _session(other, cwd=work)
     assert report["rows"] == 3
     assert _flags(report) == []  # the second launch runs without CDS
     assert not os.path.exists(bad)
     assert report["env_diff"] == PYSPARK_ENV
+    assert [n for n in os.listdir(work) if n.startswith("hs_err_pid")] == []
 
 
 def test_zeroed_header_starts_normally_and_is_rebuilt(built, tmp_path):
