@@ -3007,8 +3007,8 @@ class DeltaTable:
             schema = StructType.fromJson(s)
         pcols = self._physical_pcols(mapping, list(epoch.partition_columns))
         lookup = dict(columns)
-        ext_pv = bool(pcols) and any(os.path.isabs(f.path) for f in files)
-        for i, c in enumerate(pcols if ext_pv else []):
+        ext_pcols = pcols if any(os.path.isabs(f.path) for f in files) else []
+        for i, c in enumerate(ext_pcols):
             lookup[f"__pv_{i}"] = pa.array(
                 [f.partition_values.get(c) if os.path.isabs(f.path) else None for f in files],
                 pa.string(),
@@ -3035,7 +3035,7 @@ class DeltaTable:
         if lookup:
             lookup["_fp"] = pa.array(fps, pa.string())
             df = df.join(F.broadcast(spark.createDataFrame(pa.table(lookup))), "_fp")
-        for i, c in enumerate(pcols if ext_pv else []):
+        for i, c in enumerate(ext_pcols):
             # the logged value, cast like a partition directory's; the
             # table's own files keep the directory's (their lookup is null)
             df = df.withColumn(
@@ -3049,7 +3049,7 @@ class DeltaTable:
             )
         return df.drop(
             *[c for c in ("_fp", "_ridx", "_dv") if c not in keys],
-            *[f"__pv_{i}" for i in range(len(pcols) if ext_pv else 0)],
+            *[f"__pv_{i}" for i in range(len(ext_pcols))],
         )
 
     def _expand_dv_df(self, spark: SparkSession, entries: list[tuple[str, str]]) -> DataFrame:
@@ -5701,12 +5701,7 @@ class DeltaTable:
         live file carries a DV."""
         snap = self.snapshot()
         self._guard_writable(snap, data_change_removes=False)
-        touched = [
-            p
-            for p in snap.files
-            if (dv := snap.adds.get(p, {}).get("deletionVector"))
-            and int(dv.get("cardinality") or 0) > 0
-        ]
+        touched = [p for p in snap.files if _deleting_dv(snap.adds[p])]
         return self._rewrite(
             snap, "REORG", touched,
             self._live_rows(spark, snap, touched) if touched else None,
